@@ -2233,7 +2233,8 @@ object ScaleRehearsal {
     SnapshotTable.clearResolvedCache() // cold: the rebase pays the real resolve
     val rebasesBefore = SnapshotTable.rebases.get()
     val (committed: Long, rebaseWall) = timed[Long](
-      SnapshotTable.commitAt(spark, root, v0 + 1, rewritten,
+      SnapshotTable.commitAt(spark, root,
+        Some(SnapshotTable.resolvedAt(fs, root, v0)), rewritten,
         carry = keptE, tableSchema = Some(cur.schema),
         rebase = Some(SnapshotTable.RebaseSpec(v0,
           touchedE.map(e => norm(e.path)).toSet, () => resolvedPred))))

@@ -16,9 +16,6 @@ object TicketFunctions {
     when(stripped.isNull || stripped === "", lit(null).cast(StringType)).otherwise(stripped)
   }
 
-  /** F3: whitespace collapse + trim (main.py:116,122). */
-  def collapseWs(c: Column): Column = trim(regexp_replace(c, "\\s+", " "))
-
   /** F4: epoch **seconds** → "yyyy-MM-dd HH:mm:ss" UTC; 0/NULL/negative-as-
     * falsy quirk: epoch 0 maps to NULL, not 1970-01-01 (main.py:234-241). */
   def secondsToReadable(c: Column): Column =
@@ -29,13 +26,6 @@ object TicketFunctions {
   def secondsToDateOnly(c: Column): Column =
     when(c.isNull || c === 0, lit(null).cast(StringType))
       .otherwise(date_format(timestamp_seconds(c), "yyyy-MM-dd"))
-
-  /** F4/F5 engine-native variants: same null semantics, real TimestampType /
-    * DateType instead of strings (preferred downstream of the parity layer). */
-  def secondsToTimestamp(c: Column): Column =
-    when(c.isNull || c === 0, lit(null).cast(TimestampType))
-      .otherwise(timestamp_seconds(c))
-  def secondsToDate(c: Column): Column = to_date(secondsToTimestamp(c))
 
   /** F6: stringify-unless-null (main.py:197-198). Python renders booleans as
     * 'True'/'False'; replicate only for boolean inputs. */
@@ -76,9 +66,6 @@ object TicketFunctions {
       e => struct(
         e.getField("email").cast(StringType).as("email"),
         e.getField("name").cast(StringType).as("name")))
-
-  /** P4: field extraction with default (main.py:286,301-306). */
-  def getOrDefault(c: Column, default: Any): Column = coalesce(c, lit(default))
 
   /** P6: conditional null-out — empty array becomes NULL (main.py:429-430). */
   def nullIfEmptyArray(c: Column): Column =

@@ -374,17 +374,6 @@ object CheckpointIO {
       FilterCompat.get(pred), blocks.asJava, fileSchema)
     Some((readRows(conf, path, None, Some(pred)), kept.size(), blocks.size))
   }
-
-  /** The promoted cluster-key (physical column, stats kind) this
-    * checkpoint carries, when any. */
-  def promotedKey(conf: Configuration, path: Path): Option[(String, String)] = {
-    val reader = openFooter(conf, path)
-    try {
-      val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
-      for { c <- Option(kv.get(CkColKey)); k <- Option(kv.get(CkKindKey)) }
-        yield (c, k)
-    } finally reader.close()
-  }
 }
  
  

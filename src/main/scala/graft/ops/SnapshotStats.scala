@@ -236,15 +236,6 @@ object SnapshotStats {
           s"supports up to $SupportedReaderVersion — upgrade before reading")
   }
 
-  /** Loud refusal for tables demanding a newer WRITER than this build. */
-  def checkWriteProtocol(body: String, where: String): Unit = {
-    val (_, minWriter) = protocolFromManifest(body)
-    if (minWriter > SupportedWriterVersion)
-      throw new IllegalStateException(
-        s"$where requires manifest writer version $minWriter; this engine " +
-          s"supports up to $SupportedWriterVersion — upgrade before writing")
-  }
-
   private def putProtocol(root: ObjectNode): Unit = {
     val p = root.putObject("protocol")
     p.put("minReader", SupportedReaderVersion)

@@ -30,16 +30,18 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * writers can never touch each other's files), and the manifest rename is
   * the single compare-and-swap — exactly one writer per version wins; the
   * loser's commit throws [[SnapshotTable.ConcurrentWriteException]] after
-  * cleaning up its own orphan. `upsert` catches the conflict and REDOES the
-  * merge against the winner's version (bounded retries) — the
-  * read-merge-commit loop is serializable, not last-write-wins.
+  * cleaning up its own orphan. Every public commit runs through one seam,
+  * [[SnapshotTable.transact]], which REDOES a lost read-merge-commit
+  * against the winner's version (bounded retries) — serializable, not
+  * last-write-wins.
   */
 object SnapshotTable {
 
   /** Another writer committed the version this commit targeted. The table is
     * intact (the winner's version is fully committed; this writer's partial
     * data was removed). Re-read and retry to serialize after the winner. */
-  final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
+  final class ConcurrentWriteException(msg: String, cause: Throwable = null)
+    extends RuntimeException(msg, cause)
 
   /** CAS losses observed by this JVM (a manifest rename that found the
     * version already taken) — the retry-economics observable the
@@ -966,8 +968,8 @@ object SnapshotTable {
   def commit(spark: SparkSession, root: String, df: DataFrame,
              cdc: Option[(DataFrame, DataFrame)] = None,
              declareClusterBy: Option[Seq[String]] = None): Long =
-    commitAt(spark, root, currentVersion(spark, root).map(_ + 1).getOrElse(0L),
-      df, cdc = cdc, declareClusterBy = declareClusterBy)
+    transact(spark, root, "commit", attempts = 1)(
+      commitAt(spark, root, _, df, cdc = cdc, declareClusterBy = declareClusterBy))
 
   /** Commit with the rows range-clustered on `clusterBy`: each output file
     * owns a disjoint key range (`repartitionByRange` + an in-file sort), so
@@ -1041,13 +1043,11 @@ object SnapshotTable {
       .drop("__z")
   }
 
-  /** Current version's file entries, reconstructing bytes-only entries when
-    * the manifest predates stats (bounds stay empty → those files are never
-    * pruned, the usual degrade-to-keep). */
-  private def currentEntries(spark: SparkSession, root: String,
-                             v: Long): Seq[SnapshotStats.FileStats] = {
-    val fs = fsOf(spark, root)
-    val resolved = resolvedAt(fs, root, v)
+  /** A resolved version's file entries, reconstructing bytes-only entries
+    * when the manifest predates stats (bounds stay empty → those files are
+    * never pruned, the usual degrade-to-keep). */
+  private def entriesOf(fs: FileSystem,
+                        resolved: SnapshotStats.Resolved): Seq[SnapshotStats.FileStats] = {
     val files = resolved.files
     val stats = resolved.stats
     if (stats.map(_.path).sorted == files.sorted) stats
@@ -1156,26 +1156,6 @@ object SnapshotTable {
   // For tables that never rename or re-add, the mapping is empty and every
   // code path below is the identity — zero plan-shape change.
 
-  /** Logical → physical (non-identity entries only) at version `v`. */
-  private def mappingOf(spark: SparkSession, root: String, v: Long): Map[String, String] =
-    resolvedAt(fsOf(spark, root), root, v).mapping
-
-  /** Every physical name ever assigned at or before `v`. Pre-mapping
-    * manifests carry none, so the set is SEEDED from the declared schema's
-    * physical names plus the tombstoned names — exactly the names whose
-    * bytes may still live in retained files. */
-  private def usedPhysOf(spark: SparkSession, root: String, v: Long): Seq[String] =
-    usedPhysOfResolved(resolvedAt(fsOf(spark, root), root, v))
-
-  private def usedPhysOfResolved(r: SnapshotStats.Resolved): Seq[String] = {
-    val schemaPhys = r.schema.toSeq
-      .flatMap(_.fieldNames).map(n => r.mapping.getOrElse(n, n))
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    (r.usedPhys ++ schemaPhys ++ r.dropped)
-      .foreach(n => if (!seen.exists(_.equalsIgnoreCase(n))) seen += n)
-    seen.toSeq
-  }
-
   private def physName(mapping: Map[String, String], logical: String): String =
     mapping.getOrElse(logical, logical)
 
@@ -1230,8 +1210,6 @@ object SnapshotTable {
     (m, out.toSeq)
   }
 
-  /** Version `v`'s declared schema (manifest metadata; pre-schema manifests
-    * fall back to one data-file footer). */
   /** Widen the declared schema's nullability to cover what a DML commit
     * actually writes (round 12). The format treats nullability as
     * advisory (evolveSchema's retype check ignores it), but a DECLARED
@@ -1249,179 +1227,292 @@ object SnapshotTable {
       if (!f.nullable && g.exists(_.nullable)) f.copy(nullable = true) else f
     })
 
-  private def schemaOf(spark: SparkSession, root: String, v: Long)
-      : org.apache.spark.sql.types.StructType = {
-    val resolved = resolvedAt(fsOf(spark, root), root, v)
-    resolved.schema.getOrElse(
-      spark.read.parquet(resolved.files.head).schema)
+  /** The O(columns) table state every manifest re-declares beside its file
+    * entries (the txn stamp and CDC lists are per-commit, not state). Read
+    * off a base version by [[stateOf]]; a commit states only the fields it
+    * changes (`state.copy(constraints = …)`). */
+  private final case class TableState(
+      schema: org.apache.spark.sql.types.StructType,
+      dropped: Seq[String],
+      bloomOn: Seq[String],
+      constraints: Map[String, String],
+      mapping: Map[String, String],
+      usedPhys: Seq[String],
+      ingested: Seq[String],
+      clusterBy: Seq[String],
+      identityHwm: Map[String, Long])
+
+  /** The state before version 0: nothing declared yet. */
+  private val NoState = TableState(org.apache.spark.sql.types.StructType(Nil),
+    Nil, Nil, Map.empty, Map.empty, Nil, Nil, Nil, Map.empty)
+
+  /** `r`'s table state. Pre-schema manifests fall back to one data-file
+    * footer for the schema. `usedPhys` is every physical name ever
+    * assigned; pre-mapping manifests carry none, so it is SEEDED from the
+    * declared schema's physical names plus the tombstoned names — exactly
+    * the names whose bytes may still live in retained files. */
+  private def stateOf(spark: SparkSession, r: SnapshotStats.Resolved): TableState = {
+    val schema = r.schema
+      .orElse(r.files.headOption.map(spark.read.parquet(_).schema))
+      .getOrElse(org.apache.spark.sql.types.StructType(Nil))
+    TableState(schema, r.dropped.distinct.sorted, r.bloomOn, r.constraints,
+      r.mapping,
+      distinctNames(r.usedPhys ++ schema.fieldNames.map(physName(r.mapping, _)) ++ r.dropped),
+      r.ingested, r.clusterBy, r.identityHwm)
   }
 
-  /** Version `v`'s tombstoned column names. */
-  private def droppedOf(spark: SparkSession, root: String, v: Long): Set[String] =
-    resolvedAt(fsOf(spark, root), root, v).dropped.toSet
+  /** `names` without case-insensitive repeats, first spelling kept. */
+  private def distinctNames(names: Seq[String]): Seq[String] = {
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    names.foreach(n => if (!seen.exists(_.equalsIgnoreCase(n))) seen += n)
+    seen.toSeq
+  }
 
-  /** Version `v`'s COPY INTO loaded-file ledger. */
-  private def ingestedOf(spark: SparkSession, root: String, v: Long): Seq[String] =
-    resolvedAt(fsOf(spark, root), root, v).ingested
+  /** The version a commit on top of `base` targets: base + 1, or 0 on an
+    * empty root. */
+  private def targetOf(base: Option[SnapshotStats.Resolved]): Long =
+    base.fold(0L)(_.version + 1)
 
-  /** Version `v`'s identity-column high-water marks (round 13). */
-  private[graft] def identityHwmOf(spark: SparkSession, root: String,
-                                   v: Long): Map[String, Long] =
-    resolvedAt(fsOf(spark, root), root, v).identityHwm
+  /** Per-attempt token: every attempt writes under its own dirs. */
+  private def newToken(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
 
-  /** Version `v`'s declared clustering columns (round 13). */
-  private def clusterByOf(spark: SparkSession, root: String, v: Long): Seq[String] =
-    resolvedAt(fsOf(spark, root), root, v).clusterBy
-
-  /** Version `v`'s bloom-indexed column config. */
-  private def bloomOnOf(spark: SparkSession, root: String, v: Long): Seq[String] =
-    resolvedAt(fsOf(spark, root), root, v).bloomOn
-
-  /** Version `v`'s named CHECK constraints. */
-  private def constraintsOf(spark: SparkSession, root: String,
-                            v: Long): Map[String, String] =
-    resolvedAt(fsOf(spark, root), root, v).constraints
-
-  /** Build the body one commit writes: a DELTA manifest when a usable base
-    * exists and the delta is actually smaller, else a FULL manifest (the
-    * in-line checkpoint). Full is forced when:
-    *   - `target` is 0 (no base) or falls on the checkpoint cadence;
-    *   - the predecessor is missing, pre-dates per-file stats (a delta
-    *     would re-base onto entries with no bounds), or — impossible by
-    *     construction, checked anyway — its stats don't cover its files;
+  /** Build the body a commit on top of `base` writes: a DELTA manifest
+    * when the delta is actually smaller, else a FULL manifest (the in-line
+    * checkpoint). Full is forced when:
+    *   - there is no base (version 0);
+    *   - the base pre-dates per-file stats (a delta would re-base onto
+    *     entries with no bounds), or — impossible by construction, checked
+    *     anyway — its stats don't cover its files;
     *   - the COPY ledger SHRANK (restore rewinding it — deltas only add);
     *   - add+remove counts reach the base's file count (restore/recluster
     *     replacing everything: the "delta" would be bigger than full).
     * Every full manifest resets the resolution chain, so opportunistic
     * fulls are always safe. */
-  private def buildCommitBody(fs: FileSystem, root: String, target: Long,
+  private def buildCommitBody(base: Option[SnapshotStats.Resolved],
                               entries: Seq[SnapshotStats.FileStats],
+                              state: TableState,
                               txn: Option[(String, Long)],
-                              cdcPaths: Option[SnapshotStats.Cdc],
-                              schemaJson: Option[String],
-                              dropped: Seq[String], bloomOn: Seq[String],
-                              constraints: Map[String, String],
-                              mapping: Map[String, String],
-                              usedPhys: Seq[String],
-                              ingested: Seq[String],
-                              clusterBy: Seq[String] = Nil,
-                              identityHwm: Map[String, Long] = Map.empty): String = {
+                              cdcPaths: Option[SnapshotStats.Cdc]): String = {
+    val target = targetOf(base)
     def full = SnapshotStats.manifestJson(target, entries, txn, cdcPaths,
-      schemaJson, dropped, bloomOn, constraints, mapping, usedPhys, ingested,
-      clusterBy = clusterBy, identityHwm = identityHwm)
+      Some(state.schema.json), state.dropped, state.bloomOn, state.constraints,
+      state.mapping, state.usedPhys, state.ingested,
+      clusterBy = state.clusterBy, identityHwm = state.identityHwm)
     // Round 14: checkpoint-cadence versions no longer force a FULL JSON
     // manifest — commit bytes stay flat at EVERY version; the winner
     // writes the columnar checkpoint post-CAS instead (maybeCheckpoint).
-    if (target == 0L || !fs.exists(manifestPath(root, target - 1))) return full
-    val prev = resolvedAt(fs, root, target - 1)
-    // Writer-protocol gate (round 14): refuse to extend a chain that
-    // demands a newer writer — an old build committing onto it could
-    // corrupt state newer readers depend on.
-    if (prev.protocol._2 > SnapshotStats.SupportedWriterVersion)
-      throw new IllegalStateException(
-        s"$root@${target - 1} requires manifest writer version " +
-          s"${prev.protocol._2}; this engine supports up to " +
-          s"${SnapshotStats.SupportedWriterVersion} — upgrade before writing")
-    val prevStats = prev.stats
-    val prevFiles = prev.files
-    if (prevStats.map(_.path).sorted != prevFiles.sorted) return full
-    val prevIngested = prev.ingested
-    if (!prevIngested.forall(ingested.contains)) return full
-    val prevByPath = prevStats.map(e => e.path -> e).toMap
-    val entryPaths = entries.map(_.path).toSet
-    // A carried file whose entry CHANGED (never happens today — carried
-    // entries are the parsed predecessor entries verbatim) would serialize
-    // as remove+add: resolution applies removals first, so the path nets
-    // to the new stats.
-    val add = entries.filter(e => !prevByPath.get(e.path).contains(e))
-    val removePaths = prevStats.map(_.path).filterNot(entryPaths)
-    // No carried entry ⇒ the delta would serialize stats for EVERY listed
-    // file anyway (restore/recluster/compact-all): full costs the same and
-    // resets the resolution chain for free.
-    if (add.length >= entries.length && entries.nonEmpty) return full
-    SnapshotStats.deltaManifestJson(target, target - 1, add, removePaths,
-      ingestedAdd = ingested.filterNot(prevIngested.toSet),
-      txn = txn, cdc = cdcPaths, schemaJson = schemaJson,
-      dropped = dropped, bloomOn = bloomOn, constraints = constraints,
-      mapping = mapping, usedPhys = usedPhys, clusterBy = clusterBy,
-      identityHwm = identityHwm)
+    base match {
+      case None => full
+      case Some(prev) =>
+        val prevStats = prev.stats
+        val prevIngested = prev.ingested
+        if (prevStats.map(_.path).sorted != prev.files.sorted ||
+            !prevIngested.forall(state.ingested.contains)) full
+        else {
+          val prevByPath = prevStats.map(e => e.path -> e).toMap
+          val entryPaths = entries.map(_.path).toSet
+          // A carried file whose entry CHANGED (never happens today —
+          // carried entries are the parsed predecessor entries verbatim)
+          // would serialize as remove+add: resolution applies removals
+          // first, so the path nets to the new stats.
+          val add = entries.filter(e => !prevByPath.get(e.path).contains(e))
+          val removePaths = prevStats.map(_.path).filterNot(entryPaths)
+          // No carried entry ⇒ the delta would serialize stats for EVERY
+          // listed file anyway (restore/recluster/compact-all): full costs
+          // the same and resets the resolution chain for free.
+          if (add.length >= entries.length && entries.nonEmpty) full
+          else SnapshotStats.deltaManifestJson(target, prev.version, add,
+            removePaths, ingestedAdd = state.ingested.filterNot(prevIngested.toSet),
+            txn = txn, cdc = cdcPaths, schemaJson = Some(state.schema.json),
+            dropped = state.dropped, bloomOn = state.bloomOn,
+            constraints = state.constraints, mapping = state.mapping,
+            usedPhys = state.usedPhys, clusterBy = state.clusterBy,
+            identityHwm = state.identityHwm)
+        }
+    }
   }
 
-  /** One CAS attempt at a METADATA-ONLY commit (no data written): used by
-    * dropColumn / restore / setBloomColumns / constraint ops. Returns true
-    * on the rename win; the caller's loop re-derives its payload from the
-    * winner's version on false. */
-  private def tryCommitMeta(spark: SparkSession, root: String, target: Long,
-                            entries: Seq[SnapshotStats.FileStats],
-                            schema: org.apache.spark.sql.types.StructType,
-                            dropped: Seq[String], bloomOn: Seq[String],
-                            constraints: Map[String, String],
-                            mapping: Map[String, String],
-                            usedPhys: Seq[String],
-                            cdc: Option[(DataFrame, DataFrame)] = None,
-                            ingested: Option[Seq[String]] = None,
-                            clusterBy: Option[Seq[String]] = None,
-                            identityHwm: Option[Map[String, Long]] = None): Boolean = {
-    val fs = fsOf(spark, root)
-    // COPY INTO's loaded-file ledger inherits like tombstones unless the
-    // caller pins an exact set (restore rewinds it with the file set;
-    // clone carries the source's so a re-COPY on the clone stays a no-op).
-    val prevResolved =
-      if (target == 0L || !fs.exists(manifestPath(root, target - 1))) None
-      else Some(resolvedAt(fs, root, target - 1))
-    val ingestedEff = ingested.getOrElse(
-      prevResolved.map(_.ingested).getOrElse(Nil))
-    // Declared clustering inherits like the ledger (no metadata-only
-    // commit changes the layout declaration) unless the caller declares
-    // one — the `CREATE TABLE ... CLUSTER BY` bootstrap (round 13).
-    val clusterByEff = clusterBy.getOrElse(
-      prevResolved.map(_.clusterBy).getOrElse(Nil))
-    // Identity high-water marks inherit the same way (a metadata commit
-    // writes no rows, so no bump); clone pins its source's exact map.
-    val hwmEff = identityHwm.getOrElse(
-      prevResolved.map(_.identityHwm).getOrElse(Map.empty[String, Long]))
-    val token = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    // Optional row-level change sets (restoreWithCdc): side-cars land
-    // before the manifest rename, exactly like commitAt's, and a CAS loss
-    // removes them with the attempt.
-    val cdcDir = new Path(root, f"cdc-$target%08d-$token")
-    val cdcPaths: Option[SnapshotStats.Cdc] = cdc.map { case (addDf, removeDf) =>
-      def writeSide(side: String, d: DataFrame): Seq[String] = {
-        // PROVABLY-empty side (a `limit(0)` pre/post leg — every DELETE's
-        // add side, OPTIMIZE's both sides): skip the write job outright
-        // (optimization r15). The empty-path-array manifest shape is
-        // identical to what an empty write serializes to; only the ~0.1 s
-        // plan+job overhead per commit goes away.
-        if (d.queryExecution.analyzed.maxRows.contains(0L)) return Seq.empty
-        val p = new Path(cdcDir, side)
-        toPhysical(d, mapping).write.mode(SaveMode.ErrorIfExists).parquet(p.toString)
-        fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
+  /** Land a commit's row-level change sets as side-car parquet under
+    * `cdcDir` BEFORE its manifest CAS — like the snapshot data, they
+    * become visible only when the manifest naming them does, and a crashed
+    * attempt leaves only an invisible orphan dir for vacuum. Empty sides
+    * serialize as empty path arrays ("rows unchanged" is a meaningful CDC
+    * value — compaction). Side-cars speak physical names like the data
+    * files; the feed readers project back through the end version's
+    * mapping. */
+  private def writeCdc(fs: FileSystem, cdcDir: Path, mapping: Map[String, String],
+                       cdc: Option[(DataFrame, DataFrame)]): Option[SnapshotStats.Cdc] =
+    cdc.map { case (addDf, removeDf) =>
+      // PROVABLY-empty side (a `limit(0)` leg — every predicate DELETE's
+      // add side, append-shaped upserts' remove side, OPTIMIZE's both
+      // sides): skip the write job outright (optimization r15). Readers
+      // already treat an empty path array as "no rows on this side"
+      // (readOrEmpty / slice), which is exactly what the empty write
+      // produced; only the ~0.1 s plan+job overhead per commit goes away.
+      def provablyEmpty(d: DataFrame): Boolean =
+        d.queryExecution.analyzed.maxRows.contains(0L)
+      def listSide(p: Path): Seq[String] =
+        if (!fs.exists(p)) Seq.empty
+        else fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
           .filter(_.getLen > 0)
           .map(_.getPath.toString).sorted.toSeq
+      def writeSide(side: String, d: DataFrame): Seq[String] = {
+        if (provablyEmpty(d)) return Seq.empty
+        val p = new Path(cdcDir, side)
+        toPhysical(d, mapping).write.mode(SaveMode.ErrorIfExists).parquet(p.toString)
+        listSide(p)
       }
-      (writeSide("add", addDf), writeSide("remove", removeDf))
+      val addPhys = toPhysical(addDf, mapping)
+      val rmPhys = toPhysical(removeDf, mapping)
+      // Both sides live AND schema-identical (post/pre images of one DML —
+      // the common case): land them in ONE partitioned write job instead of
+      // two (optimization r15, guide §1.2 step 1 — both sides are
+      // single-stage filters over the same materialized merge, so a second
+      // write job re-paid plan + job round-trip for no extra information).
+      // Readers consume explicit per-side FILE path lists from the
+      // manifest, so the `__gf_side=` directory layout is invisible to
+      // them; the partition column itself never lands in the data files.
+      // Differing schemas (one side of a schema evolution) keep the
+      // two-write path — CDC pre-images must carry exactly their columns.
+      if (!provablyEmpty(addDf) && !provablyEmpty(removeDf) &&
+          addPhys.schema == rmPhys.schema) {
+        import org.apache.spark.sql.functions.lit
+        addPhys.withColumn("__gf_side", lit("add"))
+          .unionByName(rmPhys.withColumn("__gf_side", lit("remove")))
+          .write.partitionBy("__gf_side")
+          .mode(SaveMode.ErrorIfExists).parquet(cdcDir.toString)
+        (listSide(new Path(cdcDir, "__gf_side=add")),
+          listSide(new Path(cdcDir, "__gf_side=remove")))
+      } else (writeSide("add", addDf), writeSide("remove", removeDf))
     }
-    val body = buildCommitBody(fs, root, target, entries, txn = None,
-      cdcPaths = cdcPaths, schemaJson = Some(schema.json), dropped = dropped,
-      bloomOn = bloomOn, constraints = constraints, mapping = mapping,
-      usedPhys = usedPhys, ingested = ingestedEff, clusterBy = clusterByEff,
-      identityHwm = hwmEff)
+
+  /** The local filesystem's rename REPLACES an existing destination, so
+    * the CAS's exists-check and rename must be one step: two racing
+    * writers could otherwise both pass the check and the second rename
+    * would silently overwrite the first's committed version. This lock
+    * makes them one step within the JVM (HDFS rename refuses an existing
+    * destination on its own). */
+  private val casLock = new Object
+
+  /** The compare-and-swap every commit ends in: write the manifest on top
+    * of `base` under a temp name and RENAME it into `_manifests/`. Hadoop
+    * rename refuses an existing destination, so exactly one writer's
+    * manifest lands per version. A loss removes the temp file, counts in
+    * [[casLosses]] and returns false — the caller removes its own
+    * side-cars, never the winner's. A win runs the post-commit hooks:
+    * checkpoint cadence and the maintenance autopilot. */
+  private def casManifest(spark: SparkSession, fs: FileSystem, root: String,
+                          token: String, base: Option[SnapshotStats.Resolved],
+                          entries: Seq[SnapshotStats.FileStats], state: TableState,
+                          txn: Option[(String, Long)],
+                          cdcPaths: Option[SnapshotStats.Cdc]): Boolean = {
+    val target = targetOf(base)
+    val body = buildCommitBody(base, entries, state, txn, cdcPaths)
     val mdir = new Path(root, ManifestDir)
     fs.mkdirs(mdir)
     val tmp = new Path(mdir, f".manifest-$target%08d-$token.json.tmp")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     val dest = manifestPath(root, target)
-    if (fs.exists(dest) || !fs.rename(tmp, dest)) {
+    if (!casLock.synchronized(!fs.exists(dest) && fs.rename(tmp, dest))) {
       fs.delete(tmp, false)
-      if (cdcPaths.isDefined) fs.delete(cdcDir, true)
-      casLosses.incrementAndGet(); false
+      casLosses.incrementAndGet()
+      false
     } else {
       maybeCheckpoint(fs, root, target)
       maybeAutoMaintain(spark, root, target)
       true
     }
   }
+
+  /** A lost CAS: remove this attempt's own dirs (never the winner's) and
+    * surface the conflict. */
+  private def abandon(fs: FileSystem, root: String, target: Long,
+                      own: Seq[Path]): Nothing = {
+    own.foreach(fs.delete(_, true))
+    throw new ConcurrentWriteException(
+      s"version $target at $root was committed by a concurrent writer")
+  }
+
+  /** A METADATA-ONLY commit on top of `base` (version 0 when None): lists
+    * `entries` under `state` and writes no data file. `cdc`, when given,
+    * lands as side-cars first (restoreWithCdc, a DV delete's pre-images);
+    * `sidecars` are this attempt's own DV dirs. A CAS loss removes both
+    * and throws [[ConcurrentWriteException]]. */
+  private def commitMeta(spark: SparkSession, root: String,
+                         base: Option[SnapshotStats.Resolved],
+                         entries: Seq[SnapshotStats.FileStats], state: TableState,
+                         cdc: Option[(DataFrame, DataFrame)] = None,
+                         sidecars: Seq[Path] = Nil): Long = {
+    val fs = fsOf(spark, root)
+    val target = targetOf(base)
+    val token = newToken()
+    val cdcDir = new Path(root, f"cdc-$target%08d-$token")
+    val cdcPaths = writeCdc(fs, cdcDir, state.mapping, cdc)
+    if (casManifest(spark, fs, root, token, base, entries, state, None, cdcPaths))
+      target
+    else abandon(fs, root, target, cdcPaths.map(_ => cdcDir).toSeq ++ sidecars)
+  }
+
+  /** The common metadata-only shape: `base`'s files under a changed state. */
+  private def commitState(spark: SparkSession, root: String,
+                          base: SnapshotStats.Resolved, state: TableState): Long =
+    commitMeta(spark, root, Some(base), entriesOf(fsOf(spark, root), base), state)
+
+  /** Attempt bounds of [[transact]]. Blind and append-shaped commits
+    * (append, appendOnce, commitOnce, copyInto) re-stack their batch on the
+    * winner; everything that reads before it writes redoes its read. */
+  private val BlindAttempts = 5
+  private val ReadAttempts = 3
+
+  /** The one commit seam (the shape of Delta's OptimisticTransaction).
+    * Each attempt reads the current version once, resolves it as the base
+    * (None on an empty root), refuses a chain that demands a newer writer,
+    * and runs `body` against that base. `body` derives its commit from the
+    * base and lands it through [[commitAt]] or [[commitMeta]], which target
+    * base + 1: a commit that landed in between is a CAS conflict, never an
+    * erased update. A [[ConcurrentWriteException]] (a lost CAS that no
+    * rebase resolved) re-runs `body` against the winner's state, up to
+    * `attempts` times; past the bound the conflict surfaces naming `op`,
+    * `root`, the last version tried and the attempt count. */
+  private[graft] def transact[T](spark: SparkSession, root: String, op: String,
+                                 attempts: Int)(
+      body: Option[SnapshotStats.Resolved] => T): T = {
+    val fs = fsOf(spark, root)
+    @annotation.tailrec
+    def attempt(n: Int): T = {
+      val base = currentVersion(spark, root).map(resolvedAt(fs, root, _))
+      // Writer-protocol gate (round 14): refuse to extend a chain that
+      // demands a newer writer — an old build committing onto it could
+      // corrupt state newer readers depend on.
+      base.foreach { b =>
+        if (b.protocol._2 > SnapshotStats.SupportedWriterVersion)
+          throw new IllegalStateException(
+            s"$root@${b.version} requires manifest writer version " +
+              s"${b.protocol._2}; this engine supports up to " +
+              s"${SnapshotStats.SupportedWriterVersion} — upgrade before writing")
+      }
+      val outcome =
+        try Right(body(base))
+        catch { case e: ConcurrentWriteException => Left(e) }
+      outcome match {
+        case Right(t) => t
+        case Left(_) if n < attempts => attempt(n + 1)
+        case Left(e) => throw new ConcurrentWriteException(
+          s"$op lost the version race at $root $attempts time(s); " +
+            s"last tried version ${targetOf(base)}", e)
+      }
+    }
+    attempt(1)
+  }
+
+  /** [[transact]] for operations that need an existing table. */
+  private def transactOn[T](spark: SparkSession, root: String, op: String,
+                            attempts: Int)(body: SnapshotStats.Resolved => T): T =
+    transact(spark, root, op, attempts)(base => body(base.getOrElse(
+      throw new IllegalStateException(
+        s"$op on a table with no committed version at $root"))))
 
   private def bloomSupported(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -1445,12 +1536,9 @@ object SnapshotTable {
     * degrade to keep; a compact/recluster rewrite backfills them. */
   def setBloomColumns(spark: SparkSession, root: String, cols: Seq[String]): Long = {
     require(cols.nonEmpty, "setBloomColumns needs at least one column")
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"setBloomColumns on a table with no committed version at $root"))
-      val schema = schemaOf(spark, root, v)
+    transactOn(spark, root, "setBloomColumns", ReadAttempts) { base =>
+      val state = stateOf(spark, base)
+      val schema = state.schema
       cols.foreach { c =>
         val f = schema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
@@ -1458,16 +1546,8 @@ object SnapshotTable {
         require(bloomSupported(f.dataType),
           s"bloom filters support integral/string columns; $c is ${f.dataType}")
       }
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, v),
-          schema, droppedOf(spark, root, v).toSeq.sorted, cols.distinct.sorted,
-          constraintsOf(spark, root, v),
-          mappingOf(spark, root, v), usedPhysOf(spark, root, v)))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
+      commitState(spark, root, base, state.copy(bloomOn = cols.distinct.sorted))
     }
-    -1L // unreachable
   }
 
   /** Column names a parsed CHECK expression references (unresolved, so the
@@ -1493,26 +1573,15 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.nonEmpty && checkSql.nonEmpty, "constraint needs name + SQL")
     constraintRefs(spark, checkSql) // parse now: a typo must fail here
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"setCheckConstraint on a table with no committed version at $root"))
-      val violating = read(spark, root, Some(v))
+    transactOn(spark, root, "setCheckConstraint", ReadAttempts) { base =>
+      val violating = read(spark, root, Some(base.version))
         .filter(not(coalesce(expr(checkSql), lit(true)))).limit(1).count()
       require(violating == 0L,
         s"existing rows violate CHECK $name ($checkSql); clean the data first")
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, v),
-          schemaOf(spark, root, v), droppedOf(spark, root, v).toSeq.sorted,
-          bloomOnOf(spark, root, v),
-          constraintsOf(spark, root, v) + (name -> checkSql),
-          mappingOf(spark, root, v), usedPhysOf(spark, root, v)))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
+      val state = stateOf(spark, base)
+      commitState(spark, root, base,
+        state.copy(constraints = state.constraints + (name -> checkSql)))
     }
-    -1L // unreachable
   }
 
   /** Configured bloom-filter columns at `asOf` — the public read surface
@@ -1521,7 +1590,7 @@ object SnapshotTable {
                    asOf: Option[Long] = None): Seq[String] = {
     val v = asOf.orElse(currentVersion(spark, root))
       .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    bloomOnOf(spark, root, v)
+    resolvedAt(fsOf(spark, root), root, v).bloomOn
   }
 
   /** Declared CHECK constraints (name → SQL) at `asOf` — the public read
@@ -1530,30 +1599,18 @@ object SnapshotTable {
                        asOf: Option[Long] = None): Map[String, String] = {
     val v = asOf.orElse(currentVersion(spark, root))
       .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    constraintsOf(spark, root, v)
+    resolvedAt(fsOf(spark, root), root, v).constraints
   }
 
   /** Remove a named CHECK constraint (metadata-only). */
-  def dropCheckConstraint(spark: SparkSession, root: String, name: String): Long = {
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"dropCheckConstraint on a table with no committed version at $root"))
-      val cons = constraintsOf(spark, root, v)
+  def dropCheckConstraint(spark: SparkSession, root: String, name: String): Long =
+    transactOn(spark, root, "dropCheckConstraint", ReadAttempts) { base =>
+      val state = stateOf(spark, base)
+      val cons = state.constraints
       require(cons.contains(name),
         s"no CHECK constraint $name on $root (have: ${cons.keys.mkString(", ")})")
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, v),
-          schemaOf(spark, root, v), droppedOf(spark, root, v).toSeq.sorted,
-          bloomOnOf(spark, root, v), cons - name,
-          mappingOf(spark, root, v), usedPhysOf(spark, root, v)))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
+      commitState(spark, root, base, state.copy(constraints = cons - name))
     }
-    -1L // unreachable
-  }
 
   /** Exactly-once APPEND for streaming `foreachBatch` sinks — the Delta
     * `txn` pattern. Appends `df` as a new version whose manifest is the old
@@ -1581,56 +1638,39 @@ object SnapshotTable {
     * Independent concurrent producers must write under distinct appIds
     * (exercised by `ScaleRehearsal concurrency`). */
   def appendOnce(spark: SparkSession, root: String, df: DataFrame,
-                 appId: String, batchId: Long): Long = {
-    var attempt = 0
-    while (true) {
+                 appId: String, batchId: Long): Long =
+    // Every attempt re-checks lastTxn: the winner may have BEEN this batch.
+    transact(spark, root, "appendOnce", BlindAttempts) { base =>
       if (lastTxn(spark, root, appId).exists(_ >= batchId))
-        return txnVersion(spark, root, appId, batchId) // replay: already applied
+        txnVersion(spark, root, appId, batchId) // replay: already applied
           .getOrElse(currentVersion(spark, root).get)
-      try {
-        return appendCommit(spark, root, df, Some((appId, batchId)))
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 5) throw e // loop re-checks lastTxn before retrying
-      }
+      else appendCommit(spark, root, base, df, Some((appId, batchId)))
     }
-    -1L // unreachable
-  }
 
   /** Plain APPEND as a new version (the `INSERT INTO` lowering —
     * graft.sql): old files + this batch's files, additive schema
     * evolution, no idempotence stamp. Streaming sinks use [[appendOnce]]
     * instead; this is the batch-SQL shape. */
-  def append(spark: SparkSession, root: String, df: DataFrame): Long = {
-    var attempt = 0
-    while (true) {
-      try {
-        return appendCommit(spark, root, df, None)
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 5) throw e
-      }
-    }
-    -1L // unreachable
-  }
+  def append(spark: SparkSession, root: String, df: DataFrame): Long =
+    transact(spark, root, "append", BlindAttempts)(
+      appendCommit(spark, root, _, df, None))
 
   /** One append attempt: bootstrap at version 0, else evolve + align +
-    * commit on top of the current version (shared by [[append]] and
-    * [[appendOnce]]). */
-  private def appendCommit(spark: SparkSession, root: String, df: DataFrame,
+    * commit on top of `base` (shared by [[append]] and [[appendOnce]]). */
+  private def appendCommit(spark: SparkSession, root: String,
+                           base: Option[SnapshotStats.Resolved], df: DataFrame,
                            txn: Option[(String, Long)]): Long =
-    currentVersion(spark, root) match {
-      case None => commitAt(spark, root, 0L, df, Nil, txn)
-      case Some(v) =>
-        val oldSchema = schemaOf(spark, root, v)
+    base match {
+      case None => commitAt(spark, root, None, df, Nil, txn)
+      case Some(b) =>
+        val state = stateOf(spark, b)
+        val oldSchema = state.schema
         val evolved = evolveSchema(oldSchema, df.schema)
         // New columns get physical ids that avoid every name ever
         // used — a re-added dropped name reads NULL from old files
         // instead of resurfacing orphaned bytes (column mapping).
         val assigned = assignPhysical(oldSchema, evolved,
-          mappingOf(spark, root, v), usedPhysOf(spark, root, v))
+          state.mapping, state.usedPhys)
         // Alias the batch onto the DECLARED casing (ADVICE r10): schema
         // evolution resolves names case-insensitively, but the column
         // MAPPING is keyed by the declared spelling — a batch shipping
@@ -1666,9 +1706,8 @@ object SnapshotTable {
               f.metadata.getLong("identity.step") else 1L
             require(step > 0,
               s"identity column ${f.name}: descending STEP is unsupported")
-            val base = identityHwmOf(spark, root, v)
-              .getOrElse(f.name, start - step)
-            val gen = (lit(base) +
+            val hwm = state.identityHwm.getOrElse(f.name, start - step)
+            val gen = (lit(hwm) +
               (monotonically_increasing_id() + lit(1L)) * lit(step))
               .cast(f.dataType)
             if (!batchLc(lc(f.name))) acc.withColumn(f.name, gen)
@@ -1690,8 +1729,8 @@ object SnapshotTable {
             }
           }
         }
-        commitAt(spark, root, v + 1, withIdentity,
-          currentEntries(spark, root, v), txn,
+        commitAt(spark, root, base, withIdentity,
+          entriesOf(fsOf(spark, root), b), txn,
           tableSchema = Some(evolved), meta = Some(assigned))
     }
 
@@ -1705,35 +1744,27 @@ object SnapshotTable {
     * advances in lockstep exactly once. Returns the version carrying the
     * batch (the stamped version on replay, like appendOnce). */
   def commitOnce(spark: SparkSession, root: String, df: DataFrame,
-                 appId: String, batchId: Long): Long = {
-    var attempt = 0
-    while (true) {
+                 appId: String, batchId: Long): Long =
+    transact(spark, root, "commitOnce", BlindAttempts) { base =>
       if (lastTxn(spark, root, appId).exists(_ >= batchId))
-        return txnVersion(spark, root, appId, batchId)
+        txnVersion(spark, root, appId, batchId)
           .getOrElse(currentVersion(spark, root).get)
-      val v = currentVersion(spark, root).map(_ + 1).getOrElse(0L)
-      try {
-        return commitAt(spark, root, v, df, txn = Some((appId, batchId)))
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 5) throw e // loop re-checks lastTxn before retrying
-      }
+      else commitAt(spark, root, base, df, txn = Some((appId, batchId)))
     }
-    -1L // unreachable
-  }
 
-  /** Commit targeting an explicit version — the CAS core. A crash between
-    * data write and manifest rename leaves an INVISIBLE orphan dir (readers
-    * only follow manifests) which vacuum eventually sweeps; the unique
-    * per-attempt token means a retry or a concurrent writer never collides
-    * with it on ErrorIfExists.
+  /** Commit `df` on top of `base` (version 0 when None) — the data-commit
+    * core. A crash between data write and manifest rename leaves an
+    * INVISIBLE orphan dir (readers only follow manifests) which vacuum
+    * eventually sweeps; the unique per-attempt token means a retry or a
+    * concurrent writer never collides with it on ErrorIfExists.
     *
     * `carry` prepends existing file entries to the new manifest (the append
     * path: the new version = old files + this commit's files — no data is
     * rewritten); `txn` stamps the manifest with an (appId, batchId)
-    * idempotence marker. */
-  private[graft] def commitAt(spark: SparkSession, root: String, v: Long,
+    * idempotence marker; `sidecars` are this attempt's own DV dirs,
+    * removed with its data when the CAS is lost. */
+  private[graft] def commitAt(spark: SparkSession, root: String,
+                            base: Option[SnapshotStats.Resolved],
                             df: DataFrame,
                             carry: Seq[SnapshotStats.FileStats] = Nil,
                             txn: Option[(String, Long)] = None,
@@ -1743,47 +1774,28 @@ object SnapshotTable {
                             ingestedAdd: Seq[String] = Nil,
                             rebase: Option[RebaseSpec] = None,
                             declareClusterBy: Option[Seq[String]] = None,
-                            preserveLayout: Boolean = false): Long = {
+                            preserveLayout: Boolean = false,
+                            sidecars: Seq[Path] = Nil): Long = {
     val fs = fsOf(spark, root)
-    // Column-mapping metadata: explicit from an evolving caller
-    // (appendOnce/upsert assigning fresh physical ids), else inherited
-    // from the predecessor manifest like tombstones/blooms/constraints.
-    val (inherited, bloomOn, constraints, prevMapping, prevUsed, prevIngested,
-         prevClusterBy, prevFileCount) =
-      if (v == 0L) (Nil, Nil, Map.empty[String, String], Map.empty[String, String],
-        Nil, Nil, Nil, 0)
-      else {
-        val prev = manifestPath(root, v - 1)
-        if (fs.exists(prev)) {
-          val pr = resolvedAt(fs, root, v - 1)
-          (pr.dropped, pr.bloomOn, pr.constraints, pr.mapping,
-            usedPhysOfResolved(pr), pr.ingested, pr.clusterBy,
-            pr.files.length)
-        } else (Nil, Nil, Map.empty[String, String],
-          Map.empty[String, String], Nil, Nil, Nil, 0)
-      }
+    val v = targetOf(base)
+    // Everything not stated below is inherited from the base like
+    // tombstones/blooms/constraints.
+    val prev = base.fold(NoState)(stateOf(spark, _))
+    val prevFileCount = base.fold(0)(_.files.length)
     // Declared clustering: an explicit declaration (commitClustered /
     // recluster / CTAS CLUSTER BY) records itself; everything else
     // inherits. DML rewrites RE-SORT their new files on the inherited
     // columns below — N merge waves must not decay the layout that
     // file-skipping selectivity rests on (round 13, VERDICT r12 #3).
-    val clusterByEff = declareClusterBy.getOrElse(prevClusterBy)
-    val prevHwm =
-      if (v == 0L || !fs.exists(manifestPath(root, v - 1))) Map.empty[String, Long]
-      else resolvedAt(fs, root, v - 1).identityHwm
-    // COPY INTO ledger: accumulated monotonically like tombstones, plus
-    // this commit's newly-loaded identities (copyInto's `ingestedAdd`).
-    val ingested = (prevIngested ++ ingestedAdd).distinct.sorted
-    val (mapping, usedPhys0) = meta.getOrElse((prevMapping, prevUsed))
+    val clusterByEff = declareClusterBy.getOrElse(prev.clusterBy)
+    // Column-mapping metadata: explicit from an evolving caller
+    // (appendOnce/upsert assigning fresh physical ids), else inherited.
+    val (mapping, usedPhys0) = meta.getOrElse((prev.mapping, prev.usedPhys))
     val logicalSchema = tableSchema.getOrElse(df.schema)
     // usedPhys stays monotonic even across callers that didn't evolve.
-    val usedPhys = {
-      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      (usedPhys0 ++ logicalSchema.fieldNames.map(physName(mapping, _)))
-        .foreach(n => if (!seen.exists(_.equalsIgnoreCase(n))) seen += n)
-      seen.toSeq
-    }
-    val token = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val usedPhys =
+      distinctNames(usedPhys0 ++ logicalSchema.fieldNames.map(physName(mapping, _)))
+    val token = newToken()
     val snapDir = new Path(root, f"snap-$v%08d-$token")
     val cdcDir = new Path(root, f"cdc-$v%08d-$token")
     // Data files speak PHYSICAL names (identity — and a no-op — unless the
@@ -1826,56 +1838,7 @@ object SnapshotTable {
         }
       } else df
     toPhysical(dfSorted, mapping).write.mode(SaveMode.ErrorIfExists).parquet(snapDir.toString)
-    // Row-level change sets (when recorded) land BEFORE the manifest CAS —
-    // like the snapshot data, they become visible only when the manifest
-    // naming them does, and a crashed attempt leaves only an invisible
-    // orphan dir for vacuum. Empty sides serialize as empty path arrays
-    // ("rows unchanged" is a meaningful CDC value — compaction). CDC
-    // side-cars speak physical names like the data files; the feed readers
-    // project back through the end version's mapping.
-    val cdcPaths: Option[SnapshotStats.Cdc] = cdc.map { case (addDf, removeDf) =>
-      // PROVABLY-empty side (a `limit(0)` leg — every predicate DELETE's
-      // add side, append-shaped upserts' remove side): skip the write job
-      // outright (optimization r15). Readers already treat an empty path
-      // array as "no rows on this side" (readOrEmpty / slice), which is
-      // exactly what the empty write produced; only the ~0.1 s plan+job
-      // overhead per commit goes away.
-      def provablyEmpty(d: DataFrame): Boolean =
-        d.queryExecution.analyzed.maxRows.contains(0L)
-      def listSide(p: Path): Seq[String] =
-        if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-          .filter(_.getLen > 0)
-          .map(_.getPath.toString).sorted.toSeq
-      def writeSide(side: String, d: DataFrame): Seq[String] = {
-        if (provablyEmpty(d)) return Seq.empty
-        val p = new Path(cdcDir, side)
-        toPhysical(d, mapping).write.mode(SaveMode.ErrorIfExists).parquet(p.toString)
-        listSide(p)
-      }
-      val addPhys = toPhysical(addDf, mapping)
-      val rmPhys = toPhysical(removeDf, mapping)
-      // Both sides live AND schema-identical (post/pre images of one DML —
-      // the common case): land them in ONE partitioned write job instead of
-      // two (optimization r15, guide §1.2 step 1 — both sides are
-      // single-stage filters over the same materialized merge, so a second
-      // write job re-paid plan + job round-trip for no extra information).
-      // Readers consume explicit per-side FILE path lists from the
-      // manifest, so the `__gf_side=` directory layout is invisible to
-      // them; the partition column itself never lands in the data files.
-      // Differing schemas (one side of a schema evolution) keep the
-      // two-write path — CDC pre-images must carry exactly their columns.
-      if (!provablyEmpty(addDf) && !provablyEmpty(removeDf) &&
-          addPhys.schema == rmPhys.schema) {
-        import org.apache.spark.sql.functions.lit
-        addPhys.withColumn("__gf_side", lit("add"))
-          .unionByName(rmPhys.withColumn("__gf_side", lit("remove")))
-          .write.partitionBy("__gf_side")
-          .mode(SaveMode.ErrorIfExists).parquet(cdcDir.toString)
-        (listSide(new Path(cdcDir, "__gf_side=add")),
-          listSide(new Path(cdcDir, "__gf_side=remove")))
-      } else (writeSide("add", addDf), writeSide("remove", removeDf))
-    }
+    val cdcPaths = writeCdc(fs, cdcDir, mapping, cdc)
     // Harvest per-file column bounds from the just-written footers (metadata
     // reads only) so the manifest enables data skipping at read planning.
     // Footers are independent — harvest them CONCURRENTLY past a handful
@@ -1906,13 +1869,13 @@ object SnapshotTable {
     // append/upsert/UPDATE/compact never becomes visible, and the attempt
     // cleans up like a CAS loser. One delta-sized scan per constraint.
     // Constraints speak logical names — project the physical files back.
-    if (constraints.nonEmpty && stats.nonEmpty) {
+    if (prev.constraints.nonEmpty && stats.nonEmpty) {
       import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
       val newDf = fromPhysical(
         spark.read.schema(physSchema(logicalSchema, mapping))
           .parquet(stats.map(_.path).toIndexedSeq: _*),
         logicalSchema, mapping)
-      constraints.foreach { case (n, sql) =>
+      prev.constraints.foreach { case (n, sql) =>
         if (newDf.filter(not(coalesce(expr(sql), lit(true)))).limit(1).count() > 0) {
           fs.delete(snapDir, true)
           if (cdcPaths.isDefined) fs.delete(cdcDir, true)
@@ -1934,7 +1897,7 @@ object SnapshotTable {
     // PATHS — a 50k-row file's ~60 KB filter would otherwise balloon the
     // manifest every commit re-writes (the Delta bloom-index layout).
     val newStats =
-      if (bloomOn.isEmpty) stats.toSeq
+      if (prev.bloomOn.isEmpty) stats.toSeq
       else {
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
@@ -1948,7 +1911,7 @@ object SnapshotTable {
               // Config names are logical; files (and pushed-down filter
               // attributes at prune time) are physical — build and key by
               // the PHYSICAL name.
-              val applicable = bloomOn.map(physName(mapping, _)).filter(c =>
+              val applicable = prev.bloomOn.map(physName(mapping, _)).filter(c =>
                 fdf.schema.fields.exists(f => f.name == c && bloomSupported(f.dataType)))
               if (applicable.isEmpty || fst.rows == 0L) fst
               else fst.copy(bloom = applicable.map { c =>
@@ -1963,12 +1926,6 @@ object SnapshotTable {
           Await.result(Future.sequence(built), Duration.Inf)
         } finally pool.shutdown()
       }
-    val mdir = new Path(root, ManifestDir)
-    fs.mkdirs(mdir)
-    // CAS: Hadoop rename refuses an existing destination, so exactly one
-    // writer's manifest lands per version. The loser removes its own
-    // (never the winner's) data before surfacing the conflict — unless a
-    // REBASE proves the conflict is physical-only (below).
     // Identity HWM bump (round 13): the largest committed value per
     // identity column, derived from THIS commit's new-file footer bounds
     // (long-domain stats always exist for integral columns) — covers
@@ -1976,7 +1933,7 @@ object SnapshotTable {
     val identityHwm: Map[String, Long] = {
       val idCols = logicalSchema.fields.filter(
         org.apache.spark.sql.catalyst.util.IdentityColumn.isIdentityColumn)
-      if (idCols.isEmpty && prevHwm.isEmpty) prevHwm
+      if (idCols.isEmpty && prev.identityHwm.isEmpty) prev.identityHwm
       else idCols.map { f =>
         val phys = physName(mapping, f.name)
         val newMax = newStats.flatMap(_.cols.get(phys)).flatMap(_.max)
@@ -1984,31 +1941,17 @@ object SnapshotTable {
             case Seq() => Long.MinValue
             case xs => xs.max
           }
-        f.name -> math.max(prevHwm.getOrElse(f.name, Long.MinValue), newMax)
+        f.name -> math.max(prev.identityHwm.getOrElse(f.name, Long.MinValue), newMax)
       }.filter(_._2 != Long.MinValue).toMap ++
-        (prevHwm -- logicalSchema.fieldNames) // dropped identity keeps its mark
+        (prev.identityHwm -- logicalSchema.fieldNames) // dropped identity keeps its mark
     }
-    def casManifest(target: Long, entries: Seq[SnapshotStats.FileStats],
-                    ingestedSet: Seq[String],
-                    hwm: Map[String, Long] = identityHwm): Boolean = {
-      val body = buildCommitBody(fs, root, target, entries, txn, cdcPaths,
-        Some(logicalSchema.json), inherited, bloomOn, constraints,
-        mapping, usedPhys, ingestedSet, clusterBy = clusterByEff,
-        identityHwm = hwm)
-      val tmp = new Path(mdir, f".manifest-$target%08d-$token.json.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      val dest = manifestPath(root, target)
-      if (fs.exists(dest) || !fs.rename(tmp, dest)) {
-        fs.delete(tmp, false); false
-      } else {
-        maybeCheckpoint(fs, root, target)
-        maybeAutoMaintain(spark, root, target)
-        true
-      }
-    }
-    if (casManifest(v, carry ++ newStats, ingested)) return v
-    casLosses.incrementAndGet()
+    val state = prev.copy(schema = logicalSchema, mapping = mapping,
+      usedPhys = usedPhys, clusterBy = clusterByEff, identityHwm = identityHwm,
+      // COPY INTO ledger: accumulated monotonically like tombstones, plus
+      // this commit's newly-loaded identities (copyInto's `ingestedAdd`).
+      ingested = (prev.ingested ++ ingestedAdd).distinct.sorted)
+    if (casManifest(spark, fs, root, token, base, carry ++ newStats, state,
+        txn, cdcPaths)) return v
     // ---- CAS lost: try a REBASE before discarding the rewrite (round 12).
     //
     // A row-level DML's expensive work is its data rewrite — at 100 TB a
@@ -2024,8 +1967,8 @@ object SnapshotTable {
     // tombstones, bloom config, column mapping), then this commit applied
     // at the winner's version is ROW-FOR-ROW the commit it already wrote:
     // re-CAS the same data files and CDC side-cars onto the next version,
-    // metadata-only. Anything unprovable falls back to the caller's
-    // existing redo loop — rebase is an optimization, never a semantics
+    // metadata-only. Anything unprovable falls back to the seam's redo
+    // ([[transact]]) — rebase is an optimization, never a semantics
     // change.
     // Gate: identity column mapping only (file stats speak physical names;
     // the probe predicate speaks logical — they must coincide). A caller-
@@ -2047,13 +1990,15 @@ object SnapshotTable {
             // least as nullable as the winner's everywhere (DML commits
             // widen nullability to what their when()-projections produce;
             // declaring the wider form over the winner's files is safe —
-            // the reverse would narrow and is refused).
+            // the reverse would narrow and is refused). A winner demanding
+            // a newer writer is never extended (the transact gate's rule).
             val sameMeta =
+              winner.protocol._2 <= SnapshotStats.SupportedWriterVersion &&
               winner.schema
                 .exists(ws => schemaWidens(ws, logicalSchema)) &&
-              winner.dropped.toSet == inherited.toSet &&
-              winner.bloomOn == bloomOn &&
-              winner.constraints == constraints &&
+              winner.dropped.toSet == state.dropped.toSet &&
+              winner.bloomOn == prev.bloomOn &&
+              winner.constraints == prev.constraints &&
               winner.mapping.isEmpty &&
               // A winner that re-declared the clustering (recluster/CTAS)
               // invalidates the layout this rewrite sorted under — give up
@@ -2062,7 +2007,7 @@ object SnapshotTable {
             val winnerEntries = winner.stats
             val winnerFiles = winner.files
             val winnerByNorm = winnerEntries.map(e => norm(e.path) -> e).toMap
-            val baseEntries = currentEntries(spark, root, spec.baseVersion)
+            val baseEntries = entriesOf(fs, resolvedAt(fs, root, spec.baseVersion))
             val baseByNorm = baseEntries.map(e => norm(e.path) -> e).toMap
             // Touched files must survive with their BASE entries VERBATIM
             // (round 13 tightening): mere path presence would let a
@@ -2099,10 +2044,12 @@ object SnapshotTable {
                     identityHwm.getOrElse(k, Long.MinValue),
                     w2.getOrElse(k, Long.MinValue))).toMap
                 }
-                if (casManifest(w + 1, rebasedCarry ++ newStats, ingestedSet,
-                    hwm = rebasedHwm))
+                if (casManifest(spark, fs, root, token, Some(winner),
+                    rebasedCarry ++ newStats,
+                    state.copy(ingested = ingestedSet, identityHwm = rebasedHwm),
+                    txn, cdcPaths))
                   Some(w + 1)
-                else { casLosses.incrementAndGet(); None } // lost again: re-read
+                else None // lost again: re-read
               }
             }
           }
@@ -2113,10 +2060,7 @@ object SnapshotTable {
         }
       }
     }
-    fs.delete(snapDir, true)
-    if (cdcPaths.isDefined) fs.delete(cdcDir, true)
-    throw new ConcurrentWriteException(
-      s"version $v at $root was committed by a concurrent writer")
+    abandon(fs, root, v, Seq(snapDir) ++ cdcPaths.map(_ => cdcDir) ++ sidecars)
   }
 
   /** Bootstrap an EMPTY table: version 0 is a files-less manifest that
@@ -2132,13 +2076,9 @@ object SnapshotTable {
     // Declared fully NULLABLE: literal-derived bootstrap schemas carry
     // non-null struct internals that would refuse every later write whose
     // join/when projection is nullable by construction.
-    if (!tryCommitMeta(spark, root, 0L, Nil,
-        asNullableType(schema).asInstanceOf[org.apache.spark.sql.types.StructType],
-        Nil, Nil, Map.empty, Map.empty, Nil,
-        clusterBy = if (clusterBy.isEmpty) None else Some(clusterBy)))
-      throw new ConcurrentWriteException(
-        s"version 0 at $root was committed by a concurrent writer")
-    0L
+    commitMeta(spark, root, None, Nil, NoState.copy(
+      schema = asNullableType(schema).asInstanceOf[org.apache.spark.sql.types.StructType],
+      clusterBy = clusterBy))
   }
 
   /** Metadata-only RESTORE (Delta's RESTORE TABLE ... VERSION AS OF): commits
@@ -2165,51 +2105,44 @@ object SnapshotTable {
     * changed between the two versions (the feed projects onto one schema;
     * a cross-schema rollback still requires reseeding subscribers). */
   def restore(spark: SparkSession, root: String, toVersion: Long,
-              withCdc: Boolean = false): Long = {
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"restore on a table with no committed version at $root"))
+              withCdc: Boolean = false): Long =
+    transactOn(spark, root, "restore", ReadAttempts) { base =>
+      val v = base.version
       require(toVersion <= v,
         s"restore target $toVersion is ahead of current version $v at $root")
-      if (toVersion == v) return v
-      val cdc: Option[(DataFrame, DataFrame)] =
-        if (!withCdc) None
-        else {
-          val target = schemaOf(spark, root, toVersion)
-          val current = schemaOf(spark, root, v)
-          require(
-            target.fields.map(f => (f.name, f.dataType)).toSeq ==
-              current.fields.map(f => (f.name, f.dataType)).toSeq,
-            s"restoreWithCdc across a schema change ($current -> $target) " +
-              "is not expressible as a row delta; reseed subscribers instead")
-          // Retract the whole current state, reinsert the whole restored
-          // state: algebraic consumers telescope this to exactly the
-          // restored aggregates, and min/max recomputes read the restored
-          // base. localCheckpoint: the remove side reads files whose
-          // manifests a later vacuum may drop before the delta is consumed
-          // — the side-car must hold the ROWS, not a plan over them (it
-          // does: side-cars are materialized parquet).
-          Some((read(spark, root, Some(toVersion)), read(spark, root, Some(v))))
-        }
-      // Constraints rewind with everything else: the restored rows were
-      // validated under the TARGET version's constraint set, not any
-      // declared since.
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, toVersion),
-          schemaOf(spark, root, toVersion),
-          droppedOf(spark, root, toVersion).toSeq.sorted,
-          bloomOnOf(spark, root, toVersion),
-          constraintsOf(spark, root, toVersion),
-          mappingOf(spark, root, toVersion), usedPhysOf(spark, root, toVersion),
-          cdc = cdc, ingested = Some(ingestedOf(spark, root, toVersion))))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
+      if (toVersion == v) v
+      else {
+        val fs = fsOf(spark, root)
+        val restored = resolvedAt(fs, root, toVersion)
+        val restoredState = stateOf(spark, restored)
+        val cdc: Option[(DataFrame, DataFrame)] =
+          if (!withCdc) None
+          else {
+            val target = restoredState.schema
+            val current = stateOf(spark, base).schema
+            require(
+              target.fields.map(f => (f.name, f.dataType)).toSeq ==
+                current.fields.map(f => (f.name, f.dataType)).toSeq,
+              s"restoreWithCdc across a schema change ($current -> $target) " +
+                "is not expressible as a row delta; reseed subscribers instead")
+            // Retract the whole current state, reinsert the whole restored
+            // state: algebraic consumers telescope this to exactly the
+            // restored aggregates, and min/max recomputes read the restored
+            // base. localCheckpoint: the remove side reads files whose
+            // manifests a later vacuum may drop before the delta is consumed
+            // — the side-car must hold the ROWS, not a plan over them (it
+            // does: side-cars are materialized parquet).
+            Some((read(spark, root, Some(toVersion)), read(spark, root, Some(v))))
+          }
+        // Constraints (and the COPY ledger) rewind with everything else: the
+        // restored rows were validated under the TARGET version's constraint
+        // set, not any declared since. Clustering and identity marks stay
+        // the current version's.
+        commitMeta(spark, root, Some(base), entriesOf(fs, restored),
+          restoredState.copy(clusterBy = base.clusterBy,
+            identityHwm = base.identityHwm), cdc = cdc)
+      }
     }
-    -1L // unreachable
-  }
 
   // --- SHALLOW CLONE (round 12, unasked-for) -------------------------------
   //
@@ -2296,18 +2229,10 @@ object SnapshotTable {
         (s"""{"source":${jsonStr(srcNorm)},"version":$v,""" +
           s""""subscriber":${jsonStr(subId)},"pins":$pinsJson}""").getBytes("UTF-8"))
       finally out.close()
-      if (!tryCommitMeta(spark, targetRoot, 0L,
-          currentEntries(spark, sourceRoot, v),
-          schemaOf(spark, sourceRoot, v),
-          droppedOf(spark, sourceRoot, v).toSeq.sorted,
-          bloomOnOf(spark, sourceRoot, v),
-          constraintsOf(spark, sourceRoot, v),
-          mappingOf(spark, sourceRoot, v),
-          usedPhysOf(spark, sourceRoot, v),
-          ingested = Some(ingestedOf(spark, sourceRoot, v)),
-          identityHwm = Some(identityHwmOf(spark, sourceRoot, v))))
-        throw new ConcurrentWriteException(
-          s"version 0 at $targetRoot was committed by a concurrent writer")
+      // The clone declares no clustering of its own.
+      val src = resolvedAt(fs, sourceRoot, v)
+      commitMeta(spark, targetRoot, None, entriesOf(fs, src),
+        stateOf(spark, src).copy(clusterBy = Nil))
     } catch {
       case t: Throwable =>
         try {
@@ -2355,7 +2280,8 @@ object SnapshotTable {
           val v = currentVersion(spark, root).getOrElse(
             throw new IllegalStateException(s"no committed version at $root"))
           val prefixes = pinned.map(_.stripSuffix("/") + "/")
-          val stillShared = currentEntries(spark, root, v)
+          val fs = fsOf(spark, root)
+          val stillShared = entriesOf(fs, resolvedAt(fs, root, v))
             .filter(e => prefixes.exists(
               new Path(e.path).toUri.getPath.startsWith(_)))
           require(stillShared.isEmpty,
@@ -2436,77 +2362,73 @@ object SnapshotTable {
     // side to err on for an ingest ledger.
     def identity(st: org.apache.hadoop.fs.FileStatus): String =
       s"${st.getPath.toUri.getPath}@${st.getLen}@${st.getModificationTime}"
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"COPY INTO requires an existing table at $root (CREATE TABLE first)"))
-      val loaded = ingestedOf(spark, root, v).toSet
+    // Every attempt re-reads the ledger: the winner may have loaded some
+    // of these files.
+    transact(spark, root, "copyInto", BlindAttempts) { b =>
+      val base = b.getOrElse(throw new IllegalStateException(
+        s"COPY INTO requires an existing table at $root (CREATE TABLE first)"))
+      val v = base.version
+      val state = stateOf(spark, base)
+      val loaded = state.ingested.toSet
       val fresh = candidates.filterNot(st => loaded(identity(st)))
-      if (fresh.isEmpty) return (v, 0L, 0L)
-      val schema = schemaOf(spark, root, v)
-      val paths = fresh.map(_.getPath.toString)
-      val batch = fmt match {
-        case "csv" =>
-          spark.read.options(Map("header" -> "true") ++ options)
-            .schema(asNullableType(schema)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .csv(paths: _*)
-        case "json" =>
-          spark.read.options(options)
-            .schema(asNullableType(schema)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .json(paths: _*)
-        case _ =>
-          val raw = if (fmt == "orc") spark.read.options(options).orc(paths: _*)
-            else spark.read.options(options).parquet(paths: _*)
-          if (mergeSchema) raw
-          else {
-            // Self-describing formats align by name under lossless casts —
-            // the append/merge discipline: a missing declared column or a
-            // narrowing type must fail loudly, never quietly NULL-fill.
-            val byLc = raw.columns.map(c => lc(c) -> c).toMap
-            raw.select(schema.fields.map { f =>
-              val c = byLc.getOrElse(lc(f.name), throw new IllegalArgumentException(
-                s"COPY INTO source lacks declared column ${f.name}"))
-              val srcType = raw.schema(c).dataType
-              require(srcType == f.dataType ||
-                  org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(srcType, f.dataType),
-                s"COPY INTO column ${f.name}: $srcType cannot losslessly " +
-                  s"cast to declared ${f.dataType}")
-              raw.col(c).cast(f.dataType).as(f.name)
-            }.toIndexedSeq: _*)
-          }
-      }
-      // mergeSchema (COPY_OPTIONS): ADDITIVE evolution, the appendCommit
-      // discipline — new source columns join the declared schema under
-      // fresh physical names; columns the source lacks are simply absent
-      // from its files and read NULL; retypes stay refused (evolveSchema).
-      val (declared, metaOpt, aligned) =
-        if (!mergeSchema) (schema, None, batch)
-        else {
-          val ev = evolveSchema(schema, batch.schema)
-          val assigned = assignPhysical(schema, ev,
-            mappingOf(spark, root, v), usedPhysOf(spark, root, v))
-          val byLc = batch.columns.map(c => lc(c) -> c).toMap
-          (ev, Some(assigned),
-            batch.select(ev.fields.flatMap(f =>
-              byLc.get(lc(f.name)).map(c => batch.col(c).as(f.name))).toIndexedSeq: _*))
+      if (fresh.isEmpty) (v, 0L, 0L)
+      else {
+        val schema = state.schema
+        val paths = fresh.map(_.getPath.toString)
+        val batch = fmt match {
+          case "csv" =>
+            spark.read.options(Map("header" -> "true") ++ options)
+              .schema(asNullableType(schema)
+                .asInstanceOf[org.apache.spark.sql.types.StructType])
+              .csv(paths: _*)
+          case "json" =>
+            spark.read.options(options)
+              .schema(asNullableType(schema)
+                .asInstanceOf[org.apache.spark.sql.types.StructType])
+              .json(paths: _*)
+          case _ =>
+            val raw = if (fmt == "orc") spark.read.options(options).orc(paths: _*)
+              else spark.read.options(options).parquet(paths: _*)
+            if (mergeSchema) raw
+            else {
+              // Self-describing formats align by name under lossless casts —
+              // the append/merge discipline: a missing declared column or a
+              // narrowing type must fail loudly, never quietly NULL-fill.
+              val byLc = raw.columns.map(c => lc(c) -> c).toMap
+              raw.select(schema.fields.map { f =>
+                val c = byLc.getOrElse(lc(f.name), throw new IllegalArgumentException(
+                  s"COPY INTO source lacks declared column ${f.name}"))
+                val srcType = raw.schema(c).dataType
+                require(srcType == f.dataType ||
+                    org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(srcType, f.dataType),
+                  s"COPY INTO column ${f.name}: $srcType cannot losslessly " +
+                    s"cast to declared ${f.dataType}")
+                raw.col(c).cast(f.dataType).as(f.name)
+              }.toIndexedSeq: _*)
+            }
         }
-      try {
-        val committed = commitAt(spark, root, v + 1, aligned,
-          carry = currentEntries(spark, root, v),
+        // mergeSchema (COPY_OPTIONS): ADDITIVE evolution, the appendCommit
+        // discipline — new source columns join the declared schema under
+        // fresh physical names; columns the source lacks are simply absent
+        // from its files and read NULL; retypes stay refused (evolveSchema).
+        val (declared, metaOpt, aligned) =
+          if (!mergeSchema) (schema, None, batch)
+          else {
+            val ev = evolveSchema(schema, batch.schema)
+            val assigned = assignPhysical(schema, ev, state.mapping, state.usedPhys)
+            val byLc = batch.columns.map(c => lc(c) -> c).toMap
+            (ev, Some(assigned),
+              batch.select(ev.fields.flatMap(f =>
+                byLc.get(lc(f.name)).map(c => batch.col(c).as(f.name))).toIndexedSeq: _*))
+          }
+        val committed = commitAt(spark, root, b, aligned,
+          carry = entriesOf(fsOf(spark, root), base),
           tableSchema = Some(declared), meta = metaOpt,
           ingestedAdd = fresh.map(identity))
-        return (committed, fresh.size.toLong,
+        (committed, fresh.size.toLong,
           rowCount(spark, root, Some(committed)) - rowCount(spark, root, Some(v)))
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 5) throw e // loop re-reads version AND ledger
       }
     }
-    (-1L, -1L, -1L) // unreachable
   }
 
   /** The table's logical → physical column mapping at `asOf` (empty =
@@ -2515,7 +2437,7 @@ object SnapshotTable {
                     asOf: Option[Long] = None): Map[String, String] = {
     val v = asOf.orElse(currentVersion(spark, root))
       .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    mappingOf(spark, root, v)
+    resolvedAt(fsOf(spark, root), root, v).mapping
   }
 
   /** Metadata-only RENAME COLUMN (VERDICT r9 #5 — Delta column-mapping's
@@ -2534,39 +2456,28 @@ object SnapshotTable {
   def renameColumn(spark: SparkSession, root: String, from: String,
                    to: String): Long = {
     require(from != to, s"renameColumn: '$from' -> '$to' is a no-op request")
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"renameColumn on a table with no committed version at $root"))
-      val schema = schemaOf(spark, root, v)
+    transactOn(spark, root, "renameColumn", ReadAttempts) { base =>
+      val state = stateOf(spark, base)
+      val schema = state.schema
       require(schema.fieldNames.contains(from),
         s"renameColumn: no column $from in ${schema.fieldNames.mkString(", ")}")
       require(!schema.fieldNames.exists(n => n.equalsIgnoreCase(to) && n != from),
         s"renameColumn: column $to already exists")
-      val cons = constraintsOf(spark, root, v)
-      val referencing = cons.filter { case (_, sql) =>
+      val referencing = state.constraints.filter { case (_, sql) =>
         constraintRefs(spark, sql).contains(lc(from))
       }.keys
       require(referencing.isEmpty,
         s"renameColumn $from is referenced by CHECK constraint(s) " +
           s"${referencing.mkString(", ")}; drop them first")
-      val mapping = mappingOf(spark, root, v)
+      val mapping = state.mapping
       val phys = physName(mapping, from)
       val newSchema = org.apache.spark.sql.types.StructType(
         schema.fields.map(f => if (f.name == from) f.copy(name = to) else f))
-      val newMapping0 = (mapping - from) + (to -> phys)
-      val newMapping = newMapping0.filter { case (l, p) => l != p }
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, v),
-          newSchema, droppedOf(spark, root, v).toSeq.sorted,
-          bloomOnOf(spark, root, v).map(c => if (c == from) to else c),
-          cons, newMapping, usedPhysOf(spark, root, v)))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
+      val newMapping = ((mapping - from) + (to -> phys)).filter { case (l, p) => l != p }
+      commitState(spark, root, base, state.copy(schema = newSchema,
+        bloomOn = state.bloomOn.map(c => if (c == from) to else c),
+        mapping = newMapping))
     }
-    -1L // unreachable
   }
 
   /** Metadata-only ADD COLUMNS (Delta's ALTER TABLE ADD COLUMNS): commits
@@ -2581,12 +2492,9 @@ object SnapshotTable {
   def addColumns(spark: SparkSession, root: String,
                  cols: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(cols.nonEmpty, "addColumns needs at least one column")
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"addColumns on a table with no committed version at $root"))
-      val schema = schemaOf(spark, root, v)
+    transactOn(spark, root, "addColumns", ReadAttempts) { base =>
+      val state = stateOf(spark, base)
+      val schema = state.schema
       cols.foreach(f => require(
         !schema.fieldNames.exists(_.equalsIgnoreCase(f.name)),
         s"addColumns: column ${f.name} already exists"))
@@ -2595,18 +2503,11 @@ object SnapshotTable {
       val evolved = org.apache.spark.sql.types.StructType(
         schema.fields ++ cols.map(f =>
           f.copy(dataType = asNullableType(f.dataType), nullable = true)))
-      val assigned = assignPhysical(schema, evolved,
-        mappingOf(spark, root, v), usedPhysOf(spark, root, v))
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, v),
-          evolved, droppedOf(spark, root, v).toSeq.sorted,
-          bloomOnOf(spark, root, v), constraintsOf(spark, root, v),
-          assigned._1, assigned._2))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
+      val (mapping, usedPhys) =
+        assignPhysical(schema, evolved, state.mapping, state.usedPhys)
+      commitState(spark, root, base,
+        state.copy(schema = evolved, mapping = mapping, usedPhys = usedPhys))
     }
-    -1L // unreachable
   }
 
   /** Metadata-only DROP COLUMN: commits a new version whose manifest lists
@@ -2623,13 +2524,10 @@ object SnapshotTable {
     * delta consumers of those columns correctly see nothing (a consumer OF
     * the dropped column fails loudly at plan time on its next refresh —
     * the column no longer resolves). */
-  def dropColumn(spark: SparkSession, root: String, name: String): Long = {
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"dropColumn on a table with no committed version at $root"))
-      val schema = schemaOf(spark, root, v)
+  def dropColumn(spark: SparkSession, root: String, name: String): Long =
+    transactOn(spark, root, "dropColumn", ReadAttempts) { base =>
+      val state = stateOf(spark, base)
+      val schema = state.schema
       require(schema.fieldNames.contains(name),
         s"dropColumn: no column $name in ${schema.fieldNames.mkString(", ")}")
       require(schema.fields.length > 1,
@@ -2639,25 +2537,17 @@ object SnapshotTable {
       // A CHECK constraint referencing the column would fail analysis on
       // every later commit's enforcement — refuse the drop, name the
       // constraint (drop the constraint first, deliberately).
-      val cons = constraintsOf(spark, root, v)
-      val referencing = cons.filter { case (_, sql) =>
+      val referencing = state.constraints.filter { case (_, sql) =>
         constraintRefs(spark, sql).contains(name.toLowerCase(java.util.Locale.ROOT))
       }.keys
       require(referencing.isEmpty,
         s"dropColumn $name is referenced by CHECK constraint(s) " +
           s"${referencing.mkString(", ")}; drop them first")
-      if (tryCommitMeta(spark, root, v + 1, currentEntries(spark, root, v),
-          newSchema, (droppedOf(spark, root, v) + name).toSeq.sorted,
-          bloomOnOf(spark, root, v).filterNot(_ == name), cons,
-          mappingOf(spark, root, v) - name, usedPhysOf(spark, root, v)))
-        return v + 1
-      attempt += 1
-      if (attempt >= 3) throw new ConcurrentWriteException(
-        s"version ${v + 1} at $root was committed by a concurrent writer")
-      // loop re-reads the winner's version and re-derives the schema
+      commitState(spark, root, base, state.copy(schema = newSchema,
+        dropped = (state.dropped :+ name).distinct.sorted,
+        bloomOn = state.bloomOn.filterNot(_ == name),
+        mapping = state.mapping - name))
     }
-    -1L // unreachable
-  }
 
   /** MERGE-upsert as a new snapshot: bootstrap on first commit (S7), else
     * source-wins merge against the current version. Old snapshots stay
@@ -2689,76 +2579,66 @@ object SnapshotTable {
       if (clusterBy.isEmpty) df
       else df.repartitionByRange(32, clusterBy.map(df.col): _*)
         .sortWithinPartitions(clusterBy.map(df.col): _*)
-    var attempt = 0
-    var committed = -1L
-    var done = false
-    while (!done) {
-      try {
-        committed = currentVersion(spark, root) match {
-          case None =>
-            // Bootstrap: everything is an insert; the CDC add set is the
-            // whole source, removes are empty. Target version 0 is PINNED:
-            // a concurrent bootstrap must conflict, not stack.
-            commitAt(spark, root, 0L, clustered(source),
-              cdc = Some((source, source.limit(0))))
-          case Some(v) =>
-            val cur0 = read(spark, root, Some(v))
-            // Additive schema evolution: align BOTH sides onto the merged
-            // schema (missing columns become typed NULLs) before the merge,
-            // so a source that grew a column upserts without a migration
-            // and a source missing an old column null-fills it for ITS keys
-            // only (unmatched target rows keep their values).
-            val evolved = evolveSchema(cur0.schema, source.schema)
-            val assigned = assignPhysical(cur0.schema, evolved,
-              mappingOf(spark, root, v), usedPhysOf(spark, root, v))
-            // Case-insensitive resolution, like evolveSchema: a source
-            // shipping 'Price' must FEED the declared 'price' (aliased to
-            // the table's casing), not null-fill it.
-            def align(df: DataFrame): DataFrame = {
-              import org.apache.spark.sql.functions.lit
-              val byLc = df.columns.map(c => lc(c) -> c).toMap
-              df.select(evolved.map(f =>
-                byLc.get(lc(f.name)).map(c => df.col(c).as(f.name))
-                  .getOrElse(lit(null).cast(f.dataType).as(f.name))): _*)
-            }
-            val cur = align(cur0)
-            val src = align(source)
-            // Keys under FRESH aliases (the mergeInto pattern): a plain
-            // pass-through select keeps the source's attribute ids, and a
-            // LogicalRDD-leaf source (a streaming sink's micro-batch, a
-            // localCheckpoint) can surface the SAME ids from the merged
-            // checkpoint's output — an unresolvable self-conflict in the
-            // CDC semi-joins below. `===` keeps USING-join null semantics.
-            val srcKeys = src
-              .select(keys.map(k => src(k).as(s"__sk_$k")): _*).distinct()
-            def keyedSemi(df: DataFrame): DataFrame = df.join(srcKeys,
-              keys.map(k => df(k) === srcKeys(s"__sk_$k")).reduce(_ && _),
-              "left_semi")
-            val removed = keyedSemi(cur)
-            val merged = Upsert.merge(cur, src, keys)
-              .localCheckpoint() // cut lineage: the plan must not re-read files vacuum may later drop
-            val added = keyedSemi(merged)
-            // Target v+1 is PINNED to the version this merge READ
-            // (ConcurrencySpec): deriving it at commit time would let a
-            // commit that landed in between be silently erased by this
-            // rewrite instead of raising the CAS conflict the retry loop
-            // exists to serialize. The whole-table rewrite rebases like
-            // mergeInto's (removedPaths = EVERY base file; the winner's
-            // foreign-keyed new files simply carry beside the rewrite).
-            val baseNorm = currentEntries(spark, root, v)
-              .map(e => new Path(e.path).toUri.getPath).toSet
-            commitAt(spark, root, v + 1, clustered(merged),
-              cdc = Some((added, removed)),
-              tableSchema = Some(evolved), meta = Some(assigned),
-              rebase = Some(RebaseSpec(v, baseNorm,
-                () => keyMembershipPredicate(evolved, src, keys.head))))
+    val committed = transact(spark, root, "upsert", ReadAttempts) {
+      case None =>
+        // Bootstrap: everything is an insert; the CDC add set is the
+        // whole source, removes are empty. Target version 0 is PINNED:
+        // a concurrent bootstrap must conflict, not stack.
+        commitAt(spark, root, None, clustered(source),
+          cdc = Some((source, source.limit(0))))
+      case base @ Some(b) =>
+        val v = b.version
+        val state = stateOf(spark, b)
+        val cur0 = read(spark, root, Some(v))
+        // Additive schema evolution: align BOTH sides onto the merged
+        // schema (missing columns become typed NULLs) before the merge,
+        // so a source that grew a column upserts without a migration
+        // and a source missing an old column null-fills it for ITS keys
+        // only (unmatched target rows keep their values).
+        val evolved = evolveSchema(cur0.schema, source.schema)
+        val assigned = assignPhysical(cur0.schema, evolved,
+          state.mapping, state.usedPhys)
+        // Case-insensitive resolution, like evolveSchema: a source
+        // shipping 'Price' must FEED the declared 'price' (aliased to
+        // the table's casing), not null-fill it.
+        def align(df: DataFrame): DataFrame = {
+          import org.apache.spark.sql.functions.lit
+          val byLc = df.columns.map(c => lc(c) -> c).toMap
+          df.select(evolved.map(f =>
+            byLc.get(lc(f.name)).map(c => df.col(c).as(f.name))
+              .getOrElse(lit(null).cast(f.dataType).as(f.name))): _*)
         }
-        done = true
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 3) throw e
-      }
+        val cur = align(cur0)
+        val src = align(source)
+        // Keys under FRESH aliases (the mergeInto pattern): a plain
+        // pass-through select keeps the source's attribute ids, and a
+        // LogicalRDD-leaf source (a streaming sink's micro-batch, a
+        // localCheckpoint) can surface the SAME ids from the merged
+        // checkpoint's output — an unresolvable self-conflict in the
+        // CDC semi-joins below. `===` keeps USING-join null semantics.
+        val srcKeys = src
+          .select(keys.map(k => src(k).as(s"__sk_$k")): _*).distinct()
+        def keyedSemi(df: DataFrame): DataFrame = df.join(srcKeys,
+          keys.map(k => df(k) === srcKeys(s"__sk_$k")).reduce(_ && _),
+          "left_semi")
+        val removed = keyedSemi(cur)
+        val merged = Upsert.merge(cur, src, keys)
+          .localCheckpoint() // cut lineage: the plan must not re-read files vacuum may later drop
+        val added = keyedSemi(merged)
+        // The commit targets base + 1, PINNED to the version this merge
+        // READ (ConcurrencySpec): deriving it at commit time would let a
+        // commit that landed in between be silently erased by this
+        // rewrite instead of raising the CAS conflict the seam's retry
+        // exists to serialize. The whole-table rewrite rebases like
+        // mergeInto's (removedPaths = EVERY base file; the winner's
+        // foreign-keyed new files simply carry beside the rewrite).
+        val baseNorm = entriesOf(fsOf(spark, root), b)
+          .map(e => new Path(e.path).toUri.getPath).toSet
+        commitAt(spark, root, base, clustered(merged),
+          cdc = Some((added, removed)),
+          tableSchema = Some(evolved), meta = Some(assigned),
+          rebase = Some(RebaseSpec(v, baseNorm,
+            () => keyMembershipPredicate(evolved, src, keys.head))))
     }
     compact(spark, root, maxFiles).getOrElse(committed)
   }
@@ -2815,160 +2695,155 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit}
     require(keys.nonEmpty, "mergeInto needs key columns")
     def norm(p: String): String = new Path(p).toUri.getPath
-    var attempt = 0
-    var committed = -1L
-    var done = false
-    while (!done) {
-      try {
-        val v = currentVersion(spark, root).getOrElse(
-          throw new IllegalStateException(
-            s"mergeInto on a table with no committed version at $root"))
-        val cur = read(spark, root, Some(v))
-        val schema0 = schemaOf(spark, root, v)
-        // Identity × MERGE pin (round 14, VERDICT r13 #4): identity
-        // GENERATION lives on the append path only (appendCommit) — a
-        // MERGE INSERT arm cannot generate, and silently writing NULL
-        // under the column is the one unacceptable outcome. The rule,
-        // refused LOUDLY here: GENERATED ALWAYS admits no MERGE INSERT
-        // arm at all; BY DEFAULT requires every insert arm to assign the
-        // column explicitly (star arms assign it iff the source carries
-        // it) — the commit's footer-bounds HWM bump then keeps later
-        // generation above whatever landed. DefaultsSpec pins all three.
-        locally {
-          val idFields = schema0.fields.filter(
-            org.apache.spark.sql.catalyst.util.IdentityColumn.isIdentityColumn)
-          val hasInsert = notMatchedInsert.nonEmpty || insertChain.nonEmpty
-          if (idFields.nonEmpty && hasInsert) idFields.foreach { f =>
-            val allowExplicit =
-              f.metadata.contains("identity.allowExplicitInsert") &&
-                f.metadata.getBoolean("identity.allowExplicitInsert")
-            require(allowExplicit,
-              s"column ${f.name} is GENERATED ALWAYS AS IDENTITY; MERGE " +
-                "INSERT arms cannot generate identity values — use " +
-                "GENERATED BY DEFAULT with explicit values, or append/INSERT")
-            val explicitArms = insertValues.toSeq ++
-              insertChain.flatMap(_.values)
-            val starArms =
-              (if (notMatchedInsert.nonEmpty && insertValues.isEmpty) 1 else 0) +
-                insertChain.count(_.values.isEmpty)
-            val starAssigns = source0.columns.exists(_.equalsIgnoreCase(f.name))
-            require(explicitArms.forall(_.keys.exists(_.equalsIgnoreCase(f.name))) &&
-                (starArms == 0 || starAssigns),
-              s"MERGE INSERT must assign identity column ${f.name} " +
-                "explicitly in every insert arm (GENERATED BY DEFAULT " +
-                "generates only on the append path)")
-          }
+    transactOn(spark, root, "mergeInto", ReadAttempts) { base =>
+      val v = base.version
+      val state = stateOf(spark, base)
+      val cur = read(spark, root, Some(v))
+      val schema0 = state.schema
+      // Identity × MERGE pin (round 14, VERDICT r13 #4): identity
+      // GENERATION lives on the append path only (appendCommit) — a
+      // MERGE INSERT arm cannot generate, and silently writing NULL
+      // under the column is the one unacceptable outcome. The rule,
+      // refused LOUDLY here: GENERATED ALWAYS admits no MERGE INSERT
+      // arm at all; BY DEFAULT requires every insert arm to assign the
+      // column explicitly (star arms assign it iff the source carries
+      // it) — the commit's footer-bounds HWM bump then keeps later
+      // generation above whatever landed. DefaultsSpec pins all three.
+      locally {
+        val idFields = schema0.fields.filter(
+          org.apache.spark.sql.catalyst.util.IdentityColumn.isIdentityColumn)
+        val hasInsert = notMatchedInsert.nonEmpty || insertChain.nonEmpty
+        if (idFields.nonEmpty && hasInsert) idFields.foreach { f =>
+          val allowExplicit =
+            f.metadata.contains("identity.allowExplicitInsert") &&
+              f.metadata.getBoolean("identity.allowExplicitInsert")
+          require(allowExplicit,
+            s"column ${f.name} is GENERATED ALWAYS AS IDENTITY; MERGE " +
+              "INSERT arms cannot generate identity values — use " +
+              "GENERATED BY DEFAULT with explicit values, or append/INSERT")
+          val explicitArms = insertValues.toSeq ++
+            insertChain.flatMap(_.values)
+          val starArms =
+            (if (notMatchedInsert.nonEmpty && insertValues.isEmpty) 1 else 0) +
+              insertChain.count(_.values.isEmpty)
+          val starAssigns = source0.columns.exists(_.equalsIgnoreCase(f.name))
+          require(explicitArms.forall(_.keys.exists(_.equalsIgnoreCase(f.name))) &&
+              (starArms == 0 || starAssigns),
+            s"MERGE INSERT must assign identity column ${f.name} " +
+              "explicitly in every insert arm (GENERATED BY DEFAULT " +
+              "generates only on the append path)")
         }
-        // MERGE WITH SCHEMA EVOLUTION (round 12): new source columns join
-        // the declared schema (additive only — evolveSchema refuses
-        // retypes), fresh physical names assigned through the column
-        // mapping like upsert's evolution path. Under evolution a star
-        // arm takes SOURCE columns only and KEEPS target-only columns
-        // (Delta's SET * semantics there) — expressed below by rewriting
-        // the star arms as per-column maps over the source's columns.
-        val (schema, meta) =
-          if (!evolve) (schema0, None)
-          else {
-            val ev = evolveSchema(schema0, source0.schema)
-            (ev, Some(assignPhysical(schema0, ev,
-              mappingOf(spark, root, v), usedPhysOf(spark, root, v))))
-          }
-        // Source columns land on the DECLARED casing (case-insensitive).
-        val source =
-          if (!evolve) source0
-          else {
-            val byLc = source0.columns.map(c => lc(c) -> c).toMap
-            source0.select(schema.fields.flatMap(f =>
-              byLc.get(lc(f.name)).map(c => source0.col(c).as(f.name))).toIndexedSeq: _*)
-          }
-        val srcStar =
-          if (!evolve) None
-          else Some(source.columns.map(c => c -> col(s"s.$c")).toMap)
-        val mSet = if (evolve && matchedUpdate.nonEmpty && matchedSet.isEmpty)
-          srcStar else matchedSet
-        val iVals = if (evolve && notMatchedInsert.nonEmpty && insertValues.isEmpty)
-          srcStar else insertValues
-        // Under evolution, star clauses inside CHAINS rewrite to
-        // per-column source maps for the same keep-target-only reason.
-        val mChainE = if (!evolve) matchedChain else matchedChain.map {
-          case MergeInto.UpdateClause(c, None) => MergeInto.UpdateClause(c, srcStar)
-          case other => other
+      }
+      // MERGE WITH SCHEMA EVOLUTION (round 12): new source columns join
+      // the declared schema (additive only — evolveSchema refuses
+      // retypes), fresh physical names assigned through the column
+      // mapping like upsert's evolution path. Under evolution a star
+      // arm takes SOURCE columns only and KEEPS target-only columns
+      // (Delta's SET * semantics there) — expressed below by rewriting
+      // the star arms as per-column maps over the source's columns.
+      val (schema, meta) =
+        if (!evolve) (schema0, None)
+        else {
+          val ev = evolveSchema(schema0, source0.schema)
+          (ev, Some(assignPhysical(schema0, ev, state.mapping, state.usedPhys)))
         }
-        val iChainE = if (!evolve) insertChain else insertChain.map {
-          case MergeInto.InsertClause(c, None) => MergeInto.InsertClause(c, srcStar)
-          case other => other
+      // Source columns land on the DECLARED casing (case-insensitive).
+      val source =
+        if (!evolve) source0
+        else {
+          val byLc = source0.columns.map(c => lc(c) -> c).toMap
+          source0.select(schema.fields.flatMap(f =>
+            byLc.get(lc(f.name)).map(c => source0.col(c).as(f.name))).toIndexedSeq: _*)
         }
-        // Null-safe key probe: a NULL source key must mark the files
-        // holding NULL-key rows (the merge's own match is null-safe), or
-        // those rows would survive untouched AND re-insert. SKIPPED when
-        // BOTH the matched AND insert families are empty (an expiry-only
-        // merge): matched rows then cannot change AND nothing can insert,
-        // so "not matched in the touched rows" never needs to mean "not
-        // in the table" — files are touched only by the by-source probe,
-        // and a full-snapshot `WHEN NOT MATCHED BY SOURCE ... DELETE`
-        // sync rewrites the files holding expiring rows, not every file
-        // the snapshot's keys graze (measured 24/24 → file-granular at
-        // the 20M-row rehearsal). With an insert arm the probe is
-        // REQUIRED for dedup: a matched key in an untouched file must
-        // not re-insert.
-        val hasMatchedArms = matchedChain.nonEmpty ||
-          matchedUpdate.nonEmpty || matchedDelete.nonEmpty ||
-          insertChain.nonEmpty || notMatchedInsert.nonEmpty
-        val allE = currentEntries(spark, root, v)
-        // File attribution from `_metadata` at the scan (round 13): the
-        // key-join probe never pruned files statically anyway, and
-        // `input_file_name()` is not reliable past the DV mask join.
-        // Files-less table (CREATE TABLE bootstrap): no rows, no files.
-        val withFile =
-          if (allE.isEmpty)
-            cur.withColumn("__file", lit(null).cast(
-              org.apache.spark.sql.types.StringType))
-          else readEntries(spark, allE, schema0,
-            mappingOf(spark, root, v), fileCol = Some("__file"))
-        val touchedMatched =
-          if (!hasMatchedArms) Set.empty[String]
-          else {
-            val srcKeys = source
-              .select(keys.map(k => source(k).as(s"__sk_$k")): _*).distinct()
-            // input_file_name() resolves on the single-source side only,
-            // so it is projected BEFORE the semi-join.
-            withFile.join(srcKeys,
-                keys.map(k => withFile(k) <=> srcKeys(s"__sk_$k")).reduce(_ && _),
-                "left_semi")
-              .select(col("__file"))
-              .distinct().collect().map(r => norm(r.getString(0))).toSet
-          }
-        // BY SOURCE probe: target-only rows whose arm condition fires mark
-        // their files too. Same t/s aliasing as the merge's own join, so
-        // the CONDITION evaluates exactly as the combinator will — a file
-        // is carried only when provably no row in it can change.
-        val bChainAll: Seq[MergeInto.Clause] =
-          if (bySourceChain.nonEmpty) bySourceChain
-          else bySourceDelete.map(c => MergeInto.DeleteClause(c)).toSeq ++
-            bySourceUpdate.map(u => MergeInto.UpdateClause(u._1, Some(u._2))).toSeq
-        val touchedBySource =
-          if (bChainAll.isEmpty) Set.empty[String]
-          else {
-            def sat(c: Column): Column = coalesce(c, lit(false))
-            // A file rewrites when ANY by-source clause can fire for one
-            // of its target-only rows (which clause wins is the
-            // combinator's business; the probe needs the union).
-            val fires = bChainAll
-              .map(cl => sat(cl.condition.getOrElse(lit(true)))).reduce(_ || _)
-            val t = withFile.withColumn("__t", lit(true)).alias("t")
-            val sMarked = source.withColumn("__s", lit(true)).alias("s")
-            t.join(sMarked,
-                keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
-                "left_outer")
-              .filter(col("s.__s").isNull && fires)
-              .select(col("t.__file"))
-              .distinct().collect().map(r => norm(r.getString(0))).toSet
-          }
-        val touched = touchedMatched ++ touchedBySource
-        // Evolution with nothing to touch still lands the widened schema
-        // (a metadata-weight commit carrying every file).
-        if (touched.isEmpty && notMatchedInsert.isEmpty && insertChain.isEmpty &&
-            !(evolve && schema != schema0)) return v
+      val srcStar =
+        if (!evolve) None
+        else Some(source.columns.map(c => c -> col(s"s.$c")).toMap)
+      val mSet = if (evolve && matchedUpdate.nonEmpty && matchedSet.isEmpty)
+        srcStar else matchedSet
+      val iVals = if (evolve && notMatchedInsert.nonEmpty && insertValues.isEmpty)
+        srcStar else insertValues
+      // Under evolution, star clauses inside CHAINS rewrite to
+      // per-column source maps for the same keep-target-only reason.
+      val mChainE = if (!evolve) matchedChain else matchedChain.map {
+        case MergeInto.UpdateClause(c, None) => MergeInto.UpdateClause(c, srcStar)
+        case other => other
+      }
+      val iChainE = if (!evolve) insertChain else insertChain.map {
+        case MergeInto.InsertClause(c, None) => MergeInto.InsertClause(c, srcStar)
+        case other => other
+      }
+      // Null-safe key probe: a NULL source key must mark the files
+      // holding NULL-key rows (the merge's own match is null-safe), or
+      // those rows would survive untouched AND re-insert. SKIPPED when
+      // BOTH the matched AND insert families are empty (an expiry-only
+      // merge): matched rows then cannot change AND nothing can insert,
+      // so "not matched in the touched rows" never needs to mean "not
+      // in the table" — files are touched only by the by-source probe,
+      // and a full-snapshot `WHEN NOT MATCHED BY SOURCE ... DELETE`
+      // sync rewrites the files holding expiring rows, not every file
+      // the snapshot's keys graze (measured 24/24 → file-granular at
+      // the 20M-row rehearsal). With an insert arm the probe is
+      // REQUIRED for dedup: a matched key in an untouched file must
+      // not re-insert.
+      val hasMatchedArms = matchedChain.nonEmpty ||
+        matchedUpdate.nonEmpty || matchedDelete.nonEmpty ||
+        insertChain.nonEmpty || notMatchedInsert.nonEmpty
+      val allE = entriesOf(fsOf(spark, root), base)
+      // File attribution from `_metadata` at the scan (round 13): the
+      // key-join probe never pruned files statically anyway, and
+      // `input_file_name()` is not reliable past the DV mask join.
+      // Files-less table (CREATE TABLE bootstrap): no rows, no files.
+      val withFile =
+        if (allE.isEmpty)
+          cur.withColumn("__file", lit(null).cast(
+            org.apache.spark.sql.types.StringType))
+        else readEntries(spark, allE, schema0, state.mapping,
+          fileCol = Some("__file"))
+      val touchedMatched =
+        if (!hasMatchedArms) Set.empty[String]
+        else {
+          val srcKeys = source
+            .select(keys.map(k => source(k).as(s"__sk_$k")): _*).distinct()
+          // input_file_name() resolves on the single-source side only,
+          // so it is projected BEFORE the semi-join.
+          withFile.join(srcKeys,
+              keys.map(k => withFile(k) <=> srcKeys(s"__sk_$k")).reduce(_ && _),
+              "left_semi")
+            .select(col("__file"))
+            .distinct().collect().map(r => norm(r.getString(0))).toSet
+        }
+      // BY SOURCE probe: target-only rows whose arm condition fires mark
+      // their files too. Same t/s aliasing as the merge's own join, so
+      // the CONDITION evaluates exactly as the combinator will — a file
+      // is carried only when provably no row in it can change.
+      val bChainAll: Seq[MergeInto.Clause] =
+        if (bySourceChain.nonEmpty) bySourceChain
+        else bySourceDelete.map(c => MergeInto.DeleteClause(c)).toSeq ++
+          bySourceUpdate.map(u => MergeInto.UpdateClause(u._1, Some(u._2))).toSeq
+      val touchedBySource =
+        if (bChainAll.isEmpty) Set.empty[String]
+        else {
+          def sat(c: Column): Column = coalesce(c, lit(false))
+          // A file rewrites when ANY by-source clause can fire for one
+          // of its target-only rows (which clause wins is the
+          // combinator's business; the probe needs the union).
+          val fires = bChainAll
+            .map(cl => sat(cl.condition.getOrElse(lit(true)))).reduce(_ || _)
+          val t = withFile.withColumn("__t", lit(true)).alias("t")
+          val sMarked = source.withColumn("__s", lit(true)).alias("s")
+          t.join(sMarked,
+              keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
+              "left_outer")
+            .filter(col("s.__s").isNull && fires)
+            .select(col("t.__file"))
+            .distinct().collect().map(r => norm(r.getString(0))).toSet
+        }
+      val touched = touchedMatched ++ touchedBySource
+      // Evolution with nothing to touch still lands the widened schema
+      // (a metadata-weight commit carrying every file).
+      if (touched.isEmpty && notMatchedInsert.isEmpty && insertChain.isEmpty &&
+          !(evolve && schema != schema0)) Left(v)
+      else {
         val (touchedE, keptE) = allE.partition(e => touched(norm(e.path)))
         // Declared schema, like delete/update: evolved tables mix file
         // schemas and the rewrite must not regress the manifest. Files
@@ -2977,7 +2852,7 @@ object SnapshotTable {
         // from pre-evolution files → NULL); the merge runs on the
         // logical projection. DV masking applies: a rewrite of a DV'd
         // file must not resurrect its masked rows.
-        val mapping = meta.map(_._1).getOrElse(mappingOf(spark, root, v))
+        val mapping = meta.map(_._1).getOrElse(state.mapping)
         val targetRows =
           if (touchedE.isEmpty) cur.limit(0).select(
             schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
@@ -3058,23 +2933,20 @@ object SnapshotTable {
             if (bChainAll.nonEmpty) None
             else Some(RebaseSpec(v, touched,
               () => keyMembershipPredicate(schema, source, keys.head)))
-          committed = commitAt(spark, root, v + 1, rewritten, carry = keptE,
+          Right(commitAt(spark, root, Some(base), rewritten, carry = keptE,
             cdc = Some((declared(mat.adds), declared(mat.removes))),
             tableSchema = Some(widenNullability(schema, rewritten.schema)),
             meta = meta, rebase = rebaseSpec,
             // A delete-only MERGE (every arm DELETE) removes rows without
             // changing any surviving value — layout survives, skip the
             // range re-shuffle (guide §2.4).
-            preserveLayout = mi.deleteOnly)
-          done = true
+            preserveLayout = mi.deleteOnly))
         } finally mat.free()
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 3) throw e // loop re-reads the winner's version
       }
+    } match {
+      case Left(v) => v // nothing to touch: no commit, no compaction
+      case Right(committed) => compact(spark, root, maxFiles).getOrElse(committed)
     }
-    compact(spark, root, maxFiles).getOrElse(committed)
   }
 
   /** Predicate DELETE as a new snapshot — the DML triad's third member
@@ -3180,8 +3052,7 @@ object SnapshotTable {
     def norm(p: String): String = new Path(p).toUri.getPath
     val fat = entries.filter(_.dv.length > cap)
     if (fat.isEmpty) return (entries, None)
-    val token = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val mergedDir = new Path(root, f"dv-$target%08d-$token")
+    val mergedDir = new Path(root, f"dv-$target%08d-${newToken()}")
     val union = spark.read.parquet(fat.flatMap(_.dv).distinct: _*)
       .select(col("file"), col("pos"))
     // A shared side-car can hold positions for files that are NOT being
@@ -3207,57 +3078,39 @@ object SnapshotTable {
     * Metadata-only commit with no CDC (file set and rows both unchanged —
     * delta consumers see an empty change). Returns Some(version), or None
     * when no entry holds more than one side-car. */
-  def consolidateDvs(spark: SparkSession, root: String): Option[Long] = {
-    var attempt = 0
-    while (attempt < 3) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"consolidateDvs on a table with no committed version at $root"))
-      val allE = currentEntries(spark, root, v)
-      val target = v + 1
-      val (capped, merged) = capDvLists(spark, root, target, allE, cap = 1)
-      if (merged.isEmpty) return None
-      val schema = schemaOf(spark, root, v)
-      if (tryCommitMeta(spark, root, target, capped, schema,
-          droppedOf(spark, root, v).toSeq.sorted, bloomOnOf(spark, root, v),
-          constraintsOf(spark, root, v), mappingOf(spark, root, v),
-          usedPhysOf(spark, root, v)))
-        return Some(target)
-      fsOf(spark, root).delete(merged.get, true)
-      attempt += 1
+  def consolidateDvs(spark: SparkSession, root: String): Option[Long] =
+    transactOn(spark, root, "consolidateDvs", ReadAttempts) { base =>
+      val (capped, merged) = capDvLists(spark, root, base.version + 1,
+        entriesOf(fsOf(spark, root), base), cap = 1)
+      merged.map(dir => commitMeta(spark, root, Some(base), capped,
+        stateOf(spark, base), sidecars = Seq(dir)))
     }
-    throw new ConcurrentWriteException(
-      s"consolidateDvs lost the version race at $root 3 times")
-  }
 
   def delete(spark: SparkSession, root: String, predicate: Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, not}
     def norm(p: String): String = new Path(p).toUri.getPath
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"delete on a table with no committed version at $root"))
+    transactOn(spark, root, "delete", ReadAttempts) { base =>
+      val v = base.version
+      val state = stateOf(spark, base)
       val cur = read(spark, root, Some(v))
-      val allE = currentEntries(spark, root, v)
+      val allE = entriesOf(fsOf(spark, root), base)
       // Filter keeps only TRUE rows (NULL drops), which IS the delete-match
       // set — and the bare predicate (no null-handling wrapper) stays
       // pushable, so this scan file-skips off the manifest bounds.
       // DV-carrying entries are probed SEPARATELY through the masked scan's
       // own file column: input_file_name() downstream of the mask join is
       // not a contract, and a missed file here is a silent under-delete.
-      val schema = schemaOf(spark, root, v)
-      val mapping = mappingOf(spark, root, v)
+      val schema = state.schema
+      val mapping = state.mapping
       val touchedCounts = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate)
       val touched = touchedCounts.keySet
-      if (touched.isEmpty) return v
       // The optimized (constant-folded) filter condition, for the CAS-loss
       // rebase check: a winner-appended file whose bounds cannot match it
       // proves the rewrite commutes with the append. Optimized, not merely
       // analyzed — analysis leaves implicit literal casts unfolded, which
       // the bounds MAY-analysis conservatively refuses to prune on.
-      val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
+      lazy val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
         .collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
         }
@@ -3281,84 +3134,65 @@ object SnapshotTable {
         touchedPhysRows > 0 && matched <= dvMaxRows &&
         touchedE.map(_.bytes).sum >= dvMinTouchedBytes &&
         matched.toDouble <= dvMaxFraction * touchedPhysRows
-      var dvCasLost = false
-      if (dvEligible) {
+      if (touched.isEmpty) v
+      else if (dvEligible) {
         val hits = readEntries(spark, touchedE, schema, mapping,
           fileCol = Some("__gf_file"), posCol = Some("__gf_pos"))
           .filter(predicate)
           .localCheckpoint() // one scan serves side-car + CDC
-        locally {
-          val token = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-          val target = v + 1
-          val fs = fsOf(spark, root)
-          val dvDir = new Path(root, f"dv-$target%08d-$token")
-          hits.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
-            .coalesce(1)
-            .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
-          val newTouched0 = touchedE.map(e => e.copy(
-            dv = e.dv :+ dvDir.toString,
-            dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
-          // Debt cap (round 14): a file crossing dvMaxSidecarsPerFile gets
-          // its whole list merged into one side-car inside this commit.
-          val (newTouched, mergedDv) = capDvLists(spark, root, target,
-            newTouched0, dvMaxSidecarsPerFile)
-          val preImages = hits.drop("__gf_file", "__gf_pos")
-          if (tryCommitMeta(spark, root, target, keptE ++ newTouched, schema,
-              droppedOf(spark, root, v).toSeq.sorted, bloomOnOf(spark, root, v),
-              constraintsOf(spark, root, v), mapping, usedPhysOf(spark, root, v),
-              cdc = Some((preImages.limit(0), preImages)))) return target
-          // CAS lost: remove the orphan side-cars and re-derive against the
-          // winner (the loop re-reads everything, like the rewrite path).
-          fs.delete(dvDir, true)
-          mergedDv.foreach(fs.delete(_, true))
-          attempt += 1
-          if (attempt >= 3) throw new ConcurrentWriteException(
-            s"delete(DV) lost the version race at $root 3 times")
-          dvCasLost = true // loop re-reads the winner's state
-        }
-      }
-      if (!dvCasLost) {
-      // ---- copy-on-write branch (the pre-r13 path) ----------------------
-      // Read with the DECLARED schema: on an evolved table a touched
-      // pre-evolution file lacks the new columns and must fill NULL, and
-      // the rewrite must land with the full schema or the commit's
-      // manifest would regress the table to the touched file's footer.
-      // Physical names on disk; logical projection for the predicate.
-      // DV masking applies — a rewrite of a DV'd file must not resurrect
-      // its masked rows.
-      val touchedRows = readEntries(spark, touchedE, schema, mapping)
-      // keep = NOT TRUE (so NULL keeps): the wrapper is fine here, this
-      // plan only ever reads the already-pruned touched files.
-      val rewritten = touchedRows.filter(not(coalesce(predicate, lit(false))))
-      // Refuse a delete of EVERY row: the manifest's per-file row counts
-      // give the carried total driver-side (zero-row part files from prior
-      // rewrites carry but hold nothing), and only when that is 0 do the
-      // emptiness probes run. Pre-stats (legacy) manifests FABRICATE rows=0
-      // (currentEntries), so a zero sum is only trusted after a limit(1)
-      // probe of the kept files themselves (ADVICE r9) — otherwise a
-      // legitimate delete that merely empties the touched files would be
-      // wrongly refused on such a table.
-      val keptEmpty = keptE.map(e => e.rows - e.dvRows).sum == 0 &&
-        (keptE.isEmpty || readEntries(spark, keptE, schema, mapping).isEmpty)
-      if (keptEmpty && rewritten.isEmpty)
-        throw new IllegalStateException(
-          s"delete would remove every row of $root; drop the table instead")
-      try {
-        return commitAt(spark, root, v + 1, rewritten, carry = keptE,
+        val target = v + 1
+        val dvDir = new Path(root, f"dv-$target%08d-${newToken()}")
+        hits.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
+          .coalesce(1)
+          .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
+        val newTouched0 = touchedE.map(e => e.copy(
+          dv = e.dv :+ dvDir.toString,
+          dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
+        // Debt cap (round 14): a file crossing dvMaxSidecarsPerFile gets
+        // its whole list merged into one side-car inside this commit.
+        val (newTouched, mergedDv) = capDvLists(spark, root, target,
+          newTouched0, dvMaxSidecarsPerFile)
+        val preImages = hits.drop("__gf_file", "__gf_pos")
+        // A CAS loss removes the orphan side-cars; the next attempt
+        // re-derives everything against the winner, like the rewrite path.
+        commitMeta(spark, root, Some(base), keptE ++ newTouched, state,
+          cdc = Some((preImages.limit(0), preImages)),
+          sidecars = dvDir +: mergedDv.toSeq)
+      } else {
+        // ---- copy-on-write branch (the pre-r13 path) --------------------
+        // Read with the DECLARED schema: on an evolved table a touched
+        // pre-evolution file lacks the new columns and must fill NULL, and
+        // the rewrite must land with the full schema or the commit's
+        // manifest would regress the table to the touched file's footer.
+        // Physical names on disk; logical projection for the predicate.
+        // DV masking applies — a rewrite of a DV'd file must not resurrect
+        // its masked rows.
+        val touchedRows = readEntries(spark, touchedE, schema, mapping)
+        // keep = NOT TRUE (so NULL keeps): the wrapper is fine here, this
+        // plan only ever reads the already-pruned touched files.
+        val rewritten = touchedRows.filter(not(coalesce(predicate, lit(false))))
+        // Refuse a delete of EVERY row: the manifest's per-file row counts
+        // give the carried total driver-side (zero-row part files from
+        // prior rewrites carry but hold nothing), and only when that is 0
+        // do the emptiness probes run. Pre-stats (legacy) manifests
+        // FABRICATE rows=0 (entriesOf), so a zero sum is only trusted after
+        // a limit(1) probe of the kept files themselves (ADVICE r9) —
+        // otherwise a legitimate delete that merely empties the touched
+        // files would be wrongly refused on such a table.
+        val keptEmpty = keptE.map(e => e.rows - e.dvRows).sum == 0 &&
+          (keptE.isEmpty || readEntries(spark, keptE, schema, mapping).isEmpty)
+        if (keptEmpty && rewritten.isEmpty)
+          throw new IllegalStateException(
+            s"delete would remove every row of $root; drop the table instead")
+        commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((cur.limit(0), touchedRows.filter(predicate))),
           tableSchema = Some(schema),
           rebase = Some(RebaseSpec(v, touched, () => resolvedPred)),
           // A delete keeps every surviving value byte-identical — the
           // clustered layout survives the rewrite by construction.
           preserveLayout = true)
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 3) throw e // loop re-reads the winner's version
       }
-      } // if (!dvCasLost)
     }
-    -1L // unreachable
   }
 
   /** Predicate UPDATE — same file-granular copy-on-write as [[delete]]:
@@ -3376,25 +3210,22 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
     def norm(p: String): String = new Path(p).toUri.getPath
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"update on a table with no committed version at $root"))
+    transactOn(spark, root, "update", ReadAttempts) { base =>
+      val v = base.version
+      val state = stateOf(spark, base)
       val cur = read(spark, root, Some(v))
       val missing = set.keySet -- cur.columns.toSet
       require(missing.isEmpty,
         s"update SET names absent columns: ${missing.mkString(", ")}")
-      val allE = currentEntries(spark, root, v)
+      val allE = entriesOf(fsOf(spark, root), base)
       // Declared schema for the same reason as [[delete]]: evolved tables
       // mix file schemas, and the rewrite must not regress the manifest.
-      val schema = schemaOf(spark, root, v)
-      val mapping = mappingOf(spark, root, v)
+      val schema = state.schema
+      val mapping = state.mapping
       val touchedCounts = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate)
       val touched = touchedCounts.keySet
-      if (touched.isEmpty) return v
-      val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
+      lazy val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
         .collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
         }
@@ -3408,8 +3239,8 @@ object SnapshotTable {
       // redoes the cheap delta-sized work.
       val touchedPhysRows = touchedE.map(e => e.rows - e.dvRows).sum
       val matched = touchedCounts.values.sum // exact, from the probe scan
-      var dvCasLost = false
-      if (dvMaxFraction > 0 && touchedE.forall(_.rows > 0) &&
+      if (touched.isEmpty) v
+      else if (dvMaxFraction > 0 && touchedE.forall(_.rows > 0) &&
           touchedPhysRows > 0 && matched <= dvMaxRows &&
           touchedE.map(_.bytes).sum >= dvMinTouchedBytes &&
           matched.toDouble <= dvMaxFraction * touchedPhysRows) {
@@ -3418,78 +3249,58 @@ object SnapshotTable {
           fileCol = Some("__gf_file"), posCol = Some("__gf_pos"))
           .filter(predicate)
           .localCheckpoint() // one scan: positions + pre-images + post build
-        locally {
-          val token = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-          val target = v + 1
-          val fs = fsOf(spark, root)
-          val dvDir = new Path(root, f"dv-$target%08d-$token")
-          marked.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
-            .coalesce(1)
-            .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
-          val newTouched0 = touchedE.map(e => e.copy(
-            dv = e.dv :+ dvDir.toString,
-            dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
-          // Debt cap (round 14) — same rule as delete's DV branch.
-          val (newTouched, mergedDv) = capDvLists(spark, root, target,
-            newTouched0, dvMaxSidecarsPerFile)
-          val pre = marked.drop("__gf_file", "__gf_pos")
-          val post = pre.select(schema.fields.map { f =>
-            set.get(f.name).map(_.cast(f.dataType).as(f.name))
-              .getOrElse(pre.col(f.name))
-          }.toIndexedSeq: _*)
-          try {
-            return commitAt(spark, root, target, post,
-              carry = keptE ++ newTouched,
-              cdc = Some((post, pre)),
-              tableSchema = Some(widenNullability(schema, post.schema)))
-          } catch {
-            case e: ConcurrentWriteException =>
-              fs.delete(dvDir, true)
-              mergedDv.foreach(fs.delete(_, true))
-              attempt += 1
-              if (attempt >= 3) throw e
-              dvCasLost = true // loop re-reads the winner's state
+        val target = v + 1
+        val dvDir = new Path(root, f"dv-$target%08d-${newToken()}")
+        marked.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
+          .coalesce(1)
+          .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
+        val newTouched0 = touchedE.map(e => e.copy(
+          dv = e.dv :+ dvDir.toString,
+          dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
+        // Debt cap (round 14) — same rule as delete's DV branch.
+        val (newTouched, mergedDv) = capDvLists(spark, root, target,
+          newTouched0, dvMaxSidecarsPerFile)
+        val pre = marked.drop("__gf_file", "__gf_pos")
+        val post = pre.select(schema.fields.map { f =>
+          set.get(f.name).map(_.cast(f.dataType).as(f.name))
+            .getOrElse(pre.col(f.name))
+        }.toIndexedSeq: _*)
+        commitAt(spark, root, Some(base), post,
+          carry = keptE ++ newTouched,
+          cdc = Some((post, pre)),
+          tableSchema = Some(widenNullability(schema, post.schema)),
+          sidecars = dvDir +: mergedDv.toSeq)
+      } else {
+        // ---- copy-on-write branch (the pre-r13 path) --------------------
+        // DV masking applies: rewriting a DV'd file must not resurrect rows.
+        val touchedRows = readEntries(spark, touchedE, schema, mapping)
+        val hit = coalesce(predicate, lit(false))
+        val rewritten = touchedRows.select(schema.fields.map { f =>
+          set.get(f.name) match {
+            case Some(e) =>
+              when(hit, e.cast(f.dataType)).otherwise(touchedRows.col(f.name)).as(f.name)
+            case None => touchedRows.col(f.name)
           }
-        }
-      }
-      if (!dvCasLost) {
-      // ---- copy-on-write branch (the pre-r13 path) ----------------------
-      // DV masking applies: rewriting a DV'd file must not resurrect rows.
-      val touchedRows = readEntries(spark, touchedE, schema, mapping)
-      val hit = coalesce(predicate, lit(false))
-      val rewritten = touchedRows.select(schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) =>
-            when(hit, e.cast(f.dataType)).otherwise(touchedRows.col(f.name)).as(f.name)
-          case None => touchedRows.col(f.name)
-        }
-      }.toIndexedSeq: _*)
-      // Post-image = SET applied to the matched PRE-rows (re-filtering the
-      // rewrite by the predicate would lose rows whose update changed a
-      // predicate column out from under it).
-      val pre = touchedRows.filter(predicate)
-      val post = pre.select(schema.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(pre.col(f.name))
-      }.toIndexedSeq: _*)
-      try {
-        return commitAt(spark, root, v + 1, rewritten, carry = keptE,
+        }.toIndexedSeq: _*)
+        // Post-image = SET applied to the matched PRE-rows (re-filtering the
+        // rewrite by the predicate would lose rows whose update changed a
+        // predicate column out from under it).
+        val pre = touchedRows.filter(predicate)
+        val post = pre.select(schema.fields.map { f =>
+          set.get(f.name).map(_.cast(f.dataType).as(f.name))
+            .getOrElse(pre.col(f.name))
+        }.toIndexedSeq: _*)
+        commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((post, pre)),
           tableSchema = Some(widenNullability(schema, rewritten.schema)),
           rebase = Some(RebaseSpec(v, touched, () => resolvedPred)),
           // An UPDATE that assigns NO cluster column keeps every
           // cluster-key value in place — layout survives, skip the range
           // re-shuffle (same rule as delete; guide §2.4).
-          preserveLayout = clusterByOf(spark, root, v)
+          preserveLayout = state.clusterBy
             .forall(c => !set.keys.exists(_.equalsIgnoreCase(c))))
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 3) throw e // loop re-reads the winner's version
       }
-      } // if (!dvCasLost)
     }
-    -1L // unreachable
   }
 
   /** Predicate INSERT OVERWRITE — Delta's `replaceWhere` (round 12): ONE
@@ -3507,14 +3318,12 @@ object SnapshotTable {
                      data: DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
     def norm(p: String): String = new Path(p).toUri.getPath
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"overwriteWhere on a table with no committed version at $root"))
+    transactOn(spark, root, "overwriteWhere", ReadAttempts) { base =>
+      val v = base.version
+      val state = stateOf(spark, base)
       val cur = read(spark, root, Some(v))
-      val schema = schemaOf(spark, root, v)
-      val mapping = mappingOf(spark, root, v)
+      val schema = state.schema
+      val mapping = state.mapping
       // Align the batch to the DECLARED schema: case-insensitive by-name
       // resolution, lossless casts only (the append/merge discipline).
       val byLc = data.columns.map(c => lc(c) -> c).toMap
@@ -3531,7 +3340,7 @@ object SnapshotTable {
       require(batch.filter(coalesce(predicate, lit(false)) =!= lit(true)).isEmpty,
         s"overwriteWhere: every batch row must satisfy the predicate " +
           s"(classic replaceWhere contract); found rows outside the replaced region")
-      val allE = currentEntries(spark, root, v)
+      val allE = entriesOf(fsOf(spark, root), base)
       val touched = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate).keySet
       val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
@@ -3547,19 +3356,12 @@ object SnapshotTable {
           (touchedRows.filter(not(coalesce(predicate, lit(false)))),
             touchedRows.filter(predicate))
         }
-      try {
-        val rewritten = kept.union(batch)
-        return commitAt(spark, root, v + 1, rewritten, carry = keptE,
-          cdc = Some((batch, removes)),
-          tableSchema = Some(widenNullability(schema, rewritten.schema)),
-          rebase = Some(RebaseSpec(v, touched, () => resolvedPred)))
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 3) throw e // loop re-reads the winner's version
-      }
+      val rewritten = kept.union(batch)
+      commitAt(spark, root, Some(base), rewritten, carry = keptE,
+        cdc = Some((batch, removes)),
+        tableSchema = Some(widenNullability(schema, rewritten.schema)),
+        rebase = Some(RebaseSpec(v, touched, () => resolvedPred)))
     }
-    -1L // unreachable
   }
 
   /** Incremental change feed between two versions, as the rows in files
@@ -3611,9 +3413,9 @@ object SnapshotTable {
       val have = merged.columns.toSet
       // Files speak physical names; the feed lands on the end version's
       // LOGICAL schema through its mapping (identity when never renamed).
-      val mapping = mappingOf(spark, root, to)
-      merged.select(schemaOf(spark, root, to).fields.map { f =>
-        val p = physName(mapping, f.name)
+      val end = stateOf(spark, resolvedAt(fs, root, to))
+      merged.select(end.schema.fields.map { f =>
+        val p = physName(end.mapping, f.name)
         if (have(p)) merged.col(p).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
@@ -3664,8 +3466,7 @@ object SnapshotTable {
     // earlier change files, and a column dropped mid-interval must NOT
     // resurface its orphaned values from pre-drop CDC side-cars — that is
     // the hazard the tombstone contract exists to prevent.
-    lazy val endSchema = schemaOf(spark, root, to)
-    lazy val endMapping = mappingOf(spark, root, to)
+    lazy val end = stateOf(spark, resolvedAt(fs, root, to))
     def readOrEmpty(paths: Seq[String]): DataFrame =
       if (paths.isEmpty) read(spark, root, Some(to)).limit(0)
       else {
@@ -3675,8 +3476,8 @@ object SnapshotTable {
         // physical names; project through the end version's mapping.
         val merged = spark.read.option("mergeSchema", "true").parquet(paths: _*)
         val have = merged.columns.toSet
-        merged.select(endSchema.fields.map { f =>
-          val p = physName(endMapping, f.name)
+        merged.select(end.schema.fields.map { f =>
+          val p = physName(end.mapping, f.name)
           if (have(p)) merged.col(p).as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }.toIndexedSeq: _*)
@@ -3768,8 +3569,11 @@ object SnapshotTable {
     * maintenance pass exists to fold. */
   def compact(spark: SparkSession, root: String, maxFiles: Int = 64,
               targetBytes: Long = 128L << 20): Option[Long] =
-    currentVersion(spark, root).flatMap { v =>
-      val entries = currentEntries(spark, root, v)
+    // Target base + 1 is PINNED to the version read: a commit racing in
+    // between makes this maintenance pass a clean loser (the next
+    // compaction retries), never an eraser of the winner's rows.
+    try transact(spark, root, "compact", attempts = 1)(_.flatMap { base =>
+      val entries = entriesOf(fsOf(spark, root), base)
       // DV-carrying files are ALWAYS in the rewrite set (round 13):
       // OPTIMIZE is what materializes deletion vectors back into clean
       // files — masked rows drop, side-cars retire with the old manifest.
@@ -3791,9 +3595,10 @@ object SnapshotTable {
           // pre-evolution rows materialize NULL for the grown columns.
           // DV masking applies (readEntries): the rewrite lands the
           // LOGICAL rows, never the masked ones.
-          val cSchema = schemaOf(spark, root, v)
-          val cMapping = mappingOf(spark, root, v)
-          val cCols = clusterByOf(spark, root, v)
+          val state = stateOf(spark, base)
+          val cSchema = state.schema
+          val cMapping = state.mapping
+          val cCols = state.clusterBy
             .filter(c => cSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
           val folded = readEntries(spark, small, cSchema, cMapping)
           // Clustered table: pack WITH a range shuffle of the small-file
@@ -3805,17 +3610,13 @@ object SnapshotTable {
               .sortWithinPartitions(cCols.map(folded.col): _*)
           // Rows are identical by construction, so the commit records an
           // EMPTY change set — a delta consumer skips compactions instead of
-          // misreading the file rewrite as a reprocess signal. Target v+1 is
-          // PINNED to the version read; a commit racing in between makes
-          // this maintenance pass a clean loser (the next compaction
-          // retries), never an eraser of the winner's rows.
-          try Some(commitAt(spark, root, v + 1, packed, carry = large,
+          // misreading the file rewrite as a reprocess signal.
+          Some(commitAt(spark, root, Some(base), packed, carry = large,
             cdc = Some((packed.limit(0), packed.limit(0))),
             declareClusterBy = if (cCols.isEmpty) None else Some(cCols)))
-          catch { case _: ConcurrentWriteException => None }
         }
       }
-    }
+    }) catch { case _: ConcurrentWriteException => None }
 
   /** Re-cluster the CURRENT snapshot on `clusterBy` as a new version with
     * identical rows — the maintenance op that restores plan-time file
@@ -3828,34 +3629,22 @@ object SnapshotTable {
   def recluster(spark: SparkSession, root: String, clusterBy: Seq[String],
                 numFiles: Int = 32, zorder: Boolean = false): Long = {
     require(clusterBy.nonEmpty, "recluster needs at least one cluster column")
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"recluster on a table with no committed version at $root"))
-      val cur = read(spark, root, Some(v))
+    transactOn(spark, root, "recluster", ReadAttempts) { base =>
+      val cur = read(spark, root, Some(base.version))
         .localCheckpoint() // the commit supersedes the files this plan reads
       // zorder = OPTIMIZE ZORDER BY: the Morton-curve layout serves filters
       // on ANY of the 2-3 named dimensions, where range clustering serves
-      // only its leading column. Same empty change set either way. Target
-      // v+1 pinned to the version read (serializability — see compact).
+      // only its leading column. Same empty change set either way.
       val clustered =
         if (zorder) zClustered(cur, clusterBy, numFiles)
         else {
           val cols = clusterBy.map(cur.col)
           cur.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*)
         }
-      try {
-        return commitAt(spark, root, v + 1, clustered,
-          cdc = Some((cur.limit(0), cur.limit(0))),
-          declareClusterBy = Some(clusterBy))
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt >= 3) throw e // loop re-reads the winner's version
-      }
+      commitAt(spark, root, Some(base), clustered,
+        cdc = Some((cur.limit(0), cur.limit(0))),
+        declareClusterBy = Some(clusterBy))
     }
-    -1L // unreachable
   }
 
   /** Metadata-only row count: when the manifest's stats cover every listed

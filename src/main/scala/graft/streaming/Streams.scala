@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ops.{Q, Upsert}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
@@ -420,11 +420,6 @@ object Streams {
       // tests); CdfSourceSpec pins the AvailableNow bounded drain.
       .trigger(if (maxVersionsPerTrigger > 0) Trigger.ProcessingTime(0L)
                else Trigger.AvailableNow())
-  }
-
-  /** Run an AvailableNow query to completion (test/driver helper). */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.awaitTermination()
   }
 
   /** Kafka-shaped continuous source demo: the built-in `rate` source mapped

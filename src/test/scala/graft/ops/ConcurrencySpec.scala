@@ -17,6 +17,8 @@ class ConcurrencySpec extends SparkSpec {
   test("planted CAS race: exactly one winner per version, loser's orphan swept") {
     val root = s"${tmpDir()}/t"
     SnapshotTable.commit(spark, root, Seq((0L, "base")).toDF("k", "v"))
+    val v0 = SnapshotTable.resolvedAt(new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), root, 0L)
     val barrier = new CyclicBarrier(2)
     val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Long]]()
     val pool = Executors.newFixedThreadPool(2)
@@ -26,7 +28,7 @@ class ConcurrencySpec extends SparkSpec {
           val df = Seq((i.toLong, s"writer$i")).toDF("k", "v")
           barrier.await() // both target version 1 simultaneously
           outcomes.add(
-            try Right(SnapshotTable.commitAt(spark, root, 1L, df))
+            try Right(SnapshotTable.commitAt(spark, root, Some(v0), df))
             catch { case e: Throwable => Left(e) })
         }
       })
@@ -185,6 +187,97 @@ class ConcurrencySpec extends SparkSpec {
       s"both replaceWhere commits must land; diff=${got.diff(want)} / ${want.diff(got)}")
     // both landed as distinct versions over the seed
     assert(SnapshotTable.currentVersion(spark, root).contains(2L))
+  }
+
+  test("transact seam: bounded attempts, a named exhaustion, a retry against the winner") {
+    val root = s"${tmpDir()}/t"
+    SnapshotTable.commit(spark, root, Seq((0L, "base")).toDF("k", "v"))
+    // A body that always loses runs exactly `attempts` times, then the
+    // conflict surfaces naming the operation, the root and the count.
+    var runs = 0
+    val e = intercept[SnapshotTable.ConcurrentWriteException] {
+      SnapshotTable.transact(spark, root, "seam-probe", attempts = 3) { base =>
+        runs += 1
+        throw new SnapshotTable.ConcurrentWriteException(
+          s"planted loss on top of ${base.map(_.version)}")
+      }
+    }
+    assert(runs == 3, s"body ran $runs times")
+    assert(e.getMessage.contains("seam-probe") && e.getMessage.contains(root) &&
+      e.getMessage.contains("3 time") && e.getMessage.contains("version 1"),
+      e.getMessage)
+    // A body that loses once (a writer lands between its read and its
+    // commit) re-runs against the winner's state and returns the second
+    // attempt's version.
+    val lossesBefore = SnapshotTable.casLosses.get()
+    val bases = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val v = SnapshotTable.transact(spark, root, "seam-probe", attempts = 3) { base =>
+      bases += base.get.version
+      if (bases.size == 1)
+        SnapshotTable.append(spark, root, Seq((1L, "winner")).toDF("k", "v"))
+      SnapshotTable.commitAt(spark, root, base, Seq((2L, "ours")).toDF("k", "v"))
+    }
+    assert(bases == Seq(0L, 1L), s"attempt bases $bases")
+    assert(v == 2L, s"second attempt must land at 2, got $v")
+    assert(SnapshotTable.casLosses.get() == lossesBefore + 1)
+    assert(SnapshotTable.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet == Set((2L, "ours")))
+  }
+
+  test("racing metadata-only commits: gapless versions, no lost update, losses counted") {
+    import org.apache.spark.sql.types.{LongType, StructField}
+    val root = s"${tmpDir()}/t"
+    SnapshotTable.commit(spark, root, (0L until 10L).map(k => (k, s"v$k")).toDF("k", "v"))
+    // Warm the constraint path (parser, validating scan) on another table:
+    // the racing setCheckConstraint then reads its base together with the
+    // other writers and commits after them, off a stale base.
+    val warm = s"${tmpDir()}/warm"
+    SnapshotTable.commit(spark, warm, Seq((0L, "w")).toDF("k", "v"))
+    SnapshotTable.setCheckConstraint(spark, warm, "k_nonneg", "k >= 0")
+    val lossesBefore = SnapshotTable.casLosses.get()
+    val reloops = new java.util.concurrent.atomic.AtomicLong(0L)
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(5)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def race(body: => Unit): Unit = pool.submit(new Runnable {
+      def run(): Unit = {
+        start.await()
+        var done = false
+        while (!done) {
+          try { body; done = true }
+          catch {
+            case _: SnapshotTable.ConcurrentWriteException => reloops.incrementAndGet()
+            case e: Throwable => failures.add(e); done = true
+          }
+        }
+      }
+    })
+    (0 until 3).foreach(i =>
+      race(SnapshotTable.addColumns(spark, root, Seq(StructField(s"c$i", LongType)))))
+    race(SnapshotTable.setBloomColumns(spark, root, Seq("k")))
+    race(SnapshotTable.setCheckConstraint(spark, root, "k_nonneg", "k >= 0"))
+    start.countDown()
+    pool.shutdown()
+    assert(pool.awaitTermination(300, TimeUnit.SECONDS))
+    assert(failures.isEmpty, s"unexpected failures: $failures")
+
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(root, "_manifests"))
+      .map(_.getPath.getName).collect {
+        case n if n.matches("manifest-\\d{8}\\.json") => n.substring(9, 17).toLong
+      }.sorted.toSeq
+    assert(versions == (0L to 5L), s"one gapless version per writer expected: $versions")
+    // Every writer's change survives in the final state: no lost update.
+    val last = SnapshotTable.resolvedAt(fs, root, 5L)
+    assert(last.schema.get.fieldNames.toSeq.sorted == Seq("c0", "c1", "c2", "k", "v"),
+      last.schema)
+    assert(last.bloomOn == Seq("k"), last.bloomOn)
+    assert(last.constraints == Map("k_nonneg" -> "k >= 0"), last.constraints)
+    assert(SnapshotTable.read(spark, root).count() == 10L)
+    assert(SnapshotTable.casLosses.get() - lossesBefore >= reloops.get(),
+      s"casLosses grew ${SnapshotTable.casLosses.get() - lossesBefore}, " +
+        s"re-loops ${reloops.get()}")
   }
 
   test("coordinator: a crash between a table+audit pair's commits never shows half state (r15)") {

@@ -16,13 +16,15 @@ import org.apache.spark.sql.functions._
 class ConflictRebaseSpec extends SparkSpec {
   import spark.implicits._
 
-  private def manifestBody(root: String, v: Long): String = {
+  private def resolvedAt(root: String, v: Long): SnapshotStats.Resolved = {
     // Resolved through the delta-log chain (round 13): the raw file may be
     // a delta manifest; the spec asserts on the full per-version state.
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SnapshotTable.manifestBodyAt(fs, root, v)
+    SnapshotTable.resolvedAt(fs, root, v)
   }
+
+  private def manifestBody(root: String, v: Long): String = resolvedAt(root, v).body
 
   private def norm(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
@@ -63,7 +65,7 @@ class ConflictRebaseSpec extends SparkSpec {
 
     // The staged delete now commits at its stale target version 1 — the
     // CAS loses, the rebase check passes, and the SAME rewrite lands at 2.
-    val committed = SnapshotTable.commitAt(spark, root, 1L, rewritten,
+    val committed = SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
       carry = keptE, tableSchema = Some(schema),
       rebase = Some(SnapshotTable.RebaseSpec(0L,
         touchedE.map(e => norm(e.path)).toSet, () => resolved)))
@@ -96,7 +98,7 @@ class ConflictRebaseSpec extends SparkSpec {
     SnapshotTable.append(spark, root, Seq((5L, "late")).toDF("k", "s"))
     val rebasesBefore = SnapshotTable.rebases.get()
     intercept[SnapshotTable.ConcurrentWriteException] {
-      SnapshotTable.commitAt(spark, root, 1L, rewritten,
+      SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
         carry = keptE, tableSchema = Some(schema),
         rebase = Some(SnapshotTable.RebaseSpec(0L,
           touchedE.map(e => norm(e.path)).toSet, () => resolved)))
@@ -120,7 +122,7 @@ class ConflictRebaseSpec extends SparkSpec {
       Map("s" -> lit("updated")))
     val rebasesBefore = SnapshotTable.rebases.get()
     intercept[SnapshotTable.ConcurrentWriteException] {
-      SnapshotTable.commitAt(spark, root, 1L, rewritten,
+      SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
         carry = keptE, tableSchema = Some(schema),
         rebase = Some(SnapshotTable.RebaseSpec(0L,
           touchedE.map(e => norm(e.path)).toSet, () => resolved)))
@@ -249,23 +251,23 @@ class ConflictRebaseSpec extends SparkSpec {
       (0L until 100L).map(k => (k, s"r$k")).toDF("k", "s")
         .select(col("k").as("k", md), col("s")),
       Seq("k"), numFiles = 4)
-    assert(SnapshotTable.identityHwmOf(spark, root, 0L) == Map("k" -> 99L))
+    assert(resolvedAt(root, 0L).identityHwm == Map("k" -> 99L))
     val (touchedE, keptE, rewritten, schema, resolved) = stageDelete(root)
 
     // Winner: an append that pushes the HWM to 1009 AFTER the delete
     // captured version 0's marks.
     SnapshotTable.append(spark, root,
       (1000L until 1010L).map(k => (k, "new")).toDF("k", "s"))
-    assert(SnapshotTable.identityHwmOf(spark, root, 1L) == Map("k" -> 1009L))
+    assert(resolvedAt(root, 1L).identityHwm == Map("k" -> 1009L))
 
-    val committed = SnapshotTable.commitAt(spark, root, 1L, rewritten,
+    val committed = SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
       carry = keptE, tableSchema = Some(schema),
       rebase = Some(SnapshotTable.RebaseSpec(0L,
         touchedE.map(e => norm(e.path)).toSet, () => resolved)))
     assert(committed == 2L, s"rebased commit must land at 2, got $committed")
     // Without the max-merge the rebased manifest re-declared HWM 99 and
     // the next generating insert would reuse the winner's 1000..1009.
-    assert(SnapshotTable.identityHwmOf(spark, root, 2L) == Map("k" -> 1009L),
+    assert(resolvedAt(root, 2L).identityHwm == Map("k" -> 1009L),
       "rebase must not re-declare the stale pre-winner identity HWM")
     SnapshotTable.append(spark, root, Seq(("only" : String)).toDF("s"))
     val gen = SnapshotTable.read(spark, root).filter(col("s") === "only")

@@ -123,7 +123,7 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("k", "v"))
     // A CAS loss = targeting a version someone else already committed.
     intercept[SnapshotTable.ConcurrentWriteException](
-      SnapshotTable.commitAt(spark, root, 0L, Seq((9L, "x")).toDF("k", "v")))
+      SnapshotTable.commitAt(spark, root, None, Seq((9L, "x")).toDF("k", "v")))
     // Winner untouched; loser's data fully removed (no orphan dirs).
     assert(canon(SnapshotTable.read(spark, root)) ==
       canon(Seq((1L, "a")).toDF("k", "v")))
