@@ -2036,10 +2036,8 @@ object ScaleRehearsal {
       graft.ops.SnapshotTable.clearResolvedCache()
       val (_, pathsMs) = timeMs(
         graft.ops.SnapshotTable.resolvedPathsAt(fs, root, v).files.length)
-      val fullBytes = graft.ops.SnapshotTable.manifestBodyAt(fs, root, v)
-        .getBytes("UTF-8").length
       println(f"SCALE manifestscale files=${target}%6d " +
-        f"delta_commit_bytes=$deltaBytes%8d full_state_bytes=$fullBytes%10d " +
+        f"delta_commit_bytes=$deltaBytes%8d " +
         f"commit_ms=$wall%8.1f cold_read_resolve_ms=$coldMs%8.1f " +
         f"cold_state_resolve_ms=$stateMs%8.1f cold_paths_resolve_ms=$pathsMs%8.1f")
     }
@@ -2108,7 +2106,7 @@ object ScaleRehearsal {
       val entries = (0 until n).map(entry)
       val state = new SnapshotStats.Resolved(
         version = 16L, ts = System.currentTimeMillis(), stats = entries,
-        schemaJson = Some(schema.json), dropped = Nil, bloomOn = Nil,
+        schemaJson = schema.json, dropped = Nil, bloomOn = Nil,
         constraints = Map.empty, mapping = Map.empty, usedPhys = Nil,
         ingested = (0 until 200).map(i => s"src/batch-$i.csv"),
         clusterBy = Seq("k"), identityHwm = Map.empty, txn = None, cdc = None)
@@ -2173,7 +2171,7 @@ object ScaleRehearsal {
   private def cloneRebase50kLeg(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    import graft.ops.{SnapshotStats, SnapshotTable}
+    import graft.ops.SnapshotTable
     val root = new java.io.File(sys.props("java.io.tmpdir"),
       "graft-scale-clr50k/src").getAbsolutePath
     val cloneRoot = new java.io.File(sys.props("java.io.tmpdir"),
@@ -2215,8 +2213,7 @@ object ScaleRehearsal {
     // append win the version, then commit stale — the rebase must land
     // metadata-only in O(seconds) at 50k carried entries (the redo
     // baseline is re-running the probe + rewrite against the winner).
-    val entries = SnapshotStats.statsFromManifest(
-      SnapshotTable.manifestBodyAt(fs, root, v0))
+    val entries = SnapshotTable.resolvedAt(fs, root, v0).stats
     def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val victim = entries.find(e =>
       e.cols.get("k").flatMap(_.min).contains(7L)).getOrElse(entries.head)
@@ -2279,9 +2276,9 @@ object ScaleRehearsal {
       Seq("k"), numFiles = 24)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(v: Long): Set[String] =
-      graft.ops.SnapshotStats.statsFromManifest(
-        graft.ops.SnapshotTable.manifestBodyAt(fs, root, v)).map(_.path).toSet
+    def entries(v: Long): Seq[graft.ops.SnapshotStats.FileStats] =
+      graft.ops.SnapshotTable.resolvedAt(fs, root, v).stats
+    def files(v: Long): Set[String] = entries(v).map(_.path).toSet
     val before = files(0L)
     val rnd = new scala.util.Random(13)
     val keys = Seq.fill(100)(math.abs(rnd.nextLong()) % n).distinct
@@ -2291,8 +2288,7 @@ object ScaleRehearsal {
     val v = graft.ops.SnapshotTable.currentVersion(spark, root).get
     assert(files(v) == before,
       "scattered point deletes must not rewrite a single data file")
-    val es = graft.ops.SnapshotStats.statsFromManifest(
-      graft.ops.SnapshotTable.manifestBodyAt(fs, root, v))
+    val es = entries(v)
     println(f"SCALE dvscale ${keys.size} single-row deletes on 20M rows: " +
       f"$wall%.1f s total (${wall / keys.size * 1000}%.0f ms/delete), " +
       f"0/${before.size} files rewritten, dv_files=${es.count(_.dv.nonEmpty)}, " +
@@ -2313,9 +2309,7 @@ object ScaleRehearsal {
       s"per-file side-car lists must stay capped: $maxList")
     val scanAccrued = scanMs()
     val vCons = graft.ops.SnapshotTable.consolidateDvs(spark, root)
-    val esCons = graft.ops.SnapshotStats.statsFromManifest(
-      graft.ops.SnapshotTable.manifestBodyAt(fs, root,
-        vCons.getOrElse(v)))
+    val esCons = entries(vCons.getOrElse(v))
     assert(esCons.forall(_.dv.length <= 1), "DV ONLY leaves ≤1 side-car/file")
     assert(files(vCons.getOrElse(v)) == before, "DV ONLY rewrites no data")
     val scanConsolidated = scanMs()
@@ -2327,8 +2321,7 @@ object ScaleRehearsal {
     val t1 = System.nanoTime()
     val vOpt = graft.ops.SnapshotTable.compact(spark, root, maxFiles = 64)
     val optWall = (System.nanoTime() - t1) / 1e9
-    val esAfter = graft.ops.SnapshotStats.statsFromManifest(
-      graft.ops.SnapshotTable.manifestBodyAt(fs, root, vOpt.get))
+    val esAfter = entries(vOpt.get)
     assert(esAfter.forall(_.dv.isEmpty), "OPTIMIZE must materialize all DVs")
     assert(graft.ops.SnapshotTable.rowCount(spark, root) == n - keys.size)
     println(f"SCALE dvscale OPTIMIZE materialized the DVs in $optWall%.1f s; " +
@@ -2346,8 +2339,7 @@ object ScaleRehearsal {
       graft.ops.SnapshotTable.delete(spark, root, col("k") === k))
     val autoWall = (System.nanoTime() - tAuto) / 1e9
     val vAuto = graft.ops.SnapshotTable.currentVersion(spark, root).get
-    val esAuto = graft.ops.SnapshotStats.statsFromManifest(
-      graft.ops.SnapshotTable.manifestBodyAt(fs, root, vAuto))
+    val esAuto = entries(vAuto)
     assert(esAuto.forall(_.dv.length <= 1),
       s"auto mode must hold ≤1 side-car/file: ${esAuto.map(_.dv.length).max}")
     val hintAuto = graft.ops.SnapshotTable.status(spark, root).head()

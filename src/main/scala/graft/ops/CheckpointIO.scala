@@ -126,9 +126,9 @@ object CheckpointIO {
     val tmp = new Path(dest.getParent,
       s".${dest.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     // State body: the manifest-JSON shape with EMPTY files/stats arrays —
-    // every existing field parser works on it; rows below carry the files.
+    // readState parses it like any full manifest; rows below carry the files.
     val stateJson = SnapshotStats.manifestJson(
-      state.version, Nil, state.txn, state.cdc, state.schemaJson,
+      state.version, Nil, state.txn, state.cdc, Some(state.schemaJson),
       state.dropped, state.bloomOn, state.constraints, state.mapping,
       state.usedPhys, state.ingested, tsOverride = Some(state.ts),
       clusterBy = state.clusterBy, identityHwm = state.identityHwm,
@@ -231,15 +231,18 @@ object CheckpointIO {
       org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
 
   /** The state-only read: ONE footer fetch, no row decode — O(table
-    * state), flat in file count. Returns the files-less manifest body. */
-  def readState(conf: Configuration, path: Path): String = {
+    * state), flat in file count. The result carries no entries; its
+    * PROTOCOL is the chain's (buildCommitBody's writer gate reads it — a
+    * checkpoint-served resolution dropping it to (1,1) would let an old
+    * writer extend a chain that demands a newer one). */
+  def readState(conf: Configuration, path: Path): SnapshotStats.Resolved = {
     val reader = openFooter(conf, path)
     val state = try {
       reader.getFooter.getFileMetaData.getKeyValueMetaData.get(StateKey)
     } finally reader.close()
     require(state != null, s"checkpoint $path carries no $StateKey footer")
-    SnapshotStats.checkReadProtocol(state, path.toString)
-    state
+    SnapshotStats.parseResolved(
+      SnapshotStats.parseManifest(state, path.toString), path.toString)
   }
 
   private def entryOf(g: Group): SnapshotStats.FileStats = {
@@ -250,21 +253,6 @@ object CheckpointIO {
     SnapshotStats.fileEntryFromJson(
       g.getString("path", 0), g.getLong("bytes", 0), g.getLong("rows", 0),
       g.getLong("dvRows", 0), opt("cols"), opt("bloom"), opt("dv"))
-  }
-
-  private def resolvedOf(stateJson: String,
-                         entries: Seq[SnapshotStats.FileStats])
-      : SnapshotStats.Resolved = {
-    val st = SnapshotStats.parseResolved(stateJson)
-    new SnapshotStats.Resolved(
-      st.version, st.ts, entries, st.schemaJson, st.dropped, st.bloomOn,
-      st.constraints, st.mapping, st.usedPhys, st.ingested, st.clusterBy,
-      st.identityHwm, st.txn, st.cdc,
-      // Carry the PROTOCOL through (round 15): buildCommitBody's writer
-      // gate reads prev.protocol — a checkpoint-served resolution dropping
-      // it to (1,1) would let an old writer extend a chain that demands a
-      // newer one.
-      protocol = st.protocol)
   }
 
   private def readRows(conf: Configuration, path: Path,
@@ -290,10 +278,8 @@ object CheckpointIO {
   }
 
   /** Full checkpoint read: footer state + columnar row decode. */
-  def read(conf: Configuration, path: Path): SnapshotStats.Resolved = {
-    val stateJson = readState(conf, path)
-    resolvedOf(stateJson, readRows(conf, path, None, None))
-  }
+  def read(conf: Configuration, path: Path): SnapshotStats.Resolved =
+    readState(conf, path).copy(stats = readRows(conf, path, None, None))
 
   /** Paths-projected read (round 15, VERDICT r14 #1a): decodes
     * path/bytes/rows/dvRows + the DV side-car list and NEVER touches the
@@ -301,10 +287,9 @@ object CheckpointIO {
     * bytes stay on disk. Entries come back with EMPTY cols/bloom; the
     * consumers (vacuum live-set / doomed-dir resolution) only read paths
     * and dv. Must never feed a commit diff or a data scan. */
-  def readPaths(conf: Configuration, path: Path): SnapshotStats.Resolved = {
-    val stateJson = readState(conf, path)
-    resolvedOf(stateJson, readRows(conf, path, Some(PathsSchema), None))
-  }
+  def readPaths(conf: Configuration, path: Path): SnapshotStats.Resolved =
+    readState(conf, path).copy(
+      stats = readRows(conf, path, Some(PathsSchema), None))
 
   /** Range-pruned read (round 15, VERDICT r14 #1b): decode only entries
     * whose promoted cluster-key [min, max] MAY intersect [lo, hi] (plus

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * without rewriting a byte of history (reference behavior: the extract
   * jobs re-ship full snapshots on schema change; the warehouse-scale
   * replacement is Delta/Iceberg metadata-declared schemas, which is what
-  * [[SnapshotStats.schemaFromManifest]] implements).
+  * the declared `schema` of [[SnapshotStats.Resolved]] implements).
   *
   * The registered query appends the even-key half of `orders` WITHOUT
   * `o_orderpriority`, then the odd-key half WITH it — the second commit

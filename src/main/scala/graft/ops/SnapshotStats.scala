@@ -220,20 +220,24 @@ object SnapshotStats {
   val SupportedWriterVersion = 1
 
   /** (minReader, minWriter) this manifest demands; (1, 1) when absent. */
-  def protocolFromManifest(body: String): (Int, Int) = {
-    val p = tree(body).get("protocol")
+  def protocolFromManifest(m: JsonNode): (Int, Int) = {
+    val p = m.get("protocol")
     if (p == null || !p.isObject) (1, 1)
     else (Option(p.get("minReader")).map(_.asInt).getOrElse(1),
           Option(p.get("minWriter")).map(_.asInt).getOrElse(1))
   }
 
-  /** Loud refusal for manifests demanding a newer READER than this build. */
-  def checkReadProtocol(body: String, where: String): Unit = {
-    val (minReader, _) = protocolFromManifest(body)
+  /** Parse one manifest (or checkpoint-state) body, refusing loudly when it
+    * demands a newer READER than this build. Every read parses its body
+    * exactly once, here; the field readers below take the parsed node. */
+  def parseManifest(body: String, where: String): JsonNode = {
+    val m = mapper.readTree(body)
+    val (minReader, _) = protocolFromManifest(m)
     if (minReader > SupportedReaderVersion)
       throw new IllegalStateException(
         s"$where requires manifest reader version $minReader; this engine " +
           s"supports up to $SupportedReaderVersion — upgrade before reading")
+    m
   }
 
   private def putProtocol(root: ObjectNode): Unit = {
@@ -243,25 +247,6 @@ object SnapshotStats {
   }
 
   private val mapper = new ObjectMapper()
-
-  // Parsed-manifest memos (round 13): with the incremental manifest log a
-  // 50k-file table's RESOLVED body is ~12 MB, and one commit's
-  // inheritance reads touch half a dozen fields — each a full
-  // `readTree` without these. Keyed by STRING IDENTITY: resolved bodies
-  // come out of SnapshotTable's cache as stable instances, so repeat
-  // accessors hit; transient strings (raw ts/txn scans, KB-sized) just
-  // miss. Crude size bound — a clear() at 64 entries — because entries
-  // die with their body strings anyway.
-  private val treeCache =
-    new java.util.IdentityHashMap[String, JsonNode]()
-  private def tree(body: String): JsonNode = treeCache.synchronized {
-    if (treeCache.size > 64) treeCache.clear()
-    var t = treeCache.get(body)
-    if (t == null) { t = mapper.readTree(body); treeCache.put(body, t) }
-    t
-  }
-  private val statsCache =
-    new java.util.IdentityHashMap[String, Seq[FileStats]]()
 
   private val lastCommitTs = new java.util.concurrent.atomic.AtomicLong(0L)
   private def nextCommitTs(): Long =
@@ -277,9 +262,9 @@ object SnapshotStats {
     * pre-CDC rewrite commits signal "full reprocess"). */
   type Cdc = (Seq[String], Seq[String])
 
-  /** Serialize the full manifest: `files` stays a plain path array (the
-    * pre-stats manifest shape, so older manifests and newer readers agree),
-    * `stats` carries the per-file column bounds, `txn` (optional) records
+  /** Serialize the full manifest: `files` is the plain path array, `stats`
+    * carries the per-file column bounds (a reader refuses a manifest whose
+    * stats do not cover its files), `txn` (optional) records
     * the (appId, batchId) that produced this version — the idempotent-
     * replay marker for exactly-once streaming appends — and `cdc`
     * (optional) the row-level change files. */
@@ -307,9 +292,8 @@ object SnapshotStats {
     // distinct stamps), so "greatest version at-or-before T" is
     // well-defined for any T a reader observed; cross-writer ordering is
     // plain wall-clock, like Delta's commit timestamps. `tsOverride` is
-    // for RECONSTRUCTION only (resolving a delta-log chain back into the
-    // full body — the resolved body must carry the original commit's
-    // stamp, never resolution time).
+    // for RECONSTRUCTION only (a checkpoint's state body must carry the
+    // original commit's stamp, never checkpoint time).
     root.put("ts", tsOverride.getOrElse(nextCommitTs()))
     // `protocolOverride` is for RECONSTRUCTION only (a checkpoint's state
     // body must carry the CHAIN's declared protocol, not this build's —
@@ -510,106 +494,97 @@ object SnapshotStats {
 
   // --- structured resolution (round 14, VERDICT r13 #1) --------------------
   //
-  // Pre-r14 the delta-log chain resolved JSON→JSON: each fold level parsed
-  // the base's FULL body (readTree of ~12 MB at 50k files) and re-serialized
-  // the merged result — O(state) parse + serialize PER LEVEL, the dominant
-  // cold-read cost SCALE.md `manifestscale` measured (2.08 s at 50k files).
-  // Resolution now folds over this STRUCT: parse the base once (or decode it
-  // columnar from a parquet checkpoint — see CheckpointIO), apply each
-  // delta's add/remove as sequence ops, and serialize the JSON body only
-  // when a legacy string consumer asks (lazily, memoized per version).
+  // The delta-log chain resolves into this STRUCT: parse the base once (or
+  // decode it columnar from a parquet checkpoint — see CheckpointIO), apply
+  // each delta's add/remove as sequence ops. Every reader consumes these
+  // fields.
+  //
+  // One on-disk generation is read: manifests that carry per-file `stats`
+  // for every listed file and a declared `schema` (both writers below
+  // always write both). An older manifest is refused by name here, the one
+  // place every manifest and checkpoint state passes through.
 
-  /** One version's fully-resolved manifest state. `bodyOpt` carries the
-    * on-disk body when the state came from a FULL manifest (avoids a
-    * re-serialize); fold-produced states serialize lazily on first
-    * [[body]] access. */
-  final class Resolved(
-      val version: Long, val ts: Long,
-      val stats: Seq[FileStats],
-      val schemaJson: Option[String],
-      val dropped: Seq[String], val bloomOn: Seq[String],
-      val constraints: Map[String, String],
-      val mapping: Map[String, String], val usedPhys: Seq[String],
-      val ingested: Seq[String], val clusterBy: Seq[String],
-      val identityHwm: Map[String, Long],
-      val txn: Option[(String, Long)], val cdc: Option[Cdc],
-      bodyOpt: Option[String] = None,
-      filesArr: Option[Seq[String]] = None,
+  /** One version's fully-resolved manifest state. */
+  final case class Resolved(
+      version: Long, ts: Long,
+      stats: Seq[FileStats],
+      schemaJson: String,
+      dropped: Seq[String], bloomOn: Seq[String],
+      constraints: Map[String, String],
+      mapping: Map[String, String], usedPhys: Seq[String],
+      ingested: Seq[String], clusterBy: Seq[String],
+      identityHwm: Map[String, Long],
+      txn: Option[(String, Long)], cdc: Option[Cdc],
       /** (minReader, minWriter) the underlying manifest declared. */
-      val protocol: (Int, Int) = (1, 1)) {
-    lazy val body: String = bodyOpt.getOrElse(
-      manifestJson(version, stats, txn, cdc, schemaJson, dropped, bloomOn,
-        constraints, mapping, usedPhys, ingested, tsOverride = Some(ts),
-        clusterBy = clusterBy, identityHwm = identityHwm,
-        protocolOverride = Some(protocol)))
-    /** On-disk `files` array for parsed full manifests (faithful even for
-      * a hand-crafted stats-less manifest); stats-derived after a fold —
-      * where equality is enforced by buildCommitBody's full fallback. */
-    def files: Seq[String] = filesArr.getOrElse(stats.map(_.path))
-    def schema: Option[org.apache.spark.sql.types.StructType] =
-      schemaJson.map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      protocol: (Int, Int) = (1, 1)) {
+    def files: Seq[String] = stats.map(_.path)
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
-  /** Parse a FULL manifest body into its struct (keeps the body string —
-    * `.body` round-trips byte-identically). */
-  def parseResolved(body: String): Resolved = {
-    require(baseFromManifest(body).isEmpty,
+  /** Parse a FULL manifest (or a checkpoint's files-less state body) into
+    * its struct. `where` names the file in a refusal. */
+  def parseResolved(m: JsonNode, where: String): Resolved = {
+    require(baseFromManifest(m).isEmpty,
       "parseResolved: delta manifests resolve through applyDelta")
-    new Resolved(
-      version = tree(body).get("version").asLong,
-      ts = tsFromManifest(body),
-      stats = statsFromManifest(body),
-      schemaJson = Option(tree(body).get("schema")).filter(_.isTextual)
-        .map(_.asText),
-      dropped = droppedFromManifest(body),
-      bloomOn = bloomOnFromManifest(body),
-      constraints = constraintsFromManifest(body),
-      mapping = mappingFromManifest(body),
-      usedPhys = usedPhysFromManifest(body),
-      ingested = ingestedFromManifest(body),
-      clusterBy = clusterByFromManifest(body),
-      identityHwm = identityHwmFromManifest(body),
-      txn = txnFromManifest(body),
-      cdc = cdcFromManifest(body),
-      bodyOpt = Some(body),
-      filesArr = filesFromManifest(body),
-      protocol = protocolFromManifest(body))
+    val stats = statsArray(m, "stats")
+    if (stats.map(_.path).sorted != texts(m, "files").sorted)
+      refuseGeneration(m, where, "`stats` for every listed file")
+    stateOf(m, where, stats, texts(m, "ingested"))
   }
 
-  /** Apply one DELTA manifest to its base's resolved state — the
-    * structural twin of [[resolveDelta]] (same add/remove/ledger rules),
-    * with zero JSON serialization. */
-  def applyDelta(base: Resolved, deltaBody: String): Resolved = {
-    val d = tree(deltaBody)
+  /** Apply one DELTA manifest to its base's resolved state: file list =
+    * base's minus `removePaths` plus `add` (removals first, so a path in
+    * both is a stats REPLACEMENT), ledger = base's ∪ `ingestedAdd`; every
+    * other state field is the delta's own. */
+  def applyDelta(base: Resolved, d: JsonNode, where: String): Resolved = {
     require(d.get("base") != null, "applyDelta: not a delta manifest")
-    val removed = Option(d.get("removePaths")).filter(_.isArray)
-      .map(a => (0 until a.size).map(a.get(_).asText).toSet)
-      .getOrElse(Set.empty[String])
+    val removed = texts(d, "removePaths").toSet
     val adds = statsArray(d, "add")
     val addPaths = adds.map(_.path).toSet
     val stats = base.stats.filterNot(e =>
       removed(e.path) || addPaths(e.path)) ++ adds
-    val ingestedAdd = Option(d.get("ingestedAdd")).filter(_.isArray)
-      .map(a => (0 until a.size).map(a.get(_).asText))
-      .getOrElse(Seq.empty)
-    new Resolved(
-      version = d.get("version").asLong,
-      ts = tsFromManifest(deltaBody),
-      stats = stats,
-      schemaJson = Option(d.get("schema")).filter(_.isTextual).map(_.asText),
-      dropped = droppedFromManifest(deltaBody),
-      bloomOn = bloomOnFromManifest(deltaBody),
-      constraints = constraintsFromManifest(deltaBody),
-      mapping = mappingFromManifest(deltaBody),
-      usedPhys = usedPhysFromManifest(deltaBody),
-      ingested = (base.ingested ++ ingestedAdd).distinct.sorted,
-      clusterBy = clusterByFromManifest(deltaBody),
-      identityHwm = identityHwmFromManifest(deltaBody),
-      txn = txnFromManifest(deltaBody),
-      cdc = cdcFromManifest(deltaBody),
-      protocol = protocolFromManifest(deltaBody))
+    stateOf(d, where, stats,
+      (base.ingested ++ texts(d, "ingestedAdd")).distinct.sorted)
   }
+
+  /** The fields a full and a delta manifest share, read off `m`. */
+  private def stateOf(m: JsonNode, where: String, stats: Seq[FileStats],
+                      ingested: Seq[String]): Resolved = {
+    val schema = m.get("schema")
+    if (schema == null || !schema.isTextual)
+      refuseGeneration(m, where, "declared `schema`")
+    Resolved(
+      version = m.get("version").asLong,
+      ts = tsFromManifest(m),
+      stats = stats,
+      schemaJson = schema.asText,
+      dropped = texts(m, "dropped"),
+      bloomOn = texts(m, "bloomOn"),
+      constraints = textMap(m, "constraints"),
+      mapping = textMap(m, "mapping"),
+      usedPhys = texts(m, "usedPhys"),
+      ingested = ingested,
+      clusterBy = texts(m, "clusterBy"),
+      identityHwm = Option(m.get("identityHwm")).filter(_.isObject)
+        .map(_.fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
+        .getOrElse(Map.empty),
+      txn = txnFromManifest(m),
+      cdc = Option(m.get("cdc")).filter(_.isObject)
+        .map(c => (texts(c, "add"), texts(c, "remove"))),
+      protocol = protocolFromManifest(m))
+  }
+
+  /** Loud refusal for a manifest of a format generation this engine no
+    * longer reads (pre-stats or pre-schema). */
+  private def refuseGeneration(m: JsonNode, where: String,
+                               missing: String): Nothing =
+    throw new IllegalStateException(
+      s"manifest version ${Option(m.get("version")).map(_.asLong).getOrElse(-1L)} " +
+        s"at $where has no $missing; this engine reads only manifests that " +
+        "carry per-file `stats` and a `schema` (rewrite the table with a " +
+        "current writer)")
 
   /** Serialize one file entry's column stats / bloom / dv to the SAME JSON
     * shapes the manifest uses — the parquet checkpoint's per-row payload
@@ -651,79 +626,18 @@ object SnapshotStats {
   def fileEntryFromJson(path: String, bytes: Long, rows: Long, dvRows: Long,
                         colsJson: Option[String], bloomJson: Option[String],
                         dvJson: Option[String]): FileStats = {
-    val cols = colsJson.map { s =>
-      val cn = mapper.readTree(s)
-      cn.fields().asScala.map { e =>
-        val c = e.getValue
-        val kind = c.get("kind").asText
-        val mn = Option(c.get("min")).map(readVal(_, kind))
-        val mx = Option(c.get("max")).map(readVal(_, kind))
-        e.getKey -> ColStats(kind, mn, mx, c.get("nulls").asLong)
-      }.toMap
-    }.getOrElse(Map.empty[String, ColStats])
-    val bloom = bloomJson.map { s =>
-      mapper.readTree(s).fields().asScala
-        .map(e => e.getKey -> e.getValue.asText).toMap
-    }.getOrElse(Map.empty[String, String])
-    val dv = dvJson.map { s =>
-      val a = mapper.readTree(s)
-      (0 until a.size).map(a.get(_).asText)
-    }.getOrElse(Seq.empty)
+    val cols = colsJson.map(s => colsOf(mapper.readTree(s)))
+      .getOrElse(Map.empty[String, ColStats])
+    val bloom = bloomJson.map(s => textMap(mapper.readTree(s)))
+      .getOrElse(Map.empty[String, String])
+    val dv = dvJson.map(s => texts(mapper.readTree(s))).getOrElse(Seq.empty)
     FileStats(path, bytes, rows, cols, bloom, dv, dvRows)
   }
 
-  /** The `files` array, `None` when absent/malformed (tree-memoized —
-    * SnapshotTable's per-read file listing shares the commit path's
-    * parse). */
-  def filesFromManifest(body: String): Option[Seq[String]] = {
-    val files = tree(body).get("files")
-    if (files == null || !files.isArray) None
-    else Some((0 until files.size).map(files.get(_).asText()))
-  }
-
-  /** The delta marker: `Some(base)` when `body` is a delta manifest. */
-  def baseFromManifest(body: String): Option[Long] = {
-    val b = tree(body).get("base")
+  /** The delta marker: `Some(base)` when `m` is a delta manifest. */
+  def baseFromManifest(m: JsonNode): Option[Long] = {
+    val b = m.get("base")
     if (b == null || !b.isNumber) None else Some(b.asLong)
-  }
-
-  /** Resolve a delta manifest against its base's FULL body, producing the
-    * full body the pre-r13 writer would have written for that version —
-    * same `ts`, same per-commit `txn`/`cdc`, file list = base's minus
-    * `removePaths` plus `add` (removals first, so a path in both is a
-    * stats REPLACEMENT), ledger = base's ∪ `ingestedAdd` (the writer's own
-    * accumulation rule). Every existing parser then works on the result
-    * unchanged — delta resolution is invisible above this seam. */
-  def resolveDelta(baseBody: String, deltaBody: String): String = {
-    val d = tree(deltaBody)
-    require(d.get("base") != null, "resolveDelta: not a delta manifest")
-    val removed = Option(d.get("removePaths")).filter(_.isArray)
-      .map(a => (0 until a.size).map(a.get(_).asText).toSet)
-      .getOrElse(Set.empty[String])
-    val adds = statsArray(d, "add")
-    val baseStats = statsFromManifest(baseBody)
-    val addPaths = adds.map(_.path).toSet
-    val stats = baseStats.filterNot(e => removed(e.path) || addPaths(e.path)) ++ adds
-    val ingestedAdd = Option(d.get("ingestedAdd")).filter(_.isArray)
-      .map(a => (0 until a.size).map(a.get(_).asText))
-      .getOrElse(Seq.empty)
-    val ingested =
-      (ingestedFromManifest(baseBody) ++ ingestedAdd).distinct.sorted
-    manifestJson(
-      version = d.get("version").asLong,
-      stats = stats,
-      txn = txnFromManifest(deltaBody),
-      cdc = cdcFromManifest(deltaBody),
-      schemaJson = Option(d.get("schema")).filter(_.isTextual).map(_.asText),
-      dropped = droppedFromManifest(deltaBody),
-      bloomOn = bloomOnFromManifest(deltaBody),
-      constraints = constraintsFromManifest(deltaBody),
-      mapping = mappingFromManifest(deltaBody),
-      usedPhys = usedPhysFromManifest(deltaBody),
-      ingested = ingested,
-      tsOverride = Some(tsFromManifest(deltaBody)),
-      clusterBy = clusterByFromManifest(deltaBody),
-      identityHwm = identityHwmFromManifest(deltaBody))
   }
 
   private def putVal(o: ObjectNode, field: String, v: Any): Unit = v match {
@@ -733,89 +647,41 @@ object SnapshotStats {
     case other => o.put(field, other.toString)
   }
 
-  /** Parse the `stats` array back; empty when the manifest predates stats. */
-  def statsFromManifest(body: String): Seq[FileStats] = statsCache.synchronized {
-    if (statsCache.size > 64) statsCache.clear()
-    var r = statsCache.get(body)
-    if (r == null) { r = statsArray(tree(body), "stats"); statsCache.put(body, r) }
-    r
-  }
-
-  private def statsArray(root: JsonNode, field: String): Seq[FileStats] = {
-    val arr = root.get(field)
-    if (arr == null || !arr.isArray) Seq.empty
-    else arr.asScala.toSeq.map { f =>
-      val cols = Option(f.get("cols")).filter(_.isObject).map { cn =>
-        cn.fields().asScala.map { e =>
-          val c = e.getValue
-          val kind = c.get("kind").asText
-          val mn = Option(c.get("min")).map(readVal(_, kind))
-          val mx = Option(c.get("max")).map(readVal(_, kind))
-          e.getKey -> ColStats(kind, mn, mx, c.get("nulls").asLong)
-        }.toMap
-      }.getOrElse(Map.empty[String, ColStats])
-      val bloom = Option(f.get("bloom")).filter(_.isObject).map { bn =>
-        bn.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-      }.getOrElse(Map.empty[String, String])
-      val dv = Option(f.get("dv")).filter(_.isArray)
-        .map(a => (0 until a.size).map(a.get(_).asText))
-        .getOrElse(Seq.empty)
-      val dvRows = Option(f.get("dvRows")).map(_.asLong).getOrElse(0L)
+  private def statsArray(root: JsonNode, field: String): Seq[FileStats] =
+    elems(root.get(field)).map { f =>
       FileStats(f.get("path").asText, f.get("bytes").asLong, f.get("rows").asLong,
-        cols, bloom, dv, dvRows)
+        Option(f.get("cols")).filter(_.isObject).map(colsOf)
+          .getOrElse(Map.empty[String, ColStats]),
+        textMap(f.get("bloom")), texts(f.get("dv")),
+        Option(f.get("dvRows")).map(_.asLong).getOrElse(0L))
     }
-  }
 
-  /** Named CHECK constraints (name → SQL boolean expression) declared at or
-    * before this manifest's version. */
-  def constraintsFromManifest(body: String): Map[String, String] = {
-    val c = tree(body).get("constraints")
-    if (c == null || !c.isObject) Map.empty
-    else c.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-  }
+  /** Per-column bounds of one file entry (`cols` object). */
+  private def colsOf(cn: JsonNode): Map[String, ColStats] =
+    cn.fields().asScala.map { e =>
+      val c = e.getValue
+      val kind = c.get("kind").asText
+      e.getKey -> ColStats(kind, Option(c.get("min")).map(readVal(_, kind)),
+        Option(c.get("max")).map(readVal(_, kind)), c.get("nulls").asLong)
+    }.toMap
+
+  /** An array's elements; empty when `a` is absent or not an array. */
+  private def elems(a: JsonNode): Seq[JsonNode] =
+    if (a == null || !a.isArray) Seq.empty else a.asScala.toSeq
+  private def texts(a: JsonNode): Seq[String] = elems(a).map(_.asText)
+  private def texts(m: JsonNode, field: String): Seq[String] = texts(m.get(field))
+
+  /** A string-valued object's entries; empty when `o` is absent. */
+  private def textMap(o: JsonNode): Map[String, String] =
+    if (o == null || !o.isObject) Map.empty
+    else o.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+  private def textMap(m: JsonNode, field: String): Map[String, String] =
+    textMap(m.get(field))
 
   /** Commit wall-clock (epoch millis), -1 for pre-timestamp manifests. */
-  def tsFromManifest(body: String): Long = {
-    val t = tree(body).get("ts")
+  def tsFromManifest(m: JsonNode): Long = {
+    val t = m.get("ts")
     if (t == null || !t.isNumber) -1L else t.asLong
-  }
-
-  /** Logical → physical column mapping (empty = identity for every
-    * column, which is every manifest written before round 10). */
-  def mappingFromManifest(body: String): Map[String, String] = {
-    val m = tree(body).get("mapping")
-    if (m == null || !m.isObject) Map.empty
-    else m.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-  }
-
-  /** Physical names ever assigned in this table's lineage (empty on
-    * pre-mapping manifests; readers seed it from schema + tombstones). */
-  def usedPhysFromManifest(body: String): Seq[String] = {
-    val u = tree(body).get("usedPhys")
-    if (u == null || !u.isArray) Seq.empty
-    else (0 until u.size).map(u.get(_).asText)
-  }
-
-  /** Declared clustering columns at this manifest's version (empty =
-    * never declared). */
-  def clusterByFromManifest(body: String): Seq[String] = {
-    val c = tree(body).get("clusterBy")
-    if (c == null || !c.isArray) Seq.empty
-    else (0 until c.size).map(c.get(_).asText)
-  }
-
-  /** Identity-column high-water marks at this manifest's version. */
-  def identityHwmFromManifest(body: String): Map[String, Long] = {
-    val m = tree(body).get("identityHwm")
-    if (m == null || !m.isObject) Map.empty
-    else m.fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
-  }
-
-  /** Bloom-indexed column names this manifest's table is configured for. */
-  def bloomOnFromManifest(body: String): Seq[String] = {
-    val b = tree(body).get("bloomOn")
-    if (b == null || !b.isArray) Seq.empty
-    else (0 until b.size).map(b.get(_).asText)
   }
 
   private def readVal(n: JsonNode, kind: String): Any = kind match {
@@ -825,59 +691,10 @@ object SnapshotStats {
     case _ => n.asText
   }
 
-  /** The table schema this manifest declared at commit time (the Delta-log
-    * pattern: schema lives in METADATA, never re-derived from data files —
-    * which is what lets files written before a column existed stay in the
-    * table untouched and read back NULL for it). Absent on pre-evolution
-    * manifests; readers fall back to a data-file footer. */
-  def schemaFromManifest(body: String): Option[org.apache.spark.sql.types.StructType] = {
-    val s = tree(body).get("schema")
-    if (s == null || !s.isTextual) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(s.asText)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
-
-  /** Column names dropped at or before this manifest's version (empty for
-    * manifests that never saw a drop). */
-  def droppedFromManifest(body: String): Seq[String] = {
-    val d = tree(body).get("dropped")
-    if (d == null || !d.isArray) Seq.empty
-    else (0 until d.size).map(d.get(_).asText)
-  }
-
-  /** A DELTA manifest's own newly-loaded ledger identities (empty for
-    * full manifests and ledger-less deltas). */
-  def ingestedAddFromManifest(body: String): Seq[String] = {
-    val d = tree(body).get("ingestedAdd")
-    if (d == null || !d.isArray) Seq.empty
-    else (0 until d.size).map(d.get(_).asText)
-  }
-
-  /** COPY INTO's accumulated loaded-file identities (empty for tables the
-    * statement never touched — the field is omitted entirely). */
-  def ingestedFromManifest(body: String): Seq[String] = {
-    val d = tree(body).get("ingested")
-    if (d == null || !d.isArray) Seq.empty
-    else (0 until d.size).map(d.get(_).asText)
-  }
-
   /** The (appId, batchId) transaction marker, if this manifest has one. */
-  def txnFromManifest(body: String): Option[(String, Long)] = {
-    val t = tree(body).get("txn")
+  def txnFromManifest(m: JsonNode): Option[(String, Long)] = {
+    val t = m.get("txn")
     if (t == null || !t.isObject) None
     else Some((t.get("appId").asText, t.get("batchId").asLong))
-  }
-
-  /** The per-commit change files, if this manifest recorded them. */
-  def cdcFromManifest(body: String): Option[Cdc] = {
-    val c = tree(body).get("cdc")
-    if (c == null || !c.isObject) None
-    else {
-      def arr(name: String): Seq[String] = Option(c.get(name))
-        .filter(_.isArray)
-        .map(a => (0 until a.size).map(i => a.get(i).asText()))
-        .getOrElse(Seq.empty)
-      Some((arr("add"), arr("remove")))
-    }
   }
 }

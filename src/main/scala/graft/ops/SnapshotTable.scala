@@ -166,27 +166,17 @@ object SnapshotTable {
   private def manifestPath(root: String, v: Long): Path =
     new Path(new Path(root, ManifestDir), f"manifest-$v%08d.json")
 
-  private def readManifestBody(fs: FileSystem, p: Path): String = {
+  /** Read and parse one manifest — its only parse. Protocol gate (round
+    * 14): every manifest read, full or delta, refuses loudly when the
+    * chain demands a newer reader than this build, instead of mis-parsing
+    * a future format. */
+  private def readManifestBody(fs: FileSystem,
+                               p: Path): com.fasterxml.jackson.databind.JsonNode = {
     val in = fs.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    // Protocol gate (round 14): every manifest read — full, delta, or
-    // checkpoint anchor — refuses loudly when the chain demands a newer
-    // reader than this build, instead of mis-parsing a future format.
-    SnapshotStats.checkReadProtocol(body, p.toString)
-    body
+    SnapshotStats.parseManifest(body, p.toString)
   }
-
-  // Real JSON parse (jackson ships on the Spark classpath): the writer
-  // escapes backslashes/quotes, so a regex scrape would round-trip paths
-  // containing either to a WRONG path (ADVICE r2). Jackson reverses the
-  // escaping symmetrically.
-  private def filesFromBody(body: String, p: Path): Seq[String] =
-    SnapshotStats.filesFromManifest(body).getOrElse(
-      throw new IllegalArgumentException(s"malformed manifest $p"))
-
-  private def readManifest(fs: FileSystem, p: Path): Seq[String] =
-    filesFromBody(readManifestBody(fs, p), p)
 
   // --- incremental manifest log (round 13, VERDICT r12 #1) -----------------
   //
@@ -198,10 +188,9 @@ object SnapshotTable {
   // `manifestCheckpointInterval`th version is a FULL manifest — the in-line
   // checkpoint), the delta would not actually be smaller (restore/recluster
   // replacing everything), or its predecessor is unusable as a base.
-  // Readers resolve through [[manifestBodyAt]]: walk back ≤ interval-1
-  // KB-sized deltas to the nearest full manifest (or a vacuum-written
-  // `checkpoint-*.json` anchor), fold forward, and memoize — every parser
-  // above this seam still consumes the exact pre-r13 full-body shape.
+  // Readers resolve through [[resolvedAt]]: walk back ≤ interval-1
+  // KB-sized deltas to the nearest parquet checkpoint or full manifest,
+  // fold forward, and memoize — every consumer reads the resolved fields.
   // Commit cost: O(delta) amortized + O(files/N); cold read: one checkpoint
   // parse + a KB tail. The CAS protocol is untouched — the delta manifest
   // IS the commit, still one atomic rename per version.
@@ -214,11 +203,6 @@ object SnapshotTable {
     * ~6% of commits. `private[graft]` so the scale rehearsal can stretch
     * chains. */
   private[graft] var manifestCheckpointInterval: Int = 16
-
-  /** Legacy (pre-r14, JSON full-body) checkpoint anchors — still read,
-    * never written. */
-  private def checkpointPath(root: String, v: Long): Path =
-    new Path(new Path(root, ManifestDir), f"checkpoint-$v%08d.json")
 
   /** Columnar checkpoint (round 14): file entries as parquet rows, table
     * state in the footer key-value metadata (see [[CheckpointIO]]). */
@@ -263,29 +247,28 @@ object SnapshotTable {
     * fat cols/bloom JSON never leaves disk); Range = row-group-pruned
     * decode of entries intersecting a cluster-key range (point probes —
     * falls back to Full decode when the checkpoint carries no promoted
-    * bounds). */
+    * bounds); State = the footer's table state only, no entry rows, and
+    * the result carries no entries at all. */
   private sealed trait ResolveMode
   private case object FullMode extends ResolveMode
   private case object PathsMode extends ResolveMode
   private final case class RangeMode(lo: Any, hi: Any) extends ResolveMode
+  private case object StateMode extends ResolveMode
 
   /** Version `v`'s fully-resolved manifest STATE, folding the delta-log
     * chain structurally (round 14). The single read-side seam: everything
-    * that reads files/stats/schema/ledger state goes through here (or
-    * through [[manifestBodyAt]], its string facade). Resolution walks
-    * back from `v` preferring, at each level u: (1) a columnar checkpoint
-    * for u — one footer + columnar decode, subsumes u's own delta; (2) a
-    * cached resolution of u; (3) u's manifest when full. Deltas collect
-    * until one of those hits, then fold forward with ZERO JSON
-    * serialization (the pre-r14 JSON→JSON fold re-serialized the whole
-    * O(files) state per level — the dominant cold-read cost). The
-    * `_last_checkpoint` pointer (round 15, VERDICT r14 #1c) replaces the
-    * two-exists-per-level checkpoint probing with ONE hint read: when
-    * fresh, the walk collects deltas straight down to the pointed version
-    * and probes exactly once. The pointer is a HINT, never the log: a
-    * stale-behind pointer just folds a few extra deltas; a pointer to a
-    * deleted checkpoint falls back to per-level probing; a missing
-    * pointer is the pre-r15 walk. */
+    * that reads files/stats/schema/ledger state goes through here.
+    * Resolution walks back from `v` preferring, at each level u: (1) a
+    * columnar checkpoint for u — one footer + columnar decode, subsumes
+    * u's own delta; (2) a cached resolution of u; (3) u's manifest when
+    * full. Deltas collect until one of those hits, then fold forward with
+    * ZERO JSON serialization. The `_last_checkpoint` pointer (round 15,
+    * VERDICT r14 #1c) replaces per-level checkpoint probing with ONE hint
+    * read: when fresh, the walk collects deltas straight down to the
+    * pointed version and probes exactly once. The pointer is a HINT, never
+    * the log: a stale-behind pointer just folds a few extra deltas; a
+    * pointer to a deleted checkpoint falls back to per-level probing; a
+    * missing pointer is the pre-r15 walk. */
   private[graft] def resolvedAt(fs: FileSystem, root: String,
                                 v: Long): SnapshotStats.Resolved =
     resolveImpl(fs, root, v, FullMode)
@@ -298,43 +281,45 @@ object SnapshotTable {
                                      v: Long): SnapshotStats.Resolved =
     resolveImpl(fs, root, v, PathsMode)
 
+  /** Table STATE at version `v` WITHOUT the file list (round 14, VERDICT
+    * r13 #1): at a columnar checkpoint the walk reads ONE parquet FOOTER,
+    * never the rows — O(chain·KB + state), flat in table file count. The
+    * result has EMPTY stats and is never cached; state-only surfaces
+    * (SHOW CREATE TABLE, the scale rehearsal's cold-state metric) are the
+    * callers — anything that scans uses [[resolvedAt]]. */
+  private[graft] def stateOnlyAt(fs: FileSystem, root: String,
+                                 v: Long): SnapshotStats.Resolved =
+    resolveImpl(fs, root, v, StateMode)
+
   private def resolveImpl(fs: FileSystem, root: String, v: Long,
                           mode: ResolveMode,
                           usePointer: Boolean = true): SnapshotStats.Resolved = {
     val full = mode == FullMode
+    def shaped(r: SnapshotStats.Resolved): SnapshotStats.Resolved =
+      if (mode == StateMode) r.copy(stats = Nil) else r
     def keyOf(p: Path): (String, Long, Long) = {
       val st = fs.getFileStatus(p)
       (p.toString, st.getModificationTime, st.getLen)
     }
-    // A checkpoint for version u, when one exists: the columnar form
-    // (written post-CAS on the cadence and by vacuum as the minKept
-    // anchor) or a legacy JSON anchor from a pre-r14 vacuum. Decode
-    // width follows `mode`; Range falls back to the full decode when the
-    // file predates promoted bounds (the Option stays Some — existence
-    // is what the walk needs).
+    // The columnar checkpoint for version u, when one exists (written
+    // post-CAS on the cadence and by vacuum as the minKept anchor).
+    // Decode width follows `mode`; Range falls back to the full decode
+    // when the file predates promoted bounds (the Option stays Some —
+    // existence is what the walk needs).
     def probeCheckpoint(u: Long): Option[SnapshotStats.Resolved] = {
       val cpq = checkpointParquetPath(root, u)
-      if (fs.exists(cpq)) Some(mode match {
+      if (!fs.exists(cpq)) None
+      else Some(mode match {
         case FullMode => CheckpointIO.read(fs.getConf, cpq)
         case PathsMode => CheckpointIO.readPaths(fs.getConf, cpq)
+        case StateMode => CheckpointIO.readState(fs.getConf, cpq)
         case RangeMode(lo, hi) =>
           CheckpointIO.readRange(fs.getConf, cpq, lo, hi) match {
             case Some((entries, _, _)) =>
-              val st = SnapshotStats.parseResolved(
-                CheckpointIO.readState(fs.getConf, cpq))
-              new SnapshotStats.Resolved(st.version, st.ts, entries,
-                st.schemaJson, st.dropped, st.bloomOn, st.constraints,
-                st.mapping, st.usedPhys, st.ingested, st.clusterBy,
-                st.identityHwm, st.txn, st.cdc, protocol = st.protocol)
+              CheckpointIO.readState(fs.getConf, cpq).copy(stats = entries)
             case None => CheckpointIO.read(fs.getConf, cpq)
           }
       })
-      else {
-        val cpj = checkpointPath(root, u)
-        if (fs.exists(cpj))
-          Some(SnapshotStats.parseResolved(readManifestBody(fs, cpj)))
-        else None
-      }
     }
     // `_last_checkpoint` hint: usable when it bounds THIS walk (at or
     // below v) and is fresh enough that skipping probes above it cannot
@@ -362,16 +347,17 @@ object SnapshotTable {
     val mp = manifestPath(root, v)
     val key = keyOf(mp)
     val hit = resolvedCache.get(key)
-    if (hit != null) return hit
-    val body = readManifestBody(fs, mp)
-    if (SnapshotStats.baseFromManifest(body).isEmpty) {
-      val r = SnapshotStats.parseResolved(body)
+    if (hit != null) return shaped(hit)
+    val head = readManifestBody(fs, mp)
+    if (SnapshotStats.baseFromManifest(head).isEmpty) {
+      val r = SnapshotStats.parseResolved(head, mp.toString)
       if (full) resolvedCache.put(key, r)
-      return r
+      return shaped(r)
     }
     // Delta: walk down. Invariant: `chain` holds the deltas for versions
-    // v down to u inclusive (newest first).
-    val chain = scala.collection.mutable.ArrayBuffer((key, body))
+    // v down to u inclusive (newest first), keyed by their cache slot
+    // (whose first element is the manifest's path).
+    val chain = scala.collection.mutable.ArrayBuffer((key, head))
     var base: SnapshotStats.Resolved = null
     var u = v
     while (base == null) {
@@ -383,7 +369,7 @@ object SnapshotTable {
           // fully re-decoded the O(files) parquet checkpoint on EVERY
           // read until the next commit (the chain empties, so the fold
           // loop below never caches anything). chain's last element is
-          // u's own (key, body) — its key is the right cache slot.
+          // u's own (key, node) — its key is the right cache slot.
           base = r
           val (ukey, _) = chain.remove(chain.length - 1)
           if (full) resolvedCache.put(ukey, r)
@@ -406,21 +392,21 @@ object SnapshotTable {
           val cached = resolvedCache.get(pkey)
           if (cached != null) base = cached
           else {
-            val pbody = readManifestBody(fs, pmp)
-            if (SnapshotStats.baseFromManifest(pbody).isEmpty) {
-              base = SnapshotStats.parseResolved(pbody)
+            val pnode = readManifestBody(fs, pmp)
+            if (SnapshotStats.baseFromManifest(pnode).isEmpty) {
+              base = SnapshotStats.parseResolved(pnode, pmp.toString)
               if (full) resolvedCache.put(pkey, base)
-            } else { chain += ((pkey, pbody)); u = pu }
+            } else { chain += ((pkey, pnode)); u = pu }
           }
       }
     }
     // Fold forward (chain is newest-first), caching each resolved level.
     var acc = base
-    chain.reverseIterator.foreach { case (k, dbody) =>
-      acc = SnapshotStats.applyDelta(acc, dbody)
+    chain.reverseIterator.foreach { case (k, delta) =>
+      acc = SnapshotStats.applyDelta(acc, delta, k._1)
       if (full) resolvedCache.put(k, acc)
     }
-    acc
+    shaped(acc)
   }
 
   // --- `_last_checkpoint` pointer (round 15, VERDICT r14 #1c) --------------
@@ -584,105 +570,6 @@ object SnapshotTable {
     v
   }
 
-  /** Version `v`'s manifest as a FULL JSON body — the string facade over
-    * [[resolvedAt]] for consumers of the pre-r14 shape (serialized lazily,
-    * memoized per version). (Fields a delta carries verbatim — ts, txn —
-    * may still be read raw where scanning many versions: lastTxn,
-    * TIMESTAMP AS OF.) */
-  private[graft] def manifestBodyAt(fs: FileSystem, root: String, v: Long): String =
-    resolvedAt(fs, root, v).body
-
-  /** Table STATE at version `v` WITHOUT materializing the file list
-    * (round 14, VERDICT r13 #1): a delta manifest carries every state
-    * field except the COPY ledger in full, so state-only resolution reads
-    * the head delta (KB), folds `ingestedAdd` down the chain, and — at a
-    * columnar checkpoint — reads ONE parquet FOOTER (CheckpointIO
-    * .readState), never the rows. O(chain·KB + state) and flat in table
-    * file count, vs resolvedAt's necessarily O(files) decode. The
-    * returned state has EMPTY stats/files (and is never placed in the
-    * resolvedCache, whose entries data paths trust to carry files);
-    * state-only surfaces (schema probes, DESCRIBE-class commands, the
-    * scale rehearsal's cold-state metric) are the intended callers —
-    * anything that scans uses [[resolvedAt]]. Shares warm resolvedCache
-    * entries read-only when present. */
-  private[graft] def stateOnlyAt(fs: FileSystem, root: String,
-                                 v: Long): SnapshotStats.Resolved = {
-    def keyOf(p: Path): (String, Long, Long) = {
-      val st = fs.getFileStatus(p)
-      (p.toString, st.getModificationTime, st.getLen)
-    }
-    val mp = manifestPath(root, v)
-    val warm = resolvedCache.get(keyOf(mp))
-    if (warm != null) return warm
-    val body = readManifestBody(fs, mp)
-    if (SnapshotStats.baseFromManifest(body).isEmpty)
-      return SnapshotStats.parseResolved(body)
-    val head = SnapshotStats.applyDelta(
-      // Fold against an empty base: every non-ledger state field comes
-      // from the delta itself; stats/ledger are patched below.
-      new SnapshotStats.Resolved(v - 1, -1L, Nil, None, Nil, Nil, Map.empty,
-        Map.empty, Nil, Nil, Nil, Map.empty, None, None),
-      body)
-    // Ledger: base's ∪ each delta's ingestedAdd, newest-last. The
-    // `_last_checkpoint` hint bounds the probing exactly as in
-    // resolveImpl (round 15): skip the two-exists probes above the
-    // pointed version; a lying pointer (vacuum horizon reached with
-    // probes skipped) restarts the walk in probing mode.
-    def walk(usePointer: Boolean): Seq[String] = {
-      val interval = math.max(1, manifestCheckpointInterval)
-      val ptr: Option[Long] =
-        if (usePointer) readLastCheckpoint(fs, root)
-          .filter(p => p <= v && v - p < 4L * interval)
-        else None
-      var ptrSkipped = false
-      val adds = scala.collection.mutable.ArrayBuffer(
-        ingestedAddFromDelta(body))
-      var u = v
-      var baseIngested: Seq[String] = null
-      while (baseIngested == null) {
-        val skipProbe = ptr.exists(p => u > p)
-        if (skipProbe) ptrSkipped = true
-        val cpq = checkpointParquetPath(root, u)
-        val cpj = checkpointPath(root, u)
-        if (!skipProbe && fs.exists(cpq)) {
-          adds.remove(adds.length - 1) // the checkpoint subsumes u's delta
-          baseIngested = SnapshotStats.ingestedFromManifest(
-            CheckpointIO.readState(fs.getConf, cpq))
-        } else if (!skipProbe && fs.exists(cpj)) {
-          adds.remove(adds.length - 1)
-          baseIngested = SnapshotStats.ingestedFromManifest(
-            readManifestBody(fs, cpj))
-        } else {
-          val pu = u - 1
-          val pmp = manifestPath(root, pu)
-          if (!fs.exists(pmp)) {
-            if (ptrSkipped) return walk(usePointer = false)
-            throw new IllegalArgumentException(
-              s"manifest $pu of $root is gone and version $u has no " +
-                "checkpoint anchor; cannot resolve the delta chain")
-          }
-          val pwarm = resolvedCache.get(keyOf(pmp))
-          if (pwarm != null) baseIngested = pwarm.ingested
-          else {
-            val pbody = readManifestBody(fs, pmp)
-            if (SnapshotStats.baseFromManifest(pbody).isEmpty)
-              baseIngested = SnapshotStats.ingestedFromManifest(pbody)
-            else { adds += ingestedAddFromDelta(pbody); u = pu }
-          }
-        }
-      }
-      (baseIngested ++ adds.reverseIterator.flatten).distinct.sorted
-    }
-    val ledger = walk(usePointer = true)
-    new SnapshotStats.Resolved(head.version, head.ts, Nil, head.schemaJson,
-      head.dropped, head.bloomOn, head.constraints, head.mapping,
-      head.usedPhys, ledger, head.clusterBy, head.identityHwm, head.txn,
-      head.cdc)
-  }
-
-  private def ingestedAddFromDelta(deltaBody: String): Seq[String] =
-    SnapshotStats.ingestedAddFromManifest(deltaBody)
-
   /** Write the columnar checkpoint for `v` when it falls on the cadence —
     * called AFTER a commit's CAS wins, never on the commit's critical
     * correctness path: any failure is swallowed (readers walk further
@@ -729,20 +616,18 @@ object SnapshotTable {
     resolvedCache.get((mp.toString, st.getModificationTime, st.getLen)) != null
   }
 
-  /** Resolved file list at version `v` (the old `readManifest` shape). */
+  /** Resolved file list at version `v`. */
   private def filesAt(fs: FileSystem, root: String, v: Long): Seq[String] =
     resolvedAt(fs, root, v).files
 
   /** Read the table at its latest committed version (or a pinned `asOf`
     * version — time travel falls out of immutable manifests for free).
     *
-    * When the manifest carries file stats (every commit since they were
-    * introduced), the scan is served through a [[SnapshotFileIndex]]: any
-    * `.filter` the caller adds prunes whole files at PLANNING time from the
+    * The scan is served through a [[SnapshotFileIndex]]: any `.filter`
+    * the caller adds prunes whole files at PLANNING time from the
     * manifest's (min, max, nulls) bounds — write-side clustering
     * ([[commitClustered]]) plus this read path is the Delta/Iceberg
-    * data-skipping loop. Pre-stats manifests fall back to a plain
-    * multi-path parquet read (identical rows, no skipping). */
+    * data-skipping loop. */
   def read(spark: SparkSession, root: String, asOf: Option[Long] = None): DataFrame =
     readTracked(spark, root, asOf)._1
 
@@ -755,52 +640,41 @@ object SnapshotTable {
       .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
     val fs = fsOf(spark, root)
     val resolved = resolvedAt(fs, root, v)
-    val files = resolved.files
     val stats = resolved.stats
     // The manifest's declared schema wins (schema evolution: files written
     // before a column existed are still listed and read NULL for it; time
-    // travel sees each version's own schema). Pre-schema manifests fall
-    // back to a footer. The SCAN speaks physical names (that is what the
-    // files, footer stats and blooms carry); the logical projection on top
-    // is identity — and elided — for tables that never renamed/re-added.
+    // travel sees each version's own schema). The SCAN speaks physical
+    // names (that is what the files, footer stats and blooms carry); the
+    // logical projection on top is identity — and elided — for tables
+    // that never renamed/re-added.
     val declared = resolved.schema
     val mapping = resolved.mapping
-    if (files.isEmpty) {
+    if (stats.isEmpty) {
       // Files-less manifest: a `CREATE TABLE` bootstrap (graft.sql) or a
       // fully-compacted-away state — the declared schema IS the table.
-      val schema = declared.getOrElse(throw new IllegalStateException(
-        s"empty manifest at $root v$v declares no schema"))
       return (spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema), None)
+        new java.util.ArrayList[org.apache.spark.sql.Row](), declared), None)
     }
-    if (stats.isEmpty || stats.map(_.path).sorted != files.sorted) {
-      val raw = declared.map(d => spark.read.schema(physSchema(d, mapping)))
-        .getOrElse(spark.read).parquet(files: _*)
-      (declared.map(d => fromPhysical(raw, d, mapping)).getOrElse(raw), None)
-    } else {
-      // Deletion vectors (round 13): files carrying DV side-cars scan on a
-      // SEPARATE branch with read-time masking — an anti-join against the
-      // (file, pos) side-cars on the parquet row index — and union with
-      // the clean files' index-pruned scan. DV'd files skip manifest-level
-      // pruning (they are few by the write-side threshold, and OPTIMIZE
-      // materializes them back to clean); everything else keeps the full
-      // skipping loop.
-      val (withDv, clean) = stats.partition(_.dv.nonEmpty)
-      val dataSchema = declared.map(physSchema(_, mapping))
-        .getOrElse(spark.read.parquet(files.head).schema)
-      val indexed =
-        if (clean.isEmpty) None
-        else Some(indexedScan(spark, root, clean, dataSchema))
-      val index = indexed.map(_._2)
-      val cleanRaw = indexed.map(_._1)
-      val raw =
-        if (withDv.isEmpty) cleanRaw.get
-        else {
-          val maskedRaw = maskedScan(spark, withDv, dataSchema)
-          cleanRaw.map(_.unionAll(maskedRaw)).getOrElse(maskedRaw)
-        }
-      (declared.map(d => fromPhysical(raw, d, mapping)).getOrElse(raw), index)
-    }
+    // Deletion vectors (round 13): files carrying DV side-cars scan on a
+    // SEPARATE branch with read-time masking — an anti-join against the
+    // (file, pos) side-cars on the parquet row index — and union with the
+    // clean files' index-pruned scan. DV'd files skip manifest-level
+    // pruning (they are few by the write-side threshold, and OPTIMIZE
+    // materializes them back to clean); everything else keeps the full
+    // skipping loop.
+    val (withDv, clean) = stats.partition(_.dv.nonEmpty)
+    val dataSchema = physSchema(declared, mapping)
+    val indexed =
+      if (clean.isEmpty) None
+      else Some(indexedScan(spark, root, clean, dataSchema))
+    val cleanRaw = indexed.map(_._1)
+    val raw =
+      if (withDv.isEmpty) cleanRaw.get
+      else {
+        val maskedRaw = maskedScan(spark, withDv, dataSchema)
+        cleanRaw.map(_.unionAll(maskedRaw)).getOrElse(maskedRaw)
+      }
+    (fromPhysical(raw, declared, mapping), indexed.map(_._2))
   }
 
   /** Point/range lookup fast path on a `CLUSTER BY` table (round 15,
@@ -828,13 +702,11 @@ object SnapshotTable {
       s"readClusterRange: $root declares no CLUSTER BY — use read().filter"))
     val physKey = r.mapping.getOrElse(ck, ck)
     val entries = r.stats.filter(e => boundsMayOverlap(e.cols.get(physKey), lo, hi))
-    val schema = r.schema.getOrElse(throw new IllegalStateException(
-      s"$root@$v declares no schema"))
     val base =
       if (entries.isEmpty)
         spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else readEntries(spark, entries, schema, r.mapping)
+          new java.util.ArrayList[org.apache.spark.sql.Row](), r.schema)
+      else readEntries(spark, entries, r.schema, r.mapping)
     base.filter(col(ck) >= lit(lo) && col(ck) <= lit(hi))
   }
 
@@ -1043,20 +915,6 @@ object SnapshotTable {
       .drop("__z")
   }
 
-  /** A resolved version's file entries, reconstructing bytes-only entries
-    * when the manifest predates stats (bounds stay empty → those files are
-    * never pruned, the usual degrade-to-keep). */
-  private def entriesOf(fs: FileSystem,
-                        resolved: SnapshotStats.Resolved): Seq[SnapshotStats.FileStats] = {
-    val files = resolved.files
-    val stats = resolved.stats
-    if (stats.map(_.path).sorted == files.sorted) stats
-    else files.map { f =>
-      val st = fs.getFileStatus(new Path(f))
-      SnapshotStats.FileStats(f, st.getLen, 0L, Map.empty)
-    }
-  }
-
   /** Highest batchId committed for `appId`, scanning manifests newest-first
     * (driver-side KB reads; versions are bounded by vacuum). */
   def lastTxn(spark: SparkSession, root: String, appId: String): Option[Long] = {
@@ -1246,15 +1104,12 @@ object SnapshotTable {
   private val NoState = TableState(org.apache.spark.sql.types.StructType(Nil),
     Nil, Nil, Map.empty, Map.empty, Nil, Nil, Nil, Map.empty)
 
-  /** `r`'s table state. Pre-schema manifests fall back to one data-file
-    * footer for the schema. `usedPhys` is every physical name ever
-    * assigned; pre-mapping manifests carry none, so it is SEEDED from the
-    * declared schema's physical names plus the tombstoned names — exactly
-    * the names whose bytes may still live in retained files. */
-  private def stateOf(spark: SparkSession, r: SnapshotStats.Resolved): TableState = {
+  /** `r`'s table state. `usedPhys` is every physical name ever assigned;
+    * pre-mapping manifests carry none, so it is SEEDED from the declared
+    * schema's physical names plus the tombstoned names — exactly the
+    * names whose bytes may still live in retained files. */
+  private def stateOf(r: SnapshotStats.Resolved): TableState = {
     val schema = r.schema
-      .orElse(r.files.headOption.map(spark.read.parquet(_).schema))
-      .getOrElse(org.apache.spark.sql.types.StructType(Nil))
     TableState(schema, r.dropped.distinct.sorted, r.bloomOn, r.constraints,
       r.mapping,
       distinctNames(r.usedPhys ++ schema.fieldNames.map(physName(r.mapping, _)) ++ r.dropped),
@@ -1281,9 +1136,6 @@ object SnapshotTable {
     * when the delta is actually smaller, else a FULL manifest (the in-line
     * checkpoint). Full is forced when:
     *   - there is no base (version 0);
-    *   - the base pre-dates per-file stats (a delta would re-base onto
-    *     entries with no bounds), or — impossible by construction, checked
-    *     anyway — its stats don't cover its files;
     *   - the COPY ledger SHRANK (restore rewinding it — deltas only add);
     *   - add+remove counts reach the base's file count (restore/recluster
     *     replacing everything: the "delta" would be bigger than full).
@@ -1307,8 +1159,7 @@ object SnapshotTable {
       case Some(prev) =>
         val prevStats = prev.stats
         val prevIngested = prev.ingested
-        if (prevStats.map(_.path).sorted != prev.files.sorted ||
-            !prevIngested.forall(state.ingested.contains)) full
+        if (!prevIngested.forall(state.ingested.contains)) full
         else {
           val prevByPath = prevStats.map(e => e.path -> e).toMap
           val entryPaths = entries.map(_.path).toSet
@@ -1458,7 +1309,7 @@ object SnapshotTable {
   /** The common metadata-only shape: `base`'s files under a changed state. */
   private def commitState(spark: SparkSession, root: String,
                           base: SnapshotStats.Resolved, state: TableState): Long =
-    commitMeta(spark, root, Some(base), entriesOf(fsOf(spark, root), base), state)
+    commitMeta(spark, root, Some(base), base.stats, state)
 
   /** Attempt bounds of [[transact]]. Blind and append-shaped commits
     * (append, appendOnce, commitOnce, copyInto) re-stack their batch on the
@@ -1537,7 +1388,7 @@ object SnapshotTable {
   def setBloomColumns(spark: SparkSession, root: String, cols: Seq[String]): Long = {
     require(cols.nonEmpty, "setBloomColumns needs at least one column")
     transactOn(spark, root, "setBloomColumns", ReadAttempts) { base =>
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val schema = state.schema
       cols.foreach { c =>
         val f = schema.fields.find(_.name == c).getOrElse(
@@ -1578,7 +1429,7 @@ object SnapshotTable {
         .filter(not(coalesce(expr(checkSql), lit(true)))).limit(1).count()
       require(violating == 0L,
         s"existing rows violate CHECK $name ($checkSql); clean the data first")
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       commitState(spark, root, base,
         state.copy(constraints = state.constraints + (name -> checkSql)))
     }
@@ -1605,7 +1456,7 @@ object SnapshotTable {
   /** Remove a named CHECK constraint (metadata-only). */
   def dropCheckConstraint(spark: SparkSession, root: String, name: String): Long =
     transactOn(spark, root, "dropCheckConstraint", ReadAttempts) { base =>
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val cons = state.constraints
       require(cons.contains(name),
         s"no CHECK constraint $name on $root (have: ${cons.keys.mkString(", ")})")
@@ -1663,7 +1514,7 @@ object SnapshotTable {
     base match {
       case None => commitAt(spark, root, None, df, Nil, txn)
       case Some(b) =>
-        val state = stateOf(spark, b)
+        val state = stateOf(b)
         val oldSchema = state.schema
         val evolved = evolveSchema(oldSchema, df.schema)
         // New columns get physical ids that avoid every name ever
@@ -1730,7 +1581,7 @@ object SnapshotTable {
           }
         }
         commitAt(spark, root, base, withIdentity,
-          entriesOf(fsOf(spark, root), b), txn,
+          b.stats, txn,
           tableSchema = Some(evolved), meta = Some(assigned))
     }
 
@@ -1780,7 +1631,7 @@ object SnapshotTable {
     val v = targetOf(base)
     // Everything not stated below is inherited from the base like
     // tombstones/blooms/constraints.
-    val prev = base.fold(NoState)(stateOf(spark, _))
+    val prev = base.fold(NoState)(stateOf)
     val prevFileCount = base.fold(0)(_.files.length)
     // Declared clustering: an explicit declaration (commitClustered /
     // recluster / CTAS CLUSTER BY) records itself; everything else
@@ -1994,8 +1845,7 @@ object SnapshotTable {
             // a newer writer is never extended (the transact gate's rule).
             val sameMeta =
               winner.protocol._2 <= SnapshotStats.SupportedWriterVersion &&
-              winner.schema
-                .exists(ws => schemaWidens(ws, logicalSchema)) &&
+              schemaWidens(winner.schema, logicalSchema) &&
               winner.dropped.toSet == state.dropped.toSet &&
               winner.bloomOn == prev.bloomOn &&
               winner.constraints == prev.constraints &&
@@ -2007,7 +1857,7 @@ object SnapshotTable {
             val winnerEntries = winner.stats
             val winnerFiles = winner.files
             val winnerByNorm = winnerEntries.map(e => norm(e.path) -> e).toMap
-            val baseEntries = entriesOf(fs, resolvedAt(fs, root, spec.baseVersion))
+            val baseEntries = resolvedAt(fs, root, spec.baseVersion).stats
             val baseByNorm = baseEntries.map(e => norm(e.path) -> e).toMap
             // Touched files must survive with their BASE entries VERBATIM
             // (round 13 tightening): mere path presence would let a
@@ -2114,12 +1964,12 @@ object SnapshotTable {
       else {
         val fs = fsOf(spark, root)
         val restored = resolvedAt(fs, root, toVersion)
-        val restoredState = stateOf(spark, restored)
+        val restoredState = stateOf(restored)
         val cdc: Option[(DataFrame, DataFrame)] =
           if (!withCdc) None
           else {
             val target = restoredState.schema
-            val current = stateOf(spark, base).schema
+            val current = stateOf(base).schema
             require(
               target.fields.map(f => (f.name, f.dataType)).toSeq ==
                 current.fields.map(f => (f.name, f.dataType)).toSeq,
@@ -2138,7 +1988,7 @@ object SnapshotTable {
         // restored rows were validated under the TARGET version's constraint
         // set, not any declared since. Clustering and identity marks stay
         // the current version's.
-        commitMeta(spark, root, Some(base), entriesOf(fs, restored),
+        commitMeta(spark, root, Some(base), restored.stats,
           restoredState.copy(clusterBy = base.clusterBy,
             identityHwm = base.identityHwm), cdc = cdc)
       }
@@ -2231,8 +2081,8 @@ object SnapshotTable {
       finally out.close()
       // The clone declares no clustering of its own.
       val src = resolvedAt(fs, sourceRoot, v)
-      commitMeta(spark, targetRoot, None, entriesOf(fs, src),
-        stateOf(spark, src).copy(clusterBy = Nil))
+      commitMeta(spark, targetRoot, None, src.stats,
+        stateOf(src).copy(clusterBy = Nil))
     } catch {
       case t: Throwable =>
         try {
@@ -2256,8 +2106,7 @@ object SnapshotTable {
     val p = cloneMarker(root)
     if (!fs.exists(p)) None
     else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readManifestBody(fs, p))
+      val node = readManifestBody(fs, p)
       Some((node.get("source").asText, node.get("version").asLong,
         node.get("subscriber").asText))
     }
@@ -2281,7 +2130,7 @@ object SnapshotTable {
             throw new IllegalStateException(s"no committed version at $root"))
           val prefixes = pinned.map(_.stripSuffix("/") + "/")
           val fs = fsOf(spark, root)
-          val stillShared = entriesOf(fs, resolvedAt(fs, root, v))
+          val stillShared = resolvedAt(fs, root, v).stats
             .filter(e => prefixes.exists(
               new Path(e.path).toUri.getPath.startsWith(_)))
           require(stillShared.isEmpty,
@@ -2301,8 +2150,7 @@ object SnapshotTable {
   private def clonePinRoots(spark: SparkSession, root: String,
                             src: String): Seq[String] = {
     val fs = fsOf(spark, root)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readManifestBody(fs, cloneMarker(root)))
+    val node = readManifestBody(fs, cloneMarker(root))
     val pins = node.get("pins")
     if (pins == null || !pins.isArray || pins.size == 0) Seq(src)
     else (0 until pins.size).map(pins.get(_).get("root").asText)
@@ -2368,7 +2216,7 @@ object SnapshotTable {
       val base = b.getOrElse(throw new IllegalStateException(
         s"COPY INTO requires an existing table at $root (CREATE TABLE first)"))
       val v = base.version
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val loaded = state.ingested.toSet
       val fresh = candidates.filterNot(st => loaded(identity(st)))
       if (fresh.isEmpty) (v, 0L, 0L)
@@ -2422,7 +2270,7 @@ object SnapshotTable {
                 byLc.get(lc(f.name)).map(c => batch.col(c).as(f.name))).toIndexedSeq: _*))
           }
         val committed = commitAt(spark, root, b, aligned,
-          carry = entriesOf(fsOf(spark, root), base),
+          carry = base.stats,
           tableSchema = Some(declared), meta = metaOpt,
           ingestedAdd = fresh.map(identity))
         (committed, fresh.size.toLong,
@@ -2457,7 +2305,7 @@ object SnapshotTable {
                    to: String): Long = {
     require(from != to, s"renameColumn: '$from' -> '$to' is a no-op request")
     transactOn(spark, root, "renameColumn", ReadAttempts) { base =>
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val schema = state.schema
       require(schema.fieldNames.contains(from),
         s"renameColumn: no column $from in ${schema.fieldNames.mkString(", ")}")
@@ -2493,7 +2341,7 @@ object SnapshotTable {
                  cols: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(cols.nonEmpty, "addColumns needs at least one column")
     transactOn(spark, root, "addColumns", ReadAttempts) { base =>
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val schema = state.schema
       cols.foreach(f => require(
         !schema.fieldNames.exists(_.equalsIgnoreCase(f.name)),
@@ -2526,7 +2374,7 @@ object SnapshotTable {
     * the column no longer resolves). */
   def dropColumn(spark: SparkSession, root: String, name: String): Long =
     transactOn(spark, root, "dropColumn", ReadAttempts) { base =>
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val schema = state.schema
       require(schema.fieldNames.contains(name),
         s"dropColumn: no column $name in ${schema.fieldNames.mkString(", ")}")
@@ -2588,7 +2436,7 @@ object SnapshotTable {
           cdc = Some((source, source.limit(0))))
       case base @ Some(b) =>
         val v = b.version
-        val state = stateOf(spark, b)
+        val state = stateOf(b)
         val cur0 = read(spark, root, Some(v))
         // Additive schema evolution: align BOTH sides onto the merged
         // schema (missing columns become typed NULLs) before the merge,
@@ -2632,7 +2480,7 @@ object SnapshotTable {
         // exists to serialize. The whole-table rewrite rebases like
         // mergeInto's (removedPaths = EVERY base file; the winner's
         // foreign-keyed new files simply carry beside the rewrite).
-        val baseNorm = entriesOf(fsOf(spark, root), b)
+        val baseNorm = b.stats
           .map(e => new Path(e.path).toUri.getPath).toSet
         commitAt(spark, root, base, clustered(merged),
           cdc = Some((added, removed)),
@@ -2697,7 +2545,7 @@ object SnapshotTable {
     def norm(p: String): String = new Path(p).toUri.getPath
     transactOn(spark, root, "mergeInto", ReadAttempts) { base =>
       val v = base.version
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val cur = read(spark, root, Some(v))
       val schema0 = state.schema
       // Identity × MERGE pin (round 14, VERDICT r13 #4): identity
@@ -2788,7 +2636,7 @@ object SnapshotTable {
       val hasMatchedArms = matchedChain.nonEmpty ||
         matchedUpdate.nonEmpty || matchedDelete.nonEmpty ||
         insertChain.nonEmpty || notMatchedInsert.nonEmpty
-      val allE = entriesOf(fsOf(spark, root), base)
+      val allE = base.stats
       // File attribution from `_metadata` at the scan (round 13): the
       // key-join probe never pruned files statically anyway, and
       // `input_file_name()` is not reliable past the DV mask join.
@@ -3081,9 +2929,9 @@ object SnapshotTable {
   def consolidateDvs(spark: SparkSession, root: String): Option[Long] =
     transactOn(spark, root, "consolidateDvs", ReadAttempts) { base =>
       val (capped, merged) = capDvLists(spark, root, base.version + 1,
-        entriesOf(fsOf(spark, root), base), cap = 1)
+        base.stats, cap = 1)
       merged.map(dir => commitMeta(spark, root, Some(base), capped,
-        stateOf(spark, base), sidecars = Seq(dir)))
+        stateOf(base), sidecars = Seq(dir)))
     }
 
   def delete(spark: SparkSession, root: String, predicate: Column): Long = {
@@ -3091,9 +2939,9 @@ object SnapshotTable {
     def norm(p: String): String = new Path(p).toUri.getPath
     transactOn(spark, root, "delete", ReadAttempts) { base =>
       val v = base.version
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val cur = read(spark, root, Some(v))
-      val allE = entriesOf(fsOf(spark, root), base)
+      val allE = base.stats
       // Filter keeps only TRUE rows (NULL drops), which IS the delete-match
       // set — and the bare predicate (no null-handling wrapper) stays
       // pushable, so this scan file-skips off the manifest bounds.
@@ -3171,16 +3019,11 @@ object SnapshotTable {
         // keep = NOT TRUE (so NULL keeps): the wrapper is fine here, this
         // plan only ever reads the already-pruned touched files.
         val rewritten = touchedRows.filter(not(coalesce(predicate, lit(false))))
-        // Refuse a delete of EVERY row: the manifest's per-file row counts
-        // give the carried total driver-side (zero-row part files from
-        // prior rewrites carry but hold nothing), and only when that is 0
-        // do the emptiness probes run. Pre-stats (legacy) manifests
-        // FABRICATE rows=0 (entriesOf), so a zero sum is only trusted after
-        // a limit(1) probe of the kept files themselves (ADVICE r9) —
-        // otherwise a legitimate delete that merely empties the touched
-        // files would be wrongly refused on such a table.
-        val keptEmpty = keptE.map(e => e.rows - e.dvRows).sum == 0 &&
-          (keptE.isEmpty || readEntries(spark, keptE, schema, mapping).isEmpty)
+        // Refuse a delete of EVERY row: the manifest's exact per-file row
+        // counts give the carried total driver-side (zero-row part files
+        // from prior rewrites carry but hold nothing), and only when that
+        // is 0 does the emptiness probe of the rewrite run.
+        val keptEmpty = keptE.map(e => e.rows - e.dvRows).sum == 0
         if (keptEmpty && rewritten.isEmpty)
           throw new IllegalStateException(
             s"delete would remove every row of $root; drop the table instead")
@@ -3212,12 +3055,12 @@ object SnapshotTable {
     def norm(p: String): String = new Path(p).toUri.getPath
     transactOn(spark, root, "update", ReadAttempts) { base =>
       val v = base.version
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val cur = read(spark, root, Some(v))
       val missing = set.keySet -- cur.columns.toSet
       require(missing.isEmpty,
         s"update SET names absent columns: ${missing.mkString(", ")}")
-      val allE = entriesOf(fsOf(spark, root), base)
+      val allE = base.stats
       // Declared schema for the same reason as [[delete]]: evolved tables
       // mix file schemas, and the rewrite must not regress the manifest.
       val schema = state.schema
@@ -3320,7 +3163,7 @@ object SnapshotTable {
     def norm(p: String): String = new Path(p).toUri.getPath
     transactOn(spark, root, "overwriteWhere", ReadAttempts) { base =>
       val v = base.version
-      val state = stateOf(spark, base)
+      val state = stateOf(base)
       val cur = read(spark, root, Some(v))
       val schema = state.schema
       val mapping = state.mapping
@@ -3340,7 +3183,7 @@ object SnapshotTable {
       require(batch.filter(coalesce(predicate, lit(false)) =!= lit(true)).isEmpty,
         s"overwriteWhere: every batch row must satisfy the predicate " +
           s"(classic replaceWhere contract); found rows outside the replaced region")
-      val allE = entriesOf(fsOf(spark, root), base)
+      val allE = base.stats
       val touched = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate).keySet
       val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
@@ -3413,7 +3256,7 @@ object SnapshotTable {
       val have = merged.columns.toSet
       // Files speak physical names; the feed lands on the end version's
       // LOGICAL schema through its mapping (identity when never renamed).
-      val end = stateOf(spark, resolvedAt(fs, root, to))
+      val end = stateOf(resolvedAt(fs, root, to))
       merged.select(end.schema.fields.map { f =>
         val p = physName(end.mapping, f.name)
         if (have(p)) merged.col(p).as(f.name)
@@ -3466,7 +3309,7 @@ object SnapshotTable {
     // earlier change files, and a column dropped mid-interval must NOT
     // resurface its orphaned values from pre-drop CDC side-cars — that is
     // the hazard the tombstone contract exists to prevent.
-    lazy val end = stateOf(spark, resolvedAt(fs, root, to))
+    lazy val end = stateOf(resolvedAt(fs, root, to))
     def readOrEmpty(paths: Seq[String]): DataFrame =
       if (paths.isEmpty) read(spark, root, Some(to)).limit(0)
       else {
@@ -3573,7 +3416,7 @@ object SnapshotTable {
     // between makes this maintenance pass a clean loser (the next
     // compaction retries), never an eraser of the winner's rows.
     try transact(spark, root, "compact", attempts = 1)(_.flatMap { base =>
-      val entries = entriesOf(fsOf(spark, root), base)
+      val entries = base.stats
       // DV-carrying files are ALWAYS in the rewrite set (round 13):
       // OPTIMIZE is what materializes deletion vectors back into clean
       // files — masked rows drop, side-cars retire with the old manifest.
@@ -3595,7 +3438,7 @@ object SnapshotTable {
           // pre-evolution rows materialize NULL for the grown columns.
           // DV masking applies (readEntries): the rewrite lands the
           // LOGICAL rows, never the masked ones.
-          val state = stateOf(spark, base)
+          val state = stateOf(base)
           val cSchema = state.schema
           val cMapping = state.mapping
           val cCols = state.clusterBy
@@ -3647,22 +3490,15 @@ object SnapshotTable {
     }
   }
 
-  /** Metadata-only row count: when the manifest's stats cover every listed
-    * file (every commit since stats were introduced), `count(*)` is the sum
-    * of per-file footer row counts — zero data I/O at any table size, the
+  /** Metadata-only row count: `count(*)` is the sum of the manifest's
+    * per-file footer row counts — zero data I/O at any table size, the
     * same trick Spark's own OptimizeMetadataOnlyQuery/parquet-count path
-    * plays, here answered from the manifest without even touching footers.
-    * Falls back to a real count for pre-stats manifests. */
+    * plays, here answered from the manifest without even touching footers. */
   def rowCount(spark: SparkSession, root: String, asOf: Option[Long] = None): Long = {
     val v = asOf.orElse(currentVersion(spark, root))
       .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    val fs = fsOf(spark, root)
-    val r = resolvedAt(fs, root, v)
-    val files = r.files
-    val stats = r.stats
-    if (files.nonEmpty && stats.map(_.path).sorted == files.sorted)
-      stats.map(e => e.rows - e.dvRows).sum // logical rows: DV-masked drop
-    else read(spark, root, Some(v)).count()
+    resolvedAt(fsOf(spark, root), root, v).stats
+      .map(e => e.rows - e.dvRows).sum // logical rows: DV-masked drop
   }
 
   /** Table history from the retained manifest log (Delta's DESCRIBE HISTORY
@@ -3688,7 +3524,7 @@ object SnapshotTable {
     val byV = versions.map { v =>
       val r = resolvedAt(fs, root, v)
       (v, r.files.toSet, r.stats, r.txn, r.cdc.isDefined,
-        r.schema.map(_.fieldNames.toSeq).getOrElse(Nil),
+        r.schema.fieldNames.toSeq,
         r.constraints.keys.toSeq.sorted, r.bloomOn, r.ts)
     }
     val rows = byV.zipWithIndex.map {
@@ -3894,7 +3730,7 @@ object SnapshotTable {
       val mp = manifestPath(root, v)
       val r = resolvedPathsAt(fs, root, v)
       out += (("manifest", mp.toString, fs.getFileStatus(mp).getLen))
-      Seq(checkpointPath(root, v), checkpointParquetPath(root, v))
+      Some(checkpointParquetPath(root, v))
         .filter(fs.exists).foreach(cp =>
           out += (("checkpoint", cp.toString, fs.getFileStatus(cp).getLen)))
       (r.files.map(f => new Path(f).getParent).distinct ++
@@ -4083,13 +3919,13 @@ object SnapshotTable {
       v -> (r.files.map(f => new Path(f).getParent).distinct ++ cdcRootsOf(r))
     }
     // Anchor: the oldest KEPT version must stay resolvable once its delta
-    // chain below is gone — materialize its full body as a checkpoint file
-    // (tmp + rename; idempotent, racing writers' duplicate is identical).
+    // chain below is gone — materialize its full state as a parquet
+    // checkpoint (tmp + rename; idempotent, racing writers' duplicate is
+    // identical).
     versions.takeRight(keep).headOption.foreach { minKept =>
       val raw = readManifestBody(fs, manifestPath(root, minKept))
       if (SnapshotStats.baseFromManifest(raw).isDefined && doomed.nonEmpty &&
-          !fs.exists(checkpointParquetPath(root, minKept)) &&
-          !fs.exists(checkpointPath(root, minKept))) {
+          !fs.exists(checkpointParquetPath(root, minKept))) {
         // Columnar since round 14; MUST land before any deletion below —
         // a failure here aborts the vacuum with the chain intact.
         CheckpointIO.write(fs, fs.getConf, checkpointParquetPath(root, minKept),
@@ -4109,7 +3945,6 @@ object SnapshotTable {
         .foreach(d => fs.delete(d, true))
       fs.delete(manifestPath(root, v), false)
       // A checkpoint from an earlier vacuum/cadence dies with its version.
-      fs.delete(checkpointPath(root, v), false)
       fs.delete(checkpointParquetPath(root, v), false)
     }
     // Pointer repair (round 15): if `_last_checkpoint` named a version the

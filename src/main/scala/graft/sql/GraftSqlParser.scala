@@ -553,24 +553,23 @@ case class GraftDescribeDetailCommand(nameParts: Seq[String])
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = SnapshotTable.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    val body = SnapshotTable.manifestBodyAt(fs, root, v)
-    val stats = graft.ops.SnapshotStats.statsFromManifest(body)
-    val schema = graft.ops.SnapshotStats.schemaFromManifest(body)
+    val r = SnapshotTable.resolvedAt(fs, root, v)
+    val stats = r.stats
     val clone = SnapshotTable.cloneSource(spark, root)
     Seq(org.apache.spark.sql.Row(
       "graft", root, v,
-      schema.map(_.fields.length).getOrElse(-1),
+      r.schema.fields.length,
       stats.size.toLong,
       stats.map(e => e.rows - e.dvRows).sum,
       stats.map(_.bytes).sum,
-      graft.ops.SnapshotStats.clusterByFromManifest(body),
-      graft.ops.SnapshotStats.bloomOnFromManifest(body),
-      graft.ops.SnapshotStats.constraintsFromManifest(body).keys.toSeq.sorted,
+      r.clusterBy,
+      r.bloomOn,
+      r.constraints.keys.toSeq.sorted,
       stats.count(_.dv.nonEmpty).toLong,
       stats.map(_.dvRows).sum,
       clone.map(_._1).orNull,
       clone.map(c => Long.box(c._2)).orNull,
-      new java.sql.Timestamp(graft.ops.SnapshotStats.tsFromManifest(body))))
+      new java.sql.Timestamp(r.ts)))
   }
   override val output: Seq[Attribute] = Seq(
     AttributeReference("format", StringType, nullable = false)(),
@@ -632,10 +631,9 @@ case class GraftShowCreateCommand(nameParts: Seq[String])
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = SnapshotTable.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    val body = SnapshotTable.manifestBodyAt(fs, root, v)
-    val schema = graft.ops.SnapshotStats.schemaFromManifest(body).getOrElse(
-      throw new IllegalStateException(
-        s"version $v of $root declares no schema (pre-evolution manifest)"))
+    // State only: at a checkpoint this decodes the footer, never the rows.
+    val state = SnapshotTable.stateOnlyAt(fs, root, v)
+    val schema = state.schema
     val name = nameParts.map(p => s"`$p`").mkString(".")
     val cols = schema.fields.map { f =>
       val default =
@@ -655,17 +653,16 @@ case class GraftShowCreateCommand(nameParts: Seq[String])
         } else ""
       s"  `${f.name}` ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}$identity$default"
     }.mkString(",\n")
-    val clusterBy = graft.ops.SnapshotStats.clusterByFromManifest(body)
-    val bloomOn = graft.ops.SnapshotStats.bloomOnFromManifest(body)
+    val clusterBy = state.clusterBy
+    val bloomOn = state.bloomOn
     val create = new StringBuilder(s"CREATE TABLE $name (\n$cols)")
     if (clusterBy.nonEmpty)
       create ++= s"\nCLUSTER BY (${clusterBy.map(c => s"`$c`").mkString(", ")})"
     if (bloomOn.nonEmpty)
       create ++= s"\nTBLPROPERTIES ('graft.bloom.columns' = '${bloomOn.mkString(",")}')"
-    val alters = graft.ops.SnapshotStats.constraintsFromManifest(body)
-      .toSeq.sortBy(_._1).map { case (n, sql) =>
-        s"ALTER TABLE $name ADD CONSTRAINT $n CHECK ($sql)"
-      }
+    val alters = state.constraints.toSeq.sortBy(_._1).map { case (n, sql) =>
+      s"ALTER TABLE $name ADD CONSTRAINT $n CHECK ($sql)"
+    }
     val provenance = SnapshotTable.cloneSource(spark, root).map {
       case (src, sv, sub) =>
         s"-- SHALLOW CLONE of $src VERSION AS OF $sv (subscriber $sub)"

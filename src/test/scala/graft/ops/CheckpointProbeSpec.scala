@@ -137,7 +137,8 @@ class CheckpointProbeSpec extends SparkSpec {
       // State-only resolution shares the pointer discipline (and the
       // probing-mode restart) — same lying pointer, same answer.
       SnapshotTable.clearResolvedCache()
-      assert(SnapshotTable.stateOnlyAt(fsOf(root), root, 9L).schema.isDefined)
+      assert(SnapshotTable.stateOnlyAt(fsOf(root), root, 9L).schema.fieldNames
+        .toSeq == Seq("k", "v"))
     }
   }
 
@@ -214,6 +215,9 @@ class CheckpointProbeSpec extends SparkSpec {
       SnapshotTable.clearResolvedCache()
       assert(SnapshotTable.resolvedAt(fs, root, 8L).protocol == (1, 2),
         "checkpoint decode must carry the protocol through")
+      SnapshotTable.clearResolvedCache()
+      assert(SnapshotTable.stateOnlyAt(fs, root, 8L).protocol == (1, 2),
+        "the footer-only decode must carry the protocol through too")
       val e = intercept[IllegalStateException] {
         SnapshotTable.append(spark, root, Seq((99L, "x")).toDF("k", "v"))
       }

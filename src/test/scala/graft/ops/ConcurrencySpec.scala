@@ -270,7 +270,7 @@ class ConcurrencySpec extends SparkSpec {
     assert(versions == (0L to 5L), s"one gapless version per writer expected: $versions")
     // Every writer's change survives in the final state: no lost update.
     val last = SnapshotTable.resolvedAt(fs, root, 5L)
-    assert(last.schema.get.fieldNames.toSeq.sorted == Seq("c0", "c1", "c2", "k", "v"),
+    assert(last.schema.fieldNames.toSeq.sorted == Seq("c0", "c1", "c2", "k", "v"),
       last.schema)
     assert(last.bloomOn == Seq("k"), last.bloomOn)
     assert(last.constraints == Map("k_nonneg" -> "k >= 0"), last.constraints)

@@ -24,8 +24,6 @@ class ConflictRebaseSpec extends SparkSpec {
     SnapshotTable.resolvedAt(fs, root, v)
   }
 
-  private def manifestBody(root: String, v: Long): String = resolvedAt(root, v).body
-
   private def norm(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
@@ -33,7 +31,7 @@ class ConflictRebaseSpec extends SparkSpec {
     * version 0 of a 4-file clustered table — the state a real delete holds
     * the moment before its commit. */
   private def stageDelete(root: String) = {
-    val entries = SnapshotStats.statsFromManifest(manifestBody(root, 0L))
+    val entries = resolvedAt(root, 0L).stats
     assert(entries.size == 4, s"expected 4 clustered files, got ${entries.size}")
     def kMin(e: SnapshotStats.FileStats): Long =
       e.cols("k").min.get.asInstanceOf[Long]
@@ -79,10 +77,10 @@ class ConflictRebaseSpec extends SparkSpec {
     assert(got == ((20L until 100L) ++ (1000L until 1010L)).toSet)
     // The winner's appended file is CARRIED, not re-read: its entry in v2
     // is byte-identical to v1's.
-    val v1New = SnapshotStats.statsFromManifest(manifestBody(root, 1L))
+    val v1New = resolvedAt(root, 1L).stats
       .map(e => norm(e.path)).toSet --
-      SnapshotStats.statsFromManifest(manifestBody(root, 0L)).map(e => norm(e.path))
-    val v2Paths = SnapshotStats.statsFromManifest(manifestBody(root, 2L))
+      resolvedAt(root, 0L).stats.map(e => norm(e.path))
+    val v2Paths = resolvedAt(root, 2L).stats
       .map(e => norm(e.path)).toSet
     assert(v1New.subsetOf(v2Paths), "winner's files must carry into the rebase")
   }

@@ -140,26 +140,47 @@ class DataSkippingSpec extends SparkSpec {
     assert(rows(df.filter(col("k") === 2L)) == Set("[2,B]"))
   }
 
-  test("pre-stats manifest (no stats array) falls back to a plain read") {
-    val root = tmpDir() + "/tbl"
-    SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("k", "v"))
-    // Rewrite the manifest in the legacy shape: files only.
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val mPath = new org.apache.hadoop.fs.Path(root, "_manifests/manifest-00000000.json")
-    val body = {
-      val in = fs.open(mPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  test("pre-stats and schema-less manifests are refused by name") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // Two older format generations, each planted as a table's only
+    // manifest: files without stats, and a full manifest without schema.
+    val generations = Seq[(String, com.fasterxml.jackson.databind.JsonNode => String)](
+      "`stats` for every listed file" -> { node =>
+        val legacy = mapper.createObjectNode()
+        legacy.put("version", 0L)
+        legacy.set[com.fasterxml.jackson.databind.JsonNode]("files", node.get("files"))
+        legacy.toString
+      },
+      "declared `schema`" -> { node =>
+        node.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          .remove("schema")
+        node.toString
+      })
+    generations.foreach { case (missing, doctor) =>
+      val root = tmpDir() + "/tbl"
+      SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("k", "v"))
+      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val mPath = new org.apache.hadoop.fs.Path(root, "_manifests/manifest-00000000.json")
+      val body = {
+        val in = fs.open(mPath)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      }
+      val out = fs.create(mPath, true)
+      try out.write(doctor(mapper.readTree(body)).getBytes("UTF-8"))
+      finally out.close()
+      SnapshotTable.clearResolvedCache()
+      Seq[() => Any](
+        () => SnapshotTable.readTracked(spark, root),
+        () => SnapshotTable.rowCount(spark, root),
+        () => SnapshotTable.append(spark, root, Seq((2L, "b")).toDF("k", "v"))
+      ).foreach { op =>
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains(s"manifest version 0 at $mPath has no $missing") &&
+          e.getMessage.contains("reads only manifests that carry per-file " +
+            "`stats` and a `schema`"), e.getMessage)
+      }
     }
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-    val legacy = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
-    legacy.put("version", 0L)
-    legacy.set[com.fasterxml.jackson.databind.JsonNode]("files", node.get("files"))
-    val out = fs.create(mPath, true)
-    try out.write(legacy.toString.getBytes("UTF-8")) finally out.close()
-    val (df, idx) = SnapshotTable.readTracked(spark, root)
-    assert(idx.isEmpty)
-    assert(rows(df) == Set("[1,a]"))
   }
 
   test("z-order clustering prunes on EITHER dimension") {

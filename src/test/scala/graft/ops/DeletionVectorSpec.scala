@@ -22,14 +22,13 @@ class DeletionVectorSpec extends SparkSpec {
   private def dataFiles(root: String, v: Long): Set[String] = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SnapshotStats.statsFromManifest(
-      SnapshotTable.manifestBodyAt(fs, root, v)).map(_.path).toSet
+    SnapshotTable.resolvedAt(fs, root, v).stats.map(_.path).toSet
   }
 
   private def entries(root: String, v: Long): Seq[SnapshotStats.FileStats] = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SnapshotStats.statsFromManifest(SnapshotTable.manifestBodyAt(fs, root, v))
+    SnapshotTable.resolvedAt(fs, root, v).stats
   }
 
   private def seed(root: String, n: Int = 10000, files: Int = 4): Unit =

@@ -22,8 +22,11 @@ class ManifestLogSpec extends SparkSpec {
     new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
   }
 
+  private def parse(body: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+
   private def isDelta(root: String, v: Long): Boolean =
-    SnapshotStats.baseFromManifest(rawBody(root, v)).isDefined
+    SnapshotStats.baseFromManifest(parse(rawBody(root, v))).isDefined
 
   private def withInterval[A](n: Int)(f: => A): A = {
     val old = SnapshotTable.manifestCheckpointInterval
@@ -211,7 +214,7 @@ class ManifestLogSpec extends SparkSpec {
     }
   }
 
-  test("a legacy JSON checkpoint anchor still resolves (pre-r14 tables)") {
+  test("a legacy JSON checkpoint anchor is refused at the vacuum horizon") {
     withInterval(100) {
       val root = tmpDir() + "/tbl"
       (0 until 5).foreach { i =>
@@ -221,7 +224,12 @@ class ManifestLogSpec extends SparkSpec {
       // Hand-plant a pre-r14 anchor (full JSON body) at v3, then prune
       // 0..2 exactly as an old vacuum left things.
       val fs = fsOf(root)
-      val full = SnapshotTable.manifestBodyAt(fs, root, 3L)
+      val r3 = SnapshotTable.resolvedAt(fs, root, 3L)
+      val full = SnapshotStats.manifestJson(r3.version, r3.stats, r3.txn,
+        r3.cdc, Some(r3.schemaJson), r3.dropped, r3.bloomOn, r3.constraints,
+        r3.mapping, r3.usedPhys, r3.ingested, tsOverride = Some(r3.ts),
+        clusterBy = r3.clusterBy, identityHwm = r3.identityHwm,
+        protocolOverride = Some(r3.protocol))
       val cp = new org.apache.hadoop.fs.Path(
         root, "_manifests/checkpoint-00000003.json")
       val out = fs.create(cp, true)
@@ -229,8 +237,15 @@ class ManifestLogSpec extends SparkSpec {
       (0L to 2L).foreach(v => fs.delete(new org.apache.hadoop.fs.Path(
         root, f"_manifests/manifest-$v%08d.json"), false))
       SnapshotTable.clearResolvedCache()
-      assert(SnapshotTable.read(spark, root).count() == 5L)
-      assert(SnapshotTable.read(spark, root, Some(3L)).count() == 4L)
+      // The engine reads parquet checkpoints only: the chain below v3 is
+      // gone, and the refusal names the version that cannot resolve.
+      Seq(None, Some(3L)).foreach { asOf =>
+        val e = intercept[IllegalArgumentException] {
+          SnapshotTable.read(spark, root, asOf)
+        }
+        assert(e.getMessage.contains(s"manifest 2 of $root is gone and " +
+          "version 3 has no checkpoint anchor"), e.getMessage)
+      }
     }
   }
 
@@ -257,8 +272,7 @@ class ManifestLogSpec extends SparkSpec {
       // The idempotent-replay marker survives the columnar round-trip
       // (txn rides in the delta, not the checkpoint — but resolution of
       // v6 must still surface ITS txn).
-      val r6 = SnapshotStats.parseResolved(
-        SnapshotTable.manifestBodyAt(fs, root, 6L))
+      val r6 = SnapshotTable.resolvedAt(fs, root, 6L)
       assert(r6.txn.contains(("app", 6L)), s"txn after fold: ${r6.txn}")
     }
   }
@@ -274,10 +288,9 @@ class ManifestLogSpec extends SparkSpec {
       // Simulate the fixed loop crashing halfway: anchor minKept=6 (what
       // vacuum does first), then delete only the NEWEST doomed manifests
       // (5, 4) — the prefix a newest-first loop removes before dying.
-      val full = SnapshotTable.manifestBodyAt(fs, root, 6L)
+      val st = SnapshotTable.resolvedAt(fs, root, 6L)
       SnapshotTable.clearResolvedCache()
       // plant the anchor exactly as vacuum would
-      val st = SnapshotStats.parseResolved(full)
       CheckpointIO.write(fs, spark.sparkContext.hadoopConfiguration,
         new org.apache.hadoop.fs.Path(
           root, "_manifests/checkpoint-00000006.parquet"), st)
@@ -420,7 +433,7 @@ class ManifestLogSpec extends SparkSpec {
     SnapshotTable.append(spark, root, Seq((1L, "a")).toDF("k", "v"))
     SnapshotTable.append(spark, root, Seq((2L, "b")).toDF("k", "v"))
     // New manifests declare the protocol they were written under.
-    assert(SnapshotStats.protocolFromManifest(rawBody(root, 1L)) == (1, 1))
+    assert(SnapshotStats.protocolFromManifest(parse(rawBody(root, 1L))) == (1, 1))
     // Doctor the head to demand a future READER: every read path must
     // refuse with the upgrade message, never mis-parse.
     val p = java.nio.file.Paths.get(root, "_manifests", "manifest-00000001.json")
@@ -445,7 +458,7 @@ class ManifestLogSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("version 99"), e2.getMessage)
     // A manifest WITHOUT the field (pre-r14) still reads as protocol 1.
-    assert(SnapshotStats.protocolFromManifest("""{"version":0,"files":[]}""")
-      == (1, 1))
+    assert(SnapshotStats.protocolFromManifest(
+      parse("""{"version":0,"files":[]}""")) == (1, 1))
   }
 }

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.SparkSpec
-import graft.ops.{SnapshotStats, SnapshotTable}
+import graft.ops.SnapshotTable
 import org.apache.spark.sql.functions._
 
 /** Round-13 operability DDL (VERDICT r12 #7 + #3): SHOW CREATE TABLE
@@ -129,8 +129,7 @@ class TableDdlSpec extends SparkSpec {
     // The declaration rides the manifest.
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(SnapshotStats.clusterByFromManifest(
-      SnapshotTable.manifestBodyAt(fs, root, 0L)) == Seq("k"))
+    assert(SnapshotTable.resolvedAt(fs, root, 0L).clusterBy == Seq("k"))
     // 8 merge waves, each updating a scattered key slice — every wave
     // rewrites files; without write-side re-sort the rewritten files mix
     // key ranges and a point predicate stops pruning.
@@ -142,10 +141,8 @@ class TableDdlSpec extends SparkSpec {
         matchedUpdate = Some(None), notMatchedInsert = Some(None))
     }
     val v = SnapshotTable.currentVersion(spark, root).get
-    val entries = SnapshotStats.statsFromManifest(
-      SnapshotTable.manifestBodyAt(fs, root, v))
-    assert(SnapshotStats.clusterByFromManifest(
-      SnapshotTable.manifestBodyAt(fs, root, v)) == Seq("k"),
+    val entries = SnapshotTable.resolvedAt(fs, root, v).stats
+    assert(SnapshotTable.resolvedAt(fs, root, v).clusterBy == Seq("k"),
       "declaration must inherit through DML commits")
     // Plan-level gate: a point predicate plans a small fraction of files.
     val (df, idxOpt) = SnapshotTable.readTracked(spark, root)
