@@ -3207,6 +3207,27 @@ object SnapshotTable {
     }
   }
 
+  /** Change files (data files or CDC side-cars) read on version `at`'s
+    * DECLARED physical schema and projected by physical name onto the
+    * logical `onto` schema through `ontoMapping`. Nothing infers a schema
+    * from footers (a `mergeSchema` read launches one job per call): a
+    * column a file lacks reads NULL, and a dropped column's orphaned bytes
+    * are never read (a re-added column gets a fresh physical name). */
+  private def readChangeFiles(spark: SparkSession, paths: Seq[String],
+                              at: SnapshotStats.Resolved,
+                              onto: org.apache.spark.sql.types.StructType,
+                              ontoMapping: Map[String, String]): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val phys = physSchema(at.schema, at.mapping)
+    val raw = spark.read.schema(phys).parquet(paths: _*)
+    val have = phys.fieldNames.toSet
+    raw.select(onto.fields.map { f =>
+      val p = physName(ontoMapping, f.name)
+      if (have(p)) raw.col(p).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }.toIndexedSeq: _*)
+  }
+
   /** Incremental change feed between two versions, as the rows in files
     * ADDED after `fromVersion` (exclusive) up to `toVersion` (inclusive,
     * default current). For append-written tables (appendOnce) this is the
@@ -3242,26 +3263,14 @@ object SnapshotTable {
           "cannot express it; use changesDelta/changesFeed")
     }
     val added = after.filterNot(before)
-    if (added.isEmpty)
-      read(spark, root, Some(to)).limit(0)
-    // mergeSchema: an interval spanning a schema evolution mixes file
-    // schemas; the merge cost is bounded by the DELTA's footers, never the
-    // table's. The feed then lands on the END version's DECLARED schema:
-    // columns added mid-interval null-fill for earlier files, and a column
-    // dropped mid-interval does NOT resurface from files that still hold
-    // its bytes.
+    if (added.isEmpty) read(spark, root, Some(to)).limit(0)
     else {
-      import org.apache.spark.sql.functions.lit
-      val merged = spark.read.option("mergeSchema", "true").parquet(added: _*)
-      val have = merged.columns.toSet
-      // Files speak physical names; the feed lands on the end version's
-      // LOGICAL schema through its mapping (identity when never renamed).
-      val end = stateOf(resolvedAt(fs, root, to))
-      merged.select(end.schema.fields.map { f =>
-        val p = physName(end.mapping, f.name)
-        if (have(p)) merged.col(p).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
+      // The feed lands on the END version's DECLARED schema: columns added
+      // mid-interval null-fill for earlier files, and a column dropped
+      // mid-interval does NOT resurface from files that still hold its
+      // bytes.
+      val end = resolvedAt(fs, root, to)
+      readChangeFiles(spark, added, end, end.schema, end.mapping)
     }
   }
 
@@ -3309,22 +3318,10 @@ object SnapshotTable {
     // earlier change files, and a column dropped mid-interval must NOT
     // resurface its orphaned values from pre-drop CDC side-cars — that is
     // the hazard the tombstone contract exists to prevent.
-    lazy val end = stateOf(resolvedAt(fs, root, to))
+    lazy val end = resolvedAt(fs, root, to)
     def readOrEmpty(paths: Seq[String]): DataFrame =
       if (paths.isEmpty) read(spark, root, Some(to)).limit(0)
-      else {
-        import org.apache.spark.sql.functions.lit
-        // mergeSchema: change files on either side of a schema evolution mix
-        // schemas; cost is bounded by the delta's footers. Files speak
-        // physical names; project through the end version's mapping.
-        val merged = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        val have = merged.columns.toSet
-        merged.select(end.schema.fields.map { f =>
-          val p = physName(end.mapping, f.name)
-          if (have(p)) merged.col(p).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }.toIndexedSeq: _*)
-      }
+      else readChangeFiles(spark, paths, end, end.schema, end.mapping)
     Some((readOrEmpty(adds.result()), readOrEmpty(removes.result())))
   }
 
@@ -3358,28 +3355,20 @@ object SnapshotTable {
       if (fromVersion < 0) Set.empty[String]
       else filesAt(fs, root, fromVersion).toSet
     val parts = Seq.newBuilder[DataFrame]
-    def slice(paths: Seq[String], kind: String, v: Long): Unit =
-      if (paths.nonEmpty) {
-        val merged = spark.read.option("mergeSchema", "true")
-          .parquet(paths.sorted: _*)
-        val have = merged.columns.toSet
-        // physical on disk -> the caller's (stream-start) logical schema;
-        // renames keep their physical, so one mapping serves the interval.
-        parts += merged.select(onSchema.fields.map { f =>
-            val p = physName(onMapping, f.name)
-            if (have(p)) merged.col(p).as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }.toIndexedSeq: _*)
+    // Each slice reads on its own version's declared schema; renames keep
+    // their physical name, so the stream-start mapping serves the interval.
+    def slice(paths: Seq[String], kind: String, at: SnapshotStats.Resolved): Unit =
+      if (paths.nonEmpty)
+        parts += readChangeFiles(spark, paths.sorted, at, onSchema, onMapping)
           .withColumn("_change_type", lit(kind))
-          .withColumn("_commit_version", lit(v))
-      }
+          .withColumn("_commit_version", lit(at.version))
     for (v <- fromVersion + 1 to toVersion) {
       val r = resolvedAt(fs, root, v)
       val files = r.files.toSet
       r.cdc match {
-        case Some((a, r)) => slice(a, "insert", v); slice(r, "delete", v)
+        case Some((a, d)) => slice(a, "insert", r); slice(d, "delete", r)
         case None if prev.subsetOf(files) =>
-          slice((files -- prev).toSeq, "insert", v)
+          slice((files -- prev).toSeq, "insert", r)
         case None => throw new IllegalStateException(
           s"version $v of $root is a rewrite without CDC; " +
             "the change feed cannot cross it")
@@ -3634,12 +3623,20 @@ object SnapshotTable {
                          consumedVersion: Long): Unit = {
     val fs = fsOf(spark, root)
     val p = subscriberFile(root, appId)
-    val prev = subscriberVersion(fs, p)
+    val prev = subscriberVersion(fs, p, appId)
     if (prev.forall(_ < consumedVersion)) {
+      // tmp + rename: a crash mid-write never leaves a truncated watermark
+      // (a cut "12" would read as 1 and lower the vacuum clamp).
       fs.mkdirs(p.getParent)
-      val out = fs.create(p, true)
+      val tmp = new Path(root,
+        s"._subscriber.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      val out = fs.create(tmp, true)
       try out.write(consumedVersion.toString.getBytes("UTF-8"))
       finally out.close()
+      if (!fs.rename(tmp, p)) { // a store whose rename will not replace
+        fs.delete(p, false)
+        require(fs.rename(tmp, p), s"subscriber watermark write to $p failed")
+      }
     }
   }
 
@@ -3651,12 +3648,18 @@ object SnapshotTable {
     ()
   }
 
-  private def subscriberVersion(fs: FileSystem, p: Path): Option[Long] =
+  /** `appId`'s watermark at `p`, None when unregistered. An unparsable
+    * file is refused by name: guessing would move the vacuum clamp. */
+  private def subscriberVersion(fs: FileSystem, p: Path, appId: String): Option[Long] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        finally in.close()
+      Some(text.toLongOption.getOrElse(throw new IllegalStateException(
+        s"subscriber watermark $p of appId '$appId' is unreadable " +
+          s"('$text' is not a version); unregisterSubscriber('$appId') " +
+          "resets it")))
     }
 
   /** Subscriber ids of SHALLOW CLONES currently pinning `root` (watermarks
@@ -3680,7 +3683,7 @@ object SnapshotTable {
     val dir = new Path(root, SubscribersDir)
     if (!fs.exists(dir)) None
     else fs.listStatus(dir).toSeq
-      .flatMap(st => subscriberVersion(fs, st.getPath)) match {
+      .flatMap(st => subscriberVersion(fs, st.getPath, st.getPath.getName)) match {
         case Nil => None
         case vs => Some(vs.min)
       }
@@ -3822,7 +3825,8 @@ object SnapshotTable {
     val subs =
       if (!fs.exists(subsDir)) Seq.empty[String]
       else fs.listStatus(subsDir).toSeq.flatMap(st =>
-        subscriberVersion(fs, st.getPath).map(w => s"${st.getPath.getName}:$w"))
+        subscriberVersion(fs, st.getPath, st.getPath.getName)
+          .map(w => s"${st.getPath.getName}:$w"))
         .sorted
     val lastVac = {
       val p = new Path(root, "_last_vacuum")

@@ -78,6 +78,122 @@ class MvSpecSpec extends SparkSpec {
     assert(viaLiteral == rows(spec.partial(SnapshotTable.read(spark, root))))
   }
 
+  test("surviving groups losing their max holder: literal path and semi-join path are row-identical") {
+    val root = s"${tmpDir()}/t"
+    // 1000 three-row groups; each group's max is its k >= 2000 row.
+    val base = spark.range(3000)
+      .select(col("id").as("k"), concat(lit("g"), col("id") % 1000).as("grp"),
+        col("id").cast("double").as("v"))
+    val v0 = SnapshotTable.upsert(spark, root, base, Seq("k"))
+    val mv0 = spec.partial(SnapshotTable.read(spark, root, Some(v0)))
+    // 100 max holders go; their groups survive with two rows each.
+    val v1 = SnapshotTable.delete(spark, root, col("k") >= 2000 && col("k") % 10 === 0)
+    val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v0, Some(v1))
+    val viaLiteral = rows(
+      spec.combineDelta(spark, root, mv0, adds, removes, maxLiteralKeys = 100000))
+    val viaSemiJoin = rows(
+      spec.combineDelta(spark, root, mv0, adds, removes, maxLiteralKeys = 4))
+    assert(viaLiteral == viaSemiJoin,
+      "the recompute restriction paths must be row-identical")
+    val full = rows(spec.partial(SnapshotTable.read(spark, root)))
+    assert(viaLiteral == full)
+    assert(full.find(_._1.contains("g0")).get._6.contains(1000.0),
+      "a vacated max must recompute to the runner-up")
+  }
+
+  /** One retraction-rule case: `change` commits DML on a fresh copy of
+    * `base` (k, grp, v). The refresh over that commit, through both
+    * combineDelta and the change-feed fold, equals a full recompute. */
+  private def ruleCase(name: String, base: Seq[(Long, Option[String], Option[Double])])(
+      change: String => Long): Unit = {
+    val root = s"${tmpDir()}/t"
+    val v0 = SnapshotTable.upsert(spark, root, base.toDF("k", "grp", "v"), Seq("k"))
+    val mv0 = spec.partial(SnapshotTable.read(spark, root, Some(v0)))
+    val v1 = change(root)
+    val full = rows(spec.partial(SnapshotTable.read(spark, root)))
+    val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v0, Some(v1))
+    val got = rows(spec.combineDelta(spark, root, mv0, adds, removes))
+    assert(got == full, s"$name: combineDelta $got != recompute $full")
+    val feed = SnapshotTable.changesFeed(spark, root, v0, v1,
+      SnapshotTable.read(spark, root, Some(v0)).schema)
+    val (viaFeed, end) = spec.combineFeed(spark, root, mv0, feed)
+    assert(rows(viaFeed) == full, s"$name: combineFeed ${rows(viaFeed)} != recompute $full")
+    assert(end.contains(v1), s"$name: feed end version $end, want $v1")
+  }
+
+  private val abc = Seq[(Long, Option[String], Option[Double])](
+    (1L, Some("a"), Some(1.0)), (2L, Some("a"), Some(5.0)), (3L, Some("a"), Some(9.0)),
+    (4L, Some("b"), Some(2.0)), (5L, Some("b"), Some(8.0)))
+
+  test("min/max retraction rule: each case equals a full recompute") {
+    ruleCase("max holder deleted", abc)(SnapshotTable.delete(spark, _, col("k") === 3L))
+    ruleCase("a tie on the max loses one holder",
+      abc :+ ((6L, Some("a"), Some(9.0))))(SnapshotTable.delete(spark, _, col("k") === 3L))
+    ruleCase("an update lowers a max", abc)(
+      SnapshotTable.update(spark, _, col("k") === 3L, Map("v" -> lit(3.0))))
+    ruleCase("an update raises a min", abc)(
+      SnapshotTable.update(spark, _, col("k") === 1L, Map("v" -> lit(7.0))))
+    ruleCase("an update keeps a min holder's value", abc)(
+      SnapshotTable.update(spark, _, col("k") === 1L, Map("grp" -> lit("a"))))
+    // c loses its min holder beside a NULL, b loses a NULL row, d holds
+    // only NULLs and is untouched.
+    ruleCase("NULLs in the aggregated column", abc ++ Seq(
+      (6L, Some("c"), None), (7L, Some("c"), Some(4.0)), (8L, Some("c"), Some(6.0)),
+      (9L, Some("b"), None), (10L, Some("d"), None)))(
+      SnapshotTable.delete(spark, _, col("k").isin(7L, 9L)))
+    ruleCase("a group is emptied", abc)(SnapshotTable.delete(spark, _, col("grp") === "b"))
+    ruleCase("a group is new", abc)(r => SnapshotTable.upsert(spark, r,
+      Seq((9L, Some("z"), Some(3.0)), (10L, Some("z"), None)).toDF("k", "grp", "v"), Seq("k")))
+  }
+
+  test("a batch spanning commits: an add removed again later never keeps the extreme") {
+    val root = s"${tmpDir()}/t"
+    val v0 = SnapshotTable.upsert(spark, root,
+      Seq((1L, "a", 5.0), (2L, "a", 4.0)).toDF("k", "grp", "v"), Seq("k"))
+    val mv0 = spec.partial(SnapshotTable.read(spark, root, Some(v0)))
+    // k=1 passes through 3.0 (below the old min 4.0) and ends at 7.0.
+    SnapshotTable.update(spark, root, col("k") === 1L, Map("v" -> lit(3.0)))
+    val v2 = SnapshotTable.update(spark, root, col("k") === 1L, Map("v" -> lit(7.0)))
+    val full = rows(spec.partial(SnapshotTable.read(spark, root)))
+    assert(full.head._5.contains(4.0))
+    val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v0, Some(v2))
+    assert(rows(spec.combineDelta(spark, root, mv0, adds, removes)) == full)
+    val feed = SnapshotTable.changesFeed(spark, root, v0, v2,
+      SnapshotTable.read(spark, root, Some(v0)).schema)
+    assert(rows(spec.combineFeed(spark, root, mv0, feed)._1) == full)
+  }
+
+  test("a refresh that leaves every extreme holder in place never opens the base") {
+    val root = s"${tmpDir()}/t"
+    val absent = s"${tmpDir()}/no-such-table"
+    val v0 = SnapshotTable.upsert(spark, root, abc.toDF("k", "grp", "v"), Seq("k"))
+    val mv0 = spec.partial(SnapshotTable.read(spark, root, Some(v0)))
+    // max only moves forward (k=2 overtakes 9.0), the min holders stay.
+    val v1 = SnapshotTable.update(spark, root, col("k") === 2L, Map("v" -> lit(12.0)))
+    val full = rows(spec.partial(SnapshotTable.read(spark, root)))
+    val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v0, Some(v1))
+    assert(rows(spec.combineDelta(spark, absent, mv0, adds, removes)) == full)
+
+    // The ticket-sync shape over one commit: an update rewrites the min
+    // holder with the same `created` and moves `updated` forward.
+    val ticketSpec = MvSpec(Seq("grp"), Seq(MvAgg.Count("cnt"),
+      MvAgg.Min("created", "min_created"), MvAgg.Max("updated", "max_updated")))
+    val troot = s"${tmpDir()}/tickets"
+    val t0 = SnapshotTable.upsert(spark, troot,
+      Seq((1L, "a", 10L, 100L), (2L, "a", 20L, 200L), (3L, "b", 30L, 300L))
+        .toDF("k", "grp", "created", "updated"), Seq("k"))
+    val tv0 = ticketSpec.partial(SnapshotTable.read(spark, troot, Some(t0)))
+    val t1 = SnapshotTable.upsert(spark, troot,
+      Seq((1L, "a", 10L, 150L), (3L, "b", 30L, 400L)).toDF("k", "grp", "created", "updated"),
+      Seq("k"))
+    val feed = SnapshotTable.changesFeed(spark, troot, t0, t1,
+      SnapshotTable.read(spark, troot, Some(t0)).schema)
+    val (got, end) = ticketSpec.combineFeed(spark, absent, tv0, feed)
+    def tickets(df: DataFrame) = ticketSpec.finish(df).collect().map(_.toString).toSet
+    assert(tickets(got) == tickets(ticketSpec.partial(SnapshotTable.read(spark, troot))))
+    assert(end.contains(t1))
+  }
+
   test("insert-only combine: null keys merge, new groups appear, sums stay exact") {
     val mv0 = spec.partial(Seq(
       (Some("a"), Some(1.5)), (None, Some(2.5))).toDF("grp", "v"))

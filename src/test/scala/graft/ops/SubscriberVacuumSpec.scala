@@ -67,6 +67,32 @@ class SubscriberVacuumSpec extends SparkSpec {
     assert(SnapshotTable.subscriberWatermark(spark, root).isEmpty)
   }
 
+  test("an unreadable watermark is refused by name; register writes via tmp + rename") {
+    val root = s"${tmpDir()}/t"
+    seed(root, 3) // versions 0..2
+    SnapshotTable.registerSubscriber(spark, root, "good", 1L)
+    SnapshotTable.registerSubscriber(spark, root, "good", 2L)
+    assert(SnapshotTable.subscriberWatermark(spark, root).contains(2L))
+    val leftovers = new java.io.File(root).listFiles().map(_.getName).filter(_.endsWith(".tmp"))
+    assert(leftovers.isEmpty, s"the tmp file must be renamed away: ${leftovers.toSeq}")
+
+    // A crash of the old in-place write left an empty file behind.
+    val planted = new java.io.File(root, "_subscribers/crashed")
+    java.nio.file.Files.write(planted.toPath, Array.emptyByteArray)
+    for (op <- Seq[() => Any](
+        () => SnapshotTable.subscriberWatermark(spark, root),
+        () => SnapshotTable.vacuum(spark, root, keep = 1),
+        () => SnapshotTable.registerSubscriber(spark, root, "crashed", 2L))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains(planted.getName) &&
+        e.getMessage.contains("_subscribers") && e.getMessage.contains("unreadable"),
+        e.getMessage)
+    }
+    assert(versionsOn(root) == Seq(0L, 1L, 2L), "a refused vacuum deletes nothing")
+    SnapshotTable.unregisterSubscriber(spark, root, "crashed")
+    assert(SnapshotTable.subscriberWatermark(spark, root).contains(2L))
+  }
+
   test("age-based vacuum inherits the watermark clamp") {
     val root = s"${tmpDir()}/t"
     seed(root, 4) // versions 0..3
