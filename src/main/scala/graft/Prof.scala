@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Ad-hoc profiling main (never part of the driver contract).
   *
@@ -10,17 +8,14 @@ import org.apache.spark.sql.functions._
   *     multi-statement lineage (DML, streaming twins) shows WHERE its wall
   *     time goes — the spark.ui is off in this sandbox, this is the
   *     equivalent of the Jobs tab (optimization guide §1.5/§7.1).
-  *
-  *   runMain graft.Prof              — legacy stage-by-stage minhash profile.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    if (args.isEmpty) {
+      System.err.println("usage: graft.Prof q1 q2 ...")
+      return
+    }
+    val spark = Plans.session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     // Per-job accounting: description + wall duration + task count. Spark
@@ -84,25 +79,12 @@ object Prof {
           println(f"  GRP $sec%7.3f s ($n%2d jobs)  $d")
         }
     }
-    import graft.ext.{Dedup, TextAnalysis}
     val docs = Tables(spark, dir, "documents")
     time("warmup")(docs.write.format("noop").mode("overwrite").save())
-    if (args.nonEmpty) { // time the named inventory queries and exit
-      args.foreach { name =>
-        time(name)(SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save())
-      }
-      spark.stop(); return
+    args.foreach { name =>
+      time(name)(SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
     }
-    val toks = docs.withColumn("toks", TextAnalysis.tokens(col("text")))
-    time("tokens")(toks.write.format("noop").mode("overwrite").save())
-    val sh = toks.filter(size(col("toks")) >= 3).withColumn("shingles", expr(Dedup.shingleExpr))
-    time("shingles")(sh.write.format("noop").mode("overwrite").save())
-    val shash = sh.withColumn("shash", expr(Dedup.shingleHashExpr)).select("doc_id","shash")
-    time("shash")(shash.write.format("noop").mode("overwrite").save())
-    val sig = shash.withColumn("sig", expr(Dedup.minhashSig(32))).select("doc_id","sig")
-    time("sig32")(sig.write.format("noop").mode("overwrite").save())
-    time("full_query")(SparkEntry.queries("x_dedup_minhash_lsh")(spark, dir).write.format("noop").mode("overwrite").save())
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale rehearsal (dev tool, like Prof/Explain): runs the dedup tier on a
+/** Scale rehearsal (dev tool, like Prof/Plans): runs the dedup tier on a
   * synthesized corpus ~21× sf0.1 — 100k docs in duplicate groups of 20
   * (15 exact copies + 5 near-dup perturbations each) PLUS a 5k-copy
   * boilerplate group that collides into one LSH bucket per band, far past
@@ -1628,7 +1628,8 @@ object ScaleRehearsal {
       val src = spark.range(10000000L, 10002000L).selectExpr("id AS k",
         "CAST(1.00 AS DECIMAL(18,2)) AS price", "'M' AS st")
       val (_, mWall) = timed(SnapshotTable.mergeInto(spark, srcRoot, src,
-        Seq("k"), matchedUpdate = Some(None), notMatchedInsert = Some(None)))
+        Seq("k"), matched = Seq(graft.ops.MergeInto.UpdateClause(None, None)),
+        notMatched = Seq(graft.ops.MergeInto.InsertClause(None, None))))
       appender.join()
       val losses = SnapshotTable.casLosses.get() - lossesBefore
       val rebased = SnapshotTable.rebases.get() - rebasesBefore

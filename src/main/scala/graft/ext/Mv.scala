@@ -143,8 +143,10 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
     joined.select((keys.map(col) ++ states.map { case (c, kind) =>
       val dt = mv.schema(c).dataType
       kind match {
+        // NULL only when both sides are NULL: a Sum over no non-null
+        // value stays NULL, as a full recompute reads it.
         case "add" =>
-          (coalesce(col(c), lit(0)) + coalesce(col(s"__d_$c"), lit(0)))
+          coalesce(col(c) + col(s"__d_$c"), col(c), col(s"__d_$c"))
             .cast(dt).as(c)
         case "min" => least(col(c), col(s"__d_$c")).as(c)
         case _ => greatest(col(c), col(s"__d_$c")).as(c)

@@ -107,7 +107,7 @@ object CheckpointIO {
     * pruning fine-grained (~6-8k sorted entries per group at typical
     * entry width; 1M entries ≈ 150+ groups, a point probe decodes 1-2).
     * Full-decode overhead from extra groups is noise at metadata scale. */
-  private[graft] var rowGroupBytes: Long = 2L << 20
+  private[graft] val rowGroupBytes: Long = 2L << 20
 
   /** Hard row-count cap per group: the byte-based check above only fires
     * every ~100 buffered records (parquet's adaptive size check), so at

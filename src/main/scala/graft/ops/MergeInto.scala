@@ -38,94 +38,77 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * `s` (e.g. `col("s.price") > col("t.price")`).
   *
   * Scale shape: one shuffle join on the keys — when the source is a small
-  * delta against a huge target AQE broadcasts it; no driver-side state. The
-  * equivalent imperative pair (`Upsert.merge` = anti-join + union) remains
-  * the hot-path implementation for the plain upsert; this builder exists for
-  * the conditional update/delete/insert forms SQL MERGE can express and the
-  * anti+union shape cannot. Property-pinned equivalent to `Upsert.merge` on
-  * the unconditional update+insert case (MergeIntoSpec).
+  * delta against a huge target AQE broadcasts it; no driver-side state.
+  * The table format's one MERGE ([[SnapshotTable.mergeInto]], and the
+  * plain upsert [[SnapshotTable.upsert]] through it) lowers onto this
+  * builder. `Upsert.merge` (anti-join + union) stays for the parquet-file
+  * upsert outside the table format and as the reference the
+  * unconditional update+insert case is property-pinned against
+  * (MergeIntoSpec).
+  *
+  * Arms live in three ordered chains, one per clause family: `matched`
+  * and `bySource` take [[MergeInto.UpdateClause]]/[[MergeInto.DeleteClause]],
+  * `notMatched` takes [[MergeInto.InsertClause]]. The builders append to
+  * them in call order.
   */
 case class MergeInto(
     target: DataFrame,
     source: DataFrame,
     keys: Seq[String] = Nil,
-    matchedUpdate: Option[Option[Column]] = None,
-    matchedDelete: Option[Column] = None,
-    notMatchedInsert: Option[Option[Column]] = None,
-    matchedSet: Option[Map[String, Column]] = None,
-    insertValues: Option[Map[String, Column]] = None,
-    bySourceDelete: Option[Option[Column]] = None,
-    bySourceUpdate: Option[(Option[Column], Map[String, Column])] = None,
-    matchedChain: Seq[MergeInto.Clause] = Nil,
-    insertChain: Seq[MergeInto.InsertClause] = Nil,
-    bySourceChain: Seq[MergeInto.Clause] = Nil) {
+    matched: Seq[MergeInto.Clause] = Nil,
+    notMatched: Seq[MergeInto.InsertClause] = Nil,
+    bySource: Seq[MergeInto.Clause] = Nil) {
   import MergeInto.{Clause, DeleteClause, InsertClause, UpdateClause}
 
   def on(keyCols: String*): MergeInto = copy(keys = keyCols)
 
   // Builders APPEND to the ordered chains (first-match-wins, exactly the
-  // SQL clause order they were called in); the plain one-arm-per-family
-  // fields remain for direct construction and normalize onto the chains.
+  // SQL clause order they were called in).
 
   def whenMatchedUpdateAll(condition: Option[Column] = None): MergeInto =
-    copy(matchedChain = matchedChain :+ UpdateClause(condition, None))
+    copy(matched = matched :+ UpdateClause(condition, None))
 
   /** Per-column `WHEN MATCHED ... UPDATE SET col = expr, ...`: unassigned
     * columns keep the target's value. Expressions may reference `t.`/`s.`. */
   def whenMatchedUpdate(set: Map[String, Column],
                         condition: Option[Column] = None): MergeInto =
-    copy(matchedChain = matchedChain :+ UpdateClause(condition, Some(set)))
+    copy(matched = matched :+ UpdateClause(condition, Some(set)))
 
   def whenMatchedDelete(condition: Column): MergeInto =
-    copy(matchedChain = matchedChain :+ DeleteClause(Some(condition)))
+    copy(matched = matched :+ DeleteClause(Some(condition)))
 
   def whenNotMatchedInsertAll(condition: Option[Column] = None): MergeInto =
-    copy(insertChain = insertChain :+ InsertClause(condition, None))
+    copy(notMatched = notMatched :+ InsertClause(condition, None))
 
   /** Explicit-column `WHEN NOT MATCHED ... INSERT (cols) VALUES (exprs)`:
     * unlisted columns insert NULL. */
   def whenNotMatchedInsert(values: Map[String, Column],
                            condition: Option[Column] = None): MergeInto =
-    copy(insertChain = insertChain :+ InsertClause(condition, Some(values)))
+    copy(notMatched = notMatched :+ InsertClause(condition, Some(values)))
 
   def whenNotMatchedBySourceDelete(condition: Option[Column] = None): MergeInto =
-    copy(bySourceChain = bySourceChain :+ DeleteClause(condition))
+    copy(bySource = bySource :+ DeleteClause(condition))
 
   def whenNotMatchedBySourceUpdate(set: Map[String, Column],
                                    condition: Option[Column] = None): MergeInto =
-    copy(bySourceChain = bySourceChain :+ UpdateClause(condition, Some(set)))
-
-  /** The normalized clause chains: explicit chains win; otherwise the
-    * one-arm-per-family fields fold in, delete BEFORE update (the legacy
-    * contract every existing caller encodes). */
-  private[ops] lazy val mChain: Seq[Clause] =
-    if (matchedChain.nonEmpty) matchedChain
-    else matchedDelete.map(c => DeleteClause(Some(c))).toSeq ++
-      matchedUpdate.map(c => UpdateClause(c, matchedSet)).toSeq
-  private[ops] lazy val iChain: Seq[InsertClause] =
-    if (insertChain.nonEmpty) insertChain
-    else notMatchedInsert.map(c => InsertClause(c, insertValues)).toSeq
-  private[ops] lazy val bChain: Seq[Clause] =
-    if (bySourceChain.nonEmpty) bySourceChain
-    else bySourceDelete.map(c => DeleteClause(c)).toSeq ++
-      bySourceUpdate.map(u => UpdateClause(u._1, Some(u._2))).toSeq
+    copy(bySource = bySource :+ UpdateClause(condition, Some(set)))
 
   /** Does an arm take WHOLE rows from the source (`UPDATE SET *` /
     * `INSERT *`)? Only then must the source carry every target column —
     * a delete-only or per-column merge needs just the keys (how the
     * IN-subquery DML lowering rides this builder). */
   private[ops] def needsFullSource: Boolean =
-    mChain.exists { case UpdateClause(_, None) => true; case _ => false } ||
-      iChain.exists(_.values.isEmpty)
+    matched.exists { case UpdateClause(_, None) => true; case _ => false } ||
+      notMatched.exists(_.values.isEmpty)
 
   /** True when every arm is a DELETE (no update, no insert): the merge can
     * only REMOVE rows, so every surviving value — cluster keys included —
     * stays byte-identical and the rewrite preserves the table's layout
     * (the `preserveLayout` commit fast path; optimization r15). */
   private[ops] def deleteOnly: Boolean =
-    iChain.isEmpty &&
-      mChain.forall { case _: DeleteClause => true; case _ => false } &&
-      bChain.forall { case _: DeleteClause => true; case _ => false }
+    notMatched.isEmpty &&
+      matched.forall { case _: DeleteClause => true; case _ => false } &&
+      bySource.forall { case _: DeleteClause => true; case _ => false }
 
   /** Resolve an assignment map's keys against the target's columns
     * (case-insensitive, like every schema-resolution path here); a typo'd
@@ -159,17 +142,17 @@ case class MergeInto(
       val missing = keys.filterNot(source.columns.contains)
       require(missing.isEmpty, s"source lacks merge keys: ${missing.mkString(",")}")
     }
-    bChain.foreach {
+    bySource.foreach {
       case UpdateClause(_, None) => throw new IllegalArgumentException(
         "BY SOURCE UPDATE needs explicit assignments (there is no source row to take * from)")
       case _ => ()
     }
-    val mSets = mChain.map {
+    val mSets = matched.map {
       case UpdateClause(_, set) => set.map(resolvedSet(_, "whenMatchedUpdate"))
       case _ => None
     }
-    val iVals = iChain.map(_.values.map(resolvedSet(_, "whenNotMatchedInsert")))
-    val bSets = bChain.map {
+    val iVals = notMatched.map(_.values.map(resolvedSet(_, "whenNotMatchedInsert")))
+    val bSets = bySource.map {
       case UpdateClause(_, set) => set.map(resolvedSet(_, "whenNotMatchedBySourceUpdate"))
       case _ => None
     }
@@ -178,7 +161,7 @@ case class MergeInto(
     val t = target.withColumn("__t", lit(true)).alias("t")
     val s = source.withColumn("__s", lit(true)).alias("s")
     val joinCond = keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
-    val matched = col("t.__t").isNotNull && col("s.__s").isNotNull
+    val both = col("t.__t").isNotNull && col("s.__s").isNotNull
     val tOnly = col("s.__s").isNull
     val sOnly = col("t.__t").isNull
     // SQL MERGE clause conditions: NULL = not satisfied (the coalesce
@@ -189,9 +172,9 @@ case class MergeInto(
       when(gate, conds.zipWithIndex.foldRight(lit(0)) { case ((c, i), acc) =>
         when(sat(c.getOrElse(lit(true))), lit(i + 1)).otherwise(acc)
       }).otherwise(lit(0))
-    val mDec = decide(matched, mChain.map(_.condition))
-    val iDec = decide(sOnly, iChain.map(_.condition))
-    val bDec = decide(tOnly, bChain.map(_.condition))
+    val mDec = decide(both, matched.map(_.condition))
+    val iDec = decide(sOnly, notMatched.map(_.condition))
+    val bDec = decide(tOnly, bySource.map(_.condition))
     def fires(dec: Column, idxs: Seq[Int]): Column =
       idxs.map(i => dec === lit(i)).reduceOption(_ || _).getOrElse(lit(false))
     def idxOf(chain: Seq[Clause], deletes: Boolean): Seq[Int] =
@@ -199,13 +182,13 @@ case class MergeInto(
         case (_: DeleteClause, i) if deletes => i + 1
         case (_: UpdateClause, i) if !deletes => i + 1
       }
-    val mDeletes = fires(mDec, idxOf(mChain, deletes = true))
-    val bDeletes = fires(bDec, idxOf(bChain, deletes = true))
-    val mUpdates = fires(mDec, idxOf(mChain, deletes = false))
-    val bUpdates = fires(bDec, idxOf(bChain, deletes = false))
-    val keep = (tOnly && !bDeletes) || (matched && !mDeletes) || (iDec =!= 0)
+    val mDeletes = fires(mDec, idxOf(matched, deletes = true))
+    val bDeletes = fires(bDec, idxOf(bySource, deletes = true))
+    val mUpdates = fires(mDec, idxOf(matched, deletes = false))
+    val bUpdates = fires(bDec, idxOf(bySource, deletes = false))
+    val keep = (tOnly && !bDeletes) || (both && !mDeletes) || (iDec =!= 0)
     val changedAdd = (iDec =!= 0) || mUpdates || bUpdates
-    val removePre = (matched && mDec =!= 0) || (tOnly && bDec =!= 0)
+    val removePre = (both && mDec =!= 0) || (tOnly && bDec =!= 0)
     // Per-column post-image: the FIRING clause decides each column's
     // value — star arms take the source column, per-column arms take the
     // assigned expression or keep the target (matched/by-source) / NULL
@@ -215,16 +198,16 @@ case class MergeInto(
     // literally false).
     val projected = target.schema.fields.map { f =>
       val c = f.name
-      val insBranches = iChain.zipWithIndex.map { case (_, i) =>
+      val insBranches = notMatched.zipWithIndex.map { case (_, i) =>
         (iDec === lit(i + 1),
           iVals(i).map(_.getOrElse(c, lit(null).cast(f.dataType)))
             .getOrElse(col(s"s.$c")))
       }
-      val updBranches = mChain.zipWithIndex.collect { case (_: UpdateClause, j) =>
+      val updBranches = matched.zipWithIndex.collect { case (_: UpdateClause, j) =>
         (mDec === lit(j + 1),
           mSets(j).map(_.getOrElse(c, col(s"t.$c"))).getOrElse(col(s"s.$c")))
       }
-      val bysBranches = bChain.zipWithIndex.collect { case (_: UpdateClause, k) =>
+      val bysBranches = bySource.zipWithIndex.collect { case (_: UpdateClause, k) =>
         (bDec === lit(k + 1), bSets(k).get.getOrElse(c, col(s"t.$c")))
       }
       (insBranches ++ updBranches ++ bysBranches)
@@ -274,10 +257,10 @@ case class MergeInto(
     val cols = target.columns.toSeq
     val pre = cols.map(c => col(s"t.$c").as(s"__pre_$c"))
     val post = projected.zip(cols).map { case (p, c) => p.as(s"__post_$c") }
-    val matched = col("t.__t").isNotNull && col("s.__s").isNotNull
+    val both = col("t.__t").isNotNull && col("s.__s").isNotNull
     val ck = joined.select((pre ++ post
       :+ keep.as("__keep") :+ changedAdd.as("__cadd")
-      :+ removePre.as("__crm") :+ matched.as("__cm")): _*)
+      :+ removePre.as("__crm") :+ both.as("__cm")): _*)
       .localCheckpoint()
     MergeInto.Materialized(ck, cols)
   }
@@ -312,11 +295,11 @@ object MergeInto {
     def removes: DataFrame = ck.filter(ck("__crm")).select(proj("__pre_"): _*)
     /** SQL MERGE cardinality rule probe: key tuples of MATCHED rows that
       * appear more than once — i.e. several source rows hit one target
-      * row. Returns at most one offending key row. */
+      * row. Returns at most one offending key tuple. */
     def duplicateMatchedKeys(keys: Seq[String]): Array[org.apache.spark.sql.Row] =
       ck.filter(ck("__cm"))
         .groupBy(keys.map(k => ck(s"__pre_$k").as(k)): _*).count()
-        .filter(col("count") > 1).limit(1).collect()
+        .filter(col("count") > 1).drop("count").limit(1).collect()
     /** Release the pinned checkpoint partitions. */
     def free(): Unit = graft.ops.Checkpoints.free(ck)
   }
@@ -362,9 +345,9 @@ object MergeInto {
     // r10 #5 — the per-run bootstrap commit was pure bench setup).
     val v0 = SeededLineage.seed(s, root, tag)(SnapshotTable.commit(s, root, tgt))
     val v1 = SnapshotTable.mergeInto(s, root, src, Seq("o_orderkey"),
-      matchedUpdate = Some(None),
-      matchedDelete = Some(col("s.st") === "F"),
-      notMatchedInsert = Some(Some(col("s.price") > 150000)))
+      matched = Seq(DeleteClause(Some(col("s.st") === "F")),
+        UpdateClause(None, None)),
+      notMatched = Seq(InsertClause(Some(col("s.price") > 150000), None)))
     val out = SnapshotTable.read(s, root, Some(v1))
       .select(col("o_orderkey"), col("price").cast("double").as("price"),
         col("st"))
@@ -397,9 +380,9 @@ object MergeInto {
     val v0 = SeededLineage.seed(s, root, tag)(SnapshotTable.commit(s, root, tgt))
     val mv0 = spec.partial(SnapshotTable.read(s, root, Some(v0)))
     val v1 = SnapshotTable.mergeInto(s, root, src, Seq("o_orderkey"),
-      matchedUpdate = Some(None),
-      matchedDelete = Some(col("s.st") === "F"),
-      notMatchedInsert = Some(Some(col("s.price") > 150000)))
+      matched = Seq(DeleteClause(Some(col("s.st") === "F")),
+        UpdateClause(None, None)),
+      notMatched = Seq(InsertClause(Some(col("s.price") > 150000), None)))
     val (adds, removes) = SnapshotTable.changesDelta(s, root, v0, Some(v1))
       .getOrElse(throw new IllegalStateException(
         s"merge commit $v0 -> $v1 at $root lost its CDC"))

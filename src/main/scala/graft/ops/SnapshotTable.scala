@@ -71,8 +71,8 @@ object SnapshotTable {
       removedPaths: Set[String],
       predicate: () => Option[org.apache.spark.sql.catalyst.expressions.Expression])
 
-  /** Null-safe key-membership proof predicate for a keyed rewrite's
-    * rebase (merge/upsert): `key IN (distinct source keys) [OR key IS
+  /** Null-safe key-membership proof predicate for MERGE's rebase
+    * (upsert included): `key IN (distinct source keys) [OR key IS
     * NULL]` over the FIRST key column — a per-column over-approximation
     * of the composite key (a file that cannot match key1 cannot match the
     * tuple), capped at 4096 distinct keys (beyond it, give up — the
@@ -147,6 +147,10 @@ object SnapshotTable {
 
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A path without scheme or authority: how manifest entries, probed
+    * file columns and rebase sets compare files. */
+  private def norm(p: String): String = new Path(p).toUri.getPath
 
   /** Highest committed version, if any. */
   def currentVersion(spark: SparkSession, root: String): Option[Long] = {
@@ -1827,7 +1831,6 @@ object SnapshotTable {
     // winner-side divergence it could mask (rename, evolution, drop) is
     // separately refused by the sameMeta check below.
     rebase.filter(_ => mapping.isEmpty).foreach { spec =>
-      def norm(p: String): String = new Path(p).toUri.getPath
       var tries = 0
       var giveUp = false
       while (tries < 5 && !giveUp) {
@@ -2019,9 +2022,8 @@ object SnapshotTable {
   private def cloneMarker(root: String): Path = new Path(root, "_clone_source")
 
   private def cloneSubscriberId(targetRoot: String): String = {
-    val norm = new Path(targetRoot).toUri.getPath
     val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(norm.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+      .digest(norm(targetRoot).getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     s"clone-${new Path(targetRoot).getName}-$h"
   }
 
@@ -2034,9 +2036,8 @@ object SnapshotTable {
     * version (always 0). */
   def cloneShallow(spark: SparkSession, sourceRoot: String, targetRoot: String,
                    asOf: Option[Long] = None): Long = {
-    val srcNorm = new Path(sourceRoot).toUri.getPath
-    val dstNorm = new Path(targetRoot).toUri.getPath
-    require(srcNorm != dstNorm, s"cloneShallow of $sourceRoot onto itself")
+    val srcNorm = norm(sourceRoot)
+    require(srcNorm != norm(targetRoot), s"cloneShallow of $sourceRoot onto itself")
     require(currentVersion(spark, targetRoot).isEmpty,
       s"cloneShallow target $targetRoot already exists")
     val v = asOf.orElse(currentVersion(spark, sourceRoot)).getOrElse(
@@ -2132,7 +2133,7 @@ object SnapshotTable {
           val fs = fsOf(spark, root)
           val stillShared = resolvedAt(fs, root, v).stats
             .filter(e => prefixes.exists(
-              new Path(e.path).toUri.getPath.startsWith(_)))
+              norm(e.path).startsWith(_)))
           require(stillShared.isEmpty,
             s"detachClone: ${stillShared.size} file(s) of $root still live under " +
               s"${pinned.mkString(", ")} — rewrite to divergence first " +
@@ -2398,314 +2399,322 @@ object SnapshotTable {
     }
 
   /** MERGE-upsert as a new snapshot: bootstrap on first commit (S7), else
-    * source-wins merge against the current version. Old snapshots stay
-    * readable until vacuum. After the commit, auto-compacts when the new
-    * version exceeds `maxFiles` files — without this, N tiny incremental
-    * upserts accrete N × shuffle-partitions small files and scan planning
-    * degrades (the classic streaming-ingest small-file problem).
+    * the [[mergeInto]] body with one matched-update arm and one insert arm
+    * under schema evolution, in one transaction — file-granular like every
+    * MERGE (only files holding a source key rewrite; a lost CAS rebases
+    * through MERGE's key-membership proof). Auto-compacts past `maxFiles`
+    * files, or N tiny incremental upserts would accrete N small-file
+    * batches (the classic streaming-ingest small-file problem).
     *
-    * Every upsert commit RECORDS ITS ROW-LEVEL CHANGES (VERDICT r8 #2):
-    * `remove` = the pre-image rows of keys present in `source` (pure
-    * inserts contribute nothing), `add` = the post-image rows for those
-    * keys (i.e. `source` after the merge's own source-wins key dedup).
-    * Both sets are source-sized, never table-sized, and they are what lets
-    * an incremental consumer ([[changesDelta]] → MaterializedView) refresh
-    * a derived aggregate over an UPSERTED table without a full reprocess —
-    * the reference's core operation is exactly this MERGE.
+    * Rules:
+    *   - schema evolution is additive and case-insensitive (a source
+    *     shipping 'Price' feeds the declared 'price');
+    *   - a matched key takes the source row WHOLE: a column the source
+    *     lacks reads NULL for that key only — so the arms carry explicit
+    *     per-column maps, not mergeInto's keep-the-target star;
+    *   - the source must be key-unique against the table: two source rows
+    *     for a key the table holds are refused by the SQL MERGE
+    *     cardinality rule, naming the key (`Upsert.latestPerKey` dedups);
+    *   - CDC (VERDICT r8 #2): removes = the matched pre-images, adds = the
+    *     source rows — source-sized, never table-sized, which is what lets
+    *     [[changesDelta]] → MaterializedView refresh an aggregate over an
+    *     UPSERTED table without a full reprocess.
     *
-    * `clusterBy` (optional) range-clusters the committed snapshot on the
-    * given columns (the [[commitClustered]] write shape): per-file bounds
-    * go tight on those columns, so a downstream touched-group recompute
-    * with a group-key predicate prunes to the touched groups' files. */
+    * `clusterBy` range-clusters the bootstrap (the [[commitClustered]]
+    * write shape) and declares the clustering; later MERGE rewrites re-sort
+    * their new files on it, keeping per-file bounds tight for group-key
+    * pruning. A table declaring a different clustering is refused by name. */
   def upsert(spark: SparkSession, root: String, source: DataFrame,
              keys: Seq[String], maxFiles: Int = 64,
              clusterBy: Seq[String] = Nil): Long = {
-    // Serializable read-merge-commit: on a writer-writer conflict the merge
-    // is REDONE against the winner's version (never blind-retried — a lost
-    // update would silently drop the winner's rows). Bounded attempts.
-    def clustered(df: DataFrame): DataFrame =
-      if (clusterBy.isEmpty) df
-      else df.repartitionByRange(32, clusterBy.map(df.col): _*)
-        .sortWithinPartitions(clusterBy.map(df.col): _*)
-    val committed = transact(spark, root, "upsert", ReadAttempts) {
+    import org.apache.spark.sql.functions.{col, lit}
+    val outcome = transact(spark, root, "upsert", ReadAttempts) {
       case None =>
         // Bootstrap: everything is an insert; the CDC add set is the
         // whole source, removes are empty. Target version 0 is PINNED:
         // a concurrent bootstrap must conflict, not stack.
-        commitAt(spark, root, None, clustered(source),
-          cdc = Some((source, source.limit(0))))
-      case base @ Some(b) =>
-        val v = b.version
-        val state = stateOf(b)
-        val cur0 = read(spark, root, Some(v))
-        // Additive schema evolution: align BOTH sides onto the merged
-        // schema (missing columns become typed NULLs) before the merge,
-        // so a source that grew a column upserts without a migration
-        // and a source missing an old column null-fills it for ITS keys
-        // only (unmatched target rows keep their values).
-        val evolved = evolveSchema(cur0.schema, source.schema)
-        val assigned = assignPhysical(cur0.schema, evolved,
-          state.mapping, state.usedPhys)
-        // Case-insensitive resolution, like evolveSchema: a source
-        // shipping 'Price' must FEED the declared 'price' (aliased to
-        // the table's casing), not null-fill it.
-        def align(df: DataFrame): DataFrame = {
-          import org.apache.spark.sql.functions.lit
-          val byLc = df.columns.map(c => lc(c) -> c).toMap
-          df.select(evolved.map(f =>
-            byLc.get(lc(f.name)).map(c => df.col(c).as(f.name))
-              .getOrElse(lit(null).cast(f.dataType).as(f.name))): _*)
-        }
-        val cur = align(cur0)
-        val src = align(source)
-        // Keys under FRESH aliases (the mergeInto pattern): a plain
-        // pass-through select keeps the source's attribute ids, and a
-        // LogicalRDD-leaf source (a streaming sink's micro-batch, a
-        // localCheckpoint) can surface the SAME ids from the merged
-        // checkpoint's output — an unresolvable self-conflict in the
-        // CDC semi-joins below. `===` keeps USING-join null semantics.
-        val srcKeys = src
-          .select(keys.map(k => src(k).as(s"__sk_$k")): _*).distinct()
-        def keyedSemi(df: DataFrame): DataFrame = df.join(srcKeys,
-          keys.map(k => df(k) === srcKeys(s"__sk_$k")).reduce(_ && _),
-          "left_semi")
-        val removed = keyedSemi(cur)
-        val merged = Upsert.merge(cur, src, keys)
-          .localCheckpoint() // cut lineage: the plan must not re-read files vacuum may later drop
-        val added = keyedSemi(merged)
-        // The commit targets base + 1, PINNED to the version this merge
-        // READ (ConcurrencySpec): deriving it at commit time would let a
-        // commit that landed in between be silently erased by this
-        // rewrite instead of raising the CAS conflict the seam's retry
-        // exists to serialize. The whole-table rewrite rebases like
-        // mergeInto's (removedPaths = EVERY base file; the winner's
-        // foreign-keyed new files simply carry beside the rewrite).
-        val baseNorm = b.stats
-          .map(e => new Path(e.path).toUri.getPath).toSet
-        commitAt(spark, root, base, clustered(merged),
-          cdc = Some((added, removed)),
-          tableSchema = Some(evolved), meta = Some(assigned),
-          rebase = Some(RebaseSpec(v, baseNorm,
-            () => keyMembershipPredicate(evolved, src, keys.head))))
+        val laid =
+          if (clusterBy.isEmpty) source
+          else source.repartitionByRange(32, clusterBy.map(source.col): _*)
+            .sortWithinPartitions(clusterBy.map(source.col): _*)
+        Right(commitAt(spark, root, None, laid,
+          cdc = Some((source, source.limit(0))),
+          declareClusterBy = Some(clusterBy).filter(_.nonEmpty)))
+      case Some(base) =>
+        val state = stateOf(base)
+        require(clusterBy.isEmpty || state.clusterBy.isEmpty ||
+            clusterBy.map(lc) == state.clusterBy.map(lc),
+          s"upsert clusterBy (${clusterBy.mkString(", ")}) differs from the " +
+            s"clustering $root declares (${state.clusterBy.mkString(", ")}); " +
+            "recluster the table first")
+        // Source columns under their DECLARED names (a new column keeps
+        // its own); declared columns the source lacks null-fill.
+        val declared = state.schema.fields.map(f => lc(f.name) -> f).toMap
+        val take = source.columns.map { c =>
+          val name = declared.get(lc(c)).fold(c)(_.name)
+          name -> col(s"s.$name")
+        }.toMap
+        val srcLc = source.columns.map(lc).toSet
+        val nulls = state.schema.fields.filterNot(f => srcLc(lc(f.name)))
+          .map(f => f.name -> lit(null).cast(f.dataType)).toMap
+        mergeAt(spark, root, base, source, keys,
+          matched = Seq(MergeInto.UpdateClause(None, Some(take ++ nulls))),
+          notMatched = Seq(MergeInto.InsertClause(None, Some(take))),
+          bySource = Nil, evolve = true)
     }
-    compact(spark, root, maxFiles).getOrElse(committed)
+    compacted(spark, root, maxFiles, outcome)
   }
 
-  /** Table-level conditional MERGE INTO (VERDICT r9 #3): the [[MergeInto]]
-    * clause surface — matched-delete, conditional update, conditional
-    * insert — lowered onto the table as ONE file-granular copy-on-write
-    * commit recording row-level CDC. This completes the reference's MERGE
-    * statement (main.py:349-358, the unconditional form [[upsert]]
-    * already covers) with its SQL-standard conditional arms.
+  /** Table-level conditional MERGE INTO (VERDICT r9 #3) — the table
+    * format's one MERGE: the [[MergeInto]] clause surface lowered onto the
+    * table as ONE file-granular copy-on-write commit recording row-level
+    * CDC. This is the reference's MERGE statement (main.py:349-358) with
+    * its SQL-standard conditional arms; [[upsert]] is its unconditional
+    * update+insert form.
+    *
+    * Arms are three ordered first-match-wins chains, one per clause
+    * family: `matched` (update/delete over rows both sides hold),
+    * `notMatched` (inserts of source-only rows) and `bySource` (the `WHEN
+    * NOT MATCHED BY SOURCE` update/delete over target-only rows). An
+    * update with explicit assignments is a per-column `UPDATE SET`
+    * (unassigned columns keep the target value); an insert with explicit
+    * values lists its columns (unlisted columns NULL).
     *
     * File granularity mirrors [[delete]]/[[update]]: the touched set =
     * every file holding a key present in `source` (a null-safe semi-join
-    * projected to `input_file_name()` — a driver pull of file PATHS,
+    * projected to the scan's file column — a driver pull of file PATHS,
     * O(touched files), and the probe itself file-skips off manifest
     * bounds/blooms on a clustered table); untouched files CARRY by
     * manifest entry, never read. Every key the table shares with the
     * source lives in a touched file BY CONSTRUCTION, so the merge
     * combinator runs over the touched rows alone and "not matched" there
     * means not in the table at all. CDC: removes = pre-images of deleted
-    * and updated matched rows, adds = updated post-images plus inserted
-    * rows — a MERGE is retraction + insertion to a downstream MV, which
-    * is exactly how `MvSpec.combineDelta` consumes it. Auto-compacts past
-    * `maxFiles` like [[upsert]] (the merge is the reference's hot
-    * recurring op; without compaction N merges accrete N small-file
-    * batches).
+    * and updated rows, adds = updated post-images plus inserted rows — a
+    * MERGE is retraction + insertion to a downstream MV, which is exactly
+    * how `MvSpec.combineDelta` consumes it. Auto-compacts past `maxFiles`
+    * (the merge is the reference's hot recurring op; without compaction
+    * N merges accrete N small-file batches).
     *
-    * Generalized arms (round 12): `matchedSet` turns the matched update
-    * into a per-column `UPDATE SET` (unassigned columns keep the target
-    * value); `insertValues` an explicit-column INSERT (unlisted columns
-    * NULL); `bySourceDelete`/`bySourceUpdate` are the `WHEN NOT MATCHED BY
-    * SOURCE` family over target-only rows. BY SOURCE arms widen the
-    * touched-file probe: beside the files holding source keys, every file
-    * holding a target-only row whose by-source CONDITION fires must
-    * rewrite — that probe is the merge's own left-outer join restricted to
-    * the anti side, so an unconditional BY SOURCE arm on a mostly-stale
-    * table legitimately rewrites most files (that IS the semantics), while
-    * a keyed condition (`t.region = 'EU'`) still prunes to the files the
-    * scan's pushed filters select. */
-  def mergeInto(spark: SparkSession, root: String, source0: DataFrame,
+    * BY SOURCE arms widen the touched-file probe: beside the files holding
+    * source keys, every file holding a target-only row whose by-source
+    * CONDITION fires must rewrite — that probe is the merge's own
+    * left-outer join restricted to the anti side, so an unconditional BY
+    * SOURCE arm on a mostly-stale table legitimately rewrites most files
+    * (that IS the semantics), while a keyed condition (`t.region = 'EU'`)
+    * still prunes to the files the scan's pushed filters select. */
+  def mergeInto(spark: SparkSession, root: String, source: DataFrame,
                 keys: Seq[String],
-                matchedUpdate: Option[Option[Column]] = None,
-                matchedDelete: Option[Column] = None,
-                notMatchedInsert: Option[Option[Column]] = None,
-                matchedSet: Option[Map[String, Column]] = None,
-                insertValues: Option[Map[String, Column]] = None,
-                bySourceDelete: Option[Option[Column]] = None,
-                bySourceUpdate: Option[(Option[Column], Map[String, Column])] = None,
+                matched: Seq[MergeInto.Clause] = Nil,
+                notMatched: Seq[MergeInto.InsertClause] = Nil,
+                bySource: Seq[MergeInto.Clause] = Nil,
                 evolve: Boolean = false,
-                maxFiles: Int = 64,
-                matchedChain: Seq[MergeInto.Clause] = Nil,
-                insertChain: Seq[MergeInto.InsertClause] = Nil,
-                bySourceChain: Seq[MergeInto.Clause] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit}
+                maxFiles: Int = 64): Long =
+    compacted(spark, root, maxFiles,
+      transactOn(spark, root, "mergeInto", ReadAttempts)(
+        mergeAt(spark, root, _, source, keys, matched, notMatched, bySource, evolve)))
+
+  /** A MERGE's outcome: Left = nothing to touch (no commit, no
+    * compaction), Right = the committed version, compacted past
+    * `maxFiles`. */
+  private def compacted(spark: SparkSession, root: String, maxFiles: Int,
+                        outcome: Either[Long, Long]): Long = outcome match {
+    case Left(v) => v
+    case Right(committed) => compact(spark, root, maxFiles).getOrElse(committed)
+  }
+
+  /** One MERGE attempt against `base` (the body of [[mergeInto]] and
+    * [[upsert]]): Left(base version) when no row can change, else
+    * Right(the committed version). */
+  private def mergeAt(spark: SparkSession, root: String,
+                      base: SnapshotStats.Resolved, source0: DataFrame,
+                      keys: Seq[String],
+                      matched: Seq[MergeInto.Clause],
+                      notMatched: Seq[MergeInto.InsertClause],
+                      bySource: Seq[MergeInto.Clause],
+                      evolve: Boolean): Either[Long, Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(keys.nonEmpty, "mergeInto needs key columns")
-    def norm(p: String): String = new Path(p).toUri.getPath
-    transactOn(spark, root, "mergeInto", ReadAttempts) { base =>
-      val v = base.version
-      val state = stateOf(base)
-      val cur = read(spark, root, Some(v))
-      val schema0 = state.schema
-      // Identity × MERGE pin (round 14, VERDICT r13 #4): identity
-      // GENERATION lives on the append path only (appendCommit) — a
-      // MERGE INSERT arm cannot generate, and silently writing NULL
-      // under the column is the one unacceptable outcome. The rule,
-      // refused LOUDLY here: GENERATED ALWAYS admits no MERGE INSERT
-      // arm at all; BY DEFAULT requires every insert arm to assign the
-      // column explicitly (star arms assign it iff the source carries
-      // it) — the commit's footer-bounds HWM bump then keeps later
-      // generation above whatever landed. DefaultsSpec pins all three.
-      locally {
-        val idFields = schema0.fields.filter(
-          org.apache.spark.sql.catalyst.util.IdentityColumn.isIdentityColumn)
-        val hasInsert = notMatchedInsert.nonEmpty || insertChain.nonEmpty
-        if (idFields.nonEmpty && hasInsert) idFields.foreach { f =>
-          val allowExplicit =
-            f.metadata.contains("identity.allowExplicitInsert") &&
-              f.metadata.getBoolean("identity.allowExplicitInsert")
-          require(allowExplicit,
-            s"column ${f.name} is GENERATED ALWAYS AS IDENTITY; MERGE " +
-              "INSERT arms cannot generate identity values — use " +
-              "GENERATED BY DEFAULT with explicit values, or append/INSERT")
-          val explicitArms = insertValues.toSeq ++
-            insertChain.flatMap(_.values)
-          val starArms =
-            (if (notMatchedInsert.nonEmpty && insertValues.isEmpty) 1 else 0) +
-              insertChain.count(_.values.isEmpty)
-          val starAssigns = source0.columns.exists(_.equalsIgnoreCase(f.name))
-          require(explicitArms.forall(_.keys.exists(_.equalsIgnoreCase(f.name))) &&
-              (starArms == 0 || starAssigns),
-            s"MERGE INSERT must assign identity column ${f.name} " +
-              "explicitly in every insert arm (GENERATED BY DEFAULT " +
-              "generates only on the append path)")
-        }
-      }
-      // MERGE WITH SCHEMA EVOLUTION (round 12): new source columns join
-      // the declared schema (additive only — evolveSchema refuses
-      // retypes), fresh physical names assigned through the column
-      // mapping like upsert's evolution path. Under evolution a star
-      // arm takes SOURCE columns only and KEEPS target-only columns
-      // (Delta's SET * semantics there) — expressed below by rewriting
-      // the star arms as per-column maps over the source's columns.
-      val (schema, meta) =
-        if (!evolve) (schema0, None)
-        else {
-          val ev = evolveSchema(schema0, source0.schema)
-          (ev, Some(assignPhysical(schema0, ev, state.mapping, state.usedPhys)))
-        }
-      // Source columns land on the DECLARED casing (case-insensitive).
-      val source =
-        if (!evolve) source0
-        else {
-          val byLc = source0.columns.map(c => lc(c) -> c).toMap
-          source0.select(schema.fields.flatMap(f =>
-            byLc.get(lc(f.name)).map(c => source0.col(c).as(f.name))).toIndexedSeq: _*)
-        }
-      val srcStar =
-        if (!evolve) None
-        else Some(source.columns.map(c => c -> col(s"s.$c")).toMap)
-      val mSet = if (evolve && matchedUpdate.nonEmpty && matchedSet.isEmpty)
-        srcStar else matchedSet
-      val iVals = if (evolve && notMatchedInsert.nonEmpty && insertValues.isEmpty)
-        srcStar else insertValues
-      // Under evolution, star clauses inside CHAINS rewrite to
-      // per-column source maps for the same keep-target-only reason.
-      val mChainE = if (!evolve) matchedChain else matchedChain.map {
-        case MergeInto.UpdateClause(c, None) => MergeInto.UpdateClause(c, srcStar)
-        case other => other
-      }
-      val iChainE = if (!evolve) insertChain else insertChain.map {
-        case MergeInto.InsertClause(c, None) => MergeInto.InsertClause(c, srcStar)
-        case other => other
-      }
-      // Null-safe key probe: a NULL source key must mark the files
-      // holding NULL-key rows (the merge's own match is null-safe), or
-      // those rows would survive untouched AND re-insert. SKIPPED when
-      // BOTH the matched AND insert families are empty (an expiry-only
-      // merge): matched rows then cannot change AND nothing can insert,
-      // so "not matched in the touched rows" never needs to mean "not
-      // in the table" — files are touched only by the by-source probe,
-      // and a full-snapshot `WHEN NOT MATCHED BY SOURCE ... DELETE`
-      // sync rewrites the files holding expiring rows, not every file
-      // the snapshot's keys graze (measured 24/24 → file-granular at
-      // the 20M-row rehearsal). With an insert arm the probe is
-      // REQUIRED for dedup: a matched key in an untouched file must
-      // not re-insert.
-      val hasMatchedArms = matchedChain.nonEmpty ||
-        matchedUpdate.nonEmpty || matchedDelete.nonEmpty ||
-        insertChain.nonEmpty || notMatchedInsert.nonEmpty
-      val allE = base.stats
-      // File attribution from `_metadata` at the scan (round 13): the
-      // key-join probe never pruned files statically anyway, and
-      // `input_file_name()` is not reliable past the DV mask join.
-      // Files-less table (CREATE TABLE bootstrap): no rows, no files.
-      val withFile =
-        if (allE.isEmpty)
-          cur.withColumn("__file", lit(null).cast(
-            org.apache.spark.sql.types.StringType))
-        else readEntries(spark, allE, schema0, state.mapping,
-          fileCol = Some("__file"))
-      val touchedMatched =
-        if (!hasMatchedArms) Set.empty[String]
-        else {
-          val srcKeys = source
-            .select(keys.map(k => source(k).as(s"__sk_$k")): _*).distinct()
-          // input_file_name() resolves on the single-source side only,
-          // so it is projected BEFORE the semi-join.
-          withFile.join(srcKeys,
-              keys.map(k => withFile(k) <=> srcKeys(s"__sk_$k")).reduce(_ && _),
-              "left_semi")
-            .select(col("__file"))
-            .distinct().collect().map(r => norm(r.getString(0))).toSet
-        }
-      // BY SOURCE probe: target-only rows whose arm condition fires mark
-      // their files too. Same t/s aliasing as the merge's own join, so
-      // the CONDITION evaluates exactly as the combinator will — a file
-      // is carried only when provably no row in it can change.
-      val bChainAll: Seq[MergeInto.Clause] =
-        if (bySourceChain.nonEmpty) bySourceChain
-        else bySourceDelete.map(c => MergeInto.DeleteClause(c)).toSeq ++
-          bySourceUpdate.map(u => MergeInto.UpdateClause(u._1, Some(u._2))).toSeq
-      val touchedBySource =
-        if (bChainAll.isEmpty) Set.empty[String]
-        else {
-          def sat(c: Column): Column = coalesce(c, lit(false))
-          // A file rewrites when ANY by-source clause can fire for one
-          // of its target-only rows (which clause wins is the
-          // combinator's business; the probe needs the union).
-          val fires = bChainAll
-            .map(cl => sat(cl.condition.getOrElse(lit(true)))).reduce(_ || _)
-          val t = withFile.withColumn("__t", lit(true)).alias("t")
-          val sMarked = source.withColumn("__s", lit(true)).alias("s")
-          t.join(sMarked,
-              keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
-              "left_outer")
-            .filter(col("s.__s").isNull && fires)
-            .select(col("t.__file"))
-            .distinct().collect().map(r => norm(r.getString(0))).toSet
-        }
-      val touched = touchedMatched ++ touchedBySource
-      // Evolution with nothing to touch still lands the widened schema
-      // (a metadata-weight commit carrying every file).
-      if (touched.isEmpty && notMatchedInsert.isEmpty && insertChain.isEmpty &&
-          !(evolve && schema != schema0)) Left(v)
+    val v = base.version
+    val state = stateOf(base)
+    val cur = read(spark, root, Some(v))
+    val schema0 = state.schema
+    // Identity × MERGE pin (round 14, VERDICT r13 #4): identity
+    // GENERATION lives on the append path only (appendCommit) — a
+    // MERGE INSERT arm cannot generate, and silently writing NULL
+    // under the column is the one unacceptable outcome. The rule,
+    // refused LOUDLY here: GENERATED ALWAYS admits no MERGE INSERT
+    // arm at all; BY DEFAULT requires every insert arm to assign the
+    // column explicitly (star arms assign it iff the source carries
+    // it) — the commit's footer-bounds HWM bump then keeps later
+    // generation above whatever landed. DefaultsSpec pins all three.
+    if (notMatched.nonEmpty) schema0.fields.filter(
+        org.apache.spark.sql.catalyst.util.IdentityColumn.isIdentityColumn).foreach { f =>
+      val allowExplicit =
+        f.metadata.contains("identity.allowExplicitInsert") &&
+          f.metadata.getBoolean("identity.allowExplicitInsert")
+      require(allowExplicit,
+        s"column ${f.name} is GENERATED ALWAYS AS IDENTITY; MERGE " +
+          "INSERT arms cannot generate identity values — use " +
+          "GENERATED BY DEFAULT with explicit values, or append/INSERT")
+      val starAssigns = source0.columns.exists(_.equalsIgnoreCase(f.name))
+      require(notMatched.forall(_.values.fold(starAssigns)(
+          _.keys.exists(_.equalsIgnoreCase(f.name)))),
+        s"MERGE INSERT must assign identity column ${f.name} " +
+          "explicitly in every insert arm (GENERATED BY DEFAULT " +
+          "generates only on the append path)")
+    }
+    // MERGE WITH SCHEMA EVOLUTION (round 12): new source columns join
+    // the declared schema (additive only — evolveSchema refuses
+    // retypes), fresh physical names assigned through the column
+    // mapping. Under evolution a star arm takes SOURCE columns only and
+    // KEEPS target-only columns (Delta's SET * semantics there) —
+    // expressed below by rewriting the star arms as per-column maps over
+    // the source's columns.
+    val (schema, meta) =
+      if (!evolve) (schema0, None)
       else {
-        val (touchedE, keptE) = allE.partition(e => touched(norm(e.path)))
-        // Declared schema, like delete/update: evolved tables mix file
-        // schemas and the rewrite must not regress the manifest. Files
-        // speak physical names (the EVOLVED mapping is a superset of the
-        // stored one, and a new column's physical name is simply absent
-        // from pre-evolution files → NULL); the merge runs on the
-        // logical projection. DV masking applies: a rewrite of a DV'd
-        // file must not resurrect its masked rows.
-        val mapping = meta.map(_._1).getOrElse(state.mapping)
-        val targetRows =
-          if (touchedE.isEmpty) cur.limit(0).select(
-            schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-            .limit(0)
-          else readEntries(spark, touchedE, schema, mapping)
+        val ev = evolveSchema(schema0, source0.schema)
+        (ev, Some(assignPhysical(schema0, ev, state.mapping, state.usedPhys)))
+      }
+    // Source columns land on the DECLARED casing (case-insensitive).
+    val source =
+      if (!evolve) source0
+      else {
+        val byLc = source0.columns.map(c => lc(c) -> c).toMap
+        source0.select(schema.fields.flatMap(f =>
+          byLc.get(lc(f.name)).map(c => source0.col(c).as(f.name))).toIndexedSeq: _*)
+      }
+    val (mArms, iArms) =
+      if (!evolve) (matched, notMatched)
+      else {
+        val srcStar = Some(source.columns.map(c => c -> col(s"s.$c")).toMap)
+        (matched.map {
+          case MergeInto.UpdateClause(c, None) => MergeInto.UpdateClause(c, srcStar)
+          case other => other
+        }, notMatched.map {
+          case MergeInto.InsertClause(c, None) => MergeInto.InsertClause(c, srcStar)
+          case other => other
+        })
+      }
+    // Null-safe key probe: a NULL source key must mark the files
+    // holding NULL-key rows (the merge's own match is null-safe), or
+    // those rows would survive untouched AND re-insert. SKIPPED when
+    // BOTH the matched AND insert families are empty (an expiry-only
+    // merge): matched rows then cannot change AND nothing can insert,
+    // so "not matched in the touched rows" never needs to mean "not
+    // in the table" — files are touched only by the by-source probe,
+    // and a full-snapshot `WHEN NOT MATCHED BY SOURCE ... DELETE`
+    // sync rewrites the files holding expiring rows, not every file
+    // the snapshot's keys graze (measured 24/24 → file-granular at
+    // the 20M-row rehearsal). With an insert arm the probe is
+    // REQUIRED for dedup: a matched key in an untouched file must
+    // not re-insert.
+    val allE = base.stats
+    // File attribution from `_metadata` at the scan (round 13): the
+    // key-join probe never pruned files statically anyway, and
+    // `input_file_name()` is not reliable past the DV mask join.
+    // Files-less table (CREATE TABLE bootstrap): no rows, no files.
+    val withFile =
+      if (allE.isEmpty)
+        cur.withColumn("__file", lit(null).cast(
+          org.apache.spark.sql.types.StringType))
+      else readEntries(spark, allE, schema0, state.mapping,
+        fileCol = Some("__file"))
+    val touchedMatched =
+      if (matched.isEmpty && notMatched.isEmpty) Set.empty[String]
+      else {
+        val srcKeys = source
+          .select(keys.map(k => source(k).as(s"__sk_$k")): _*).distinct()
+        // The file column is projected BEFORE the semi-join (it resolves
+        // on the single-source side only).
+        withFile.join(srcKeys,
+            keys.map(k => withFile(k) <=> srcKeys(s"__sk_$k")).reduce(_ && _),
+            "left_semi")
+          .select(col("__file"))
+          .distinct().collect().map(r => norm(r.getString(0))).toSet
+      }
+    // BY SOURCE probe: target-only rows whose arm condition fires mark
+    // their files too. Same t/s aliasing as the merge's own join, so
+    // the CONDITION evaluates exactly as the combinator will — a file
+    // is carried only when provably no row in it can change.
+    val touchedBySource =
+      if (bySource.isEmpty) Set.empty[String]
+      else {
+        def sat(c: Column): Column = coalesce(c, lit(false))
+        // A file rewrites when ANY by-source clause can fire for one
+        // of its target-only rows (which clause wins is the
+        // combinator's business; the probe needs the union).
+        val fires = bySource
+          .map(cl => sat(cl.condition.getOrElse(lit(true)))).reduce(_ || _)
+        val t = withFile.withColumn("__t", lit(true)).alias("t")
+        val sMarked = source.withColumn("__s", lit(true)).alias("s")
+        t.join(sMarked,
+            keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
+            "left_outer")
+          .filter(col("s.__s").isNull && fires)
+          .select(col("t.__file"))
+          .distinct().collect().map(r => norm(r.getString(0))).toSet
+      }
+    val touched = touchedMatched ++ touchedBySource
+    // Evolution with nothing to touch still lands the widened schema
+    // (a metadata-weight commit carrying every file).
+    if (touched.isEmpty && notMatched.isEmpty && !(evolve && schema != schema0)) Left(v)
+    else {
+      val (touchedE, keptE) = allE.partition(e => touched(norm(e.path)))
+      // Declared schema, like delete/update: evolved tables mix file
+      // schemas and the rewrite must not regress the manifest. Files
+      // speak physical names (the EVOLVED mapping is a superset of the
+      // stored one, and a new column's physical name is simply absent
+      // from pre-evolution files → NULL); the merge runs on the
+      // logical projection. DV masking applies: a rewrite of a DV'd
+      // file must not resurrect its masked rows.
+      val mapping = meta.map(_._1).getOrElse(state.mapping)
+      val targetRows =
+        if (touchedE.isEmpty) cur.limit(0).select(
+          schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+          .limit(0)
+        else readEntries(spark, touchedE, schema, mapping)
+      val mi = MergeInto(targetRows, source, keys, mArms, iArms, bySource)
+      // Pin outputs to the DECLARED types: clause projections coerce
+      // through when(), and a source column arriving wider (decimal
+      // growth) must not leak past the manifest's declared schema.
+      // The cast must be LOSSLESS (ADVICE r10): under non-ANSI mode an
+      // out-of-range value (a decimal overflowing the declared precision)
+      // casts to silent NULL, corrupting committed rows and CDC — refuse
+      // up front, the same discipline as evolveSchema's retype check.
+      // Star arms check the SOURCE columns by name (clearer error);
+      // per-column arms are covered by the result-schema check below,
+      // which sees each assignment expression's resolved type.
+      if (mi.needsFullSource) schema.fields.foreach { f =>
+        val srcType = source.schema.fields
+          .find(sf => sf.name.equalsIgnoreCase(f.name))
+          .getOrElse(throw new IllegalArgumentException(
+            s"mergeInto source lacks target column ${f.name}"))
+          .dataType
+        require(srcType == f.dataType ||
+            org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(srcType, f.dataType),
+          s"mergeInto source column ${f.name}: $srcType cannot losslessly " +
+            s"cast to declared ${f.dataType}; align the source schema first")
+      }
+      def declared(df: DataFrame): DataFrame =
+        df.select(schema.fields.map(f =>
+          df(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+      // Type-check on the UNEXECUTED plan's schema — refusals must land
+      // before any join executes.
+      mi.result().schema.fields.zip(schema.fields).foreach { case (got, want) =>
+        require(got.dataType == want.dataType ||
+            org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(got.dataType, want.dataType),
+          s"mergeInto post-image column ${want.name}: ${got.dataType} cannot " +
+            s"losslessly cast to declared ${want.dataType}; align the expression")
+      }
+      // ONE materialization of the lowered join serves the cardinality
+      // probe, the rewrite, and both CDC sides (optimization r15, guide
+      // §1.2 step 1): each previously re-executed scan(touched) ⋈
+      // scan(source) — four runs of the same delta-sized join per MERGE.
+      // The checkpoint holds touched ∪ source rows (never the table) and
+      // is freed once the commit has landed.
+      val mat = mi.materialize()
+      try {
         // SQL cardinality rule (round 12 late): when a matched arm can
         // fire, MULTIPLE source rows matching ONE target row is an error
         // (the full-outer join would otherwise silently duplicate the
@@ -2714,86 +2723,37 @@ object SnapshotTable {
         // there by construction), so the probe is O(source + touched),
         // never table-scaled. Duplicate SOURCE-ONLY keys stay legal:
         // SQL's NOT MATCHED arm inserts each source row.
-        val mi = MergeInto(targetRows, source, keys,
-          matchedUpdate, matchedDelete, notMatchedInsert,
-          mSet, iVals, bySourceDelete, bySourceUpdate,
-          mChainE, iChainE, bySourceChain)
-        // Pin outputs to the DECLARED types: clause projections coerce
-        // through when(), and a source column arriving wider (decimal
-        // growth) must not leak past the manifest's declared schema.
-        // The cast must be LOSSLESS (ADVICE r10): under non-ANSI mode an
-        // out-of-range value (a decimal overflowing the declared precision)
-        // casts to silent NULL, corrupting committed rows and CDC — refuse
-        // up front, the same discipline as evolveSchema's retype check.
-        // Star arms check the SOURCE columns by name (clearer error);
-        // per-column arms are covered by the result-schema check below,
-        // which sees each assignment expression's resolved type.
-        if (mi.needsFullSource) schema.fields.foreach { f =>
-          val srcType = source.schema.fields
-            .find(sf => sf.name.equalsIgnoreCase(f.name))
-            .getOrElse(throw new IllegalArgumentException(
-              s"mergeInto source lacks target column ${f.name}"))
-            .dataType
-          require(srcType == f.dataType ||
-              org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(srcType, f.dataType),
-            s"mergeInto source column ${f.name}: $srcType cannot losslessly " +
-              s"cast to declared ${f.dataType}; align the source schema first")
+        if (matched.nonEmpty && touchedE.nonEmpty) {
+          val dup = mat.duplicateMatchedKeys(keys)
+          require(dup.isEmpty,
+            s"MERGE: multiple source rows match the same target row on " +
+              s"(${keys.mkString(", ")}) — e.g. ${dup.headOption.getOrElse("")}; " +
+              "deduplicate the source (SQL MERGE cardinality rule)")
         }
-        def declared(df: DataFrame): DataFrame =
-          df.select(schema.fields.map(f =>
-            df(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-        // Type-check on the UNEXECUTED plan's schema — refusals must land
-        // before any join executes.
-        mi.result().schema.fields.zip(schema.fields).foreach { case (got, want) =>
-          require(got.dataType == want.dataType ||
-              org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(got.dataType, want.dataType),
-            s"mergeInto post-image column ${want.name}: ${got.dataType} cannot " +
-              s"losslessly cast to declared ${want.dataType}; align the expression")
-        }
-        // ONE materialization of the lowered join serves the cardinality
-        // probe, the rewrite, and both CDC sides (optimization r15, guide
-        // §1.2 step 1): each previously re-executed scan(touched) ⋈
-        // scan(source) — four runs of the same delta-sized join per MERGE.
-        // The checkpoint holds touched ∪ source rows (never the table) and
-        // is freed once the commit has landed.
-        val mat = mi.materialize()
-        try {
-          if ((matchedChain.nonEmpty || matchedUpdate.nonEmpty ||
-              matchedDelete.nonEmpty) && touchedE.nonEmpty) {
-            val dup = mat.duplicateMatchedKeys(keys)
-            require(dup.isEmpty,
-              s"MERGE: multiple source rows match the same target row on " +
-                s"(${keys.mkString(", ")}) — e.g. ${dup.headOption.getOrElse("")}; " +
-                "deduplicate the source (SQL MERGE cardinality rule)")
-          }
-          val rewritten = declared(mat.result)
-          // CAS-loss rebase for MERGE (round 12): sound iff the winner's
-          // new files provably hold NO source key — then no winner row
-          // could have been MATCHED (or needed insert-dedup), so the merge
-          // at the winner's version is row-for-row this one. The proof
-          // predicate is key-membership on the FIRST key column (null-safe;
-          // a per-column over-approximation of the composite key stays
-          // conservative: a file that cannot match key1 cannot match the
-          // tuple). BY SOURCE arms disable it — a winner-added row IS a new
-          // target-only row and changes those arms' semantics. The key
-          // collect (≤4096 distinct) runs only on an actual CAS loss.
-          val rebaseSpec =
-            if (bChainAll.nonEmpty) None
-            else Some(RebaseSpec(v, touched,
-              () => keyMembershipPredicate(schema, source, keys.head)))
-          Right(commitAt(spark, root, Some(base), rewritten, carry = keptE,
-            cdc = Some((declared(mat.adds), declared(mat.removes))),
-            tableSchema = Some(widenNullability(schema, rewritten.schema)),
-            meta = meta, rebase = rebaseSpec,
-            // A delete-only MERGE (every arm DELETE) removes rows without
-            // changing any surviving value — layout survives, skip the
-            // range re-shuffle (guide §2.4).
-            preserveLayout = mi.deleteOnly))
-        } finally mat.free()
-      }
-    } match {
-      case Left(v) => v // nothing to touch: no commit, no compaction
-      case Right(committed) => compact(spark, root, maxFiles).getOrElse(committed)
+        val rewritten = declared(mat.result)
+        // CAS-loss rebase for MERGE (round 12): sound iff the winner's
+        // new files provably hold NO source key — then no winner row
+        // could have been MATCHED (or needed insert-dedup), so the merge
+        // at the winner's version is row-for-row this one. The proof
+        // predicate is key-membership on the FIRST key column (null-safe;
+        // a per-column over-approximation of the composite key stays
+        // conservative: a file that cannot match key1 cannot match the
+        // tuple). BY SOURCE arms disable it — a winner-added row IS a new
+        // target-only row and changes those arms' semantics. The key
+        // collect (≤4096 distinct) runs only on an actual CAS loss.
+        val rebaseSpec =
+          if (bySource.nonEmpty) None
+          else Some(RebaseSpec(v, touched,
+            () => keyMembershipPredicate(schema, source, keys.head)))
+        Right(commitAt(spark, root, Some(base), rewritten, carry = keptE,
+          cdc = Some((declared(mat.adds), declared(mat.removes))),
+          tableSchema = Some(widenNullability(schema, rewritten.schema)),
+          meta = meta, rebase = rebaseSpec,
+          // A delete-only MERGE (every arm DELETE) removes rows without
+          // changing any surviving value — layout survives, skip the
+          // range re-shuffle (guide §2.4).
+          preserveLayout = mi.deleteOnly))
+      } finally mat.free()
     }
   }
 
@@ -2827,7 +2787,6 @@ object SnapshotTable {
       schema: org.apache.spark.sql.types.StructType,
       mapping: Map[String, String], predicate: Column): Map[String, Long] = {
     import org.apache.spark.sql.functions.{col, count, input_file_name}
-    def norm(p: String): String = new Path(p).toUri.getPath
     val dvE = allE.filter(_.dv.nonEmpty)
     val cleanE = allE.filter(_.dv.isEmpty)
     // No DVs anywhere: `cur` IS the single-source indexed scan —
@@ -2867,7 +2826,7 @@ object SnapshotTable {
 
   /** Absolute cap on positions in one delete's DV side-car — beyond it
     * the side-car stops being broadcast-cheap and a rewrite is honest. */
-  private[graft] var dvMaxRows: Long = 1000000L
+  private[graft] val dvMaxRows: Long = 1000000L
 
   /** Economic floor: below this many TOUCHED bytes a copy-on-write
     * rewrite is cheaper than the DV machinery's extra positions scan +
@@ -2885,7 +2844,7 @@ object SnapshotTable {
     * that file's positions into ONE fresh side-car in the same commit, so
     * per-file debt is bounded at cap+1 forever. `OPTIMIZE t DV ONLY`
     * ([[consolidateDvs]]) collapses everything to 1 on demand. */
-  private[graft] var dvMaxSidecarsPerFile: Int = 4
+  private[graft] val dvMaxSidecarsPerFile: Int = 4
 
   /** Merge the DV lists of entries holding more than `cap` side-cars into
     * one fresh shared side-car dir. Returns the entries (input order, fat
@@ -2897,7 +2856,6 @@ object SnapshotTable {
                          entries: Seq[SnapshotStats.FileStats], cap: Int)
       : (Seq[SnapshotStats.FileStats], Option[Path]) = {
     import org.apache.spark.sql.functions.col
-    def norm(p: String): String = new Path(p).toUri.getPath
     val fat = entries.filter(_.dv.length > cap)
     if (fat.isEmpty) return (entries, None)
     val mergedDir = new Path(root, f"dv-$target%08d-${newToken()}")
@@ -2934,9 +2892,71 @@ object SnapshotTable {
         stateOf(base), sidecars = Seq(dir)))
     }
 
+  /** The CAS-loss rebase of a predicate DML (DELETE, UPDATE,
+    * replaceWhere) over `touched`: its proof predicate is the optimized
+    * (constant-folded) filter condition — a winner-appended file whose
+    * bounds cannot match it proves the rewrite commutes with the append.
+    * Optimized, not merely analyzed: analysis leaves implicit literal
+    * casts unfolded, which the bounds MAY-analysis conservatively refuses
+    * to prune on. */
+  private def predicateRebase(v: Long, touched: Set[String], cur: DataFrame,
+                              predicate: Column): Option[RebaseSpec] =
+    Some(RebaseSpec(v, touched, () =>
+      cur.filter(predicate).queryExecution.optimizedPlan.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }))
+
+  /** Merge-on-read eligibility of a point DELETE/UPDATE, decided from the
+    * touched-file probe's exact matched counts — zero extra scans on the
+    * (common) rewrite path: the matched rows must be a small fraction of
+    * the touched files' rows, within the side-car cap, over files big
+    * enough that a rewrite is not already trivial. */
+  private def dvEligible(touchedE: Seq[SnapshotStats.FileStats],
+                         touchedCounts: Map[String, Long]): Boolean = {
+    val touchedPhysRows = touchedE.map(e => e.rows - e.dvRows).sum
+    val matched = touchedCounts.values.sum
+    dvMaxFraction > 0 && touchedE.forall(_.rows > 0) &&
+      touchedPhysRows > 0 && matched <= dvMaxRows &&
+      touchedE.map(_.bytes).sum >= dvMinTouchedBytes &&
+      matched.toDouble <= dvMaxFraction * touchedPhysRows
+  }
+
+  /** The merge-on-read write of a point DELETE/UPDATE: record the touched
+    * files' `predicate`-matching (file, pos) positions as ONE fresh DV
+    * side-car (a KB-sized parquet dir; zero data files rewritten), and
+    * apply the debt cap — a file crossing [[dvMaxSidecarsPerFile]] gets
+    * its whole list merged into one side-car inside the same commit.
+    * Returns the matched pre-images (one checkpointed scan serves the
+    * side-car and the caller's CDC), the touched entries with the
+    * side-car listed, and the dirs written, which the caller's commit
+    * removes on a CAS loss. */
+  private def writeDv(spark: SparkSession, root: String,
+                      base: SnapshotStats.Resolved,
+                      touchedE: Seq[SnapshotStats.FileStats],
+                      touchedCounts: Map[String, Long],
+                      schema: org.apache.spark.sql.types.StructType,
+                      mapping: Map[String, String], predicate: Column)
+      : (DataFrame, Seq[SnapshotStats.FileStats], Seq[Path]) = {
+    import org.apache.spark.sql.functions.col
+    val hits = readEntries(spark, touchedE, schema, mapping,
+      fileCol = Some("__gf_file"), posCol = Some("__gf_pos"))
+      .filter(predicate)
+      .localCheckpoint()
+    val target = base.version + 1
+    val dvDir = new Path(root, f"dv-$target%08d-${newToken()}")
+    hits.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
+      .coalesce(1)
+      .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
+    val listed = touchedE.map(e => e.copy(
+      dv = e.dv :+ dvDir.toString,
+      dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
+    val (capped, mergedDv) = capDvLists(spark, root, target, listed,
+      dvMaxSidecarsPerFile)
+    (hits.drop("__gf_file", "__gf_pos"), capped, dvDir +: mergedDv.toSeq)
+  }
+
   def delete(spark: SparkSession, root: String, predicate: Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, not}
-    def norm(p: String): String = new Path(p).toUri.getPath
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     transactOn(spark, root, "delete", ReadAttempts) { base =>
       val v = base.version
       val state = stateOf(base)
@@ -2953,15 +2973,6 @@ object SnapshotTable {
       val touchedCounts = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate)
       val touched = touchedCounts.keySet
-      // The optimized (constant-folded) filter condition, for the CAS-loss
-      // rebase check: a winner-appended file whose bounds cannot match it
-      // proves the rewrite commutes with the append. Optimized, not merely
-      // analyzed — analysis leaves implicit literal casts unfolded, which
-      // the bounds MAY-analysis conservatively refuses to prune on.
-      lazy val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
       val (touchedE, keptE) = allE.partition(e => touched(norm(e.path)))
       // ---- merge-on-read branch: point deletes write a DV side-car ------
       //
@@ -2973,39 +2984,14 @@ object SnapshotTable {
       // metadata + side-car only, ZERO data files written; the read path
       // masks; OPTIMIZE materializes. Exact same answers either way —
       // `DeletionVectorSpec` pins hash equality between the branches.
-      val touchedPhysRows = touchedE.map(e => e.rows - e.dvRows).sum
-      // Eligibility decides from the PROBE's exact matched counts — zero
-      // extra scans on the (common) rewrite path; only an actual point
-      // delete pays the positions scan below.
-      val matched = touchedCounts.values.sum
-      val dvEligible = dvMaxFraction > 0 && touchedE.forall(_.rows > 0) &&
-        touchedPhysRows > 0 && matched <= dvMaxRows &&
-        touchedE.map(_.bytes).sum >= dvMinTouchedBytes &&
-        matched.toDouble <= dvMaxFraction * touchedPhysRows
       if (touched.isEmpty) v
-      else if (dvEligible) {
-        val hits = readEntries(spark, touchedE, schema, mapping,
-          fileCol = Some("__gf_file"), posCol = Some("__gf_pos"))
-          .filter(predicate)
-          .localCheckpoint() // one scan serves side-car + CDC
-        val target = v + 1
-        val dvDir = new Path(root, f"dv-$target%08d-${newToken()}")
-        hits.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
-          .coalesce(1)
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
-        val newTouched0 = touchedE.map(e => e.copy(
-          dv = e.dv :+ dvDir.toString,
-          dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
-        // Debt cap (round 14): a file crossing dvMaxSidecarsPerFile gets
-        // its whole list merged into one side-car inside this commit.
-        val (newTouched, mergedDv) = capDvLists(spark, root, target,
-          newTouched0, dvMaxSidecarsPerFile)
-        val preImages = hits.drop("__gf_file", "__gf_pos")
+      else if (dvEligible(touchedE, touchedCounts)) {
+        val (preImages, newTouched, sidecars) = writeDv(spark, root, base,
+          touchedE, touchedCounts, schema, mapping, predicate)
         // A CAS loss removes the orphan side-cars; the next attempt
         // re-derives everything against the winner, like the rewrite path.
         commitMeta(spark, root, Some(base), keptE ++ newTouched, state,
-          cdc = Some((preImages.limit(0), preImages)),
-          sidecars = dvDir +: mergedDv.toSeq)
+          cdc = Some((preImages.limit(0), preImages)), sidecars = sidecars)
       } else {
         // ---- copy-on-write branch (the pre-r13 path) --------------------
         // Read with the DECLARED schema: on an evolved table a touched
@@ -3030,7 +3016,7 @@ object SnapshotTable {
         commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((cur.limit(0), touchedRows.filter(predicate))),
           tableSchema = Some(schema),
-          rebase = Some(RebaseSpec(v, touched, () => resolvedPred)),
+          rebase = predicateRebase(v, touched, cur, predicate),
           // A delete keeps every surviving value byte-identical — the
           // clustered layout survives the rewrite by construction.
           preserveLayout = true)
@@ -3050,9 +3036,8 @@ object SnapshotTable {
     * version unchanged when nothing matches. */
   def update(spark: SparkSession, root: String, predicate: Column,
              set: Map[String, Column]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
-    def norm(p: String): String = new Path(p).toUri.getPath
     transactOn(spark, root, "update", ReadAttempts) { base =>
       val v = base.version
       val state = stateOf(base)
@@ -3068,11 +3053,13 @@ object SnapshotTable {
       val touchedCounts = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate)
       val touched = touchedCounts.keySet
-      lazy val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
       val (touchedE, keptE) = allE.partition(e => touched(norm(e.path)))
+      // SET applied to matched pre-images, on the declared types.
+      def postImage(pre: DataFrame): DataFrame =
+        pre.select(schema.fields.map { f =>
+          set.get(f.name).map(_.cast(f.dataType).as(f.name))
+            .getOrElse(pre.col(f.name))
+        }.toIndexedSeq: _*)
       // ---- merge-on-read branch (round 13): a point UPDATE writes a DV
       // masking the old positions plus ONE appended file holding the
       // post-images — same atomic commit, zero touched-file rewrites.
@@ -3080,39 +3067,16 @@ object SnapshotTable {
       // No CAS-loss rebase here (the rebase re-CAS recomputes carry from
       // the winner and would drop the DV-modified entries): a loss just
       // redoes the cheap delta-sized work.
-      val touchedPhysRows = touchedE.map(e => e.rows - e.dvRows).sum
-      val matched = touchedCounts.values.sum // exact, from the probe scan
       if (touched.isEmpty) v
-      else if (dvMaxFraction > 0 && touchedE.forall(_.rows > 0) &&
-          touchedPhysRows > 0 && matched <= dvMaxRows &&
-          touchedE.map(_.bytes).sum >= dvMinTouchedBytes &&
-          matched.toDouble <= dvMaxFraction * touchedPhysRows) {
-        import org.apache.spark.sql.functions.col
-        val marked = readEntries(spark, touchedE, schema, mapping,
-          fileCol = Some("__gf_file"), posCol = Some("__gf_pos"))
-          .filter(predicate)
-          .localCheckpoint() // one scan: positions + pre-images + post build
-        val target = v + 1
-        val dvDir = new Path(root, f"dv-$target%08d-${newToken()}")
-        marked.select(col("__gf_file").as("file"), col("__gf_pos").as("pos"))
-          .coalesce(1)
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvDir.toString)
-        val newTouched0 = touchedE.map(e => e.copy(
-          dv = e.dv :+ dvDir.toString,
-          dvRows = e.dvRows + touchedCounts.getOrElse(norm(e.path), 0L)))
-        // Debt cap (round 14) — same rule as delete's DV branch.
-        val (newTouched, mergedDv) = capDvLists(spark, root, target,
-          newTouched0, dvMaxSidecarsPerFile)
-        val pre = marked.drop("__gf_file", "__gf_pos")
-        val post = pre.select(schema.fields.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(pre.col(f.name))
-        }.toIndexedSeq: _*)
+      else if (dvEligible(touchedE, touchedCounts)) {
+        val (pre, newTouched, sidecars) = writeDv(spark, root, base,
+          touchedE, touchedCounts, schema, mapping, predicate)
+        val post = postImage(pre)
         commitAt(spark, root, Some(base), post,
           carry = keptE ++ newTouched,
           cdc = Some((post, pre)),
           tableSchema = Some(widenNullability(schema, post.schema)),
-          sidecars = dvDir +: mergedDv.toSeq)
+          sidecars = sidecars)
       } else {
         // ---- copy-on-write branch (the pre-r13 path) --------------------
         // DV masking applies: rewriting a DV'd file must not resurrect rows.
@@ -3129,14 +3093,11 @@ object SnapshotTable {
         // rewrite by the predicate would lose rows whose update changed a
         // predicate column out from under it).
         val pre = touchedRows.filter(predicate)
-        val post = pre.select(schema.fields.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(pre.col(f.name))
-        }.toIndexedSeq: _*)
+        val post = postImage(pre)
         commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((post, pre)),
           tableSchema = Some(widenNullability(schema, rewritten.schema)),
-          rebase = Some(RebaseSpec(v, touched, () => resolvedPred)),
+          rebase = predicateRebase(v, touched, cur, predicate),
           // An UPDATE that assigns NO cluster column keeps every
           // cluster-key value in place — layout survives, skip the range
           // re-shuffle (same rule as delete; guide §2.4).
@@ -3159,8 +3120,7 @@ object SnapshotTable {
     * swap atomically, never a deleted-but-not-yet-inserted state. */
   def overwriteWhere(spark: SparkSession, root: String, predicate: Column,
                      data: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
-    def norm(p: String): String = new Path(p).toUri.getPath
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     transactOn(spark, root, "overwriteWhere", ReadAttempts) { base =>
       val v = base.version
       val state = stateOf(base)
@@ -3186,10 +3146,6 @@ object SnapshotTable {
       val allE = base.stats
       val touched = touchedFilesByPredicate(spark, root, cur, allE,
         schema, mapping, predicate).keySet
-      val resolvedPred = cur.filter(predicate).queryExecution.optimizedPlan
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
       val (touchedE, keptE) = allE.partition(e => touched(norm(e.path)))
       val (kept, removes) =
         if (touchedE.isEmpty) (cur.limit(0), cur.limit(0))
@@ -3203,7 +3159,7 @@ object SnapshotTable {
       commitAt(spark, root, Some(base), rewritten, carry = keptE,
         cdc = Some((batch, removes)),
         tableSchema = Some(widenNullability(schema, rewritten.schema)),
-        rebase = Some(RebaseSpec(v, touched, () => resolvedPred)))
+        rebase = predicateRebase(v, touched, cur, predicate))
     }
   }
 
@@ -3234,10 +3190,13 @@ object SnapshotTable {
     * EXACT set of appended rows at file granularity — a downstream
     * incremental consumer reads only the new files, never rescans the
     * table, which is what keeps a 100 TB source → derived-table chain
-    * incremental end to end. Rewrite commits (upsert/compact) replace the
-    * whole file set; their "changes" are the full new snapshot, and the
-    * caller should treat that as a reprocess signal, exactly as Delta's
-    * change feed treats non-append commits without CDC files. */
+    * incremental end to end. Rewrite commits replace files: a whole-table
+    * rewrite (compact, recluster) yields the full new snapshot, a
+    * file-granular DML (MERGE, upsert, DELETE, UPDATE) the full contents
+    * of its rewritten files, and the caller should treat that as a
+    * reprocess signal, exactly as Delta's change feed treats non-append
+    * commits without CDC files ([[changesDelta]] reads the recorded CDC
+    * instead). */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Option[Long] = None): DataFrame = {
     val to = toVersion.orElse(currentVersion(spark, root))
@@ -3726,7 +3685,7 @@ object SnapshotTable {
         val r = resolvedPathsAt(fs, root, v)
         r.files.map(f => new Path(f).getParent) ++ cdcRootsOf(r)
       }.toSet
-    val ownPrefix = new Path(root).toUri.getPath.stripSuffix("/") + "/"
+    val ownPrefix = norm(root).stripSuffix("/") + "/"
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     val seen = scala.collection.mutable.Set.empty[Path]
     versions.dropRight(keepEff).foreach { v =>
@@ -3909,7 +3868,7 @@ object SnapshotTable {
     // this table's vacuum must reclaim only its OWN storage — deleting a
     // referenced foreign dir would corrupt the source table (the source's
     // own vacuum + the clone's subscriber pin govern those bytes).
-    val ownPrefix = new Path(root).toUri.getPath.stripSuffix("/") + "/"
+    val ownPrefix = norm(root).stripSuffix("/") + "/"
     def underRoot(d: Path): Boolean = d.toUri.getPath.startsWith(ownPrefix)
     // Resolve EVERY doomed version's dirs BEFORE deleting anything: since
     // the manifest log went incremental (round 13), resolving version v may

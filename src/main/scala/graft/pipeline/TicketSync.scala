@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.ext.{MvAgg, MvSpec}
-import graft.ops.{Q, SnapshotTable}
+import graft.ops.{MergeInto, Q, SnapshotTable}
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -104,8 +104,9 @@ object TicketSync {
   def sync(s: SparkSession, root: String, rawBatch: DataFrame): Long =
     SnapshotTable.mergeInto(s, root, TicketTransform.transform(rawBatch),
       Seq("_id"),
-      matchedUpdate = Some(Some(col("s.updatedOn") > col("t.updatedOn"))),
-      notMatchedInsert = Some(None))
+      matched = Seq(MergeInto.UpdateClause(
+        Some(col("s.updatedOn") > col("t.updatedOn")), None)),
+      notMatched = Seq(MergeInto.InsertClause(None, None)))
 
   /** The capstone query: two sync cycles against a fresh ticket table,
     * dashboard maintained by a standing CDF subscriber between and after

@@ -336,7 +336,7 @@ class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
     // clause order, exactly SQL MERGE semantics. Spark's parser already
     // enforces that only the last clause of a family may omit its
     // condition.
-    val matchedChain = m.matchedActions.map {
+    val matched = m.matchedActions.map {
       case d: DeleteAction =>
         graft.ops.MergeInto.DeleteClause(d.condition.map(bySide(_, m)))
       case u: UpdateStarAction =>
@@ -348,7 +348,7 @@ class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
       case other => throw new UnsupportedOperationException(
         s"unsupported WHEN MATCHED action: $other")
     }
-    val insertChain = m.notMatchedActions.map {
+    val notMatched = m.notMatchedActions.map {
       case i: InsertStarAction =>
         graft.ops.MergeInto.InsertClause(i.condition.map(bySide(_, m)), None)
       case i: InsertAction =>
@@ -361,7 +361,7 @@ class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
     // WHEN NOT MATCHED BY SOURCE: the third clause family, over
     // target-only rows — how sync jobs expire rows that vanished from
     // the source.
-    val bySourceChain = m.notMatchedBySourceActions.map {
+    val bySource = m.notMatchedBySourceActions.map {
       case d: DeleteAction =>
         graft.ops.MergeInto.DeleteClause(d.condition.map(bySide(_, m)))
       case u: UpdateAction =>
@@ -371,10 +371,7 @@ class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
         s"unsupported WHEN NOT MATCHED BY SOURCE action: $other")
     }
     GraftMergeCommand(t.root, df(m.sourceTable), keys,
-      matchedUpdate = None, matchedDelete = None, notMatchedInsert = None,
-      evolve = m.withSchemaEvolution,
-      matchedChain = matchedChain, insertChain = insertChain,
-      bySourceChain = bySourceChain)
+      matched, notMatched, bySource, evolve = m.withSchemaEvolution)
   }
 
   /** Late-binding persistent-view substitution (round 14, VERDICT r13
@@ -450,17 +447,14 @@ class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
           // exactly as a literal-key delete would.
           GraftMergeCommand(graftOf(d.table).get.root,
             inSource(shape), shape.attrs.map(_.name),
-            matchedUpdate = None,
-            matchedDelete = Some(plain.map(targetSide).reduceOption(_ && _)
-              .getOrElse(ColumnBridge.column(Literal(true)))),
-            notMatchedInsert = None)
+            matched = Seq(graft.ops.MergeInto.DeleteClause(
+              plain.map(targetSide).reduceOption(_ && _))))
         case (plain, Some(shape)) =>
           // NOT IN / NOT EXISTS ≡ the BY SOURCE anti-arm: delete exactly
           // the rows NO source key matches.
           GraftMergeCommand(graftOf(d.table).get.root,
             inSource(shape), shape.attrs.map(_.name),
-            matchedUpdate = None, matchedDelete = None, notMatchedInsert = None,
-            bySourceDelete = Some(bySourceCond(plain, shape)),
+            bySource = Seq(graft.ops.MergeInto.DeleteClause(bySourceCond(plain, shape))),
             notInNullGuard = rawKeys(shape))
       }
 
@@ -485,16 +479,14 @@ class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
             // MERGE with a per-column SET arm over the matched rows.
             GraftMergeCommand(graftOf(u.table).get.root,
               inSource(shape), shape.attrs.map(_.name),
-              matchedUpdate = Some(plain.map(targetSide).reduceOption(_ && _)),
-              matchedDelete = None,
-              notMatchedInsert = None,
-              matchedSet = Some(setOf(targetSide)))
+              matched = Seq(graft.ops.MergeInto.UpdateClause(
+                plain.map(targetSide).reduceOption(_ && _), Some(setOf(targetSide)))))
           case (plain, Some(shape)) =>
             // NOT IN / NOT EXISTS ≡ the BY SOURCE update arm.
             GraftMergeCommand(graftOf(u.table).get.root,
               inSource(shape), shape.attrs.map(_.name),
-              matchedUpdate = None, matchedDelete = None, notMatchedInsert = None,
-              bySourceUpdate = Some((bySourceCond(plain, shape), setOf(targetSide))),
+              bySource = Seq(graft.ops.MergeInto.UpdateClause(
+                bySourceCond(plain, shape), Some(setOf(targetSide)))),
               notInNullGuard = rawKeys(shape))
         }
       }
@@ -612,18 +604,11 @@ case class GraftUpdateCommand(root: String, condition: Column,
   * `WHEN NOT MATCHED BY SOURCE`). */
 case class GraftMergeCommand(root: String, source: DataFrame,
                              keys: Seq[String],
-                             matchedUpdate: Option[Option[Column]],
-                             matchedDelete: Option[Column],
-                             notMatchedInsert: Option[Option[Column]],
-                             matchedSet: Option[Map[String, Column]] = None,
-                             insertValues: Option[Map[String, Column]] = None,
-                             bySourceDelete: Option[Option[Column]] = None,
-                             bySourceUpdate: Option[(Option[Column], Map[String, Column])] = None,
-                             notInNullGuard: Option[DataFrame] = None,
+                             matched: Seq[graft.ops.MergeInto.Clause] = Nil,
+                             notMatched: Seq[graft.ops.MergeInto.InsertClause] = Nil,
+                             bySource: Seq[graft.ops.MergeInto.Clause] = Nil,
                              evolve: Boolean = false,
-                             matchedChain: Seq[graft.ops.MergeInto.Clause] = Nil,
-                             insertChain: Seq[graft.ops.MergeInto.InsertClause] = Nil,
-                             bySourceChain: Seq[graft.ops.MergeInto.Clause] = Nil)
+                             notInNullGuard: Option[DataFrame] = None)
   extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[org.apache.spark.sql.Row] = {
     // Strict NOT IN: one NULL among the subquery's values makes the
@@ -636,11 +621,8 @@ case class GraftMergeCommand(root: String, source: DataFrame,
     val v =
       if (nullPoisoned) SnapshotTable.currentVersion(spark, root).getOrElse(
         throw new IllegalStateException(s"no committed version at $root"))
-      else SnapshotTable.mergeInto(spark, root, source,
-        keys, matchedUpdate, matchedDelete, notMatchedInsert,
-        matchedSet, insertValues, bySourceDelete, bySourceUpdate,
-        evolve = evolve, matchedChain = matchedChain,
-        insertChain = insertChain, bySourceChain = bySourceChain)
+      else SnapshotTable.mergeInto(spark, root, source, keys,
+        matched, notMatched, bySource, evolve = evolve)
     Seq(org.apache.spark.sql.Row(v))
   }
   override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =

@@ -207,6 +207,18 @@ class MvSpecSpec extends SparkSpec {
       (Some("z"), 1L, Some(9.0), Some(9.0), Some(9.0), Some(9.0))))
   }
 
+  test("insert-only combine keeps an all-NULL Sum NULL, like a full recompute") {
+    // Group n holds only NULL values on both sides; group m arrives with
+    // only NULLs; group a sums normally.
+    val base = Seq((Some("n"), Option.empty[Double]), (Some("a"), Some(1.0)))
+      .toDF("grp", "v")
+    val more = Seq((Some("n"), Option.empty[Double]), (Some("a"), Some(2.0)),
+      (Some("m"), Option.empty[Double])).toDF("grp", "v")
+    val got = rows(spec.combine(spec.partial(base), spec.partial(more)))
+    assert(got == rows(spec.partial(base.union(more))), s"got $got")
+    assert(got.exists(r => r._1.contains("n") && r._3.isEmpty))
+  }
+
   test("update CDC through the op: retraction + insertion on the same rows") {
     val root = s"${tmpDir()}/t"
     val base = Seq(

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.MergeInto.{InsertClause, UpdateClause}
 import org.apache.spark.sql.functions._
 
 /** Column mapping (VERDICT r9 #5 — logical vs physical names): RENAME is
@@ -57,7 +58,8 @@ class ColumnMappingSpec extends SparkSpec {
     // the clause projection, and the CDC all speak the renamed logical.
     val vM = SnapshotTable.mergeInto(spark, root,
       Seq((5L, "merged5", 0.5), (200L, "two-hundred", 2.0)).toDF("k", "label", "score"),
-      Seq("k"), matchedUpdate = Some(None), notMatchedInsert = Some(None))
+      Seq("k"), matched = Seq(UpdateClause(None, None)),
+      notMatched = Seq(InsertClause(None, None)))
     val after = SnapshotTable.read(spark, root, Some(vM))
     assert(after.filter(col("label") === "merged5").count() == 1)
     assert(after.filter(col("label") === "two-hundred").count() == 1)

@@ -3,6 +3,7 @@ package graft.ops
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import graft.SparkSpec
+import graft.ops.MergeInto.{DeleteClause, InsertClause, UpdateClause}
 import org.apache.spark.sql.functions._
 
 /** CAS-loss REBASE (round 12): a row-level DML that loses the manifest
@@ -147,7 +148,7 @@ class ConflictRebaseSpec extends SparkSpec {
       })
       appender.start()
       SnapshotTable.mergeInto(spark, root, source, Seq("k"),
-        matchedUpdate = Some(None), notMatchedInsert = Some(None))
+        matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
       appender.join()
       val losses = SnapshotTable.casLosses.get() - lossesBefore
       if (losses > 0) {
@@ -184,8 +185,8 @@ class ConflictRebaseSpec extends SparkSpec {
       })
       appender.start()
       SnapshotTable.mergeInto(spark, root, source, Seq("k"),
-        matchedUpdate = Some(None),
-        bySourceDelete = Some(Some(org.apache.spark.sql.functions.expr("t.k >= 90"))))
+        matched = Seq(UpdateClause(None, None)),
+        bySource = Seq(DeleteClause(Some(org.apache.spark.sql.functions.expr("t.k >= 90")))))
       appender.join()
       val losses = SnapshotTable.casLosses.get() - lossesBefore
       if (losses > 0) {
@@ -203,7 +204,7 @@ class ConflictRebaseSpec extends SparkSpec {
     assert(collided, "the planted merge/append race never collided in 3 tries")
   }
 
-  test("racing UPSERT (whole-table rewrite) rebases over a foreign append") {
+  test("racing UPSERT (file-granular MERGE) rebases over a foreign append") {
     var attempt = 0
     var collided = false
     while (attempt < 3 && !collided) {
@@ -225,7 +226,7 @@ class ConflictRebaseSpec extends SparkSpec {
       if (losses > 0) {
         collided = true
         assert(SnapshotTable.rebases.get() > rebasesBefore,
-          "upsert's whole-table rewrite must rebase over a foreign append")
+          "upsert's MERGE rewrite must rebase over a foreign append")
       }
       val rows = SnapshotTable.read(spark, root)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.MergeInto.{InsertClause, UpdateClause}
 import org.apache.spark.sql.functions._
 
 /** Deletion vectors (round 13, VERDICT r12 #2 — merge-on-read point DML):
@@ -145,7 +146,7 @@ class DeletionVectorSpec extends SparkSpec {
     // A MERGE keyed on the deleted row must INSERT (no longer matched).
     SnapshotTable.mergeInto(spark, root,
       Seq((100L, "revived", 0)).toDF("k", "v", "m"), Seq("k"),
-      matchedUpdate = Some(None), notMatchedInsert = Some(None))
+      matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
     val row = SnapshotTable.read(spark, root).filter(col("k") === 100L).collect()
     assert(row.length == 1 && row.head.getString(1) == "revived")
     assert(SnapshotTable.read(spark, root).count() == 10000L)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.MergeInto.{DeleteClause, InsertClause, UpdateClause}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,9 +79,9 @@ class MergeIntoSpec extends SparkSpec {
     val src = frame(5 to 12).withColumn("v1", lit("merged"))
       .unionAll(frame(100 to 102).withColumn("v1", lit("new")))
     val v1 = SnapshotTable.mergeInto(spark, root, src, Seq("k"),
-      matchedUpdate = Some(None),
-      matchedDelete = Some(col("s.k") % 2 === 0),
-      notMatchedInsert = Some(None))
+      matched = Seq(DeleteClause(Some(col("s.k") % 2 === 0)),
+        UpdateClause(None, None)),
+      notMatched = Seq(InsertClause(None, None)))
     // Semantics: matched evens 6,8,10,12 delete; matched odds 5,7,9,11
     // update to "merged"; 100..102 insert as "new"; everything else
     // survives untouched.
@@ -119,7 +120,7 @@ class MergeIntoSpec extends SparkSpec {
     val src = Seq((Option.empty[Long], "nullk-updated", 9.0))
       .toDF("k", "v1", "v2")
     val v1 = SnapshotTable.mergeInto(spark, root, src, Seq("k"),
-      matchedUpdate = Some(None), notMatchedInsert = Some(None))
+      matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
     val fin = SnapshotTable.read(spark, root, Some(v1))
       .select("v1").collect().map(_.getString(0)).toSet
     assert(fin == Set("a", "nullk-updated", "c"),
@@ -171,9 +172,9 @@ class MergeIntoSpec extends SparkSpec {
       frame(1 to 40), Seq("k"), numFiles = 4)
     val src = frame(1 to 10).withColumn("v1", lit("fresh"))
     val v1 = SnapshotTable.mergeInto(spark, root, src, Seq("k"),
-      matchedUpdate = Some(None),
-      bySourceDelete = Some(Some(col("t.k") > 35)),
-      bySourceUpdate = Some((Some(col("t.k") > 30), Map("v1" -> lit("expired")))))
+      matched = Seq(UpdateClause(None, None)),
+      bySource = Seq(DeleteClause(Some(col("t.k") > 35)),
+        UpdateClause(Some(col("t.k") > 30), Some(Map("v1" -> lit("expired"))))))
     val fin = SnapshotTable.read(spark, root, Some(v1))
     val byK = fin.select("k", "v1").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert((36L to 40L).forall(k => !byK.contains(k)), "by-source delete expires k>35")
@@ -200,7 +201,7 @@ class MergeIntoSpec extends SparkSpec {
       frame(1 to 40), Seq("k"), numFiles = 4)
     val snapshot = frame(1 to 35)
     val v1 = SnapshotTable.mergeInto(spark, root, snapshot, Seq("k"),
-      bySourceDelete = Some(None))
+      bySource = Seq(DeleteClause(None)))
     val fin = SnapshotTable.read(spark, root, Some(v1))
     assert(fin.count() == 35 && fin.agg(max(col("k"))).head().getLong(0) == 35L)
     val before = SnapshotTable.read(spark, root, Some(v0)).inputFiles.toSet
@@ -217,8 +218,8 @@ class MergeIntoSpec extends SparkSpec {
     SnapshotTable.commit(spark, root, frame(1 to 10))
     val src = Seq((2L, 5.0), (4L, 7.0)).toDF("k", "bump")
     val v1 = SnapshotTable.mergeInto(spark, root, src, Seq("k"),
-      matchedUpdate = Some(None),
-      matchedSet = Some(Map("v2" -> col("s.bump"), "v1" -> lit("set"))))
+      matched = Seq(UpdateClause(None,
+        Some(Map("v2" -> col("s.bump"), "v1" -> lit("set"))))))
     val fin = SnapshotTable.read(spark, root, Some(v1)).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
     assert(fin(2L) == (("set", 5.0)) && fin(4L) == (("set", 7.0)))
@@ -260,7 +261,7 @@ class MergeIntoSpec extends SparkSpec {
     val src = Seq((2L, "s2", "extra2"), (9L, "s9", "extra9"))
       .toDF("k", "v1", "note") // note is NEW; v2 is ABSENT from the source
     val v1 = SnapshotTable.mergeInto(spark, root, src, Seq("k"),
-      matchedUpdate = Some(None), notMatchedInsert = Some(None),
+      matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)),
       evolve = true)
     val fin = SnapshotTable.read(spark, root, Some(v1))
     assert(fin.columns.toSeq == Seq("k", "v1", "v2", "note"))
@@ -278,7 +279,7 @@ class MergeIntoSpec extends SparkSpec {
     intercept[Exception] {
       SnapshotTable.mergeInto(spark, root,
         Seq((1, 1.0)).toDF("k", "v1"), Seq("k"),
-        matchedUpdate = Some(None), evolve = true)
+        matched = Seq(UpdateClause(None, None)), evolve = true)
     }
   }
 
@@ -290,14 +291,14 @@ class MergeIntoSpec extends SparkSpec {
       .toDF("k", "v1", "v2")
     val e = intercept[IllegalArgumentException] {
       SnapshotTable.mergeInto(spark, root, dupSrc, Seq("k"),
-        matchedUpdate = Some(None), notMatchedInsert = Some(None))
+        matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
     }
     assert(e.getMessage.contains("multiple source rows match"), e.getMessage)
     assert(SnapshotTable.currentVersion(spark, root).contains(v0), "no partial commit")
     // duplicate SOURCE-ONLY keys are legal SQL: each inserts
     val insOnly = Seq((50L, "x", 1.0), (50L, "y", 2.0)).toDF("k", "v1", "v2")
     val v1 = SnapshotTable.mergeInto(spark, root, insOnly, Seq("k"),
-      matchedUpdate = Some(None), notMatchedInsert = Some(None))
+      matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
     assert(SnapshotTable.read(spark, root, Some(v1)).filter(col("k") === 50).count() == 2)
   }
 
@@ -305,7 +306,7 @@ class MergeIntoSpec extends SparkSpec {
     val root = s"${tmpDir()}/t"
     val v0 = SnapshotTable.commit(spark, root, frame(1 to 5))
     val v1 = SnapshotTable.mergeInto(spark, root, frame(50 to 55), Seq("k"),
-      matchedUpdate = Some(None))
+      matched = Seq(UpdateClause(None, None)))
     assert(v1 == v0, "nothing to do must not commit a version")
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.MergeInto.DeleteClause
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,7 +65,7 @@ class PreserveLayoutSpec extends SparkSpec {
     // Delete-only merge: arms can only remove rows.
     SnapshotTable.mergeInto(spark, root,
       Seq(430L, 431L).toDF("k"), Seq("k"),
-      matchedDelete = Some(lit(true)))
+      matched = Seq(DeleteClause(Some(lit(true)))))
     assert(filesOf(root) == 10,
       s"delete-only merge must preserve file granularity, got ${filesOf(root)}")
     // UPDATE assigning a NON-cluster column: layout preserved.

@@ -29,6 +29,35 @@ class SnapshotTableSpec extends SparkSpec {
       canon(Seq((1L, "a"), (2L, "B2"), (3L, "c")).toDF("k", "v")))
   }
 
+  test("upsert rewrites only the files holding source keys") {
+    val root = tmpDir() + "/tbl"
+    val v0 = SnapshotTable.commitClustered(spark, root,
+      (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numFiles = 4)
+    val before = SnapshotTable.read(spark, root, Some(v0)).inputFiles.toSet
+    assert(before.size == 4)
+    val v1 = SnapshotTable.upsert(spark, root, Seq((5L, "new5")).toDF("k", "v"), Seq("k"))
+    val after = SnapshotTable.read(spark, root, Some(v1)).inputFiles.toSet
+    assert((before & after).size == 3,
+      s"the 3 files without key 5 must carry by manifest entry: ${(before & after).size}")
+    assert(after.size == 4, s"one file rewritten in place of the one holding key 5: $after")
+    assert(canon(SnapshotTable.read(spark, root, Some(v1))) ==
+      canon((1L to 40L).map(k => (k, if (k == 5L) "new5" else s"v$k")).toDF("k", "v")))
+  }
+
+  test("upsert refuses two source rows for a key the table holds, naming the key") {
+    val root = tmpDir() + "/tbl"
+    val seed = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val v0 = SnapshotTable.upsert(spark, root, seed, Seq("k"))
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.upsert(spark, root,
+        Seq((2L, "x"), (2L, "y"), (3L, "c")).toDF("k", "v"), Seq("k"))
+    }
+    assert(e.getMessage.contains("multiple source rows match") &&
+      e.getMessage.contains("[2]"), e.getMessage)
+    assert(SnapshotTable.currentVersion(spark, root).contains(v0), "no partial commit")
+    assert(canon(SnapshotTable.read(spark, root)) == canon(seed))
+  }
+
   test("reader pinned to an old version is isolated from later commits") {
     val root = tmpDir() + "/tbl"
     SnapshotTable.upsert(spark, root, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
@@ -194,7 +223,9 @@ class SnapshotTableSpec extends SparkSpec {
       canon(Seq((2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v")))
     assert(SnapshotTable.changes(spark, root, 2L).count() == 0)
     // A rewrite commit replaces the file set: changes = full reprocess.
-    SnapshotTable.upsert(spark, root, Seq((1L, "A!")).toDF("k", "v"), Seq("k"))
+    // (recluster rewrites every file; an upsert rewrites only the files
+    // holding its keys.)
+    SnapshotTable.recluster(spark, root, Seq("k"))
     assert(SnapshotTable.changes(spark, root, 2L).count() == 4)
   }
 

@@ -1,6 +1,7 @@
 package graft.sql
 
 import graft.SparkSpec
+import graft.ops.MergeInto.{InsertClause, UpdateClause}
 import graft.ops.SnapshotTable
 import org.apache.spark.sql.functions._
 
@@ -138,7 +139,7 @@ class TableDdlSpec extends SparkSpec {
       val keys = Seq.fill(40)(rnd.nextInt(20000).toLong).distinct
       SnapshotTable.mergeInto(spark, root,
         keys.map(k => (k, s"w$w-$k")).toDF("k", "v"), Seq("k"),
-        matchedUpdate = Some(None), notMatchedInsert = Some(None))
+        matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
     }
     val v = SnapshotTable.currentVersion(spark, root).get
     val entries = SnapshotTable.resolvedAt(fs, root, v).stats

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.ops.MergeInto.{DeleteClause, InsertClause, UpdateClause}
 import graft.ext.{MvAgg, MvSpec}
 import graft.ops.SnapshotTable
 import org.apache.spark.sql.functions._
@@ -64,7 +65,7 @@ class MvCdcSinkSpec extends SparkSpec {
       Map("v" -> lit(55.0)))
     SnapshotTable.mergeInto(spark, base,
       Seq((6L, "a", 60.0), (4L, "b", 44.0)).toDF("k", "g", "v"), Seq("k"),
-      matchedUpdate = Some(None), notMatchedInsert = Some(None))
+      matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
     drain(base, view, appId, ckpt, v0)
     assert(viewRows(view) == recompute(base),
       "restart must fold only the new commits and still equal recompute")
@@ -97,7 +98,8 @@ class MvCdcSinkSpec extends SparkSpec {
     // a loses its min (k=1) and max (k=3) holders; b gains a row.
     SnapshotTable.mergeInto(spark, base,
       Seq((1L, "a", 0.0), (3L, "a", 0.0), (5L, "b", 45.0)).toDF("k", "g", "v"), Seq("k"),
-      matchedDelete = Some(lit(true)), notMatchedInsert = Some(None))
+      matched = Seq(DeleteClause(Some(lit(true)))),
+      notMatched = Seq(InsertClause(None, None)))
     drain(base, view, appId, ckpt, v0)
     assert(viewRows(view) == recompute(base),
       "after the drain the view must equal a full recompute")
