@@ -1,24 +1,18 @@
 package graft
 
+import graft.ops.SnapshotTable
 import graft.pipeline.{TicketPipeline, TicketTransform}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end composition demo (SURVEY.md §3.1): paginated source → 37-col
-  * transform → incremental anti-join → MERGE upsert → re-run idempotency.
+  * transform → dedup → MERGE upsert into a SnapshotTable → re-run with
+  * overlap, then time travel to the first sync's version.
   * `runMain graft.Demo [targetDir]`. */
 object Demo {
   def main(args: Array[String]): Unit = {
     val target = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString) + "/tickets"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Plans.session()
 
     // 1. "API" extract: 3 pages of 100 tickets from the paginated V2 source
     val raw = spark.read.format("ticket-pages")
@@ -49,21 +43,14 @@ object Demo {
     val r2 = TicketPipeline.sync(spark, tickets2, target)
     println(s"DEMO sync2: total=${r2.total} inserted=${r2.inserted} updated=${r2.updated}")
 
-    val fin = spark.read.parquet(target)
-    println(s"DEMO final: rows=${fin.count()} distinct=${fin.select("_id").distinct().count()}")
+    // 6. every sync is one atomic version: the head and the first sync's
+    // version both stay readable
+    val fin = SnapshotTable.read(spark, target)
+    println(s"DEMO final: v=${SnapshotTable.currentVersion(spark, target).get} " +
+      s"rows=${fin.count()} distinct=${fin.select("_id").distinct().count()} " +
+      s"(v0 rows=${SnapshotTable.read(spark, target, Some(0L)).count()})")
     println("DEMO sample:")
     fin.orderBy("_id").select("_id", "createdOn", "description").show(3, truncate = false)
-
-    // 6. the same two syncs against the manifest-committed SnapshotTable:
-    // atomic commits, versioned history, time travel
-    val snapRoot = target + "_snapshot"
-    val s1 = TicketPipeline.syncSnapshot(spark, tickets, snapRoot)
-    val s2 = TicketPipeline.syncSnapshot(spark, tickets2, snapRoot)
-    import graft.ops.SnapshotTable
-    println(s"DEMO snapshot sync: v=${SnapshotTable.currentVersion(spark, snapRoot).get} " +
-      s"rows=${SnapshotTable.read(spark, snapRoot).count()} " +
-      s"(v0 rows=${SnapshotTable.read(spark, snapRoot, Some(0L)).count()}) " +
-      s"inserted=${s1.inserted}+${s2.inserted} updated=${s2.updated}")
     spark.stop()
   }
 }

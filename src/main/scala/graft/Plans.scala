@@ -19,9 +19,15 @@ import org.apache.spark.sql.SparkSession
   * evidence for those lives in `graft.Prof`'s job breakdowns. */
 object Plans {
 
-  /** The local session the tool mains (`Plans`, `Prof`) run on. */
+  /** The local session the tool mains (`Plans`, `Prof`, `Demo`,
+    * `ScaleRehearsal`) run on: `SPARK_GRAFT_CPUS` local threads (the Bench
+    * knob, default 32), 32 shuffle partitions. The thread count lets a
+    * memory-bounded run keep a production-shaped heap-per-core ratio — a
+    * 4g heap across 32 local threads is 128 MB/core, an order under any
+    * real executor config. */
   def session(): SparkSession = {
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

@@ -15,18 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_CPUS (the Bench knob): lets the memory-bounded rehearsal
-    // keep a production-shaped heap-per-core ratio — a 4g heap across 32
-    // local threads is 128 MB/core, an order under any real executor
-    // config, and starves 32 concurrent task buffers long before it says
-    // anything about data residency.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_CPUS (read by Plans.session) keeps the memory-bounded
+    // rehearsal's heap-per-core ratio production-shaped.
+    val spark = Plans.session()
 
     if (args.contains("retrieval")) { retrievalLeg(spark); spark.stop(); return }
     if (args.contains("retrieval50k")) { retrievalWideTermsLeg(spark); spark.stop(); return }
@@ -1048,16 +1039,16 @@ object ScaleRehearsal {
       if (i == batches - 1)
         println(s"SCALE mv final refresh reads ${delta.inputFiles.length} files; " +
           s"a recompute reads ${SnapshotTable.read(spark, root).inputFiles.length}")
-      val next = (if (view == null) MaterializedView.partial(delta)
-                  else MaterializedView.combine(view, MaterializedView.partial(delta)))
-        .localCheckpoint()
+      val next =
+        if (view == null) MaterializedView.ordersSpec.partial(delta).localCheckpoint()
+        else MaterializedView.ordersSpec.combineDelta(spark, root, view, delta, delta.limit(0))
       if (prev != null) Checkpoints.free(prev)
       prev = view; view = next
       val refreshW = (System.nanoTime() - tr) / 1e9
       refreshTotal += refreshW
       if (i % 5 == 0 || i == batches - 1) {
         val tc = System.nanoTime()
-        val n = MaterializedView.partial(SnapshotTable.read(spark, root)).count()
+        val n = MaterializedView.ordersSpec.partial(SnapshotTable.read(spark, root)).count()
         val recomputeW = (System.nanoTime() - tc) / 1e9
         println(f"SCALE mv batch$i%02d append $appendW%.2f s refresh $refreshW%.2f s | full recompute $recomputeW%.2f s ($n groups)")
       } else {
@@ -1071,7 +1062,7 @@ object ScaleRehearsal {
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getAs[Long]("cnt"), r.getDecimal(3).stripTrailingZeros,
           r.getAs[Double]("min_price"), r.getAs[Double]("max_price"))).toMap
-    val full = MaterializedView.partial(SnapshotTable.read(spark, root)).collect()
+    val full = MaterializedView.ordersSpec.partial(SnapshotTable.read(spark, root)).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getAs[Long]("cnt"), r.getDecimal(3).stripTrailingZeros,
           r.getAs[Double]("min_price"), r.getAs[Double]("max_price"))).toMap
@@ -1322,7 +1313,7 @@ object ScaleRehearsal {
     val v0 = time("mvup_bootstrap_upsert_3.2M") {
       SnapshotTable.upsert(spark, root, big, Seq("o_orderkey"), clusterBy = keys)
     }
-    val view0 = MaterializedView.partial(SnapshotTable.read(spark, root, Some(v0)))
+    val view0 = MaterializedView.ordersSpec.partial(SnapshotTable.read(spark, root, Some(v0)))
       .localCheckpoint()
 
     // The change batch: every 97th row of ONE group moves to '9-MOVED' —
@@ -1342,7 +1333,7 @@ object ScaleRehearsal {
       s"${removes.inputFiles.length} remove files ($nMoved rows moved) vs $tableFiles table files")
 
     val refreshed = time("mvup_refresh_combineDelta") {
-      MaterializedView.combineDelta(spark, root, view0, adds, removes).localCheckpoint()
+      MaterializedView.ordersSpec.combineDelta(spark, root, view0, adds, removes).localCheckpoint()
     }
     // Observability of the touched-group recompute's file skipping: the
     // identical predicate through readTracked reports planned/total files.
@@ -1353,7 +1344,7 @@ object ScaleRehearsal {
       s"${i.lastSelected} of ${i.totalFiles} clustered files"))
 
     val full = time("mvup_full_recompute") {
-      MaterializedView.partial(SnapshotTable.read(spark, root)).localCheckpoint()
+      MaterializedView.ordersSpec.partial(SnapshotTable.read(spark, root)).localCheckpoint()
     }
     val key = (r: org.apache.spark.sql.Row) => (r.getString(0), r.getString(1)) ->
       (r.getAs[Long]("cnt"), r.getDecimal(3).stripTrailingZeros,

@@ -111,49 +111,6 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
     df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
   }
 
-  /** NULL-SAFE full-outer join on the group keys, emitting canonical key
-    * columns (coalesced across sides). A Seq-of-names join would leave a
-    * NULL-keyed group duplicated — one stale row per side — because plain
-    * equality never matches NULL against NULL; group keys are exactly
-    * where SQL's GROUP BY treats NULLs as one group. Non-key columns of
-    * both sides pass through (callers pre-rename to avoid collisions). */
-  private def fullOuterOnKeys(left: DataFrame, right: DataFrame): DataFrame = {
-    val rr = right.select(
-      (keys.zipWithIndex.map { case (k, i) => col(k).as(s"__rk_$i") } ++
-        right.columns.filterNot(keys.contains).map(col)): _*)
-    val cond = keys.zipWithIndex.map { case (k, i) =>
-      left(k) <=> rr(s"__rk_$i")
-    }.reduce(_ && _)
-    left.join(rr, cond, "full_outer")
-      .select((keys.zipWithIndex.map { case (k, i) =>
-        coalesce(left(k), rr(s"__rk_$i")).as(k)
-      } ++ left.columns.filterNot(keys.contains).map(left(_))
-        ++ right.columns.filterNot(keys.contains).map(rr(_))): _*)
-  }
-
-  /** Merge a delta's partials into the standing view (INSERT-only path:
-    * appendOnce feeds). Additive states add; min/max lattice-join
-    * (least/greatest skip nulls — exactly the join needed for groups
-    * present on only one side of the full-outer). Cost O(|view| +
-    * |delta|). */
-  def combine(mv: DataFrame, delta: DataFrame): DataFrame = {
-    val d = delta.select(
-      (keys.map(col) ++ states.map { case (c, _) => col(c).as(s"__d_$c") }): _*)
-    val joined = fullOuterOnKeys(mv, d)
-    joined.select((keys.map(col) ++ states.map { case (c, kind) =>
-      val dt = mv.schema(c).dataType
-      kind match {
-        // NULL only when both sides are NULL: a Sum over no non-null
-        // value stays NULL, as a full recompute reads it.
-        case "add" =>
-          coalesce(col(c) + col(s"__d_$c"), col(c), col(s"__d_$c"))
-            .cast(dt).as(c)
-        case "min" => least(col(c), col(s"__d_$c")).as(c)
-        case _ => greatest(col(c), col(s"__d_$c")).as(c)
-      }
-    }): _*)
-  }
-
   /** Retraction-capable refresh: merge a row-level CDC delta
     * ([[SnapshotTable.changesDelta]]'s (adds, removes)) into the standing
     * view. Additive states retract algebraically; groups whose count
@@ -161,7 +118,9 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
     * adds)` unless a removal can have taken its extreme away, and only
     * those groups recompute from the base table (the rule is at
     * [[extremeLost]]). Deletes and updates that leave every extreme holder
-    * in place therefore never open `tableRoot`.
+    * in place therefore never open `tableRoot`. An insert-only refresh (an
+    * append's rows) passes `adds.limit(0)` as `removes`: no extreme is
+    * lost, and a Sum over no non-null value stays NULL.
     *
     * The touched-group restriction applies the `restrictTerms` threshold
     * discipline (VERDICT r9: the literal-OR-chain hazard, solved the same

@@ -41,10 +41,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * delta against a huge target AQE broadcasts it; no driver-side state.
   * The table format's one MERGE ([[SnapshotTable.mergeInto]], and the
   * plain upsert [[SnapshotTable.upsert]] through it) lowers onto this
-  * builder. `Upsert.merge` (anti-join + union) stays for the parquet-file
-  * upsert outside the table format and as the reference the
-  * unconditional update+insert case is property-pinned against
-  * (MergeIntoSpec).
+  * builder. `Upsert.merge` (anti-join + union) stays as the DataFrame
+  * form (`j4_merge_upsert`) and as the reference the unconditional
+  * update+insert case is property-pinned against (MergeIntoSpec).
   *
   * Arms live in three ordered chains, one per clause family: `matched`
   * and `bySource` take [[MergeInto.UpdateClause]]/[[MergeInto.DeleteClause]],

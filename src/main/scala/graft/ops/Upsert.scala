@@ -1,14 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** MERGE-upsert re-expressed as joins (SURVEY.md §2.3 J4; reference semantics
   * /root/reference/main.py:349-384): matched target rows are fully overwritten
   * by the source (`UPDATE SET` every non-key column, main.py:354), unmatched
-  * source rows are inserted (main.py:355-357), missing target bootstraps from
-  * the source schema (main.py:369-373).
+  * source rows are inserted (main.py:355-357). Landing a batch in a table —
+  * including the bootstrap of a missing target (main.py:369-373) — is
+  * [[SnapshotTable.upsert]]'s job, through the table's one commit seam.
   *
   * Scale notes: the merge is one shuffle join on the key — no driver-side ID
   * sets (the reference's client-side set at main.py:96 does not scale). When
@@ -47,77 +48,4 @@ object Upsert {
     }
     t.join(s, cond, "full_outer").select(cols.toIndexedSeq: _*)
   }
-
-  /** Parquet-backed upsert with first-run bootstrap (S7, main.py:366-381) and
-    * snapshot-swap write discipline: write the merged result to a fresh
-    * snapshot dir, then swap a pointerless convention (`path` is rewritten
-    * atomically via rename). Non-transactional vs BigQuery MERGE — documented
-    * limitation without a table format (no Delta/Iceberg jars offline). */
-  def upsertParquet(spark: SparkSession, targetPath: String, source: DataFrame,
-                    keys: Seq[String]): Unit = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(hadoopConf)
-    val target = new org.apache.hadoop.fs.Path(targetPath)
-    if (!fs.exists(target)) {
-      // bootstrap: CREATE TABLE AS SELECT * LIMIT 0 then insert == plain write
-      source.write.mode(SaveMode.ErrorIfExists).parquet(targetPath)
-    } else {
-      // list the snapshot's concrete files: a directory-level read would hit
-      // the (possibly stale, JVM-shared) file-status cache after a prior swap
-      spark.catalog.refreshByPath(targetPath)
-      val files = fs.listStatus(target).map(_.getPath.toString)
-        .filter(_.endsWith(".parquet"))
-      val current = spark.read.parquet(files.toIndexedSeq: _*)
-      val merged = merge(current, source, keys).localCheckpoint()
-      val tmp = new org.apache.hadoop.fs.Path(targetPath + "__snapshot_tmp")
-      val old = new org.apache.hadoop.fs.Path(targetPath + "__snapshot_old")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      if (fs.exists(old)) fs.delete(old, true)
-      fs.rename(target, old)
-      fs.rename(tmp, target)
-      fs.delete(old, true)
-    }
-    // drop the cached file listing for the path — readers in this session
-    // would otherwise resolve the pre-swap snapshot's deleted files
-    spark.catalog.refreshByPath(targetPath)
-  }
-
-  /** Bounded retry with exponential backoff around a TRANSIENT-failure-prone
-    * action (VERDICT r2 "What's missing" #2; reference main.py:361-384
-    * retries the MERGE once after repairing a missing target — cloud writes
-    * also see transient slot/IO errors). The wrapped action must be
-    * idempotent, which the MERGE-semantics upserts here are: a retry after a
-    * half-applied failure converges to the same final table. Rethrows the
-    * last failure after `attempts`. */
-  def withRetry[T](attempts: Int = 3, backoffMs: Long = 100L)(action: => T): T = {
-    require(attempts >= 1, s"attempts must be >= 1 (got $attempts)")
-    var last: Throwable = null
-    var delay = backoffMs
-    var i = 0
-    while (i < attempts) {
-      try return action
-      catch {
-        case e: Throwable =>
-          last = e
-          i += 1
-          if (i < attempts) {
-            org.slf4j.LoggerFactory.getLogger(getClass)
-              .warn(s"upsert attempt $i/$attempts failed (${e.getMessage}); retrying in ${delay}ms")
-            Thread.sleep(delay)
-            delay *= 2
-          }
-      }
-    }
-    throw last
-  }
-
-  /** The reference's retried MERGE (main.py:361-384): upsertParquet under
-    * `withRetry` — the bootstrap branch already covers the repair-then-retry
-    * path (missing target is created on first attempt, not thrown). */
-  def upsertParquetWithRetry(spark: SparkSession, targetPath: String,
-                             source: DataFrame, keys: Seq[String],
-                             attempts: Int = 3): Unit =
-    withRetry(attempts) { upsertParquet(spark, targetPath, source, keys) }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.ops.Upsert
+import graft.ops.{SnapshotTable, Upsert}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     → incremental anti-join vs target ids    [fixes the reference's dead
   *        code at main.py:409-417: it computed new-vs-existing then re-fetched
   *        everything anyway]
-  *     → MERGE upsert into the target           [main.py:349-384]
+  *     → MERGE upsert into the target table     [main.py:349-384]
   *
   * No driver-side ID sets anywhere (the reference's client set at main.py:96
   * is O(table) driver memory) — membership is a distributed semi/anti join.
@@ -34,32 +34,16 @@ object TicketPipeline {
   def newTickets(transformed: DataFrame, target: DataFrame): DataFrame =
     transformed.join(existingIds(target), Seq("_id"), "left_anti")
 
-  /** Full-refresh sync of one batch into a parquet target path:
-    * transform → dedup latest per _id → upsert (source wins on match). */
-  def sync(spark: SparkSession, rawTickets: DataFrame, targetPath: String): SyncReport = {
+  /** Sync of one batch into a manifest-committed SnapshotTable at `root`:
+    * transform → dedup latest per _id → upsert (source wins on match,
+    * main.py:354). The commit is atomic (readers never see a half-written
+    * version) and old versions stay readable until vacuum — the
+    * transactional MERGE the reference gets from BigQuery (main.py:349-363).
+    * A missing table is bootstrapped by the upsert itself (main.py:366-381). */
+  def sync(spark: SparkSession, rawTickets: DataFrame, root: String): SyncReport = {
     val transformed = TicketTransform.transform(rawTickets)
     // localCheckpoint: the transform+dedup window runs ONCE; the report
-    // counts and the upsert read the materialized batch (the r3 version
-    // recomputed the whole transform three times — two counts + the write).
-    val deduped = Upsert.latestPerKey(transformed, Seq("_id"), "updatedTimestamp")
-      .localCheckpoint()
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existed = fs.exists(new org.apache.hadoop.fs.Path(targetPath))
-    val (nTotal, nUpdated) =
-      if (!existed) (deduped.count(), 0L)
-      else reportCounts(deduped, spark.read.parquet(targetPath))
-    Upsert.upsertParquet(spark, targetPath, deduped, Seq("_id"))
-    SyncReport(total = nTotal, inserted = nTotal - nUpdated, updated = nUpdated)
-  }
-
-  /** Same sync against a manifest-committed SnapshotTable: commits are
-    * atomic (readers never see a half-written snapshot) and old versions
-    * stay readable until vacuum — the transactional MERGE the reference gets
-    * from BigQuery (main.py:349-363), recovered without a table-format jar. */
-  def syncSnapshot(spark: SparkSession, rawTickets: DataFrame, root: String): SyncReport = {
-    import graft.ops.SnapshotTable
-    val transformed = TicketTransform.transform(rawTickets)
+    // counts and the upsert read the materialized batch.
     val deduped = Upsert.latestPerKey(transformed, Seq("_id"), "updatedTimestamp")
       .localCheckpoint()
     val (nTotal, nUpdated) = SnapshotTable.currentVersion(spark, root) match {
@@ -90,14 +74,14 @@ object TicketPipeline {
     * exact (ids-in minus rows-fetched over the once-materialized fetch
     * result), not an at-least-once accumulator. */
   def syncWithDetails(spark: SparkSession, ids: org.apache.spark.sql.Dataset[String],
-                      fetch: String => Option[String], targetPath: String): SyncReport = {
+                      fetch: String => Option[String], root: String): SyncReport = {
     import graft.sources.PointLookup
     import spark.implicits._
     val nIds = ids.count()
     // localCheckpoint: the fetch runs ONCE; downstream counts and the upsert
     // read the materialized batch instead of re-hitting the connector.
     val lines = PointLookup.fetchAll(ids, fetch).toDF("value").localCheckpoint()
-    val base = sync(spark, ingestJson(spark, lines), targetPath)
+    val base = sync(spark, ingestJson(spark, lines), root)
     base.copy(failed = nIds - lines.count())
   }
 

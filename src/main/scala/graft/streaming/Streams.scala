@@ -168,14 +168,17 @@ object Streams {
     docs.withColumn("content_hash", sha2(col("text"), 256))
       .join(corpusIndex, Seq("content_hash"), "left_anti")
 
-  /** The reference's sink: every micro-batch MERGE-upserted into the target
-    * (idempotent on the key, late/duplicate data folded by upsert). */
-  def upsertSink(events: DataFrame, targetPath: String,
+  /** The reference's sink: every micro-batch MERGE-upserted into the
+    * SnapshotTable at `tableRoot` as one version (readers never see a
+    * half-landed batch; a replay is idempotent on the key, late/duplicate
+    * data folded by the upsert). */
+  def upsertSink(events: DataFrame, tableRoot: String,
                  checkpoint: String): DataStreamWriter[Row] =
     events.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.upsertParquet(batch.sparkSession, targetPath,
+        graft.ops.SnapshotTable.upsert(batch.sparkSession, tableRoot,
           Upsert.latestPerKey(batch, Seq("event_id"), "ts"), Seq("event_id"))
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -320,15 +323,15 @@ object Streams {
         if (!SnapshotTable.lastTxn(s, viewRoot, appId).exists(_ >= batchId)) {
           val refreshed = SnapshotTable.currentVersion(s, viewRoot) match {
             case None => // view is born from this batch's snapshot
-              MaterializedView.partial(SnapshotTable.read(s, baseRoot, Some(v)))
+              MaterializedView.ordersSpec.partial(SnapshotTable.read(s, baseRoot, Some(v)))
             case Some(_) =>
+              // The fold materializes its result: the plan reads no view
+              // file the commit supersedes.
               val delta = SnapshotTable.changes(s, baseRoot, v - 1, Some(v))
-              MaterializedView.combine(
-                SnapshotTable.read(s, viewRoot), MaterializedView.partial(delta))
+              MaterializedView.ordersSpec.combineDelta(s, baseRoot,
+                SnapshotTable.read(s, viewRoot), delta, delta.limit(0))
           }
-          SnapshotTable.commitOnce(s, viewRoot,
-            refreshed.localCheckpoint(), // plan must not read view files the commit supersedes
-            appId, batchId)
+          SnapshotTable.commitOnce(s, viewRoot, refreshed, appId, batchId)
         }
         ()
       }

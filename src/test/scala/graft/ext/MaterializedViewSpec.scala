@@ -46,7 +46,7 @@ class MaterializedViewSpec extends SparkSpec {
     val dir = tmpDir()
     writeOrders(dir)
     val got = collectView(dir)
-    val expected = MaterializedView.partial(
+    val expected = MaterializedView.ordersSpec.partial(
         spark.read.parquet(s"$dir/orders.parquet"))
       .select(col("o_orderstatus"), col("o_orderpriority"), col("cnt"),
         col("total").cast("double").as("total"), col("min_price"), col("max_price"))
@@ -101,14 +101,14 @@ class MaterializedViewSpec extends SparkSpec {
       (5L, "P", "C", 7.0))
     val v0 = SnapshotTable.upsert(spark, root, df(base), Seq("o_orderkey"),
       clusterBy = Seq("o_orderstatus", "o_orderpriority"))
-    val mv0 = MaterializedView.partial(SnapshotTable.read(spark, root, Some(v0)))
+    val mv0 = MaterializedView.ordersSpec.partial(SnapshotTable.read(spark, root, Some(v0)))
 
     // Upsert: row 2 (A's max) and row 4 (all of B) move to group Z.
     val moved = Seq((2L, "O", "Z", 30.0), (4L, "F", "Z", 99.0))
     val v1 = SnapshotTable.upsert(spark, root, df(moved), Seq("o_orderkey"),
       clusterBy = Seq("o_orderstatus", "o_orderpriority"))
     val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v0, Some(v1))
-    val got = MaterializedView.combineDelta(spark, root, mv0, adds, removes)
+    val got = MaterializedView.ordersSpec.combineDelta(spark, root, mv0, adds, removes)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("cnt"),
         r.getDecimal(3).doubleValue(), r.getAs[Double]("min_price"),
@@ -121,7 +121,7 @@ class MaterializedViewSpec extends SparkSpec {
       s"combineDelta produced $got")
 
     // full-recompute cross-check: the refreshed view == partial(final state)
-    val full = MaterializedView.partial(SnapshotTable.read(spark, root))
+    val full = MaterializedView.ordersSpec.partial(SnapshotTable.read(spark, root))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("cnt"),
         r.getDecimal(3).doubleValue(), r.getAs[Double]("min_price"),
@@ -133,12 +133,13 @@ class MaterializedViewSpec extends SparkSpec {
     val mv = Seq(("O", "1-URGENT", 2L, BigDecimal("30.50"), 10.0, 20.5))
       .toDF("o_orderstatus", "o_orderpriority", "cnt", "total", "min_price", "max_price")
       .withColumn("total", col("total").cast("decimal(28,2)"))
-    val delta = Seq(
-        ("O", "1-URGENT", 1L, BigDecimal("9.50"), 9.5, 9.5),
-        ("F", "2-HIGH", 3L, BigDecimal("3.00"), 0.5, 2.0))
-      .toDF("o_orderstatus", "o_orderpriority", "cnt", "total", "min_price", "max_price")
-      .withColumn("total", col("total").cast("decimal(28,2)"))
-    val out = MaterializedView.combine(mv, delta).collect()
+    // Raw delta rows: one O/1-URGENT order, three F/2-HIGH orders.
+    val delta = Seq(("O", "1-URGENT", 9.5),
+        ("F", "2-HIGH", 0.5), ("F", "2-HIGH", 0.5), ("F", "2-HIGH", 2.0))
+      .toDF("o_orderstatus", "o_orderpriority", "o_totalprice")
+    // No removes: no extreme is lost, so the (absent) base is never read.
+    val out = MaterializedView.ordersSpec.combineDelta(spark,
+        s"${tmpDir()}/no-such-table", mv, delta, delta.limit(0)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("cnt"),
         r.getDecimal(3).doubleValue(), r.getAs[Double]("min_price"),
         r.getAs[Double]("max_price"))).toSet

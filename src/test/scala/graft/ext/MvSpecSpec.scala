@@ -197,10 +197,12 @@ class MvSpecSpec extends SparkSpec {
   test("insert-only combine: null keys merge, new groups appear, sums stay exact") {
     val mv0 = spec.partial(Seq(
       (Some("a"), Some(1.5)), (None, Some(2.5))).toDF("grp", "v"))
-    val delta = spec.partial(Seq(
+    val delta = Seq(
       (Some("a"), Some(0.25)), (None, Some(0.75)), (Some("z"), Some(9.0))
-    ).toDF("grp", "v"))
-    val got = rows(spec.combine(mv0, delta))
+    ).toDF("grp", "v")
+    // No removes: no extreme is lost, so the (absent) base is never read.
+    val absent = s"${tmpDir()}/no-such-table"
+    val got = rows(spec.combineDelta(spark, absent, mv0, delta, delta.limit(0)))
     assert(got == Set(
       (Some("a"), 2L, Some(1.75), Some(0.875), Some(0.25), Some(1.5)),
       (None, 2L, Some(3.25), Some(1.625), Some(0.75), Some(2.5)),
@@ -214,7 +216,8 @@ class MvSpecSpec extends SparkSpec {
       .toDF("grp", "v")
     val more = Seq((Some("n"), Option.empty[Double]), (Some("a"), Some(2.0)),
       (Some("m"), Option.empty[Double])).toDF("grp", "v")
-    val got = rows(spec.combine(spec.partial(base), spec.partial(more)))
+    val absent = s"${tmpDir()}/no-such-table"
+    val got = rows(spec.combineDelta(spark, absent, spec.partial(base), more, more.limit(0)))
     assert(got == rows(spec.partial(base.union(more))), s"got $got")
     assert(got.exists(r => r._1.contains("n") && r._3.isEmpty))
   }

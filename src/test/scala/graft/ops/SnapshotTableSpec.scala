@@ -58,6 +58,26 @@ class SnapshotTableSpec extends SparkSpec {
     assert(canon(SnapshotTable.read(spark, root)) == canon(seed))
   }
 
+  test("upsert and MERGE land on a table declaring non-null nested fields") {
+    import org.apache.spark.sql.functions.{array, lit, struct}
+    // array(struct(lit)) plans a non-null element and field; the bootstrap
+    // declares that schema as the batch states it.
+    def batch(ks: Long*) = ks.toDF("k")
+      .withColumn("tags", array(struct(lit("t").as("tag"))))
+    def keys(root: String) = SnapshotTable.read(spark, root)
+      .select("k").as[Long].collect().sorted.toSeq
+    val up = tmpDir() + "/up"
+    SnapshotTable.upsert(spark, up, batch(1L, 2L), Seq("k"))
+    SnapshotTable.upsert(spark, up, batch(2L, 3L), Seq("k"))
+    assert(keys(up) == Seq(1L, 2L, 3L))
+    val merged = tmpDir() + "/merged"
+    SnapshotTable.append(spark, merged, batch(1L, 2L))
+    SnapshotTable.mergeInto(spark, merged, batch(2L, 3L), Seq("k"),
+      matched = Seq(MergeInto.UpdateClause(None, None)),
+      notMatched = Seq(MergeInto.InsertClause(None, None)))
+    assert(keys(merged) == Seq(1L, 2L, 3L))
+  }
+
   test("reader pinned to an old version is isolated from later commits") {
     val root = tmpDir() + "/tbl"
     SnapshotTable.upsert(spark, root, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
@@ -260,6 +280,29 @@ class SnapshotTableSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root + "/snap-00000000-deadbeef")))
+    assert(SnapshotTable.read(spark, root).count() == 2)
+  }
+
+  test("vacuum DRY RUN lists orphan dirs; the real vacuum deletes exactly the listed dirs") {
+    val root = tmpDir() + "/tbl"
+    SnapshotTable.upsert(spark, root, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
+    SnapshotTable.upsert(spark, root, Seq((2L, "b")).toDF("k", "v"), Seq("k"))
+    // A lost CAS race's leftover for version 1 (unique token, no manifest).
+    Seq((99L, "junk")).toDF("k", "v").write.parquet(root + "/snap-00000001-0badf00d")
+    SnapshotTable.upsert(spark, root, Seq((1L, "A")).toDF("k", "v"), Seq("k"))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataDirs(): Set[String] = fs.listStatus(new org.apache.hadoop.fs.Path(root))
+      .map(_.getPath.getName)
+      .filter(n => n.startsWith("snap-") || n.startsWith("cdc-") || n.startsWith("dv-"))
+      .toSet
+    val listed = SnapshotTable.vacuumPlan(spark, root, keep = 1)
+      .collect { case ("data-dir", d, _) => new org.apache.hadoop.fs.Path(d).getName }
+    assert(listed.contains("snap-00000001-0badf00d"), s"dry run missed the orphan: $listed")
+    assert(listed.distinct.size == listed.size, s"a dir is listed twice: $listed")
+    val before = dataDirs()
+    SnapshotTable.vacuum(spark, root, keep = 1)
+    assert(before -- dataDirs() == listed.toSet)
     assert(SnapshotTable.read(spark, root).count() == 2)
   }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Property tests for the MERGE combinator (SURVEY.md §5): idempotence,
-  * key-cardinality invariant, full-outer formulation equivalence, and the
-  * parquet upsert's bootstrap/swap discipline. */
+  * key-cardinality invariant, full-outer formulation equivalence and the
+  * source's last-write-wins pre-dedup. */
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,53 +44,11 @@ class UpsertSpec extends SparkSpec {
     assert(m == Seq((1L, "new", 9.0), (2L, "keep", 2.0), (3L, "ins", 3.0)))
   }
 
-  test("upsertParquet: bootstrap, merge, snapshot swap, no leftovers") {
-    val path = tmpDir() + "/target"
-    Upsert.upsertParquet(spark, path, frame(Seq(1, 2, 3)), Seq("k"))
-    assert(spark.read.parquet(path).count() == 3)
-    Upsert.upsertParquet(spark, path, frame(Seq(3, 4)), Seq("k"))
-    val after = spark.read.parquet(path)
-    assert(after.count() == 4)
-    assert(after.select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-    // snapshot-swap leaves no tmp/old dirs behind
-    val parent = new java.io.File(path).getParentFile.listFiles().map(_.getName)
-    assert(parent.toSeq == Seq("target"))
-  }
-
   test("latestPerKey keeps the newest version per key") {
     val src = Seq((1L, 100L, "a"), (1L, 300L, "c"), (1L, 200L, "b"), (2L, 50L, "x"))
       .toDF("k", "ver", "v")
     val out = Upsert.latestPerKey(src, Seq("k"), "ver").orderBy("k")
       .as[(Long, Long, String)].collect().toSeq
     assert(out == Seq((1L, 300L, "c"), (2L, 50L, "x")))
-  }
-
-  test("withRetry: transient failures retried, exhaustion rethrows, upsert converges") {
-    // two transient failures then success
-    var calls = 0
-    val got = Upsert.withRetry(attempts = 3, backoffMs = 1) {
-      calls += 1
-      if (calls < 3) throw new RuntimeException(s"transient $calls")
-      42
-    }
-    assert(got == 42 && calls == 3)
-    // exhaustion rethrows the LAST failure
-    var n = 0
-    val e = intercept[RuntimeException](Upsert.withRetry(attempts = 2, backoffMs = 1) {
-      n += 1; throw new RuntimeException(s"boom $n")
-    })
-    assert(e.getMessage == "boom 2" && n == 2)
-    // retried MERGE is idempotent end-to-end: a failure AFTER a completed
-    // upsert (sink flake) triggers a re-run that must not change the table
-    val path = tmpDir() + "/target"
-    Upsert.upsertParquetWithRetry(spark, path, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
-    var attempt = 0
-    Upsert.withRetry(attempts = 2, backoffMs = 1) {
-      attempt += 1
-      Upsert.upsertParquet(spark, path, Seq((1L, "A2"), (2L, "b")).toDF("k", "v"), Seq("k"))
-      if (attempt == 1) throw new RuntimeException("post-commit transient flake")
-    }
-    val after = spark.read.parquet(path).orderBy("k").as[(Long, String)].collect().toSeq
-    assert(after == Seq((1L, "A2"), (2L, "b")))
   }
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.ops.Upsert
+import graft.ops.{SnapshotTable, Upsert}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,6 +29,12 @@ class TicketPipelineSpec extends SparkSpec {
     """{"_id":"b2","createdTimestamp":0,"updatedTimestamp":1700000200,
        "subject":"Yo","description":"plain text","stats":"not json at all"}"""
       .replaceAll("\n\\s*", "")
+
+  // t1 updated (newer updatedTimestamp, status closed) and a new ticket t3
+  private val t1v2 = t1.replace("\"status\":\"open\"", "\"status\":\"closed\"")
+    .replace("1700000100", "1700000300")
+  private val t3 =
+    """{"_id":"c3","createdTimestamp":1700001000,"updatedTimestamp":1700001000,"subject":"New"}"""
 
   test("transform: 40-column projection with reference quirks") {
     val out = TicketTransform.transform(ingest(Seq(t1, t2)))
@@ -75,27 +81,36 @@ class TicketPipelineSpec extends SparkSpec {
     assert(rep1.total == 2 && rep1.inserted == 2 && rep1.updated == 0)
 
     // second run: t1 updated (newer updatedTimestamp), t3 inserted
-    val t1v2 = t1.replace("\"status\":\"open\"", "\"status\":\"closed\"")
-      .replace("1700000100", "1700000300")
-    val t3 = """{"_id":"c3","createdTimestamp":1700001000,"updatedTimestamp":1700001000,"subject":"New"}"""
     val rep2 = TicketPipeline.sync(spark, ingest(Seq(t1v2, t3)), target)
     assert(rep2.total == 2 && rep2.inserted == 1 && rep2.updated == 1)
 
-    val after = spark.read.parquet(target)
+    val after = SnapshotTable.read(spark, target)
     assert(after.count() == 3)
     // source wins on match — all non-key columns overwritten (main.py:354)
     assert(after.filter($"_id" === "a1").select("status").as[String].head() == "closed")
 
     // idempotent re-run (MERGE safety, main.py:349-358)
     TicketPipeline.sync(spark, ingest(Seq(t1v2, t3)), target)
-    assert(spark.read.parquet(target).count() == 3)
+    assert(SnapshotTable.read(spark, target).count() == 3)
+  }
+
+  test("sync: each run is one version; the first sync's version stays readable") {
+    val target = tmpDir() + "/tickets4"
+    TicketPipeline.sync(spark, ingest(Seq(t1, t2)), target)
+    TicketPipeline.sync(spark, ingest(Seq(t1v2, t3)), target)
+    def rows(df: DataFrame): Set[(String, String)] =
+      df.select("_id", "status").as[(String, String)].collect().toSet
+    assert(rows(SnapshotTable.read(spark, target, Some(0L))) ==
+      Set(("a1", "open"), ("b2", null)))
+    assert(rows(SnapshotTable.read(spark, target)) ==
+      Set(("a1", "closed"), ("b2", null), ("c3", null)))
   }
 
   test("incremental: newTickets is the anti-join the reference never used") {
     val target = tmpDir() + "/tickets2"
     TicketPipeline.sync(spark, ingest(Seq(t1)), target)
     val batch = TicketTransform.transform(ingest(Seq(t1, t2)))
-    val fresh = TicketPipeline.newTickets(batch, spark.read.parquet(target))
+    val fresh = TicketPipeline.newTickets(batch, SnapshotTable.read(spark, target))
     assert(fresh.select("_id").as[String].collect().toSeq == Seq("b2"))
   }
 
@@ -107,7 +122,7 @@ class TicketPipelineSpec extends SparkSpec {
       spark, Seq("a1", "b2", "dead").toDS(), fetch, target)
     assert(rep.failed == 1, s"report: $rep")
     assert(rep.total == 2 && rep.inserted == 2 && rep.updated == 0)
-    assert(spark.read.parquet(target).select("_id").as[String].collect().sorted.toSeq
+    assert(SnapshotTable.read(spark, target).select("_id").as[String].collect().sorted.toSeq
       == Seq("a1", "b2"))
   }
 

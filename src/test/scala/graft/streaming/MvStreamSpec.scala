@@ -59,7 +59,7 @@ class MvStreamSpec extends SparkSpec {
     drops.zipWithIndex.foreach { case (rows, i) =>
       writeShard(shardDir, s"drop$i", rows)
       runStream(s"$base/ckpt")
-      val expect = MaterializedView.partial(
+      val expect = MaterializedView.ordersSpec.partial(
           ordersDf(drops.take(i + 1).flatten)).collect()
         .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("cnt"),
           r.getDecimal(3).stripTrailingZeros, r.getAs[Double]("min_price"),
