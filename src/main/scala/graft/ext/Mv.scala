@@ -14,7 +14,9 @@ object MvAgg {
   /** count(*) — also the group-liveness counter (a group whose count
     * retracts to 0 leaves the view). */
   final case class Count(alias: String) extends MvAgg
-  /** sum(col) — algebraic: retracts exactly under deletes/updates. */
+  /** sum(col) — algebraic: retracts exactly under deletes/updates. A
+    * hidden non-null count rides beside it, so a group whose last
+    * non-null value retracts reads NULL, as a recompute does. */
   final case class Sum(col: String, alias: String,
                        cast: Option[String] = None) extends MvAgg
   /** avg(col) — maintained as (sum, non-null count), both algebraic; the
@@ -46,11 +48,12 @@ object MvAgg {
   *
   * State model: the view frame carries `keys ++ state columns` —
   * count/sum states under their output aliases, avg as a hidden
-  * (sum, count) pair, plus a hidden `__cnt` liveness counter when no
-  * Count agg supplies one. All additive states are maintained
-  * ALGEBRAICALLY (group + adds − removes, telescoping exactly across any
-  * interleaving of intermediate images); min/max are lattice joins under
-  * inserts. A removal opens the base table only for a group where it may
+  * (sum, count) pair, a hidden non-null count `__c_<alias>` per sum, plus
+  * a hidden `__cnt` liveness counter when no Count agg supplies one. All
+  * additive states are maintained ALGEBRAICALLY (group + adds − removes,
+  * telescoping exactly across any interleaving of intermediate images);
+  * min/max are lattice joins under inserts. A removal opens the base
+  * table only for a group where it may
   * have taken the extreme away: its removed extreme reaches
   * `least`/`greatest(old, adds)`, and — for a group whose changes all
   * come from one commit — no add reaches the old extreme. Only those
@@ -82,15 +85,25 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
     cast.foldLeft(col(c))((x, t) => x.cast(t))
 
   /** (state column, combine kind): "add" states retract algebraically;
-    * "min"/"max" states lattice-join under inserts. */
+    * "min"/"max" states lattice-join under inserts. Sum's hidden non-null
+    * counts come last, after every other state. */
   private val states: Seq[(String, String)] =
-    ((cntCol, "add")) +: aggs.flatMap {
+    ((cntCol, "add")) +: (aggs.flatMap {
       case _: Count => Nil
       case a: Sum => Seq((a.alias, "add"))
       case a: Avg => Seq((s"__s_${a.alias}", "add"), (s"__c_${a.alias}", "add"))
       case a: Min => Seq((a.alias, "min"))
       case a: Max => Seq((a.alias, "max"))
-    }
+    } ++ sums.map(a => (s"__c_${a.alias}", "add")))
+
+  private def sums: Seq[Sum] = aggs.collect { case a: Sum => a }
+
+  /** Does `mv` carry Sum `a`'s non-null count? A view seeded without it
+    * (by an older build, or built by hand) keeps the old reading: the Sum
+    * reads its sum state, 0 once its last non-null value retracts, until
+    * the view is re-seeded from [[partial]]. */
+  private def counted(mv: DataFrame, a: Sum): Boolean =
+    mv.columns.contains(s"__c_${a.alias}")
 
   private val minmaxStates: Seq[String] = states.collect {
     case (c, k) if k == "min" || k == "max" => c
@@ -100,14 +113,14 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
     * the view bootstrap AND the per-delta summary. One shuffle on the
     * group keys with map-side partial aggregation. */
   def partial(df: DataFrame): DataFrame = {
-    val aggCols: Seq[Column] = count(lit(1)).as(cntCol) +: aggs.flatMap {
+    val aggCols: Seq[Column] = count(lit(1)).as(cntCol) +: (aggs.flatMap {
       case _: Count => Nil
       case a: Sum => Seq(sum(in(a.col, a.cast)).as(a.alias))
       case a: Avg => Seq(sum(in(a.col, a.cast)).as(s"__s_${a.alias}"),
         count(col(a.col)).as(s"__c_${a.alias}"))
       case a: Min => Seq(min(col(a.col)).as(a.alias))
       case a: Max => Seq(max(col(a.col)).as(a.alias))
-    }
+    } ++ sums.map(a => count(col(a.col)).as(s"__c_${a.alias}")))
     df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
   }
 
@@ -210,6 +223,9 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
   private def refresh(s: SparkSession, tableRoot: String, mv: DataFrame,
                       changes: DataFrame, maxLiteralKeys: Int,
                       asOf: Option[Long]): (DataFrame, Option[Long]) = {
+    // The states this view carries: a Sum seeded without its count stays so.
+    val carried = states.filter { case (c, _) =>
+      sums.forall(a => c != s"__c_${a.alias}" || counted(mv, a)) }
     // One aggregation over the view and the delta together (`__side` 0
     // marks the view's row, so no join): an additive state sums the old
     // state with the signed delta, an extreme splits into its old, added
@@ -225,17 +241,18 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
       Seq(f(on(0, col(s"__o_$c"))).as(s"__o_$c"), f(on(1, x)).as(s"__a_$c"),
         f(on(-1, x)).as(s"__r_$c"))
     }
-    val stateAggs: Seq[Column] = plus(cntCol, side) +: aggs.flatMap {
+    val stateAggs: Seq[Column] = plus(cntCol, side) +: (aggs.flatMap {
       case _: Count => Nil
       case a: Sum => Seq(plus(a.alias, signed(in(a.col, a.cast))))
       case a: Avg => Seq(plus(s"__s_${a.alias}", signed(in(a.col, a.cast))),
         plus(s"__c_${a.alias}", when(col(a.col).isNotNull, side)))
       case a: Min => extremes(a.alias, col(a.col), lt = true)
       case a: Max => extremes(a.alias, col(a.col), lt = false)
-    }
-    val old = mv.select(keys.map(col) ++ states.map { case (c, _) => col(c).as(s"__o_$c") }
+    } ++ sums.filter(counted(mv, _))
+      .map(a => plus(s"__c_${a.alias}", when(col(a.col).isNotNull, side))))
+    val old = mv.select(keys.map(col) ++ carried.map { case (c, _) => col(c).as(s"__o_$c") }
       :+ lit(0).as("__side"): _*)
-    val lost = states.collect {
+    val lost = carried.collect {
       case (c, "min") => extremeLost(c, lt = true)
       case (c, "max") => extremeLost(c, lt = false)
     }.foldLeft(lit(false))(_ || _)
@@ -244,7 +261,7 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
       .groupBy(keys.map(col): _*)
       .agg(coalesce(min(col("__v")) === max(col("__v")), lit(false)).as("__one"),
         (max(col("__v")).as("__vmax") +: stateAggs): _*)
-      .select((keys.map(col) ++ states.map {
+      .select((keys.map(col) ++ carried.map {
         case (c, "add") => col(c)
         case (c, "min") => least(col(s"__o_$c"), col(s"__a_$c")).as(c)
         case (c, _) => greatest(col(s"__o_$c"), col(s"__a_$c")).as(c)
@@ -302,19 +319,22 @@ final case class MvSpec(keys: Seq[String], aggs: Seq[MvAgg]) {
       col(k) <=> col(s"__nk_$i")
     }.reduce(_ && _)
     (merged.join(broadcast(rec), cond, "left_outer")
-      .select((keys.map(col) ++ states.map { case (c, kind) =>
+      .select((keys.map(col) ++ carried.map { case (c, kind) =>
         if (kind == "add") col(c)
         else when(col("__lost"), col(s"__n_$c")).otherwise(col(c)).as(c)
       }): _*), end)
   }
 
   /** Project the internal state onto the declared output: one column per
-    * aggregate, in spec order. Avg materializes as
-    * `CAST(sum AS DOUBLE) / count` (NULL when the group held only NULLs),
-    * which both engines compute identically from the exact decimal sum. */
+    * aggregate, in spec order. Sum reads NULL when the group holds no
+    * non-null value (a view carrying its count); Avg materializes as `CAST(sum AS DOUBLE) / count`
+    * (NULL likewise), which both engines compute identically from the
+    * exact decimal sum. */
   def finish(mv: DataFrame): DataFrame =
     mv.select((keys.map(col) ++ aggs.map {
       case a: Count => col(a.alias)
+      case a: Sum if counted(mv, a) =>
+        when(col(s"__c_${a.alias}") === 0, lit(null)).otherwise(col(a.alias)).as(a.alias)
       case a: Sum => col(a.alias)
       case a: Avg =>
         when(col(s"__c_${a.alias}") === 0, lit(null))

@@ -123,16 +123,17 @@ case class MergeInto(
   }
 
   /** The lowered full-outer join plus the clause predicates — ONE join
-    * definition shared by [[result]] and [[changes]], so the merged rows
-    * and the change sets can never disagree on clause algebra. Returns
-    * (joined, keep, changedAdd, removePre, projected-post-image).
+    * definition shared by [[result]], [[changes]] and [[materialize]], so
+    * the merged rows and the change sets can never disagree on clause
+    * algebra, built and analysed once per builder. Returns (joined, keep,
+    * changedAdd, removePre, projected-post-image).
     *
     * Clause chains are FIRST-MATCH-WINS (SQL MERGE): each family's
     * decision is one integer when-chain (`0` = no clause fires, `i` =
     * clause i fires), shared by the keep/remove predicates and every
     * column's post-image projection — so N conditional arms cost N
     * branch evaluations per row, not N joins. */
-  private def lowered: (DataFrame, Column, Column, Column, Seq[Column]) = {
+  private lazy val lowered: (DataFrame, Column, Column, Column, Seq[Column]) = {
     require(keys.nonEmpty, "MergeInto requires on(keys)")
     if (needsFullSource) {
       val missing = target.columns.filterNot(source.columns.contains)
@@ -242,27 +243,35 @@ case class MergeInto(
 
   /** Every consumer of the lowered join off ONE materialization
     * (optimization r15, guide §1.2 step 1 — remove redundant passes).
-    * The table-level merge path consumed the join FOUR separate times —
-    * the SQL cardinality probe, the rewrite ([[result]]) and both CDC
-    * sides ([[changes]]) each re-executed scan(touched) ⋈ scan(source)
-    * with its exchanges. This materializes the joined frame once
-    * (pre-image, post-image, and the clause decisions as plain boolean
-    * columns; localCheckpoint = delta-sized executor storage, rows =
-    * touched ∪ source, never the table) and serves the four consumers as
-    * single-stage filters over it. Call [[MergeInto.Materialized.free]]
-    * when the commit no longer reads it. */
-  private[ops] def materialize(): MergeInto.Materialized = {
+    * The table-level merge path consumed the join three separate times —
+    * the rewrite ([[result]]) and both CDC sides ([[changes]]) each
+    * re-executed scan(touched) ⋈ scan(source) with its exchanges. This
+    * materializes the joined frame once (pre-image, post-image, and the
+    * clause decisions as plain boolean columns; localCheckpoint =
+    * delta-sized executor storage, rows = touched ∪ source, never the
+    * table) and serves the three consumers as single-stage filters over
+    * it. Call [[MergeInto.Materialized.free]] when the commit no longer
+    * reads it. */
+  private[ops] def materialize(): MergeInto.Materialized =
+    MergeInto.Materialized(materializable.localCheckpoint(), target.columns.toSeq)
+
+  /** The plan [[materialize]] checkpoints, analysed once. */
+  private lazy val materializable: DataFrame = {
     val (joined, keep, changedAdd, removePre, projected) = lowered
     val cols = target.columns.toSeq
     val pre = cols.map(c => col(s"t.$c").as(s"__pre_$c"))
     val post = projected.zip(cols).map { case (p, c) => p.as(s"__post_$c") }
-    val both = col("t.__t").isNotNull && col("s.__s").isNotNull
-    val ck = joined.select((pre ++ post
+    joined.select((pre ++ post
       :+ keep.as("__keep") :+ changedAdd.as("__cadd")
-      :+ removePre.as("__crm") :+ both.as("__cm")): _*)
-      .localCheckpoint()
-    MergeInto.Materialized(ck, cols)
+      :+ removePre.as("__crm")): _*)
   }
+
+  /** The post-image columns [[materialize]] will hold, under the target's
+    * column names, read off the analysed plan without executing it — the
+    * caller type-checks them before any join runs. */
+  private[ops] def postImage: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(target.columns.toSeq.map(c =>
+      materializable.schema(s"__post_$c").copy(name = c)))
 }
 
 object MergeInto {
@@ -279,7 +288,7 @@ object MergeInto {
                           values: Option[Map[String, Column]])
 
   /** One materialized lowered join serving result / CDC adds / CDC
-    * removes / the cardinality probe (see [[MergeInto.materialize]]).
+    * removes (see [[MergeInto.materialize]]).
     * All accessors are single-stage filters+projections over the
     * checkpointed frame — identical row algebra to [[MergeInto.result]]
     * and [[MergeInto.changes]] (MergeIntoSpec pins the equivalence). */
@@ -292,13 +301,6 @@ object MergeInto {
     def adds: DataFrame = ck.filter(ck("__cadd")).select(proj("__post_"): _*)
     /** CDC removes: pre-images of deleted + updated rows. */
     def removes: DataFrame = ck.filter(ck("__crm")).select(proj("__pre_"): _*)
-    /** SQL MERGE cardinality rule probe: key tuples of MATCHED rows that
-      * appear more than once — i.e. several source rows hit one target
-      * row. Returns at most one offending key tuple. */
-    def duplicateMatchedKeys(keys: Seq[String]): Array[org.apache.spark.sql.Row] =
-      ck.filter(ck("__cm"))
-        .groupBy(keys.map(k => ck(s"__pre_$k").as(k)): _*).count()
-        .filter(col("count") > 1).drop("count").limit(1).collect()
     /** Release the pinned checkpoint partitions. */
     def free(): Unit = graft.ops.Checkpoints.free(ck)
   }

@@ -71,46 +71,102 @@ object SnapshotTable {
       removedPaths: Set[String],
       predicate: () => Option[org.apache.spark.sql.catalyst.expressions.Expression])
 
-  /** Null-safe key-membership proof predicate for MERGE's rebase
-    * (upsert included): `key IN (distinct source keys) [OR key IS
-    * NULL]` over the FIRST key column — a per-column over-approximation
-    * of the composite key (a file that cannot match key1 cannot match the
-    * tuple), capped at 4096 distinct keys (beyond it, give up — the
-    * In-list the bounds/bloom analysis evaluates should stay KB-sized).
-    * Called lazily, only on an actual CAS loss. */
-  private def keyMembershipPredicate(
-      schema: org.apache.spark.sql.types.StructType, source: DataFrame,
-      key: String): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    // SOUNDNESS GATE (ADVICE r12): this thunk RE-EXECUTES the caller's
-    // source frame at CAS-loss time — after the rewrite already consumed
-    // it. A non-deterministic source (rand(), sample, an unordered LIMIT
-    // picking different rows) could yield a key set DIFFERENT from what
-    // the written rewrite actually merged, making the no-winner-key proof
-    // vouch for the wrong keys and committing a wrong merge under
-    // concurrency. Rebase is an optimization: refuse it for any plan not
-    // provably re-executable, and the caller redoes the merge instead.
-    {
-      import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Sample}
-      var replayable = true
-      source.queryExecution.analyzed.foreach {
-        case _: Sample | _: GlobalLimit | _: LocalLimit => replayable = false
-        case node =>
-          node.expressions.foreach(_.foreach(e =>
-            if (!e.deterministic) replayable = false))
-      }
-      if (!replayable) return None
+  /** The most distinct first-key values a MERGE turns into an `In` list
+    * (probe refinement and rebase proof): beyond it the list the
+    * bounds/bloom analysis evaluates would stop being KB-sized. */
+  private val MaxKeyList = 4096
+
+  /** A MERGE statement's source, run ONCE: coalesced to at most
+    * `spark.sql.shuffle.partitions` partitions and localCheckpoint'ed
+    * before the first attempt, so the touched-file probe, the merge join,
+    * the cardinality check and the rebase key set of every attempt read
+    * one copy. A source whose runs disagree (the reference's paginated
+    * REST pull re-fetches on every run) can therefore never show the
+    * probe other keys than the join. The first key column's range, its
+    * NULL count and the row count ride the materialization job
+    * (`Dataset.observe`). Free it when the statement returns. */
+  private final class MergeSource(val df: DataFrame, key: String, val rows: Long,
+                                  val range: Option[(Any, Any)], val nulls: Long) {
+    val keyType: org.apache.spark.sql.types.DataType =
+      df.schema.fields.find(_.name.equalsIgnoreCase(key)).get.dataType
+    /** Distinct first-key values, None past [[MaxKeyList]]: one narrow
+      * collect when the row count bounds the distinct count, else a
+      * bounded distinct pull. */
+    private lazy val keyList: Option[Seq[Any]] = {
+      val k = df.select(df(key))
+      val vals = (if (rows <= MaxKeyList) k else k.distinct().limit(MaxKeyList + 1))
+        .collect().map(_.get(0)).distinct.toSeq
+      if (vals.length > MaxKeyList) None else Some(vals)
     }
-    val kf = schema.fields.find(_.name.equalsIgnoreCase(key)).get
-    val vals = source.select(source(key)).distinct()
-      .limit(4097).collect().map(_.get(0))
-    if (vals.length > 4096) None
-    else {
+    /** Null-safe membership of a declared key column `name` (of type
+      * `dt`) in this source's first-key values: `name IN (vals) [OR name
+      * IS NULL]` — a per-column over-approximation of a composite key (a
+      * file that cannot match key1 cannot match the tuple). MERGE's probe
+      * prunes its candidate files with it (`name` physical, as the stats
+      * speak) and MERGE's CAS-loss rebase proves a winner's files foreign
+      * with it. None past [[MaxKeyList]] values or when the source key is
+      * typed apart from the column. */
+    def membership(name: String, dt: org.apache.spark.sql.types.DataType)
+        : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
       import org.apache.spark.sql.catalyst.expressions._
-      val attr = AttributeReference(kf.name, kf.dataType)()
-      val in = In(attr,
-        vals.filter(_ != null).toIndexedSeq
-          .map(x => Literal.create(x, kf.dataType)))
-      Some(if (vals.contains(null)) Or(in, IsNull(attr)) else in)
+      if (keyType != dt) None
+      else keyList.map { vals =>
+        val attr = AttributeReference(name, dt)()
+        val in = In(attr, vals.filter(_ != null).map(Literal.create(_, dt)))
+        if (vals.contains(null)) Or(in, IsNull(attr)) else in
+      }
+    }
+    def free(): Unit = Checkpoints.free(df)
+  }
+
+  private def mergeSource(spark: SparkSession, source: DataFrame,
+                          key: String): MergeSource = {
+    import org.apache.spark.sql.functions.{count, lit, max, min, when}
+    require(source.columns.exists(_.equalsIgnoreCase(key)), s"source lacks merge key $key")
+    val k = source(key)
+    val obs = org.apache.spark.sql.Observation()
+    val stats = Seq(min(k).as("lo"), max(k).as("hi"),
+      count(when(k.isNull, 1)).as("nulls"), count(lit(1)).as("rows"))
+    val ck = source.coalesce(spark.sessionState.conf.numShufflePartitions)
+      .observe(obs, stats.head, stats.tail: _*)
+      .localCheckpoint()
+    // The stats ride the materialization job; on the (unexpected)
+    // listener miss they cost one small job over the copy.
+    val seen = try scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(10, "seconds"))
+      catch { case _: java.util.concurrent.TimeoutException =>
+        ck.agg(stats.head, stats.tail: _*).head() }
+    new MergeSource(ck, key, seen.getLong(3),
+      if (seen.isNullAt(0)) None else Some((seen.get(0), seen.get(1))), seen.getLong(2))
+  }
+
+  /** The entries MERGE's key probe reads: those whose stats admit a source
+    * key on the first key column. Pruned by the source's key range (plus
+    * every file holding NULL keys when the source has one); when more
+    * than one file survives and the source has at most [[MaxKeyList]]
+    * rows, refined by the `In` list over bounds and blooms. A source key
+    * typed apart from the declared column prunes nothing. */
+  private def probeCandidates(spark: SparkSession,
+                              entries: Seq[SnapshotStats.FileStats],
+                              schema: org.apache.spark.sql.types.StructType,
+                              mapping: Map[String, String], src: MergeSource,
+                              key: String): Seq[SnapshotStats.FileStats] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    val kf = schema.fields.find(_.name.equalsIgnoreCase(key)).get
+    if (src.rows == 0L) Nil
+    else if (src.keyType != kf.dataType) entries
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val attr = AttributeReference(physName(mapping, kf.name), kf.dataType)()
+      val byRange = (src.range.map { case (lo, hi) =>
+          And(GreaterThanOrEqual(attr, Literal.create(lo, kf.dataType)),
+            LessThanOrEqual(attr, Literal.create(hi, kf.dataType)))
+        } ++ Option.when(src.nulls > 0L)(IsNull(attr)))
+        .reduceOption[Expression](Or)
+        .fold(entries)(p => entries.filter(SnapshotPruning.mightMatch(p, _, conf)))
+      if (byRange.length <= 1 || src.rows > MaxKeyList) byRange
+      else src.membership(attr.name, kf.dataType).fold(byRange)(p =>
+        byRange.filter(SnapshotPruning.mightMatch(p, _, conf)))
     }
   }
 
@@ -2418,17 +2474,20 @@ object SnapshotTable {
              keys: Seq[String], maxFiles: Int = 64,
              clusterBy: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val outcome = transact(spark, root, "upsert", ReadAttempts) {
+    require(keys.nonEmpty, "upsert needs key columns")
+    val src = mergeSource(spark, source, keys.head)
+    val batch = src.df
+    try compacted(spark, root, maxFiles, transact(spark, root, "upsert", ReadAttempts) {
       case None =>
         // Bootstrap: everything is an insert; the CDC add set is the
         // whole source, removes are empty. Target version 0 is PINNED:
         // a concurrent bootstrap must conflict, not stack.
         val laid =
-          if (clusterBy.isEmpty) source
-          else source.repartitionByRange(32, clusterBy.map(source.col): _*)
-            .sortWithinPartitions(clusterBy.map(source.col): _*)
+          if (clusterBy.isEmpty) batch
+          else batch.repartitionByRange(32, clusterBy.map(batch.col): _*)
+            .sortWithinPartitions(clusterBy.map(batch.col): _*)
         Right(commitAt(spark, root, None, laid,
-          cdc = Some((source, source.limit(0))),
+          cdc = Some((batch, batch.limit(0))),
           declareClusterBy = Some(clusterBy).filter(_.nonEmpty)))
       case Some(base) =>
         val state = stateOf(base)
@@ -2447,12 +2506,11 @@ object SnapshotTable {
         val srcLc = source.columns.map(lc).toSet
         val nulls = state.schema.fields.filterNot(f => srcLc(lc(f.name)))
           .map(f => f.name -> lit(null).cast(f.dataType)).toMap
-        mergeAt(spark, root, base, source, keys,
+        mergeAt(spark, root, base, src, keys,
           matched = Seq(MergeInto.UpdateClause(None, Some(take ++ nulls))),
           notMatched = Seq(MergeInto.InsertClause(None, Some(take))),
           bySource = Nil, evolve = true)
-    }
-    compacted(spark, root, maxFiles, outcome)
+    }) finally src.free()
   }
 
   /** Table-level conditional MERGE INTO (VERDICT r9 #3) — the table
@@ -2470,12 +2528,18 @@ object SnapshotTable {
     * (unassigned columns keep the target value); an insert with explicit
     * values lists its columns (unlisted columns NULL).
     *
+    * The statement runs `source` ONCE ([[MergeSource]]): every attempt's
+    * probe, join, cardinality check and rebase key set read one
+    * materialized copy, freed when the statement returns.
+    *
     * File granularity mirrors [[delete]]/[[update]]: the touched set =
-    * every file holding a key present in `source` (a null-safe semi-join
-    * projected to the scan's file column — a driver pull of file PATHS,
-    * O(touched files), and the probe itself file-skips off manifest
-    * bounds/blooms on a clustered table); untouched files CARRY by
-    * manifest entry, never read. Every key the table shares with the
+    * every file holding a key present in `source` (a null-safe join of
+    * the files' key column with the source's per-key row counts — a
+    * driver pull of file PATHS, O(touched files)). The probe reads only
+    * the files whose manifest stats admit a source key
+    * ([[probeCandidates]]: the key range, then an `In` list over
+    * bounds/blooms); untouched files CARRY by manifest entry, never
+    * read. Every key the table shares with the
     * source lives in a touched file BY CONSTRUCTION, so the merge
     * combinator runs over the touched rows alone and "not matched" there
     * means not in the table at all. CDC: removes = pre-images of deleted
@@ -2498,10 +2562,14 @@ object SnapshotTable {
                 notMatched: Seq[MergeInto.InsertClause] = Nil,
                 bySource: Seq[MergeInto.Clause] = Nil,
                 evolve: Boolean = false,
-                maxFiles: Int = 64): Long =
-    compacted(spark, root, maxFiles,
+                maxFiles: Int = 64): Long = {
+    require(keys.nonEmpty, "mergeInto needs key columns")
+    val src = mergeSource(spark, source, keys.head)
+    try compacted(spark, root, maxFiles,
       transactOn(spark, root, "mergeInto", ReadAttempts)(
-        mergeAt(spark, root, _, source, keys, matched, notMatched, bySource, evolve)))
+        mergeAt(spark, root, _, src, keys, matched, notMatched, bySource, evolve)))
+    finally src.free()
+  }
 
   /** A MERGE's outcome: Left = nothing to touch (no commit, no
     * compaction), Right = the committed version, compacted past
@@ -2513,17 +2581,17 @@ object SnapshotTable {
   }
 
   /** One MERGE attempt against `base` (the body of [[mergeInto]] and
-    * [[upsert]]): Left(base version) when no row can change, else
-    * Right(the committed version). */
+    * [[upsert]]) over the statement's materialized source: Left(base
+    * version) when no row can change, else Right(the committed version). */
   private def mergeAt(spark: SparkSession, root: String,
-                      base: SnapshotStats.Resolved, source0: DataFrame,
+                      base: SnapshotStats.Resolved, src: MergeSource,
                       keys: Seq[String],
                       matched: Seq[MergeInto.Clause],
                       notMatched: Seq[MergeInto.InsertClause],
                       bySource: Seq[MergeInto.Clause],
                       evolve: Boolean): Either[Long, Long] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    require(keys.nonEmpty, "mergeInto needs key columns")
+    val source0 = src.df
     val v = base.version
     val state = stateOf(base)
     val cur = read(spark, root, Some(v))
@@ -2594,7 +2662,11 @@ object SnapshotTable {
       }
     // Null-safe key probe: a NULL source key must mark the files
     // holding NULL-key rows (the merge's own match is null-safe), or
-    // those rows would survive untouched AND re-insert. SKIPPED when
+    // those rows would survive untouched AND re-insert. It reads only
+    // the files whose stats admit a source key ([[probeCandidates]]) and
+    // joins their key column with the source's per-key row counts, so
+    // the same pass flags the SQL cardinality rule's case: a matched key
+    // with more than one source row. SKIPPED when
     // BOTH the matched AND insert families are empty (an expiry-only
     // merge): matched rows then cannot change AND nothing can insert,
     // so "not matched in the touched rows" never needs to mean "not
@@ -2606,36 +2678,48 @@ object SnapshotTable {
     // REQUIRED for dedup: a matched key in an untouched file must
     // not re-insert.
     val allE = base.stats
-    // File attribution from `_metadata` at the scan (round 13): the
-    // key-join probe never pruned files statically anyway, and
+    // File attribution from `_metadata` at the scan (round 13):
     // `input_file_name()` is not reliable past the DV mask join.
-    // Files-less table (CREATE TABLE bootstrap): no rows, no files.
-    val withFile =
-      if (allE.isEmpty)
-        cur.withColumn("__file", lit(null).cast(
-          org.apache.spark.sql.types.StringType))
-      else readEntries(spark, allE, schema0, state.mapping,
-        fileCol = Some("__file"))
-    val touchedMatched =
-      if (matched.isEmpty && notMatched.isEmpty) Set.empty[String]
+    val probeE =
+      if (matched.isEmpty && notMatched.isEmpty) Nil
+      else probeCandidates(spark, allE, schema0, state.mapping, src, keys.head)
+    val (touchedMatched, dupMatched) =
+      if (probeE.isEmpty) (Set.empty[String], None)
       else {
-        val srcKeys = source
-          .select(keys.map(k => source(k).as(s"__sk_$k")): _*).distinct()
-        // The file column is projected BEFORE the semi-join (it resolves
-        // on the single-source side only).
-        withFile.join(srcKeys,
-            keys.map(k => withFile(k) <=> srcKeys(s"__sk_$k")).reduce(_ && _),
-            "left_semi")
-          .select(col("__file"))
-          .distinct().collect().map(r => norm(r.getString(0))).toSet
+        import org.apache.spark.sql.functions.{count, struct, when}
+        val tk = readEntries(spark, probeE, schema0, state.mapping,
+          fileCol = Some("__file"))
+        val perKey = source
+          .groupBy(keys.map(k => source(k).as(s"__sk_$k")): _*)
+          .agg(count(lit(1)).as("__sk_n"))
+        // (file, a key tuple of it with >1 source rows or NULL), one row
+        // per file within each scan partition: a driver pull of
+        // O(touched files) rows with no exchange after the join.
+        val pairs = tk.join(perKey,
+            keys.map(k => tk(k) <=> perKey(s"__sk_$k")).reduce(_ && _))
+          .select(col("__file"),
+            when(col("__sk_n") > 1, struct(keys.map(k => tk(k)): _*)).as("__dup"))
+        val hits = pairs.mapPartitions { it =>
+            val perFile = scala.collection.mutable.HashMap.empty[String, org.apache.spark.sql.Row]
+            it.foreach { r =>
+              if (!r.isNullAt(1) || !perFile.contains(r.getString(0))) perFile(r.getString(0)) = r
+            }
+            perFile.valuesIterator
+          }(org.apache.spark.sql.Encoders.row(pairs.schema))
+          .collect()
+        (hits.map(h => norm(h.getString(0))).toSet,
+          hits.find(!_.isNullAt(1)).map(_.getStruct(1)))
       }
     // BY SOURCE probe: target-only rows whose arm condition fires mark
     // their files too. Same t/s aliasing as the merge's own join, so
     // the CONDITION evaluates exactly as the combinator will — a file
-    // is carried only when provably no row in it can change.
+    // is carried only when provably no row in it can change. Target-only
+    // rows can live in any file, so it reads every file.
     val touchedBySource =
-      if (bySource.isEmpty) Set.empty[String]
+      if (bySource.isEmpty || allE.isEmpty) Set.empty[String]
       else {
+        val withFile = readEntries(spark, allE, schema0, state.mapping,
+          fileCol = Some("__file"))
         def sat(c: Column): Column = coalesce(c, lit(false))
         // A file rewrites when ANY by-source clause can fire for one
         // of its target-only rows (which clause wins is the
@@ -2695,37 +2779,33 @@ object SnapshotTable {
       def declared(df: DataFrame): DataFrame =
         df.select(schema.fields.map(f =>
           df(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-      // Type-check on the UNEXECUTED plan's schema — refusals must land
-      // before any join executes.
-      mi.result().schema.fields.zip(schema.fields).foreach { case (got, want) =>
+      // Type-check the post-image of the plan `materialize` checkpoints,
+      // analysed once and not yet executed — refusals must land before
+      // any join executes.
+      mi.postImage.fields.zip(schema.fields).foreach { case (got, want) =>
         require(got.dataType == want.dataType ||
             org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(got.dataType, want.dataType),
           s"mergeInto post-image column ${want.name}: ${got.dataType} cannot " +
             s"losslessly cast to declared ${want.dataType}; align the expression")
       }
-      // ONE materialization of the lowered join serves the cardinality
-      // probe, the rewrite, and both CDC sides (optimization r15, guide
-      // §1.2 step 1): each previously re-executed scan(touched) ⋈
-      // scan(source) — four runs of the same delta-sized join per MERGE.
+      // SQL cardinality rule (round 12 late): when a matched arm can
+      // fire, MULTIPLE source rows matching ONE target row is an error
+      // (the full-outer join would otherwise silently duplicate the
+      // row) — the same refusal Delta and the standard raise. The key
+      // probe flagged it and named the key, so it lands before any join
+      // executes. Duplicate SOURCE-ONLY keys stay legal: SQL's NOT
+      // MATCHED arm inserts each source row.
+      require(matched.isEmpty || dupMatched.isEmpty,
+        s"MERGE: multiple source rows match the same target row on " +
+          s"(${keys.mkString(", ")}) — e.g. ${dupMatched.getOrElse("")}; " +
+          "deduplicate the source (SQL MERGE cardinality rule)")
+      // ONE materialization of the lowered join serves the rewrite and
+      // both CDC sides (optimization r15, guide §1.2 step 1): each
+      // previously re-executed scan(touched) ⋈ scan(source).
       // The checkpoint holds touched ∪ source rows (never the table) and
       // is freed once the commit has landed.
       val mat = mi.materialize()
       try {
-        // SQL cardinality rule (round 12 late): when a matched arm can
-        // fire, MULTIPLE source rows matching ONE target row is an error
-        // (the full-outer join would otherwise silently duplicate the
-        // row) — the same refusal Delta and the standard raise. Checked
-        // against the TOUCHED rows only (every matchable key lives
-        // there by construction), so the probe is O(source + touched),
-        // never table-scaled. Duplicate SOURCE-ONLY keys stay legal:
-        // SQL's NOT MATCHED arm inserts each source row.
-        if (matched.nonEmpty && touchedE.nonEmpty) {
-          val dup = mat.duplicateMatchedKeys(keys)
-          require(dup.isEmpty,
-            s"MERGE: multiple source rows match the same target row on " +
-              s"(${keys.mkString(", ")}) — e.g. ${dup.headOption.getOrElse("")}; " +
-              "deduplicate the source (SQL MERGE cardinality rule)")
-        }
         val rewritten = declared(mat.result)
         // CAS-loss rebase for MERGE (round 12): sound iff the winner's
         // new files provably hold NO source key — then no winner row
@@ -2736,11 +2816,15 @@ object SnapshotTable {
         // conservative: a file that cannot match key1 cannot match the
         // tuple). BY SOURCE arms disable it — a winner-added row IS a new
         // target-only row and changes those arms' semantics. The key
-        // collect (≤4096 distinct) runs only on an actual CAS loss.
+        // list (≤4096 distinct) comes from the statement's one source
+        // copy, so it names exactly the keys this rewrite merged, and is
+        // pulled only on an actual CAS loss.
         val rebaseSpec =
           if (bySource.nonEmpty) None
-          else Some(RebaseSpec(v, touched,
-            () => keyMembershipPredicate(schema, source, keys.head)))
+          else Some(RebaseSpec(v, touched, () => {
+            val kf = schema.fields.find(_.name.equalsIgnoreCase(keys.head)).get
+            src.membership(kf.name, kf.dataType)
+          }))
         Right(commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((declared(mat.adds), declared(mat.removes))),
           tableSchema = Some(widenNullability(schema, rewritten.schema)),

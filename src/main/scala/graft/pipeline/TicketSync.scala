@@ -26,11 +26,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the source's deterministic page formula and aggregates the same
   * dashboard — hash-green pins the whole loop, source to dashboard.
   *
-  * Scale shape: each sync's cost is O(sync batch) — the MERGE touches
-  * only files holding matched keys, the dashboard refresh consumes only
-  * the commit's CDC — so a 100 TB ticket history costs per-sync what the
-  * sync brought, which is the entire point of the engine vs the
-  * reference's re-run-the-aggregate-SQL loop. `ScaleRehearsal ticketsync`
+  * Scale shape: the MERGE runs its source once, reads the key column
+  * only of the files whose manifest stats admit a synced key (the batch's
+  * key range, then its key list over bounds and blooms), rewrites only
+  * the files holding matched keys, and checks the SQL cardinality rule in
+  * the same probe; the dashboard refresh consumes only the commit's CDC.
+  * A sync's cost is therefore O(sync batch + the files its keys can
+  * reach): on a table clustered by `_id` that is the batch's files, while
+  * a table whose files all span the key range (as an unclustered append
+  * history does) still has its key column probed in full. `ScaleRehearsal ticketsync`
   * measures rows/s and the refresh-gap flatness at a 21× corpus. */
 object TicketSync {
 

@@ -222,6 +222,37 @@ class MvSpecSpec extends SparkSpec {
     assert(got.exists(r => r._1.contains("n") && r._3.isEmpty))
   }
 
+  test("retracting a group's last non-null Sum value reads NULL, like a full recompute") {
+    val root = s"${tmpDir()}/t"
+    // Group a keeps a row whose v is NULL; its only non-null value goes.
+    val v0 = SnapshotTable.upsert(spark, root, Seq(
+      (1L, "a", Some(4.0)), (2L, "a", Option.empty[Double]), (3L, "b", Some(2.0))
+    ).toDF("k", "grp", "v"), Seq("k"))
+    val mv0 = spec.partial(SnapshotTable.read(spark, root, Some(v0)))
+    val v1 = SnapshotTable.delete(spark, root, col("k") === 1L)
+    val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v0, Some(v1))
+    val got = rows(spec.combineDelta(spark, root, mv0, adds, removes))
+    assert(got == rows(spec.partial(SnapshotTable.read(spark, root))), s"got $got")
+    assert(got.exists(r => r._1.contains("a") && r._2 == 1L && r._3.isEmpty),
+      s"group a's sum must read NULL: $got")
+  }
+
+  test("a view seeded without a Sum's non-null count keeps reading its sum state") {
+    val sumSpec = MvSpec(Seq("grp"),
+      Seq(MvAgg.Count("cnt"), MvAgg.Sum("v", "total", Some("decimal(18,2)"))))
+    val base = Seq((Some("a"), Some(1.0)), (Some("a"), Option.empty[Double])).toDF("grp", "v")
+    val gone = Seq((Some("a"), Some(1.0))).toDF("grp", "v")
+    val absent = s"${tmpDir()}/no-such-table"
+    def total(mv: DataFrame) = sumSpec.finish(mv).collect().map(r => Option(r.getDecimal(2))).toSeq
+    val seeded = sumSpec.combineDelta(spark, absent, sumSpec.partial(base), gone.limit(0), gone)
+    assert(total(seeded) == Seq(None), "a counted view reads NULL, like a recompute")
+    // A view without the count (an older build's) keeps the old reading.
+    val old = sumSpec.combineDelta(spark, absent,
+      sumSpec.partial(base).drop("__c_total"), gone.limit(0), gone)
+    assert(!old.columns.contains("__c_total"))
+    assert(total(old).map(_.map(_.doubleValue)) == Seq(Some(0.0)))
+  }
+
   test("update CDC through the op: retraction + insertion on the same rows") {
     val root = s"${tmpDir()}/t"
     val base = Seq(

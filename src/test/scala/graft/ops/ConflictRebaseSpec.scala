@@ -239,6 +239,49 @@ class ConflictRebaseSpec extends SparkSpec {
     assert(collided, "the planted upsert/append race never collided in 3 tries")
   }
 
+  test("racing MERGE over a rand()-filtered source rebases: it commits exactly the rows it merged") {
+    var attempt = 0
+    var collided = false
+    while (attempt < 3 && !collided) {
+      val root = s"${tmpDir()}/t"
+      SnapshotTable.commitClustered(spark, root,
+        (0L until 100L).map(k => (k, "base")).toDF("k", "s"), Seq("k"), numFiles = 4)
+      // Not replayable: every run of this plan keeps other keys.
+      val source = (0L until 10L).map(k => (k, "upd")).toDF("k", "s")
+        .filter(rand() < 0.7)
+      val lossesBefore = SnapshotTable.casLosses.get()
+      val rebasesBefore = SnapshotTable.rebases.get()
+      val appender = new Thread(() => {
+        Thread.sleep(150)
+        SnapshotTable.append(spark, root,
+          (1000L until 1010L).map(k => (k, "late")).toDF("k", "s"))
+      })
+      appender.start()
+      val v = SnapshotTable.mergeInto(spark, root, source, Seq("k"),
+        matched = Seq(UpdateClause(None, None)), notMatched = Seq(InsertClause(None, None)))
+      appender.join()
+      if (SnapshotTable.casLosses.get() > lossesBefore) {
+        collided = true
+        assert(SnapshotTable.rebases.get() == rebasesBefore + 1,
+          "the statement's one source copy makes the key proof sound: rebase, not redo")
+      }
+      val rows = SnapshotTable.read(spark, root)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      val merged = rows.filter(_._2 == "upd")
+      // The rows the rewrite merged are its CDC adds; the table holds
+      // exactly those, the untouched base rows and the winner's rows.
+      val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, v - 1, Some(v))
+      assert(adds.collect().map(r => (r.getLong(0), r.getString(1))).toSet == merged)
+      assert(removes.collect().map(_.getLong(0)).toSet == merged.map(_._1))
+      val want = merged ++
+        (0L until 100L).filterNot(merged.map(_._1)).map(k => (k, "base")).toSet ++
+        (1000L until 1010L).map(k => (k, "late")).toSet
+      assert(rows == want, s"diff=${rows.diff(want)} / ${want.diff(rows)}")
+      attempt += 1
+    }
+    assert(collided, "the planted merge/append race never collided in 3 tries")
+  }
+
   test("rebase max-merges the identity HWM with the winner's (ADVICE r13)") {
     val root = s"${tmpDir()}/t"
     // `k` doubles as a GENERATED BY DEFAULT identity column: the winner's
