@@ -1030,9 +1030,10 @@ object ScaleRehearsal {
       val v = SnapshotTable.appendOnce(spark, root, batchDf(i), "scale-mv", i.toLong)
       val appendW = (System.nanoTime() - ta) / 1e9
       val tr = System.nanoTime()
-      val delta =
-        if (i == 0) SnapshotTable.read(spark, root, Some(v))
-        else SnapshotTable.changes(spark, root, v - 1, Some(v))
+      val (delta, removed) =
+        if (i == 0) { val all = SnapshotTable.read(spark, root, Some(v)); (all, all.limit(0)) }
+        else SnapshotTable.changesDelta(spark, root, v - 1, Some(v))
+          .getOrElse(throw SnapshotTable.noCdcAt(root, v))
       // The scale evidence at rig size is I/O, not wall (a 15-group agg
       // over 3M rows is under Spark's fixed overhead either way): the
       // refresh plan reads the DELTA's files only; recompute reads them all.
@@ -1041,7 +1042,7 @@ object ScaleRehearsal {
           s"a recompute reads ${SnapshotTable.read(spark, root).inputFiles.length}")
       val next =
         if (view == null) MaterializedView.ordersSpec.partial(delta).localCheckpoint()
-        else MaterializedView.ordersSpec.combineDelta(spark, root, view, delta, delta.limit(0))
+        else MaterializedView.ordersSpec.combineDelta(spark, root, view, delta, removed)
       if (prev != null) Checkpoints.free(prev)
       prev = view; view = next
       val refreshW = (System.nanoTime() - tr) / 1e9
@@ -2206,10 +2207,9 @@ object ScaleRehearsal {
     // metadata-only in O(seconds) at 50k carried entries (the redo
     // baseline is re-running the probe + rewrite against the winner).
     val entries = SnapshotTable.resolvedAt(fs, root, v0).stats
-    def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val victim = entries.find(e =>
       e.cols.get("k").flatMap(_.min).contains(7L)).getOrElse(entries.head)
-    val (touchedE, keptE) = entries.partition(_.path == victim.path)
+    val keptE = entries.filterNot(_.path == victim.path)
     val rewritten = spark.read.parquet(victim.path).filter(col("k") < 0)
     val cur = SnapshotTable.read(spark, root, Some(v0))
     val resolvedPred = cur
@@ -2225,8 +2225,7 @@ object ScaleRehearsal {
       SnapshotTable.commitAt(spark, root,
         Some(SnapshotTable.resolvedAt(fs, root, v0)), rewritten,
         carry = keptE, tableSchema = Some(cur.schema),
-        rebase = Some(SnapshotTable.RebaseSpec(v0,
-          touchedE.map(e => norm(e.path)).toSet, () => resolvedPred))))
+        rebase = Some(() => resolvedPred)))
     assert(SnapshotTable.rebases.get() == rebasesBefore + 1,
       "the planted race must resolve via rebase")
     println(f"SCALE clr50k CAS-loss REBASE at 50k carried entries: " +

@@ -18,9 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     anti-join;
   *   - shard-local curation gates (token floor + type-token ratio), fixed
   *     thresholds so the decision needs no corpus-wide statistics;
-  *   - [[SnapshotTable.changes]] — the per-commit change feed, from which
-  *     the output's `ingested` flag is READ (file-granular delta), never
-  *     re-derived from the data.
+  *   - [[SnapshotTable.changesDelta]] — the per-commit change feed, from
+  *     which the output's `ingested` flag is READ (the commit's added
+  *     rows), never re-derived from the data.
   *
   * The registered query performs the whole cycle including a deliberate
   * REPLAY of the append batch, so the CORRECTNESS hash gate itself proves
@@ -96,11 +96,17 @@ object Ingest {
     val vIngest = SnapshotTable.appendOnce(s, root, curated, "graft-ingest", 1L)
     SnapshotTable.appendOnce(s, root, curated, "graft-ingest", 1L)
 
-    // `ingested` is read from the CHANGE FEED of the ingest commit (files
-    // added in exactly that version) — the incremental-consumer contract:
-    // downstream reads the delta, not the table.
-    val ingested = SnapshotTable.changes(s, root, vIngest - 1, Some(vIngest))
-      .select(col("doc_id"), lit(true).as("ingested"))
+    inventory(s, root, vIngest)
+  }
+
+  /** The table's (doc_id, source, ingested) inventory, `ingested` read
+    * from the CHANGE FEED of the ingest commit `vIngest` (the rows added in
+    * exactly that version) — the incremental-consumer contract: downstream
+    * reads the delta, not the table. */
+  private def inventory(s: SparkSession, root: String, vIngest: Long): DataFrame = {
+    val (added, _) = SnapshotTable.changesDelta(s, root, vIngest - 1, Some(vIngest))
+      .getOrElse(throw SnapshotTable.noCdcAt(root, vIngest))
+    val ingested = added.select(col("doc_id"), lit(true).as("ingested"))
     SnapshotTable.read(s, root).select(col("doc_id"), col("source"))
       .join(ingested, Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
@@ -253,13 +259,7 @@ object Ingest {
     SnapshotTable.appendOnce(s, sigRoot,
       indexRows(curated, bands * rowsPerBand), appId + "-sig", 1L)
 
-    val ingested = SnapshotTable.changes(s, root, vIngest - 1, Some(vIngest))
-      .select(col("doc_id"), lit(true).as("ingested"))
-    SnapshotTable.read(s, root).select(col("doc_id"), col("source"))
-      .join(ingested, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        coalesce(col("ingested"), lit(false)).as("ingested"))
-      .orderBy("doc_id")
+    inventory(s, root, vIngest)
   }
 
   /** One [[probeAndCurate]] step as a reusable suffixed CTE block: probes

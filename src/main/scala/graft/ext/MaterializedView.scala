@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   1. each arriving batch lands via [[SnapshotTable.appendOnce]]
   *      (exactly-once, (appId, batchId)-stamped);
-  *   2. the refresh reads ONLY that commit's file-granular delta from
-  *      [[SnapshotTable.changes]] — never the whole table;
+  *   2. the refresh reads ONLY that commit's delta from
+  *      [[SnapshotTable.changesDelta]] — never the whole table;
   *   3. [[MvSpec.combineDelta]] folds the delta's rows into the standing
   *      view (count / decimal sum / min / max — an append has no removes,
   *      so no extreme is lost and the base is never opened): cost
@@ -96,8 +96,9 @@ object MaterializedView {
     var mv = ordersSpec.partial(SnapshotTable.read(s, root, Some(v0)))
     for (i <- 1 to 2) {
       val vi = SnapshotTable.appendOnce(s, root, batch(i), "graft-mv", i.toLong)
-      val delta = SnapshotTable.changes(s, root, vi - 1, Some(vi))
-      mv = ordersSpec.combineDelta(s, root, mv, delta, delta.limit(0))
+      val (adds, removes) = SnapshotTable.changesDelta(s, root, vi - 1, Some(vi))
+        .getOrElse(throw SnapshotTable.noCdcAt(root, vi))
+      mv = ordersSpec.combineDelta(s, root, mv, adds, removes)
     }
     // Deliberate at-least-once replay: must resolve to the stamped version
     // without committing, or the view double-counts and the gate catches it.

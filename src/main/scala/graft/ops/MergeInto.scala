@@ -103,7 +103,7 @@ case class MergeInto(
   /** True when every arm is a DELETE (no update, no insert): the merge can
     * only REMOVE rows, so every surviving value — cluster keys included —
     * stays byte-identical and the rewrite preserves the table's layout
-    * (the `preserveLayout` commit fast path; optimization r15). */
+    * (the `Layout.Keep` commit fast path; optimization r15). */
   private[ops] def deleteOnly: Boolean =
     notMatched.isEmpty &&
       matched.forall { case _: DeleteClause => true; case _ => false } &&

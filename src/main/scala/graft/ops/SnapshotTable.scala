@@ -58,18 +58,18 @@ object SnapshotTable {
     * one whole rewrite job (potentially TBs at scale) NOT redone. */
   val rebases = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** What a row-level DML commit hands [[commitAt]] so a CAS loss can try
-    * a rebase: the version the rewrite was computed against, the
-    * normalized paths of the files it removed, and a THUNK producing the
-    * resolved filter expression its touched-set was probed with (None =
-    * unknown shape, never rebase). A thunk because some producers pay a
-    * real cost to build it — mergeInto collects its source keys — and the
-    * common case (CAS won) must not pay it. */
-  // private[graft]: the scale rehearsal plants deterministic races too.
-  private[graft] final case class RebaseSpec(
-      baseVersion: Long,
-      removedPaths: Set[String],
-      predicate: () => Option[org.apache.spark.sql.catalyst.expressions.Expression])
+  /** How a commit lays its rows out against the table's clustering. */
+  private[graft] sealed trait Layout
+  private[graft] object Layout {
+    /** Re-cluster on the inherited columns: a range re-shuffle plus an
+      * in-file sort (appends and value-changing rewrites). */
+    case object Inherit extends Layout
+    /** A value-preserving rewrite keeps the inherited layout: an
+      * in-partition sort only, no re-shuffle. */
+    case object Keep extends Layout
+    /** Declare `cols` as the clustering; the caller laid the rows out. */
+    final case class Declare(cols: Seq[String]) extends Layout
+  }
 
   /** The most distinct first-key values a MERGE turns into an `In` list
     * (probe refinement and rebase proof): beyond it the list the
@@ -680,10 +680,6 @@ object SnapshotTable {
     resolvedCache.get((mp.toString, st.getModificationTime, st.getLen)) != null
   }
 
-  /** Resolved file list at version `v`. */
-  private def filesAt(fs: FileSystem, root: String, v: Long): Seq[String] =
-    resolvedAt(fs, root, v).files
-
   /** Read the table at its latest committed version (or a pinned `asOf`
     * version — time travel falls out of immutable manifests for free).
     *
@@ -902,10 +898,9 @@ object SnapshotTable {
     * side-car parquet under `cdc-<v>-<token>/` and lists them in the
     * manifest — the Delta-CDF shape [[changesDelta]] consumes. */
   def commit(spark: SparkSession, root: String, df: DataFrame,
-             cdc: Option[(DataFrame, DataFrame)] = None,
-             declareClusterBy: Option[Seq[String]] = None): Long =
+             cdc: Option[(DataFrame, DataFrame)] = None): Long =
     transact(spark, root, "commit", attempts = 1)(
-      commitAt(spark, root, _, df, cdc = cdc, declareClusterBy = declareClusterBy))
+      commitAt(spark, root, _, df, cdc = cdc))
 
   /** Commit with the rows range-clustered on `clusterBy`: each output file
     * owns a disjoint key range (`repartitionByRange` + an in-file sort), so
@@ -918,9 +913,9 @@ object SnapshotTable {
                       clusterBy: Seq[String], numFiles: Int = 32): Long = {
     require(clusterBy.nonEmpty, "commitClustered needs at least one cluster column")
     val cols = clusterBy.map(df.col)
-    commit(spark, root,
+    transact(spark, root, "commit", attempts = 1)(commitAt(spark, root, _,
       df.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*),
-      declareClusterBy = Some(clusterBy))
+      layout = Layout.Declare(clusterBy)))
   }
 
   /** Commit with MULTI-dimension clustering: each row maps to a z-value —
@@ -1541,13 +1536,21 @@ object SnapshotTable {
     * (exercised by `ScaleRehearsal concurrency`). */
   def appendOnce(spark: SparkSession, root: String, df: DataFrame,
                  appId: String, batchId: Long): Long =
-    // Every attempt re-checks lastTxn: the winner may have BEEN this batch.
+    // Every attempt re-checks the ledger: the winner may have BEEN this batch.
     transact(spark, root, "appendOnce", BlindAttempts) { base =>
-      if (lastTxn(spark, root, appId).exists(_ >= batchId))
-        txnVersion(spark, root, appId, batchId) // replay: already applied
-          .getOrElse(currentVersion(spark, root).get)
-      else appendCommit(spark, root, base, df, Some((appId, batchId)))
+      replayed(spark, root, appId, batchId).getOrElse(
+        appendCommit(spark, root, base, df, Some((appId, batchId))))
     }
+
+  /** The exactly-once replay guard of [[appendOnce]] and [[commitOnce]]:
+    * when `appId`'s ledger already reaches `batchId`, the version carrying
+    * the batch (the current one once vacuum dropped the stamped manifest);
+    * None when the batch is new. */
+  private def replayed(spark: SparkSession, root: String, appId: String,
+                       batchId: Long): Option[Long] =
+    if (!lastTxn(spark, root, appId).exists(_ >= batchId)) None
+    else Some(txnVersion(spark, root, appId, batchId)
+      .getOrElse(currentVersion(spark, root).get))
 
   /** Plain APPEND as a new version (the `INSERT INTO` lowering —
     * graft.sql): old files + this batch's files, additive schema
@@ -1648,10 +1651,8 @@ object SnapshotTable {
   def commitOnce(spark: SparkSession, root: String, df: DataFrame,
                  appId: String, batchId: Long): Long =
     transact(spark, root, "commitOnce", BlindAttempts) { base =>
-      if (lastTxn(spark, root, appId).exists(_ >= batchId))
-        txnVersion(spark, root, appId, batchId)
-          .getOrElse(currentVersion(spark, root).get)
-      else commitAt(spark, root, base, df, txn = Some((appId, batchId)))
+      replayed(spark, root, appId, batchId).getOrElse(
+        commitAt(spark, root, base, df, txn = Some((appId, batchId))))
     }
 
   /** Commit `df` on top of `base` (version 0 when None) — the data-commit
@@ -1663,8 +1664,16 @@ object SnapshotTable {
     * `carry` prepends existing file entries to the new manifest (the append
     * path: the new version = old files + this commit's files — no data is
     * rewritten); `txn` stamps the manifest with an (appId, batchId)
-    * idempotence marker; `sidecars` are this attempt's own DV dirs,
-    * removed with its data when the CAS is lost. */
+    * idempotence marker; `layout` says how the rows meet the clustering;
+    * `sidecars` are this attempt's own DV dirs, removed with its data when
+    * the CAS is lost.
+    *
+    * `rebase` lets a row-level DML survive a lost CAS without redoing its
+    * rewrite: a THUNK producing the resolved filter expression its touched
+    * set was probed with (None = unknown shape, never rebase). The files it
+    * removed are `base`'s entries minus `carry`. A thunk because some
+    * producers pay a real cost to build it — mergeInto collects its source
+    * keys — and the common case (CAS won) must not pay it. */
   private[graft] def commitAt(spark: SparkSession, root: String,
                             base: Option[SnapshotStats.Resolved],
                             df: DataFrame,
@@ -1674,9 +1683,8 @@ object SnapshotTable {
                             tableSchema: Option[org.apache.spark.sql.types.StructType] = None,
                             meta: Option[(Map[String, String], Seq[String])] = None,
                             ingestedAdd: Seq[String] = Nil,
-                            rebase: Option[RebaseSpec] = None,
-                            declareClusterBy: Option[Seq[String]] = None,
-                            preserveLayout: Boolean = false,
+                            rebase: Option[() => Option[org.apache.spark.sql.catalyst.expressions.Expression]] = None,
+                            layout: Layout = Layout.Inherit,
                             sidecars: Seq[Path] = Nil): Long = {
     val fs = fsOf(spark, root)
     val v = targetOf(base)
@@ -1689,7 +1697,10 @@ object SnapshotTable {
     // inherits. DML rewrites RE-SORT their new files on the inherited
     // columns below — N merge waves must not decay the layout that
     // file-skipping selectivity rests on (round 13, VERDICT r12 #3).
-    val clusterByEff = declareClusterBy.getOrElse(prev.clusterBy)
+    val clusterByEff = layout match {
+      case Layout.Declare(cols) => cols
+      case _ => prev.clusterBy
+    }
     // Column-mapping metadata: explicit from an evolving caller
     // (appendOnce/upsert assigning fresh physical ids), else inherited.
     val (mapping, usedPhys0) = meta.getOrElse((prev.mapping, prev.usedPhys))
@@ -1709,36 +1720,36 @@ object SnapshotTable {
     // commits carry only their own rewrite/append rows, never the table —
     // and AQE coalesces the range partitions back to size. An EXPLICIT
     // declaration means the caller already laid the data out.
-    val dfSorted =
-      if (declareClusterBy.isEmpty && clusterByEff.nonEmpty &&
-          clusterByEff.forall(c => df.columns.exists(_.equalsIgnoreCase(c)))) {
-        val cols = clusterByEff.map(df.col(_))
-        if (preserveLayout)
-          // VALUE-PRESERVING rewrite (optimization r15, guide §2.4 —
-          // remove shuffles outright): a DELETE (or delete-only MERGE /
-          // an UPDATE not assigning a cluster column) rewrites touched
-          // files with a SUBSET of their rows and every cluster-key value
-          // unchanged — the inherited layout survives by construction, so
-          // the range re-shuffle (a full extra pass over the rewrite
-          // bytes: 2× write amplification on a 100 TB predicate DELETE)
-          // buys nothing. Scan partitions follow the touched files; the
-          // in-partition sort restores per-file order where the scan
-          // packed two small files into one split (no exchange).
-          df.sortWithinPartitions(cols: _*)
-        else {
-          // Rewrite-shaped commit (some prev files are being replaced):
-          // range-partition to the REPLACED file count explicitly — the
-          // range partitioner's quantile boundaries keep per-file key
-          // ranges disjoint, and pinning N stops AQE folding scattered
-          // ranges into one wide-bounds file. Append-shaped commit: let
-          // the range shuffle auto-size (AQE packs by bytes).
-          val removed = math.max(0, prevFileCount - carry.length)
-          val ranged =
-            if (removed > 0) df.repartitionByRange(removed, cols: _*)
-            else df.repartitionByRange(cols: _*)
-          ranged.sortWithinPartitions(cols: _*)
-        }
-      } else df
+    lazy val cols = clusterByEff.map(df.col(_))
+    val dfSorted = layout match {
+      case Layout.Declare(_) => df
+      case _ if clusterByEff.isEmpty ||
+          !clusterByEff.forall(c => df.columns.exists(_.equalsIgnoreCase(c))) => df
+      case Layout.Keep =>
+        // VALUE-PRESERVING rewrite (optimization r15, guide §2.4 —
+        // remove shuffles outright): a DELETE (or delete-only MERGE /
+        // an UPDATE not assigning a cluster column) rewrites touched
+        // files with a SUBSET of their rows and every cluster-key value
+        // unchanged — the inherited layout survives by construction, so
+        // the range re-shuffle (a full extra pass over the rewrite
+        // bytes: 2× write amplification on a 100 TB predicate DELETE)
+        // buys nothing. Scan partitions follow the touched files; the
+        // in-partition sort restores per-file order where the scan
+        // packed two small files into one split (no exchange).
+        df.sortWithinPartitions(cols: _*)
+      case Layout.Inherit =>
+        // Rewrite-shaped commit (some prev files are being replaced):
+        // range-partition to the REPLACED file count explicitly — the
+        // range partitioner's quantile boundaries keep per-file key
+        // ranges disjoint, and pinning N stops AQE folding scattered
+        // ranges into one wide-bounds file. Append-shaped commit: let
+        // the range shuffle auto-size (AQE packs by bytes).
+        val removed = math.max(0, prevFileCount - carry.length)
+        val ranged =
+          if (removed > 0) df.repartitionByRange(removed, cols: _*)
+          else df.repartitionByRange(cols: _*)
+        ranged.sortWithinPartitions(cols: _*)
+    }
     toPhysical(dfSorted, mapping).write.mode(SaveMode.ErrorIfExists).parquet(snapDir.toString)
     val cdcPaths = writeCdc(fs, cdcDir, mapping, cdc)
     // Harvest per-file column bounds from the just-written footers (metadata
@@ -1877,7 +1888,10 @@ object SnapshotTable {
     // supplied `meta` is fine as long as its mapping is identity: the
     // winner-side divergence it could mask (rename, evolution, drop) is
     // separately refused by the sameMeta check below.
-    rebase.filter(_ => mapping.isEmpty).foreach { spec =>
+    rebase.filter(_ => mapping.isEmpty).foreach { predicate =>
+      val baseByNorm = base.fold(Seq.empty[SnapshotStats.FileStats])(_.stats)
+        .map(e => norm(e.path) -> e).toMap
+      val removedPaths = baseByNorm.keySet -- carry.map(e => norm(e.path))
       var tries = 0
       var giveUp = false
       while (tries < 5 && !giveUp) {
@@ -1907,8 +1921,6 @@ object SnapshotTable {
             val winnerEntries = winner.stats
             val winnerFiles = winner.files
             val winnerByNorm = winnerEntries.map(e => norm(e.path) -> e).toMap
-            val baseEntries = resolvedAt(fs, root, spec.baseVersion).stats
-            val baseByNorm = baseEntries.map(e => norm(e.path) -> e).toMap
             // Touched files must survive with their BASE entries VERBATIM
             // (round 13 tightening): mere path presence would let a
             // winner's deletion-vector addition on the same file be
@@ -1916,20 +1928,20 @@ object SnapshotTable {
             // not just a file-level one.
             if (!sameMeta ||
                 winnerEntries.map(_.path).sorted != winnerFiles.sorted ||
-                !spec.removedPaths.forall(p =>
+                !removedPaths.forall(p =>
                   winnerByNorm.get(p).exists(baseByNorm.get(p).contains))) {
               giveUp = true; None
             } else {
               val basePaths = baseByNorm.keySet
               val newOnes = winnerEntries.filterNot(e => basePaths(norm(e.path)))
-              val pred = spec.predicate()
+              val pred = predicate()
               val safe = pred.isDefined && newOnes.forall(e =>
                 !SnapshotPruning.mightMatch(pred.get, e,
                   spark.sparkContext.hadoopConfiguration))
               if (!safe) { giveUp = true; None }
               else {
                 val rebasedCarry =
-                  winnerEntries.filterNot(e => spec.removedPaths(norm(e.path)))
+                  winnerEntries.filterNot(e => removedPaths(norm(e.path)))
                 val ingestedSet =
                   (winner.ingested ++ ingestedAdd).distinct.sorted
                 // The HWM this commit computed hangs off version v-1; if
@@ -2488,7 +2500,7 @@ object SnapshotTable {
             .sortWithinPartitions(clusterBy.map(batch.col): _*)
         Right(commitAt(spark, root, None, laid,
           cdc = Some((batch, batch.limit(0))),
-          declareClusterBy = Some(clusterBy).filter(_.nonEmpty)))
+          layout = Layout.Declare(clusterBy)))
       case Some(base) =>
         val state = stateOf(base)
         require(clusterBy.isEmpty || state.clusterBy.isEmpty ||
@@ -2819,43 +2831,24 @@ object SnapshotTable {
         // list (≤4096 distinct) comes from the statement's one source
         // copy, so it names exactly the keys this rewrite merged, and is
         // pulled only on an actual CAS loss.
-        val rebaseSpec =
+        val rebaseProof =
           if (bySource.nonEmpty) None
-          else Some(RebaseSpec(v, touched, () => {
+          else Some(() => {
             val kf = schema.fields.find(_.name.equalsIgnoreCase(keys.head)).get
             src.membership(kf.name, kf.dataType)
-          }))
+          })
         Right(commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((declared(mat.adds), declared(mat.removes))),
           tableSchema = Some(widenNullability(schema, rewritten.schema)),
-          meta = meta, rebase = rebaseSpec,
+          meta = meta, rebase = rebaseProof,
           // A delete-only MERGE (every arm DELETE) removes rows without
           // changing any surviving value — layout survives, skip the
           // range re-shuffle (guide §2.4).
-          preserveLayout = mi.deleteOnly))
+          layout = if (mi.deleteOnly) Layout.Keep else Layout.Inherit))
       } finally mat.free()
     }
   }
 
-  /** Predicate DELETE as a new snapshot — the DML triad's third member
-    * beside append and MERGE upsert, with Delta-style FILE-GRANULAR
-    * copy-on-write: files holding no matching row are CARRIED into the new
-    * manifest by entry (never read for data, never rewritten) and only the
-    * touched files are rewritten without their matching rows. The touched
-    * set comes from one scan of the predicate's matches projected to
-    * `input_file_name()` — a driver pull of file PATHS, O(touched files),
-    * never rows — and that scan itself file-skips off the manifest bounds,
-    * so a key-targeted delete on a clustered 100 TB table reads and
-    * rewrites a handful of files, not the table.
-    *
-    * SQL DELETE semantics: a NULL predicate keeps the row (only TRUE
-    * deletes). The commit records CDC (add = empty, remove = the deleted
-    * pre-image rows), so [[changesDelta]] → `MvSpec.combineDelta`
-    * consumes a delete as pure retraction with no special casing. Returns
-    * the current version unchanged when nothing matches. Deleting EVERY
-    * row is refused (an empty snapshot has no schema-bearing files; drop
-    * the table instead — the reference's own delete path is
-    * `client.delete_table`, never an empty table). */
   /** Files of version-`v` entries holding a predicate-matching row
     * (normalized paths): CLEAN files through the caller's skipping read +
     * `input_file_name()` (manifest bounds prune the probe), DV-carrying
@@ -2973,18 +2966,18 @@ object SnapshotTable {
     }
 
   /** The CAS-loss rebase of a predicate DML (DELETE, UPDATE,
-    * replaceWhere) over `touched`: its proof predicate is the optimized
+    * replaceWhere): its proof predicate is the optimized
     * (constant-folded) filter condition — a winner-appended file whose
     * bounds cannot match it proves the rewrite commutes with the append.
     * Optimized, not merely analyzed: analysis leaves implicit literal
     * casts unfolded, which the bounds MAY-analysis conservatively refuses
     * to prune on. */
-  private def predicateRebase(v: Long, touched: Set[String], cur: DataFrame,
-                              predicate: Column): Option[RebaseSpec] =
-    Some(RebaseSpec(v, touched, () =>
+  private def predicateRebase(cur: DataFrame, predicate: Column)
+      : Option[() => Option[org.apache.spark.sql.catalyst.expressions.Expression]] =
+    Some(() =>
       cur.filter(predicate).queryExecution.optimizedPlan.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }))
+      })
 
   /** Merge-on-read eligibility of a point DELETE/UPDATE, decided from the
     * touched-file probe's exact matched counts — zero extra scans on the
@@ -3035,6 +3028,25 @@ object SnapshotTable {
     (hits.drop("__gf_file", "__gf_pos"), capped, dvDir +: mergedDv.toSeq)
   }
 
+  /** Predicate DELETE as a new snapshot — the DML triad's third member
+    * beside append and MERGE upsert, with Delta-style FILE-GRANULAR
+    * copy-on-write: files holding no matching row are CARRIED into the new
+    * manifest by entry (never read for data, never rewritten) and only the
+    * touched files are rewritten without their matching rows. The touched
+    * set comes from one scan of the predicate's matches projected to
+    * `input_file_name()` — a driver pull of file PATHS, O(touched files),
+    * never rows — and that scan itself file-skips off the manifest bounds,
+    * so a key-targeted delete on a clustered 100 TB table reads and
+    * rewrites a handful of files, not the table.
+    *
+    * SQL DELETE semantics: a NULL predicate keeps the row (only TRUE
+    * deletes). The commit records CDC (add = empty, remove = the deleted
+    * pre-image rows), so [[changesDelta]] → `MvSpec.combineDelta`
+    * consumes a delete as pure retraction with no special casing. Returns
+    * the current version unchanged when nothing matches. Deleting EVERY
+    * row is refused (an empty snapshot has no schema-bearing files; drop
+    * the table instead — the reference's own delete path is
+    * `client.delete_table`, never an empty table). */
   def delete(spark: SparkSession, root: String, predicate: Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     transactOn(spark, root, "delete", ReadAttempts) { base =>
@@ -3096,10 +3108,10 @@ object SnapshotTable {
         commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((cur.limit(0), touchedRows.filter(predicate))),
           tableSchema = Some(schema),
-          rebase = predicateRebase(v, touched, cur, predicate),
+          rebase = predicateRebase(cur, predicate),
           // A delete keeps every surviving value byte-identical — the
           // clustered layout survives the rewrite by construction.
-          preserveLayout = true)
+          layout = Layout.Keep)
       }
     }
   }
@@ -3177,12 +3189,14 @@ object SnapshotTable {
         commitAt(spark, root, Some(base), rewritten, carry = keptE,
           cdc = Some((post, pre)),
           tableSchema = Some(widenNullability(schema, rewritten.schema)),
-          rebase = predicateRebase(v, touched, cur, predicate),
+          rebase = predicateRebase(cur, predicate),
           // An UPDATE that assigns NO cluster column keeps every
           // cluster-key value in place — layout survives, skip the range
           // re-shuffle (same rule as delete; guide §2.4).
-          preserveLayout = state.clusterBy
-            .forall(c => !set.keys.exists(_.equalsIgnoreCase(c))))
+          layout =
+            if (state.clusterBy.forall(c => !set.keys.exists(_.equalsIgnoreCase(c))))
+              Layout.Keep
+            else Layout.Inherit)
       }
     }
   }
@@ -3239,7 +3253,7 @@ object SnapshotTable {
       commitAt(spark, root, Some(base), rewritten, carry = keptE,
         cdc = Some((batch, removes)),
         tableSchema = Some(widenNullability(schema, rewritten.schema)),
-        rebase = predicateRebase(v, touched, cur, predicate))
+        rebase = predicateRebase(cur, predicate))
     }
   }
 
@@ -3264,66 +3278,54 @@ object SnapshotTable {
     }.toIndexedSeq: _*)
   }
 
-  /** Incremental change feed between two versions, as the rows in files
-    * ADDED after `fromVersion` (exclusive) up to `toVersion` (inclusive,
-    * default current). For append-written tables (appendOnce) this is the
-    * EXACT set of appended rows at file granularity — a downstream
-    * incremental consumer reads only the new files, never rescans the
-    * table, which is what keeps a 100 TB source → derived-table chain
-    * incremental end to end. Rewrite commits replace files: a whole-table
-    * rewrite (compact, recluster) yields the full new snapshot, a
-    * file-granular DML (MERGE, upsert, DELETE, UPDATE) the full contents
-    * of its rewritten files, and the caller should treat that as a
-    * reprocess signal, exactly as Delta's change feed treats non-append
-    * commits without CDC files ([[changesDelta]] reads the recorded CDC
-    * instead). */
-  def changes(spark: SparkSession, root: String, fromVersion: Long,
-              toVersion: Option[Long] = None): DataFrame = {
-    val to = toVersion.orElse(currentVersion(spark, root))
-      .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
-    require(fromVersion <= to, s"changes($fromVersion, $to) is inverted")
-    val fs = fsOf(spark, root)
-    val before = filesAt(fs, root, fromVersion).toSet
-    val after = filesAt(fs, root, to)
-    // Merge-on-read guard (round 13): a deletion-vector commit changes
-    // ROWS without changing the file set, which this file-level feed
-    // cannot express — a silent miss, not a reprocess signal. Detect it
-    // from the endpoints' per-file masked-row counts and fail toward the
-    // row-level feed ([[changesDelta]] consumes DV commits exactly via
-    // their recorded CDC).
-    locally {
-      val beforeDv = resolvedAt(fs, root, fromVersion).stats
-        .map(e => e.path -> e.dvRows).toMap
-      val dvMoved = resolvedAt(fs, root, to).stats
-        .exists(e => beforeDv.get(e.path).exists(_ != e.dvRows))
-      if (dvMoved) throw new IllegalStateException(
-        s"changes($fromVersion, $to) on $root crosses a deletion-vector " +
-          "commit (rows masked, file set unchanged) — the file-level feed " +
-          "cannot express it; use changesDelta/changesFeed")
+  /** One walk over the versions of (fromVersion, toVersion], shared by
+    * both change feeds: each version's resolved state with the change
+    * files it adds and removes, or Left(v) for the first version `v` that
+    * is a rewrite without CDC. Per commit:
+    *   - a commit that RECORDED CDC (DML, upsert, compaction) contributes
+    *     its manifest-listed change files — source-sized, never
+    *     table-sized;
+    *   - an append commit (old files ⊆ new files) contributes its added
+    *     files and removes nothing;
+    *   - a rewrite commit without CDC cannot be expressed as row changes
+    *     (Delta's change feed has the same rule for commits written
+    *     without CDC enabled).
+    * fromVersion = -1 anchors BEFORE the table existed, so the bootstrap
+    * commit's own changes are part of the walk. */
+  private def changeWalk(fs: FileSystem, root: String, fromVersion: Long,
+                         toVersion: Long)
+      : Either[Long, Seq[(SnapshotStats.Resolved, Seq[String], Seq[String])]] = {
+    var prev =
+      if (fromVersion < 0) Set.empty[String]
+      else resolvedAt(fs, root, fromVersion).files.toSet
+    val steps = Seq.newBuilder[(SnapshotStats.Resolved, Seq[String], Seq[String])]
+    for (v <- fromVersion + 1 to toVersion) {
+      val r = resolvedAt(fs, root, v)
+      val files = r.files.toSet
+      r.cdc match {
+        case Some((a, d)) => steps += ((r, a, d))
+        case None if prev.subsetOf(files) => steps += ((r, (files -- prev).toSeq, Nil))
+        case None => return Left(v)
+      }
+      prev = files
     }
-    val added = after.filterNot(before)
-    if (added.isEmpty) read(spark, root, Some(to)).limit(0)
-    else {
-      // The feed lands on the END version's DECLARED schema: columns added
-      // mid-interval null-fill for earlier files, and a column dropped
-      // mid-interval does NOT resurface from files that still hold its
-      // bytes.
-      val end = resolvedAt(fs, root, to)
-      readChangeFiles(spark, added, end, end.schema, end.mapping)
-    }
+    Right(steps.result())
   }
+
+  /** The refusal of a change feed asked to cross version `v`, a rewrite
+    * without CDC. */
+  private[graft] def noCdcAt(root: String, v: Long): IllegalStateException =
+    new IllegalStateException(
+      s"version $v of $root is a rewrite without CDC; the change feed cannot cross it")
 
   /** Row-level change feed between two versions: `Some((adds, removes))`
     * where `adds` are rows introduced and `removes` are pre-image rows
-    * replaced, accumulated across every commit in (fromVersion, toVersion].
-    * Per commit:
-    *   - a commit that RECORDED CDC (upsert, compaction) contributes its
-    *     manifest-listed change files — source-sized, never table-sized;
-    *   - an append commit (appendOnce — old files ⊆ new files) contributes
-    *     its added files, removes nothing;
-    *   - a pre-CDC rewrite commit makes the interval non-incremental:
-    *     returns None, the caller's full-reprocess signal (same contract as
-    *     Delta's change feed when CDC wasn't enabled for a commit).
+    * replaced, accumulated across every commit in (fromVersion, toVersion]
+    * (default current) as [[changeWalk]] collects them. For append-written
+    * tables (appendOnce) `adds` is the EXACT set of appended rows — a
+    * downstream incremental consumer reads only the new files, never
+    * rescans the table. None when the interval crosses a rewrite without
+    * CDC: the caller's full-reprocess signal.
     * An upserted key's net effect over the interval is its LAST post-image
     * minus its FIRST pre-image — but for ALGEBRAIC consumers (count/sum
     * retraction, the MV combine) applying every intermediate (add, remove)
@@ -3335,33 +3337,18 @@ object SnapshotTable {
       .getOrElse(throw new IllegalStateException(s"no committed version at $root"))
     require(fromVersion <= to, s"changesDelta($fromVersion, $to) is inverted")
     val fs = fsOf(spark, root)
-    // fromVersion = -1 anchors BEFORE the table existed, so the bootstrap
-    // commit's own changes are part of the feed.
-    var prev =
-      if (fromVersion < 0) Set.empty[String]
-      else filesAt(fs, root, fromVersion).toSet
-    val adds = Seq.newBuilder[String]
-    val removes = Seq.newBuilder[String]
-    for (v <- fromVersion + 1 to to) {
-      val r = resolvedAt(fs, root, v)
-      val files = r.files.toSet
-      r.cdc match {
-        case Some((a, r)) => adds ++= a; removes ++= r
-        case None if prev.subsetOf(files) => adds ++= (files -- prev)
-        case None => return None // pre-CDC rewrite: not incrementally consumable
-      }
-      prev = files
+    changeWalk(fs, root, fromVersion, to).toOption.map { steps =>
+      // The feed lands on the END version's DECLARED schema (ADVICE r9):
+      // columns added mid-interval null-fill for earlier change files, and
+      // a column dropped mid-interval must NOT resurface its orphaned
+      // values from pre-drop files — that is the hazard the tombstone
+      // contract exists to prevent.
+      lazy val end = resolvedAt(fs, root, to)
+      def readOrEmpty(paths: Seq[String]): DataFrame =
+        if (paths.isEmpty) read(spark, root, Some(to)).limit(0)
+        else readChangeFiles(spark, paths, end, end.schema, end.mapping)
+      (readOrEmpty(steps.flatMap(_._2)), readOrEmpty(steps.flatMap(_._3)))
     }
-    // The feed lands on the END version's DECLARED schema, exactly like
-    // [[changes]] (ADVICE r9): columns added mid-interval null-fill for
-    // earlier change files, and a column dropped mid-interval must NOT
-    // resurface its orphaned values from pre-drop CDC side-cars — that is
-    // the hazard the tombstone contract exists to prevent.
-    lazy val end = resolvedAt(fs, root, to)
-    def readOrEmpty(paths: Seq[String]): DataFrame =
-      if (paths.isEmpty) read(spark, root, Some(to)).limit(0)
-      else readChangeFiles(spark, paths, end, end.schema, end.mapping)
-    Some((readOrEmpty(adds.result()), readOrEmpty(removes.result())))
   }
 
   /** The change feed of (fromVersion, toVersion] as ONE DataFrame in the
@@ -3377,11 +3364,11 @@ object SnapshotTable {
     *
     * Rows project onto `onSchema` (the source's plan-time schema; columns
     * added mid-interval null-fill, dropped columns never resurface — the
-    * [[changesDelta]] projection rule). Unlike changesDelta, a pre-CDC
-    * rewrite commit THROWS instead of returning None: a streaming
-    * consumer has no full-reprocess fallback mid-stream, so the honest
-    * behavior is to fail the stream loudly (Delta's CDF does the same
-    * when CDC was not enabled for a commit). */
+    * [[changesDelta]] projection rule). Unlike changesDelta, a rewrite
+    * without CDC THROWS, naming the version, instead of returning None: a
+    * streaming consumer has no full-reprocess fallback mid-stream, so the
+    * honest behavior is to fail the stream loudly (Delta's CDF does the
+    * same when CDC was not enabled for a commit). */
   def changesFeed(spark: SparkSession, root: String, fromVersion: Long,
                   toVersion: Long,
                   onSchema: org.apache.spark.sql.types.StructType,
@@ -3389,30 +3376,17 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.lit
     require(fromVersion <= toVersion,
       s"changesFeed($fromVersion, $toVersion) is inverted")
-    val fs = fsOf(spark, root)
-    var prev =
-      if (fromVersion < 0) Set.empty[String]
-      else filesAt(fs, root, fromVersion).toSet
-    val parts = Seq.newBuilder[DataFrame]
+    val steps = changeWalk(fsOf(spark, root), root, fromVersion, toVersion)
+      .fold(v => throw noCdcAt(root, v), identity)
     // Each slice reads on its own version's declared schema; renames keep
     // their physical name, so the stream-start mapping serves the interval.
-    def slice(paths: Seq[String], kind: String, at: SnapshotStats.Resolved): Unit =
-      if (paths.nonEmpty)
-        parts += readChangeFiles(spark, paths.sorted, at, onSchema, onMapping)
-          .withColumn("_change_type", lit(kind))
-          .withColumn("_commit_version", lit(at.version))
-    for (v <- fromVersion + 1 to toVersion) {
-      val r = resolvedAt(fs, root, v)
-      val files = r.files.toSet
-      r.cdc match {
-        case Some((a, d)) => slice(a, "insert", r); slice(d, "delete", r)
-        case None if prev.subsetOf(files) =>
-          slice((files -- prev).toSeq, "insert", r)
-        case None => throw new IllegalStateException(
-          s"version $v of $root is a rewrite without CDC; " +
-            "the change feed cannot cross it")
-      }
-      prev = files
+    def slice(paths: Seq[String], kind: String, at: SnapshotStats.Resolved) =
+      if (paths.isEmpty) None
+      else Some(readChangeFiles(spark, paths.sorted, at, onSchema, onMapping)
+        .withColumn("_change_type", lit(kind))
+        .withColumn("_commit_version", lit(at.version)))
+    val parts = steps.flatMap { case (r, a, d) =>
+      slice(a, "insert", r) ++ slice(d, "delete", r)
     }
     val feedSchema = org.apache.spark.sql.types.StructType(onSchema.fields ++ Seq(
       org.apache.spark.sql.types.StructField("_change_type",
@@ -3421,7 +3395,7 @@ object SnapshotTable {
         org.apache.spark.sql.types.LongType, nullable = false)))
     val zero = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), feedSchema)
-    parts.result().foldLeft(zero)(_ unionByName _)
+    parts.foldLeft(zero)(_ unionByName _)
   }
 
   /** Bin-pack the CURRENT snapshot's SMALL files into roughly
@@ -3484,7 +3458,7 @@ object SnapshotTable {
           // misreading the file rewrite as a reprocess signal.
           Some(commitAt(spark, root, Some(base), packed, carry = large,
             cdc = Some((packed.limit(0), packed.limit(0))),
-            declareClusterBy = if (cCols.isEmpty) None else Some(cCols)))
+            layout = if (cCols.isEmpty) Layout.Inherit else Layout.Declare(cCols)))
         }
       }
     }) catch { case _: ConcurrentWriteException => None }
@@ -3514,7 +3488,7 @@ object SnapshotTable {
         }
       commitAt(spark, root, Some(base), clustered,
         cdc = Some((cur.limit(0), cur.limit(0))),
-        declareClusterBy = Some(clusterBy))
+        layout = Layout.Declare(clusterBy))
     }
   }
 

@@ -327,9 +327,10 @@ object Streams {
             case Some(_) =>
               // The fold materializes its result: the plan reads no view
               // file the commit supersedes.
-              val delta = SnapshotTable.changes(s, baseRoot, v - 1, Some(v))
+              val (adds, removes) = SnapshotTable.changesDelta(s, baseRoot, v - 1, Some(v))
+                .getOrElse(throw SnapshotTable.noCdcAt(baseRoot, v))
               MaterializedView.ordersSpec.combineDelta(s, baseRoot,
-                SnapshotTable.read(s, viewRoot), delta, delta.limit(0))
+                SnapshotTable.read(s, viewRoot), adds, removes)
           }
           SnapshotTable.commitOnce(s, viewRoot, refreshed, appId, batchId)
         }

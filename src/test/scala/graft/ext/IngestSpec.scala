@@ -87,7 +87,7 @@ class IngestSpec extends SparkSpec {
     writeDocs(dir)
     Ingest.incrementalCuration(spark, dir).collect()
     val root = rootFor(dir)
-    val delta = SnapshotTable.changes(spark, root, 0L)
+    val Some((delta, _)) = SnapshotTable.changesDelta(spark, root, 0L)
     assert(delta.select("doc_id").as[Long].collect().toSet == Set(3L),
       "change feed should carry exactly the appended shard rows")
   }

@@ -58,6 +58,13 @@ class CdcSpec extends SparkSpec {
     val v5 = SnapshotTable.commit(spark, root, SnapshotTable.read(spark, root))
     assert(SnapshotTable.changesDelta(spark, root, v4, Some(v5)).isEmpty,
       "rewrite without CDC must signal full reprocess")
+    // ...and the CDF-shaped feed, which has no reprocess fallback, refuses
+    // the same interval, naming the version
+    val refused = intercept[IllegalStateException] {
+      SnapshotTable.changesFeed(spark, root, v4, v5, SnapshotTable.read(spark, root).schema)
+    }
+    assert(refused.getMessage.contains(s"version $v5 of $root is a rewrite without CDC"),
+      refused.getMessage)
     // ...but an interval ending before it stays consumable
     assert(SnapshotTable.changesDelta(spark, root, v0, Some(v4)).isDefined)
   }

@@ -46,14 +46,14 @@ class ConflictRebaseSpec extends SparkSpec {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
     assert(resolved.isDefined)
-    (touchedE, keptE, rewritten, cur.schema, resolved)
+    (keptE, rewritten, cur.schema, resolved)
   }
 
   test("CAS loss against a non-matching append rebases: same files, next version") {
     val root = s"${tmpDir()}/t"
     SnapshotTable.commitClustered(spark, root,
       (0L until 100L).map(k => (k, s"r$k")).toDF("k", "s"), Seq("k"), numFiles = 4)
-    val (touchedE, keptE, rewritten, schema, resolved) = stageDelete(root)
+    val (keptE, rewritten, schema, resolved) = stageDelete(root)
 
     // The WINNER lands first: an append whose rows (k >= 1000) the delete
     // predicate (k < 20) provably cannot match — clustered bounds decide.
@@ -66,8 +66,7 @@ class ConflictRebaseSpec extends SparkSpec {
     // CAS loses, the rebase check passes, and the SAME rewrite lands at 2.
     val committed = SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
       carry = keptE, tableSchema = Some(schema),
-      rebase = Some(SnapshotTable.RebaseSpec(0L,
-        touchedE.map(e => norm(e.path)).toSet, () => resolved)))
+      rebase = Some(() => resolved))
     assert(committed == 2L, s"rebased commit must land at 2, got $committed")
     assert(SnapshotTable.rebases.get() == rebasesBefore + 1)
     assert(SnapshotTable.casLosses.get() == lossesBefore + 1)
@@ -90,7 +89,7 @@ class ConflictRebaseSpec extends SparkSpec {
     val root = s"${tmpDir()}/t"
     SnapshotTable.commitClustered(spark, root,
       (0L until 100L).map(k => (k, s"r$k")).toDF("k", "s"), Seq("k"), numFiles = 4)
-    val (touchedE, keptE, rewritten, schema, resolved) = stageDelete(root)
+    val (keptE, rewritten, schema, resolved) = stageDelete(root)
 
     // Winner appends k = 5 — INSIDE the delete's predicate range. A rebase
     // would wrongly keep that row; the loser must fall back to redo.
@@ -99,8 +98,7 @@ class ConflictRebaseSpec extends SparkSpec {
     intercept[SnapshotTable.ConcurrentWriteException] {
       SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
         carry = keptE, tableSchema = Some(schema),
-        rebase = Some(SnapshotTable.RebaseSpec(0L,
-          touchedE.map(e => norm(e.path)).toSet, () => resolved)))
+        rebase = Some(() => resolved))
     }
     assert(SnapshotTable.rebases.get() == rebasesBefore, "no rebase on a real conflict")
     // The loser cleaned up; the table still shows the winner's state, and
@@ -114,7 +112,7 @@ class ConflictRebaseSpec extends SparkSpec {
     val root = s"${tmpDir()}/t"
     SnapshotTable.commitClustered(spark, root,
       (0L until 100L).map(k => (k, s"r$k")).toDF("k", "s"), Seq("k"), numFiles = 4)
-    val (touchedE, keptE, rewritten, schema, resolved) = stageDelete(root)
+    val (keptE, rewritten, schema, resolved) = stageDelete(root)
 
     // Winner UPDATES inside the same file the staged delete touched.
     SnapshotTable.update(spark, root, col("k") === 3L,
@@ -123,8 +121,7 @@ class ConflictRebaseSpec extends SparkSpec {
     intercept[SnapshotTable.ConcurrentWriteException] {
       SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
         carry = keptE, tableSchema = Some(schema),
-        rebase = Some(SnapshotTable.RebaseSpec(0L,
-          touchedE.map(e => norm(e.path)).toSet, () => resolved)))
+        rebase = Some(() => resolved))
     }
     assert(SnapshotTable.rebases.get() == rebasesBefore)
   }
@@ -294,7 +291,7 @@ class ConflictRebaseSpec extends SparkSpec {
         .select(col("k").as("k", md), col("s")),
       Seq("k"), numFiles = 4)
     assert(resolvedAt(root, 0L).identityHwm == Map("k" -> 99L))
-    val (touchedE, keptE, rewritten, schema, resolved) = stageDelete(root)
+    val (keptE, rewritten, schema, resolved) = stageDelete(root)
 
     // Winner: an append that pushes the HWM to 1009 AFTER the delete
     // captured version 0's marks.
@@ -304,8 +301,7 @@ class ConflictRebaseSpec extends SparkSpec {
 
     val committed = SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
       carry = keptE, tableSchema = Some(schema),
-      rebase = Some(SnapshotTable.RebaseSpec(0L,
-        touchedE.map(e => norm(e.path)).toSet, () => resolved)))
+      rebase = Some(() => resolved))
     assert(committed == 2L, s"rebased commit must land at 2, got $committed")
     // Without the max-merge the rebased manifest re-declared HWM 99 and
     // the next generating insert would reuse the winner's 1000..1009.

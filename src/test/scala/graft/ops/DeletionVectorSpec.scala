@@ -151,15 +151,10 @@ class DeletionVectorSpec extends SparkSpec {
     assert(row.length == 1 && row.head.getString(1) == "revived")
     assert(SnapshotTable.read(spark, root).count() == 10000L)
   }
-  test("file-level changes() refuses an interval crossing a DV commit") {
+  test("the row-level feed consumes an interval crossing a DV commit") {
     val root = tmpDir() + "/tbl"
     seed(root)
     SnapshotTable.delete(spark, root, col("k") === 9L) // DV commit
-    val e = intercept[IllegalStateException] {
-      SnapshotTable.changes(spark, root, 0L)
-    }
-    assert(e.getMessage.contains("deletion-vector"), e.getMessage)
-    // The row-level feed consumes the same interval exactly.
     val Some((adds, removes)) = SnapshotTable.changesDelta(spark, root, 0L)
     assert(adds.isEmpty && removes.count() == 1L)
   }

@@ -170,7 +170,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     SnapshotTable.appendOnce(spark, root2,
       Seq((2L, "b", 2.0)).toDF("k", "grp", "score"), "evo-spec", 1L)
     SnapshotTable.dropColumn(spark, root2, "score")
-    val feed = SnapshotTable.changes(spark, root2, w0)
+    val Some((feed, _)) = SnapshotTable.changesDelta(spark, root2, w0)
     assert(feed.columns.toSeq == Seq("k", "grp"),
       s"feed must not resurface a dropped column: ${feed.columns.toSeq}")
     assert(feed.collect().map(_.getLong(0)).toSet == Set(2L))

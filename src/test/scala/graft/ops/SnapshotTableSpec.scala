@@ -226,27 +226,36 @@ class SnapshotTableSpec extends SparkSpec {
     val vReplay = SnapshotTable.appendOnce(spark, root,
       Seq((9L, "ghost")).toDF("k", "v"), "app", 1L)
     assert(vReplay == 1L, s"replay anchored on $vReplay, want stamped 1")
-    assert(canon(SnapshotTable.changes(spark, root, vReplay - 1, Some(vReplay))) ==
-      canon(Seq((2L, "b")).toDF("k", "v")))
+    val Some((replayAdds, _)) =
+      SnapshotTable.changesDelta(spark, root, vReplay - 1, Some(vReplay))
+    assert(canon(replayAdds) == canon(Seq((2L, "b")).toDF("k", "v")))
     assert(SnapshotTable.txnVersion(spark, root, "app", 0L) == Some(0L))
     assert(SnapshotTable.txnVersion(spark, root, "app", 7L) == None)
   }
 
-  test("changes() between append versions yields exactly the appended rows") {
+  test("changesDelta between append versions yields exactly the appended rows") {
     val root = tmpDir() + "/tbl"
     SnapshotTable.appendOnce(spark, root, Seq((1L, "a")).toDF("k", "v"), "app", 0L)
     SnapshotTable.appendOnce(spark, root, Seq((2L, "b"), (3L, "c")).toDF("k", "v"), "app", 1L)
     SnapshotTable.appendOnce(spark, root, Seq((4L, "d")).toDF("k", "v"), "app", 2L)
-    assert(canon(SnapshotTable.changes(spark, root, 0L, Some(1L))) ==
+    def adds(from: Long, to: Option[Long] = None): DataFrame = {
+      val Some((a, r)) = SnapshotTable.changesDelta(spark, root, from, to)
+      assert(r.count() == 0, "appends remove nothing")
+      a
+    }
+    assert(canon(adds(0L, Some(1L))) ==
       canon(Seq((2L, "b"), (3L, "c")).toDF("k", "v")))
-    assert(canon(SnapshotTable.changes(spark, root, 0L)) ==
+    assert(canon(adds(0L)) ==
       canon(Seq((2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v")))
-    assert(SnapshotTable.changes(spark, root, 2L).count() == 0)
-    // A rewrite commit replaces the file set: changes = full reprocess.
-    // (recluster rewrites every file; an upsert rewrites only the files
-    // holding its keys.)
+    assert(adds(2L).count() == 0)
+    // recluster rewrites every file but records an EMPTY change set: the
+    // consumer skips it.
     SnapshotTable.recluster(spark, root, Seq("k"))
-    assert(SnapshotTable.changes(spark, root, 2L).count() == 4)
+    assert(adds(2L).count() == 0)
+    // A rewrite without CDC replaces the file set: None, the reprocess
+    // signal.
+    SnapshotTable.commit(spark, root, SnapshotTable.read(spark, root).localCheckpoint())
+    assert(SnapshotTable.changesDelta(spark, root, 2L).isEmpty)
   }
 
   test("vacuum reference-counts dirs shared by append manifests") {

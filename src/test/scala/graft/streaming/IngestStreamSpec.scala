@@ -97,8 +97,8 @@ class IngestStreamSpec extends SparkSpec {
       .select("doc_id", "ingest_batch").as[(Long, Long)].collect().toMap
     val streamedBatches =
       Seq((vBoot, vB1, 1L), (vB1, vB2, 2L)).flatMap { case (lo, hi, b) =>
-        SnapshotTable.changes(spark, corpusRoot, lo, Some(hi))
-          .select("doc_id").as[Long].collect().map(_ -> b)
+        val Some((adds, _)) = SnapshotTable.changesDelta(spark, corpusRoot, lo, Some(hi))
+        adds.select("doc_id").as[Long].collect().map(_ -> b)
       }.toMap ++ corpusDocs.map(_._1 -> 0L).toMap
     assert(streamedBatches == twin,
       s"streamed inventory $streamedBatches != batch twin $twin")
