@@ -2102,30 +2102,24 @@ object ScaleRehearsal {
         schemaJson = schema.json, dropped = Nil, bloomOn = Nil,
         constraints = Map.empty, mapping = Map.empty, usedPhys = Nil,
         ingested = (0 until 200).map(i => s"src/batch-$i.csv"),
-        clusterBy = Seq("k"), identityHwm = Map.empty, txn = None, cdc = None)
+        clusterBy = Seq("k"), identityHwm = Map.empty, txn = None, cdc = None,
+        protocol = (SnapshotStats.SupportedReaderVersion,
+          SnapshotStats.SupportedWriterVersion))
       val cp = new org.apache.hadoop.fs.Path(root,
         f"_manifests/checkpoint-${16L}%08d.parquet")
       val (_, wWrite) = timeMs(CheckpointIO.write(fs, conf, cp, state))
       val cpBytes = fs.getFileStatus(cp).getLen
       // Real delta tail on top (17..20): one added entry each — the KB
-      // manifests a streaming sink would have committed.
-      (17 to 20).foreach { v =>
-        val body = SnapshotStats.deltaManifestJson(v, v - 1,
-          add = Seq(entry(n + v)), removePaths = Nil,
-          ingestedAdd = Nil, schemaJson = Some(schema.json),
-          clusterBy = Seq("k"))
+      // manifests a streaming sink would have committed. manifest-16 is a
+      // delta too: subsumed by the checkpoint on every read, but the walk
+      // requires the file to exist for keying.
+      val tail = state.copy(stats = Nil)
+      (16 to 20).foreach { v =>
+        val body = SnapshotStats.manifestJson(
+          tail.copy(version = v, stats = Seq(entry(n + v))),
+          Some(tail.copy(version = v - 1)))
         val p = new org.apache.hadoop.fs.Path(root,
           f"_manifests/manifest-$v%08d.json")
-        val out = fs.create(p, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-      }
-      // manifest-16 itself (a delta; subsumed by the checkpoint on every
-      // read, but the walk requires the file to exist for keying).
-      locally {
-        val body = SnapshotStats.deltaManifestJson(16L, 15L,
-          add = Seq(entry(n + 16)), removePaths = Nil, ingestedAdd = Nil,
-          schemaJson = Some(schema.json), clusterBy = Seq("k"))
-        val p = new org.apache.hadoop.fs.Path(root, "_manifests/manifest-00000016.json")
         val out = fs.create(p, true)
         try out.write(body.getBytes("UTF-8")) finally out.close()
       }

@@ -127,12 +127,7 @@ object CheckpointIO {
       s".${dest.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     // State body: the manifest-JSON shape with EMPTY files/stats arrays —
     // readState parses it like any full manifest; rows below carry the files.
-    val stateJson = SnapshotStats.manifestJson(
-      state.version, Nil, state.txn, state.cdc, Some(state.schemaJson),
-      state.dropped, state.bloomOn, state.constraints, state.mapping,
-      state.usedPhys, state.ingested, tsOverride = Some(state.ts),
-      clusterBy = state.clusterBy, identityHwm = state.identityHwm,
-      protocolOverride = Some(state.protocol))
+    val stateJson = SnapshotStats.manifestJson(state.copy(stats = Nil))
     // Promoted cluster-key bounds (round 15): physical name of the LEADING
     // declared cluster column + the dominant stats kind among entries that
     // carry it (schema evolution can leave stragglers of another kind —
@@ -232,7 +227,7 @@ object CheckpointIO {
 
   /** The state-only read: ONE footer fetch, no row decode — O(table
     * state), flat in file count. The result carries no entries; its
-    * PROTOCOL is the chain's (buildCommitBody's writer gate reads it — a
+    * PROTOCOL is the chain's (the commit seam's writer gate reads it — a
     * checkpoint-served resolution dropping it to (1,1) would let an old
     * writer extend a chain that demands a newer one). */
   def readState(conf: Configuration, path: Path): SnapshotStats.Resolved = {

@@ -213,43 +213,42 @@ object SnapshotStats {
     * shape): every manifest/checkpoint carries the MINIMUM reader/writer
     * capability it requires; an engine build older than the chain's
     * requirement refuses loudly instead of mis-parsing a future format.
-    * Absent field = 1 (every pre-r14 manifest). Bump minReader only when
-    * an old reader would return WRONG results; bump minWriter when an old
-    * writer would corrupt state newer readers depend on. */
+    * A manifest without it (pre-r14) is refused by name. Bump minReader
+    * only when an old reader would return WRONG results; bump minWriter
+    * when an old writer would corrupt state newer readers depend on. */
   val SupportedReaderVersion = 1
   val SupportedWriterVersion = 1
 
-  /** (minReader, minWriter) this manifest demands; (1, 1) when absent. */
-  def protocolFromManifest(m: JsonNode): (Int, Int) = {
-    val p = m.get("protocol")
-    if (p == null || !p.isObject) (1, 1)
-    else (Option(p.get("minReader")).map(_.asInt).getOrElse(1),
-          Option(p.get("minWriter")).map(_.asInt).getOrElse(1))
-  }
+  /** (minReader, minWriter) this manifest demands; None when absent. */
+  def protocolFromManifest(m: JsonNode): Option[(Int, Int)] =
+    Option(m.get("protocol"))
+      .filter(p => p.hasNonNull("minReader") && p.hasNonNull("minWriter"))
+      .map(p => (p.get("minReader").asInt, p.get("minWriter").asInt))
 
   /** Parse one manifest (or checkpoint-state) body, refusing loudly when it
-    * demands a newer READER than this build. Every read parses its body
+    * demands a newer READER than this build (a body without a protocol is
+    * refused where it resolves, by name). Every read parses its body
     * exactly once, here; the field readers below take the parsed node. */
   def parseManifest(body: String, where: String): JsonNode = {
     val m = mapper.readTree(body)
-    val (minReader, _) = protocolFromManifest(m)
-    if (minReader > SupportedReaderVersion)
-      throw new IllegalStateException(
-        s"$where requires manifest reader version $minReader; this engine " +
-          s"supports up to $SupportedReaderVersion — upgrade before reading")
+    protocolFromManifest(m).foreach { case (minReader, _) =>
+      if (minReader > SupportedReaderVersion)
+        throw new IllegalStateException(
+          s"$where requires manifest reader version $minReader; this engine " +
+            s"supports up to $SupportedReaderVersion — upgrade before reading")
+    }
     m
-  }
-
-  private def putProtocol(root: ObjectNode): Unit = {
-    val p = root.putObject("protocol")
-    p.put("minReader", SupportedReaderVersion)
-    p.put("minWriter", SupportedWriterVersion)
   }
 
   private val mapper = new ObjectMapper()
 
   private val lastCommitTs = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def nextCommitTs(): Long =
+  /** The next commit stamp: STRICTLY MONOTONIC within a writer process (two
+    * commits in the same millisecond still get distinct stamps), so
+    * "greatest version at-or-before T" is well-defined for any T a reader
+    * observed; cross-writer ordering is plain wall-clock, like Delta's
+    * commit timestamps. */
+  private[ops] def nextCommitTs(): Long =
     lastCommitTs.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
   /** Per-commit row-level change files (the Delta-CDF shape, sized to this
@@ -262,51 +261,46 @@ object SnapshotStats {
     * pre-CDC rewrite commits signal "full reprocess"). */
   type Cdc = (Seq[String], Seq[String])
 
-  /** Serialize the full manifest: `files` is the plain path array, `stats`
-    * carries the per-file column bounds (a reader refuses a manifest whose
-    * stats do not cover its files), `txn` (optional) records
-    * the (appId, batchId) that produced this version — the idempotent-
-    * replay marker for exactly-once streaming appends — and `cdc`
-    * (optional) the row-level change files. */
-  def manifestJson(version: Long, stats: Seq[FileStats],
-                   txn: Option[(String, Long)] = None,
-                   cdc: Option[Cdc] = None,
-                   schemaJson: Option[String] = None,
-                   dropped: Seq[String] = Nil,
-                   bloomOn: Seq[String] = Nil,
-                   constraints: Map[String, String] = Map.empty,
-                   mapping: Map[String, String] = Map.empty,
-                   usedPhys: Seq[String] = Nil,
-                   ingested: Seq[String] = Nil,
-                   tsOverride: Option[Long] = None,
-                   clusterBy: Seq[String] = Nil,
-                   identityHwm: Map[String, Long] = Map.empty,
-                   protocolOverride: Option[(Int, Int)] = None): String = {
+  /** Serialize `r` as a manifest — the one writer, the exact inverse of
+    * [[parseResolved]] and [[applyDelta]]. With no `base` it is FULL: `files`
+    * is the plain path array, `stats` the per-file column bounds (a reader
+    * refuses a manifest whose stats do not cover its files), `ingested` the
+    * whole COPY INTO ledger. With a `base` it is a DELTA against it (round
+    * 13 — the Delta-log shape): instead of the O(files) arrays it records
+    * only the changes, `add` (stats for entries not in `base` verbatim),
+    * `removePaths` (base files `r` dropped) and `ingestedAdd` (new ledger
+    * identities). The delta inverts only when `r`'s entries carried from
+    * `base` come first, in `base`'s order, and its ledger is `base`'s plus
+    * new identities, sorted — the shape every commit builds. The SMALL
+    * table state — schema, mapping, constraints, tombstones, bloom config,
+    * usedPhys — is O(columns) and rides in FULL either way, so resolution
+    * never chains metadata; `txn` (the (appId, batchId) idempotent-replay
+    * marker of exactly-once streaming appends) and `cdc` (the row-level
+    * change files) are the manifest's own.
+    *
+    * Why deltas: a full manifest per commit is 100s of MB of JSON at ~10⁶
+    * files, taxing exactly the format's best feature (cheap frequent
+    * commits: streaming micro-batches, COPY INTO). A delta costs O(its own
+    * change); an opportunistic full manifest resets the resolution chain. */
+  def manifestJson(r: Resolved, base: Option[Resolved] = None): String = {
     val root = mapper.createObjectNode()
-    root.put("version", version)
+    root.put("version", r.version)
     // Commit wall-clock (epoch millis): powers age-based retention
     // (`vacuumOlderThan`), the history audit's timestamp column, and
     // TIMESTAMP AS OF resolution. Never part of any query result —
-    // manifests stay rerun-stable artifacts. STRICTLY MONOTONIC within a
-    // writer process (two commits in the same millisecond still get
-    // distinct stamps), so "greatest version at-or-before T" is
-    // well-defined for any T a reader observed; cross-writer ordering is
-    // plain wall-clock, like Delta's commit timestamps. `tsOverride` is
-    // for RECONSTRUCTION only (a checkpoint's state body must carry the
-    // original commit's stamp, never checkpoint time).
-    root.put("ts", tsOverride.getOrElse(nextCommitTs()))
-    // `protocolOverride` is for RECONSTRUCTION only (a checkpoint's state
-    // body must carry the CHAIN's declared protocol, not this build's —
-    // vacuum may legally anchor a higher-writer-version chain it would
+    // manifests stay rerun-stable artifacts. A checkpoint's state body
+    // carries the original commit's stamp, never checkpoint time.
+    root.put("ts", r.ts)
+    // The chain's declared protocol: a checkpoint's state body keeps it
+    // (vacuum may legally anchor a higher-writer-version chain it would
     // refuse to commit to, and the anchor must not downgrade the gate).
-    protocolOverride match {
-      case Some((r, w)) =>
-        val pr = root.putObject("protocol")
-        pr.put("minReader", r); pr.put("minWriter", w)
-      case None => putProtocol(root)
-    }
-    schemaJson.foreach(root.put("schema", _))
-    if (mapping.nonEmpty) {
+    val pr = root.putObject("protocol")
+    pr.put("minReader", r.protocol._1); pr.put("minWriter", r.protocol._2)
+    // The delta marker: its presence is what distinguishes the shapes
+    // (`files` vs `base` — a manifest carries exactly one of the two).
+    base.foreach(b => root.put("base", b.version))
+    root.put("schema", r.schemaJson)
+    if (r.mapping.nonEmpty) {
       // Logical → PHYSICAL column names (Delta column-mapping shape,
       // names instead of ids at this format's scale): identity entries
       // are omitted. The declared schema speaks logical; data files and
@@ -314,73 +308,92 @@ object SnapshotStats {
       // metadata-only remap, and a dropped name can be RE-ADDED under a
       // fresh physical id without resurfacing orphaned bytes.
       val mp = root.putObject("mapping")
-      mapping.toSeq.sortBy(_._1).foreach { case (l, p) => mp.put(l, p) }
+      r.mapping.toSeq.sortBy(_._1).foreach { case (l, p) => mp.put(l, p) }
     }
-    if (usedPhys.nonEmpty) {
+    if (r.usedPhys.nonEmpty) {
       // Every physical name EVER assigned in this table's lineage
       // (monotonic): a new logical column may only take a physical name
       // not in this set, so bytes under retired names stay orphaned.
-      val up = root.putArray("usedPhys"); usedPhys.foreach(up.add)
+      val up = root.putArray("usedPhys"); r.usedPhys.foreach(up.add)
     }
-    if (constraints.nonEmpty) {
+    if (r.constraints.nonEmpty) {
       // Named CHECK constraints (see SnapshotTable.setCheckConstraint):
       // inherited by later manifests; every commit enforces them on ITS
       // new rows before the CAS.
       val cn = root.putObject("constraints")
-      constraints.toSeq.sortBy(_._1).foreach { case (n, e) => cn.put(n, e) }
+      r.constraints.toSeq.sortBy(_._1).foreach { case (n, e) => cn.put(n, e) }
     }
-    if (bloomOn.nonEmpty) {
+    if (r.bloomOn.nonEmpty) {
       // Table-level bloom config (see SnapshotTable.setBloomColumns):
       // inherited by every later manifest; each commit builds per-file
       // blooms for ITS new files over these columns.
-      val b = root.putArray("bloomOn"); bloomOn.foreach(b.add)
+      val b = root.putArray("bloomOn"); r.bloomOn.foreach(b.add)
     }
-    if (clusterBy.nonEmpty) {
+    if (r.clusterBy.nonEmpty) {
       // DECLARED clustering columns (round 13): recorded by
       // commitClustered/recluster/CTAS CLUSTER BY, inherited by every
       // later manifest. Read back by (a) DML rewrites, which re-sort
       // their rewritten files on these columns so N merge waves don't
       // decay file-skipping selectivity, and (b) SHOW CREATE TABLE /
       // DESCRIBE DETAIL round-tripping the layout declaration.
-      val cb = root.putArray("clusterBy"); clusterBy.foreach(cb.add)
+      val cb = root.putArray("clusterBy"); r.clusterBy.foreach(cb.add)
     }
-    if (identityHwm.nonEmpty) {
+    if (r.identityHwm.nonEmpty) {
       // Identity-column high-water marks (round 13): the largest value
       // ever COMMITTED per GENERATED ... AS IDENTITY column. Inherited
       // monotonically (a delete never lowers it — identity values are
       // never reused), bumped by each commit from its new files' footer
       // bounds, and the base the next insert's generation starts above.
       val ih = root.putObject("identityHwm")
-      identityHwm.toSeq.sortBy(_._1).foreach { case (c, v) => ih.put(c, v) }
+      r.identityHwm.toSeq.sortBy(_._1).foreach { case (c, v) => ih.put(c, v) }
     }
-    if (dropped.nonEmpty) {
+    if (r.dropped.nonEmpty) {
       // Tombstoned column names (see SnapshotTable.dropColumn): inherited
       // by every later manifest so a re-add stays refused after any number
       // of subsequent commits.
-      val d = root.putArray("dropped"); dropped.foreach(d.add)
+      val d = root.putArray("dropped"); r.dropped.foreach(d.add)
     }
-    if (ingested.nonEmpty) {
-      // COPY INTO's loaded-file ledger (`<path>@<bytes>` identities —
-      // see SnapshotTable.copyInto): inherited by every later manifest
-      // and restored with RESTORE's target version, so idempotent re-runs
-      // survive vacuum, compaction, clone — anything that rewrites files
-      // or drops old manifests. Rides IN the manifest because the ledger
-      // must move atomically with the rows it describes: a side-car
-      // updated after the commit could crash in between and double-load.
-      val ing = root.putArray("ingested"); ingested.foreach(ing.add)
+    // COPY INTO's loaded-file ledger (`<path>@<bytes>` identities — see
+    // SnapshotTable.copyInto): inherited by every later manifest and
+    // restored with RESTORE's target version, so idempotent re-runs
+    // survive vacuum, compaction, clone — anything that rewrites files or
+    // drops old manifests. Rides IN the manifest because the ledger must
+    // move atomically with the rows it describes: a side-car updated after
+    // the commit could crash in between and double-load.
+    val (ledgerField, ledger) = base match {
+      case None => ("ingested", r.ingested)
+      case Some(b) => ("ingestedAdd", r.ingested.filterNot(b.ingested.toSet))
     }
-    txn.foreach { case (appId, batchId) =>
+    if (ledger.nonEmpty) {
+      val ing = root.putArray(ledgerField); ledger.foreach(ing.add)
+    }
+    r.txn.foreach { case (appId, batchId) =>
       val t = root.putObject("txn")
       t.put("appId", appId); t.put("batchId", batchId)
     }
-    cdc.foreach { case (adds, removes) =>
+    r.cdc.foreach { case (adds, removes) =>
       val c = root.putObject("cdc")
       val a = c.putArray("add"); adds.foreach(a.add)
-      val r = c.putArray("remove"); removes.foreach(r.add)
+      val rm = c.putArray("remove"); removes.foreach(rm.add)
     }
-    val files = root.putArray("files")
-    stats.foreach(f => files.add(f.path))
-    putStatsArray(root, "stats", stats)
+    base match {
+      case None =>
+        val files = root.putArray("files")
+        r.stats.foreach(f => files.add(f.path))
+        putStatsArray(root, "stats", r.stats)
+      case Some(b) =>
+        // A carried entry whose stats CHANGED serializes as an add only:
+        // resolution applies removals first, so the path nets to the new
+        // stats.
+        val baseByPath = b.stats.map(e => e.path -> e).toMap
+        val paths = r.files.toSet
+        val removePaths = b.files.filterNot(paths)
+        if (removePaths.nonEmpty) {
+          val rp = root.putArray("removePaths"); removePaths.foreach(rp.add)
+        }
+        putStatsArray(root, "add",
+          r.stats.filter(e => !baseByPath.get(e.path).contains(e)))
+    }
     mapper.writeValueAsString(root)
   }
 
@@ -411,87 +424,6 @@ object SnapshotStats {
     }
   }
 
-  /** Serialize a DELTA manifest (round 13 — the Delta-log shape): instead
-    * of the complete O(files) `files`/`stats`/`ingested` arrays, the commit
-    * records only its CHANGES against version `base` (always `version - 1`):
-    * `add` (stats for files this commit introduced), `removePaths` (files
-    * it dropped), `ingestedAdd` (new COPY INTO ledger identities). The
-    * SMALL table state — schema, mapping, constraints, tombstones, bloom
-    * config, usedPhys — is O(columns) and rides in FULL in every delta, so
-    * resolution never chains metadata. Per-commit fields (`txn`, `cdc`)
-    * are the delta's own, exactly as a full manifest carries its own.
-    *
-    * Why: the pre-r13 format wrote the complete file list + stats in EVERY
-    * manifest — at ~10⁶ files that is 100s of MB of JSON per commit and
-    * per cold read, taxing exactly the format's best feature (cheap
-    * frequent commits: streaming micro-batches, COPY INTO). With deltas a
-    * commit writes O(its own change); every Nth version stays a FULL
-    * manifest (the in-line checkpoint), bounding a reader's resolution
-    * walk to < N KB-sized reads past one checkpoint parse. */
-  def deltaManifestJson(version: Long, base: Long,
-                        add: Seq[FileStats], removePaths: Seq[String],
-                        ingestedAdd: Seq[String],
-                        txn: Option[(String, Long)] = None,
-                        cdc: Option[Cdc] = None,
-                        schemaJson: Option[String] = None,
-                        dropped: Seq[String] = Nil,
-                        bloomOn: Seq[String] = Nil,
-                        constraints: Map[String, String] = Map.empty,
-                        mapping: Map[String, String] = Map.empty,
-                        usedPhys: Seq[String] = Nil,
-                        clusterBy: Seq[String] = Nil,
-                        identityHwm: Map[String, Long] = Map.empty): String = {
-    val root = mapper.createObjectNode()
-    root.put("version", version)
-    root.put("ts", nextCommitTs())
-    putProtocol(root)
-    // The delta marker: its presence is what distinguishes the shapes
-    // (`files` vs `base` — a manifest carries exactly one of the two).
-    root.put("base", base)
-    schemaJson.foreach(root.put("schema", _))
-    if (mapping.nonEmpty) {
-      val mp = root.putObject("mapping")
-      mapping.toSeq.sortBy(_._1).foreach { case (l, p) => mp.put(l, p) }
-    }
-    if (usedPhys.nonEmpty) {
-      val up = root.putArray("usedPhys"); usedPhys.foreach(up.add)
-    }
-    if (constraints.nonEmpty) {
-      val cn = root.putObject("constraints")
-      constraints.toSeq.sortBy(_._1).foreach { case (n, e) => cn.put(n, e) }
-    }
-    if (bloomOn.nonEmpty) {
-      val b = root.putArray("bloomOn"); bloomOn.foreach(b.add)
-    }
-    if (clusterBy.nonEmpty) {
-      val cb = root.putArray("clusterBy"); clusterBy.foreach(cb.add)
-    }
-    if (identityHwm.nonEmpty) {
-      val ih = root.putObject("identityHwm")
-      identityHwm.toSeq.sortBy(_._1).foreach { case (c, v) => ih.put(c, v) }
-    }
-    if (dropped.nonEmpty) {
-      val d = root.putArray("dropped"); dropped.foreach(d.add)
-    }
-    if (ingestedAdd.nonEmpty) {
-      val ing = root.putArray("ingestedAdd"); ingestedAdd.foreach(ing.add)
-    }
-    txn.foreach { case (appId, batchId) =>
-      val t = root.putObject("txn")
-      t.put("appId", appId); t.put("batchId", batchId)
-    }
-    cdc.foreach { case (adds, removes) =>
-      val c = root.putObject("cdc")
-      val a = c.putArray("add"); adds.foreach(a.add)
-      val r = c.putArray("remove"); removes.foreach(r.add)
-    }
-    if (removePaths.nonEmpty) {
-      val rp = root.putArray("removePaths"); removePaths.foreach(rp.add)
-    }
-    putStatsArray(root, "add", add)
-    mapper.writeValueAsString(root)
-  }
-
   // --- structured resolution (round 14, VERDICT r13 #1) --------------------
   //
   // The delta-log chain resolves into this STRUCT: parse the base once (or
@@ -500,9 +432,10 @@ object SnapshotStats {
   // fields.
   //
   // One on-disk generation is read: manifests that carry per-file `stats`
-  // for every listed file and a declared `schema` (both writers below
-  // always write both). An older manifest is refused by name here, the one
-  // place every manifest and checkpoint state passes through.
+  // for every listed file, a declared `schema`, a commit `ts` and a
+  // `protocol` (the writer above always writes all four). An older
+  // manifest is refused by name here, the one place every manifest and
+  // checkpoint state passes through.
 
   /** One version's fully-resolved manifest state. */
   final case class Resolved(
@@ -516,7 +449,7 @@ object SnapshotStats {
       identityHwm: Map[String, Long],
       txn: Option[(String, Long)], cdc: Option[Cdc],
       /** (minReader, minWriter) the underlying manifest declared. */
-      protocol: (Int, Int) = (1, 1)) {
+      protocol: (Int, Int)) {
     def files: Seq[String] = stats.map(_.path)
     lazy val schema: org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.DataType.fromJson(schemaJson)
@@ -557,7 +490,7 @@ object SnapshotStats {
       refuseGeneration(m, where, "declared `schema`")
     Resolved(
       version = m.get("version").asLong,
-      ts = tsFromManifest(m),
+      ts = tsFromManifest(m, where),
       stats = stats,
       schemaJson = schema.asText,
       dropped = texts(m, "dropped"),
@@ -573,18 +506,19 @@ object SnapshotStats {
       txn = txnFromManifest(m),
       cdc = Option(m.get("cdc")).filter(_.isObject)
         .map(c => (texts(c, "add"), texts(c, "remove"))),
-      protocol = protocolFromManifest(m))
+      protocol = protocolFromManifest(m).getOrElse(
+        refuseGeneration(m, where, "declared `protocol`")))
   }
 
   /** Loud refusal for a manifest of a format generation this engine no
-    * longer reads (pre-stats or pre-schema). */
+    * longer reads (pre-stats, pre-schema, pre-timestamp or pre-protocol). */
   private def refuseGeneration(m: JsonNode, where: String,
                                missing: String): Nothing =
     throw new IllegalStateException(
       s"manifest version ${Option(m.get("version")).map(_.asLong).getOrElse(-1L)} " +
         s"at $where has no $missing; this engine reads only manifests that " +
-        "carry per-file `stats` and a `schema` (rewrite the table with a " +
-        "current writer)")
+        "carry per-file `stats` and a `schema`, stamped with a commit `ts` " +
+        "and a `protocol` (rewrite the table with a current writer)")
 
   /** Serialize one file entry's column stats / bloom / dv to the SAME JSON
     * shapes the manifest uses — the parquet checkpoint's per-row payload
@@ -678,10 +612,12 @@ object SnapshotStats {
   private def textMap(m: JsonNode, field: String): Map[String, String] =
     textMap(m.get(field))
 
-  /** Commit wall-clock (epoch millis), -1 for pre-timestamp manifests. */
-  def tsFromManifest(m: JsonNode): Long = {
+  /** Commit wall-clock (epoch millis); a pre-timestamp manifest is refused
+    * by name. */
+  def tsFromManifest(m: JsonNode, where: String): Long = {
     val t = m.get("ts")
-    if (t == null || !t.isNumber) -1L else t.asLong
+    if (t == null || !t.isNumber) refuseGeneration(m, where, "commit `ts`")
+    t.asLong
   }
 
   private def readVal(n: JsonNode, kind: String): Any = kind match {

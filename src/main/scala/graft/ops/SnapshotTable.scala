@@ -1178,13 +1178,15 @@ object SnapshotTable {
   private def newToken(): String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(8)
 
-  /** Build the body a commit on top of `base` writes: a DELTA manifest
-    * when the delta is actually smaller, else a FULL manifest (the in-line
-    * checkpoint). Full is forced when:
+  /** Build the body a commit on top of `base` writes: the next version's
+    * resolved state under this build's protocol, serialized as a DELTA
+    * against `base` when that is actually smaller, else as a FULL manifest
+    * (the in-line checkpoint). Full is forced when:
     *   - there is no base (version 0);
     *   - the COPY ledger SHRANK (restore rewinding it — deltas only add);
-    *   - add+remove counts reach the base's file count (restore/recluster
-    *     replacing everything: the "delta" would be bigger than full).
+    *   - no entry is carried from the base verbatim (restore/recluster/
+    *     compact-all replacing everything: the delta would serialize stats
+    *     for every listed file anyway, and full resets the chain for free).
     * Every full manifest resets the resolution chain, so opportunistic
     * fulls are always safe. */
   private def buildCommitBody(base: Option[SnapshotStats.Resolved],
@@ -1192,42 +1194,19 @@ object SnapshotTable {
                               state: TableState,
                               txn: Option[(String, Long)],
                               cdcPaths: Option[SnapshotStats.Cdc]): String = {
-    val target = targetOf(base)
-    def full = SnapshotStats.manifestJson(target, entries, txn, cdcPaths,
-      Some(state.schema.json), state.dropped, state.bloomOn, state.constraints,
-      state.mapping, state.usedPhys, state.ingested,
-      clusterBy = state.clusterBy, identityHwm = state.identityHwm)
+    val next = SnapshotStats.Resolved(targetOf(base), SnapshotStats.nextCommitTs(),
+      entries, state.schema.json, state.dropped, state.bloomOn, state.constraints,
+      state.mapping, state.usedPhys, state.ingested, state.clusterBy,
+      state.identityHwm, txn, cdcPaths,
+      (SnapshotStats.SupportedReaderVersion, SnapshotStats.SupportedWriterVersion))
     // Round 14: checkpoint-cadence versions no longer force a FULL JSON
     // manifest — commit bytes stay flat at EVERY version; the winner
     // writes the columnar checkpoint post-CAS instead (maybeCheckpoint).
-    base match {
-      case None => full
-      case Some(prev) =>
-        val prevStats = prev.stats
-        val prevIngested = prev.ingested
-        if (!prevIngested.forall(state.ingested.contains)) full
-        else {
-          val prevByPath = prevStats.map(e => e.path -> e).toMap
-          val entryPaths = entries.map(_.path).toSet
-          // A carried file whose entry CHANGED (never happens today —
-          // carried entries are the parsed predecessor entries verbatim)
-          // would serialize as remove+add: resolution applies removals
-          // first, so the path nets to the new stats.
-          val add = entries.filter(e => !prevByPath.get(e.path).contains(e))
-          val removePaths = prevStats.map(_.path).filterNot(entryPaths)
-          // No carried entry ⇒ the delta would serialize stats for EVERY
-          // listed file anyway (restore/recluster/compact-all): full costs
-          // the same and resets the resolution chain for free.
-          if (add.length >= entries.length && entries.nonEmpty) full
-          else SnapshotStats.deltaManifestJson(target, prev.version, add,
-            removePaths, ingestedAdd = state.ingested.filterNot(prevIngested.toSet),
-            txn = txn, cdc = cdcPaths, schemaJson = Some(state.schema.json),
-            dropped = state.dropped, bloomOn = state.bloomOn,
-            constraints = state.constraints, mapping = state.mapping,
-            usedPhys = state.usedPhys, clusterBy = state.clusterBy,
-            identityHwm = state.identityHwm)
-        }
-    }
+    SnapshotStats.manifestJson(next, base.filter { prev =>
+      val prevByPath = prev.stats.map(e => e.path -> e).toMap
+      prev.ingested.forall(state.ingested.contains) &&
+        (entries.isEmpty || entries.exists(e => prevByPath.get(e.path).contains(e)))
+    })
   }
 
   /** Land a commit's row-level change sets as side-car parquet under
@@ -1363,33 +1342,42 @@ object SnapshotTable {
   private val BlindAttempts = 5
   private val ReadAttempts = 3
 
+  /** The resolved head a commit builds on (None on an empty root) — the
+    * base [[transact]] hands its body and the winner [[commitAt]]'s rebase
+    * try reads. Writer-protocol gate (round 14): a chain that demands a
+    * newer writer is refused — an old build committing onto it could
+    * corrupt state newer readers depend on. */
+  private def writableHead(spark: SparkSession, fs: FileSystem,
+                           root: String): Option[SnapshotStats.Resolved] = {
+    val head = currentVersion(spark, root).map(resolvedAt(fs, root, _))
+    head.foreach { h =>
+      if (h.protocol._2 > SnapshotStats.SupportedWriterVersion)
+        throw new IllegalStateException(
+          s"$root@${h.version} requires manifest writer version " +
+            s"${h.protocol._2}; this engine supports up to " +
+            s"${SnapshotStats.SupportedWriterVersion} — upgrade before writing")
+    }
+    head
+  }
+
   /** The one commit seam (the shape of Delta's OptimisticTransaction).
-    * Each attempt reads the current version once, resolves it as the base
-    * (None on an empty root), refuses a chain that demands a newer writer,
-    * and runs `body` against that base. `body` derives its commit from the
-    * base and lands it through [[commitAt]] or [[commitMeta]], which target
-    * base + 1: a commit that landed in between is a CAS conflict, never an
-    * erased update. A [[ConcurrentWriteException]] (a lost CAS that no
-    * rebase resolved) re-runs `body` against the winner's state, up to
-    * `attempts` times; past the bound the conflict surfaces naming `op`,
-    * `root`, the last version tried and the attempt count. */
+    * Each attempt reads the [[writableHead]] once as the base and runs
+    * `body` against it. `body` derives its commit from the base and lands
+    * it through [[commitAt]] or [[commitMeta]], which target base + 1: a
+    * commit that landed in between is a CAS conflict, never an erased
+    * update. A lost CAS gets one rebase try ([[rebaseOnto]], inside
+    * [[commitAt]]); a [[ConcurrentWriteException]] (a loss the try did not
+    * land) re-runs `body` against the winner's state, up to `attempts`
+    * times — at most 2 × `attempts` CAS tries per statement. Past the
+    * bound the conflict surfaces naming `op`, `root`, the last version
+    * tried and the attempt count. */
   private[graft] def transact[T](spark: SparkSession, root: String, op: String,
                                  attempts: Int)(
       body: Option[SnapshotStats.Resolved] => T): T = {
     val fs = fsOf(spark, root)
     @annotation.tailrec
     def attempt(n: Int): T = {
-      val base = currentVersion(spark, root).map(resolvedAt(fs, root, _))
-      // Writer-protocol gate (round 14): refuse to extend a chain that
-      // demands a newer writer — an old build committing onto it could
-      // corrupt state newer readers depend on.
-      base.foreach { b =>
-        if (b.protocol._2 > SnapshotStats.SupportedWriterVersion)
-          throw new IllegalStateException(
-            s"$root@${b.version} requires manifest writer version " +
-              s"${b.protocol._2}; this engine supports up to " +
-              s"${SnapshotStats.SupportedWriterVersion} — upgrade before writing")
-      }
+      val base = writableHead(spark, fs, root)
       val outcome =
         try Right(body(base))
         catch { case e: ConcurrentWriteException => Left(e) }
@@ -1410,6 +1398,63 @@ object SnapshotTable {
     transact(spark, root, op, attempts)(base => body(base.getOrElse(
       throw new IllegalStateException(
         s"$op on a table with no committed version at $root"))))
+
+  /** The one lost-CAS decision (the Delta conflict checker's rule): does a
+    * commit staged on `base` — `carry` kept from it, `added` written by it,
+    * under `staged` — commute with `winner`? It does when
+    *   (a) the winner is newer than `base`;
+    *   (b) every file it REMOVED sits in the winner's manifest with its
+    *       base entry VERBATIM (a winner's deletion-vector addition on the
+    *       same file is an entry-level conflict, not just a file-level one);
+    *   (c) neither side maps columns (file stats speak physical names, the
+    *       proof predicate logical — they must coincide), and the winner
+    *       changed none of the declared state the commit was built under:
+    *       tombstones, bloom config, constraints, clustering (a winner that
+    *       re-declared it invalidates the layout the rewrite sorted under),
+    *       and the schema — same names and types, ours at least as
+    *       nullable (DML commits widen nullability to what their
+    *       when()-projections produce; the reverse would narrow);
+    *   (d) no file the winner ADDED can hold a row matching the `proof`
+    *       predicate, decided from its manifest bounds/blooms (the read
+    *       path's MAY-analysis). `proof` runs only once (a)–(c) hold.
+    * Then the commit applied at the winner's version is ROW-FOR-ROW the
+    * one already written: Some(entries, state) re-lists its files on top
+    * of the winner's, metadata-only. The identity HWM max-merges with the
+    * winner's (its appends may have pushed past ours — re-declaring ours
+    * would hand out duplicate identity values) and the COPY ledger adds
+    * ours to the winner's. None sends the attempt to [[transact]]'s redo:
+    * a rebase is an optimization, never a semantics change. */
+  private def rebaseOnto(base: Option[SnapshotStats.Resolved],
+                         winner: SnapshotStats.Resolved,
+                         carry: Seq[SnapshotStats.FileStats],
+                         added: Seq[SnapshotStats.FileStats], staged: TableState,
+                         proof: () => Option[org.apache.spark.sql.catalyst.expressions.Expression],
+                         conf: org.apache.hadoop.conf.Configuration)
+      : Option[(Seq[SnapshotStats.FileStats], TableState)] = {
+    val baseByNorm = base.fold(Seq.empty[SnapshotStats.FileStats])(_.stats)
+      .map(e => norm(e.path) -> e).toMap
+    val removed = baseByNorm.keySet -- carry.map(e => norm(e.path))
+    val winnerByNorm = winner.stats.map(e => norm(e.path) -> e).toMap
+    val commutes = winner.version >= targetOf(base) &&
+      removed.forall(p => winnerByNorm.get(p).exists(baseByNorm.get(p).contains)) &&
+      staged.mapping.isEmpty && winner.mapping.isEmpty &&
+      winner.dropped.toSet == staged.dropped.toSet &&
+      winner.bloomOn == staged.bloomOn && winner.constraints == staged.constraints &&
+      winner.clusterBy == staged.clusterBy &&
+      schemaWidens(winner.schema, staged.schema)
+    if (!commutes) None
+    else proof().filter(p => winner.stats.forall(e =>
+        baseByNorm.contains(norm(e.path)) || !SnapshotPruning.mightMatch(p, e, conf)))
+      .map { _ =>
+        val own = staged.ingested.filterNot(base.fold(Set.empty[String])(_.ingested.toSet))
+        val hwm = (staged.identityHwm.keySet ++ winner.identityHwm.keySet).map(k =>
+          k -> math.max(staged.identityHwm.getOrElse(k, Long.MinValue),
+            winner.identityHwm.getOrElse(k, Long.MinValue))).toMap
+        (winner.stats.filterNot(e => removed(norm(e.path))) ++ added,
+          staged.copy(ingested = (winner.ingested ++ own).distinct.sorted,
+            identityHwm = hwm))
+      }
+  }
 
   private def bloomSupported(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -1864,115 +1909,34 @@ object SnapshotTable {
       // this commit's newly-loaded identities (copyInto's `ingestedAdd`).
       ingested = (prev.ingested ++ ingestedAdd).distinct.sorted)
     if (casManifest(spark, fs, root, token, base, carry ++ newStats, state,
-        txn, cdcPaths)) return v
-    // ---- CAS lost: try a REBASE before discarding the rewrite (round 12).
-    //
-    // A row-level DML's expensive work is its data rewrite — at 100 TB a
-    // predicate DELETE can rewrite terabytes, and redoing it because a
-    // concurrent APPEND won the version race is the classic optimistic-
-    // concurrency tax. The Delta conflict checker's insight applies
-    // directly here: if (a) every file this commit REMOVED still sits
-    // untouched in the winner's manifest, (b) no file the winner ADDED
-    // can possibly hold a row matching this commit's predicate (decided
-    // from the manifest's per-file bounds/blooms — the same MAY-analysis
-    // the read path prunes with), and (c) the winner changed none of the
-    // declared state this commit was built under (schema, constraints,
-    // tombstones, bloom config, column mapping), then this commit applied
-    // at the winner's version is ROW-FOR-ROW the commit it already wrote:
-    // re-CAS the same data files and CDC side-cars onto the next version,
-    // metadata-only. Anything unprovable falls back to the seam's redo
-    // ([[transact]]) — rebase is an optimization, never a semantics
-    // change.
-    // Gate: identity column mapping only (file stats speak physical names;
-    // the probe predicate speaks logical — they must coincide). A caller-
-    // supplied `meta` is fine as long as its mapping is identity: the
-    // winner-side divergence it could mask (rename, evolution, drop) is
-    // separately refused by the sameMeta check below.
-    rebase.filter(_ => mapping.isEmpty).foreach { predicate =>
-      val baseByNorm = base.fold(Seq.empty[SnapshotStats.FileStats])(_.stats)
-        .map(e => norm(e.path) -> e).toMap
-      val removedPaths = baseByNorm.keySet -- carry.map(e => norm(e.path))
-      var tries = 0
-      var giveUp = false
-      while (tries < 5 && !giveUp) {
-        tries += 1
-        val committed: Option[Long] = try {
-          val w = currentVersion(spark, root).getOrElse(-1L)
-          if (w < v) { giveUp = true; None }
-          else {
-            val winner = resolvedAt(fs, root, w)
-            // Schema gate: same names and types, and OUR declaration at
-            // least as nullable as the winner's everywhere (DML commits
-            // widen nullability to what their when()-projections produce;
-            // declaring the wider form over the winner's files is safe —
-            // the reverse would narrow and is refused). A winner demanding
-            // a newer writer is never extended (the transact gate's rule).
-            val sameMeta =
-              winner.protocol._2 <= SnapshotStats.SupportedWriterVersion &&
-              schemaWidens(winner.schema, logicalSchema) &&
-              winner.dropped.toSet == state.dropped.toSet &&
-              winner.bloomOn == prev.bloomOn &&
-              winner.constraints == prev.constraints &&
-              winner.mapping.isEmpty &&
-              // A winner that re-declared the clustering (recluster/CTAS)
-              // invalidates the layout this rewrite sorted under — give up
-              // rather than re-declare a stale clusterBy (ADVICE r13).
-              winner.clusterBy == clusterByEff
-            val winnerEntries = winner.stats
-            val winnerFiles = winner.files
-            val winnerByNorm = winnerEntries.map(e => norm(e.path) -> e).toMap
-            // Touched files must survive with their BASE entries VERBATIM
-            // (round 13 tightening): mere path presence would let a
-            // winner's deletion-vector addition on the same file be
-            // silently dropped by the re-CAS — an entry-level conflict,
-            // not just a file-level one.
-            if (!sameMeta ||
-                winnerEntries.map(_.path).sorted != winnerFiles.sorted ||
-                !removedPaths.forall(p =>
-                  winnerByNorm.get(p).exists(baseByNorm.get(p).contains))) {
-              giveUp = true; None
-            } else {
-              val basePaths = baseByNorm.keySet
-              val newOnes = winnerEntries.filterNot(e => basePaths(norm(e.path)))
-              val pred = predicate()
-              val safe = pred.isDefined && newOnes.forall(e =>
-                !SnapshotPruning.mightMatch(pred.get, e,
-                  spark.sparkContext.hadoopConfiguration))
-              if (!safe) { giveUp = true; None }
-              else {
-                val rebasedCarry =
-                  winnerEntries.filterNot(e => removedPaths(norm(e.path)))
-                val ingestedSet =
-                  (winner.ingested ++ ingestedAdd).distinct.sorted
-                // The HWM this commit computed hangs off version v-1; if
-                // the winner was an identity-generating append, its HWM is
-                // HIGHER — re-declaring ours would hand out duplicate
-                // identity values on the next insert. Max-merge with the
-                // winner's marks (ADVICE r13); ours still win where this
-                // commit's own new files pushed past the winner.
-                val rebasedHwm = {
-                  val w2 = winner.identityHwm
-                  (identityHwm.keySet ++ w2.keySet).map(k => k -> math.max(
-                    identityHwm.getOrElse(k, Long.MinValue),
-                    w2.getOrElse(k, Long.MinValue))).toMap
-                }
-                if (casManifest(spark, fs, root, token, Some(winner),
-                    rebasedCarry ++ newStats,
-                    state.copy(ingested = ingestedSet, identityHwm = rebasedHwm),
-                    txn, cdcPaths))
-                  Some(w + 1)
-                else None // lost again: re-read
+        txn, cdcPaths)) v
+    else {
+      // CAS lost: ONE rebase try before discarding the rewrite (round 12).
+      // A row-level DML's expensive work is its data rewrite — at 100 TB a
+      // predicate DELETE can rewrite terabytes, and redoing it because a
+      // concurrent APPEND won the version race is the classic optimistic-
+      // concurrency tax. When the staged commit commutes with the winner
+      // ([[rebaseOnto]]) the same data files and CDC side-cars re-CAS onto
+      // the next version; a second loss, or anything unprovable, is the
+      // seam's redo. An error in the try surfaces after this attempt's own
+      // dirs are removed.
+      val own = Seq(snapDir) ++ cdcPaths.map(_ => cdcDir) ++ sidecars
+      val rebased =
+        try rebase.flatMap { proof =>
+          writableHead(spark, fs, root).flatMap { winner =>
+            rebaseOnto(base, winner, carry, newStats, state, proof, conf)
+              .filter { case (entries, st) =>
+                casManifest(spark, fs, root, token, Some(winner), entries, st,
+                  txn, cdcPaths)
               }
-            }
+              .map(_ => winner.version + 1)
           }
-        } catch { case scala.util.control.NonFatal(_) => giveUp = true; None }
-        committed.foreach { c =>
-          rebases.incrementAndGet()
-          return c
-        }
+        } catch { case e: Throwable => own.foreach(fs.delete(_, true)); throw e }
+      rebased match {
+        case Some(w) => rebases.incrementAndGet(); w
+        case None => abandon(fs, root, v, own)
       }
     }
-    abandon(fs, root, v, Seq(snapDir) ++ cdcPaths.map(_ => cdcDir) ++ sidecars)
   }
 
   /** Bootstrap an EMPTY table: version 0 is a files-less manifest that
@@ -3536,7 +3500,7 @@ object SnapshotTable {
         (v, kind, files.size.toLong, stats.map(e => e.rows - e.dvRows).sum,
           stats.map(_.bytes).sum,
           txn.map(_._1), txn.map(_._2), hasCdc, cols, cons, bloomOn,
-          if (ts < 0) None else Some(new java.sql.Timestamp(ts)))
+          new java.sql.Timestamp(ts))
     }
     rows.toDF("version", "kind", "num_files", "total_rows", "total_bytes",
       "txn_app_id", "txn_batch_id", "has_cdc", "columns",
@@ -3547,9 +3511,7 @@ object SnapshotTable {
   /** TIMESTAMP AS OF resolution (Delta's shape): the greatest RETAINED
     * version whose commit timestamp is at or before `millis`. Purely
     * metadata — O(retained versions) KB-sized manifest reads, no data
-    * I/O. Pre-timestamp manifests (written before the `ts` field existed)
-    * count as infinitely old, consistent with [[vacuumOlderThan]]. A
-    * timestamp before every retained commit fails loudly — silently
+    * I/O. A timestamp before every retained commit fails loudly — silently
     * serving the oldest version would misrepresent history the same way
     * reading a vacuumed version would. */
   def versionAtTimestamp(spark: SparkSession, root: String, millis: Long): Long = {
@@ -3561,9 +3523,8 @@ object SnapshotTable {
     // must not depend on that.
     val atOrBefore = versions.filter { v =>
       // ts rides verbatim in delta manifests — raw read, no resolution.
-      val ts = SnapshotStats.tsFromManifest(
-        readManifestBody(fs, manifestPath(root, v)))
-      ts <= millis // pre-timestamp (-1) counts as ancient
+      val mp = manifestPath(root, v)
+      SnapshotStats.tsFromManifest(readManifestBody(fs, mp), mp.toString) <= millis
     }
     atOrBefore.lastOption.getOrElse(throw new IllegalArgumentException(
       s"no version of $root committed at or before ${new java.sql.Timestamp(millis)}; " +
@@ -3574,9 +3535,7 @@ object SnapshotTable {
     * snapshots and manifests whose commit timestamp is older than
     * `maxAgeMs`, always keeping at least the `keepLast` newest versions
     * whatever their age (the current version can never be reclaimed).
-    * Pre-timestamp manifests count as infinitely old — they were written
-    * before this knob existed, so an age policy legitimately retires
-    * them. Deletion shares [[vacuum]]'s reference-counted discipline:
+    * Deletion shares [[vacuum]]'s reference-counted discipline:
     * data dirs die only when no KEPT manifest references them, so
     * time travel keeps working for every retained version. */
   def vacuumOlderThan(spark: SparkSession, root: String, maxAgeMs: Long,
@@ -3586,9 +3545,8 @@ object SnapshotTable {
     val versions = listedVersions(fs, root)
     val cutoff = System.currentTimeMillis() - maxAgeMs
     val expired = versions.dropRight(keepLast).takeWhile { v =>
-      val ts = SnapshotStats.tsFromManifest( // raw: ts is in the delta
-        readManifestBody(fs, manifestPath(root, v)))
-      ts < cutoff // pre-timestamp (-1) is always expired
+      val mp = manifestPath(root, v) // raw: ts is in the delta
+      SnapshotStats.tsFromManifest(readManifestBody(fs, mp), mp.toString) < cutoff
     }
     // Version-count vacuum over the SURVIVOR count reuses the
     // ref-counted deletion path (a prefix of versions expired ⇒ keeping

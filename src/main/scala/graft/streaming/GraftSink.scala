@@ -21,12 +21,11 @@ import org.apache.spark.sql.streaming.OutputMode
   * [[SnapshotTable.commitOnce]] (complete mode — a standing aggregate
   * re-materialized per batch), whose manifest-stamped (appId, batchId)
   * makes a replayed batch — crash between sink write and checkpoint
-  * advance, the classic at-least-once window — a detected no-op. This is
-  * the same idempotence contract the foreachBatch helpers
-  * ([[Streams.appendOnceSink]]) use; the provider form makes it a plain
-  * `format("graft")` string so a pipeline spec needs no Scala closure, and
-  * the written table serves every engine surface (time travel, CDF,
-  * DESCRIBE HISTORY, SQL DML) the moment the first batch lands.
+  * advance, the classic at-least-once window — a detected no-op. The
+  * provider form makes it a plain `format("graft")` string so a pipeline
+  * spec needs no Scala closure, and the written table serves every engine
+  * surface (time travel, CDF, DESCRIBE HISTORY, SQL DML) the moment the
+  * first batch lands.
   *
   * The micro-batch handed to a V1 [[Sink]] still carries the streaming
   * flag and an incremental plan; re-planning it through `DataFrame` writes

@@ -183,26 +183,6 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
 
-  /** Exactly-once APPEND sink: each micro-batch lands as one
-    * [[graft.ops.SnapshotTable.appendOnce]] stamped (appId, batchId).
-    * `upsertSink` is idempotent because MERGE folds replays by key; this is
-    * the append-shaped complement — raw event capture has no merge key, so
-    * idempotence comes from the manifest's txn stamp instead: a batch
-    * replayed after a sink-write/checkpoint-advance crash (the standard
-    * at-least-once window foreachBatch leaves open) is detected and skipped,
-    * never double-appended. Atomicity is the manifest CAS; readers never
-    * see a half-landed batch. */
-  def appendOnceSink(events: DataFrame, tableRoot: String, appId: String,
-                     checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SnapshotTable.appendOnce(
-          batch.sparkSession, tableRoot, batch, appId, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
   /** Streamed near-dup-aware ingest (VERDICT r6 #2): the reference's
     * scheduled incremental sync as a Structured Streaming job. Each
     * micro-batch runs the SAME probe as the batch cycle

@@ -126,6 +126,39 @@ class ConflictRebaseSpec extends SparkSpec {
     assert(SnapshotTable.rebases.get() == rebasesBefore)
   }
 
+  test("one rebase try per attempt: a winner landing during the proof surfaces the conflict") {
+    val root = s"${tmpDir()}/t"
+    SnapshotTable.commitClustered(spark, root,
+      (0L until 100L).map(k => (k, s"r$k")).toDF("k", "s"), Seq("k"), numFiles = 4)
+    val (keptE, rewritten, schema, resolved) = stageDelete(root)
+    SnapshotTable.append(spark, root,
+      (1000L until 1010L).map(k => (k, "new")).toDF("k", "s"))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def snapDirs(): Set[String] = fs.globStatus(
+      new org.apache.hadoop.fs.Path(root, "snap-00000001-*")).map(_.getPath.getName).toSet
+    val winnersDirs = snapDirs()
+    val rebasesBefore = SnapshotTable.rebases.get()
+    val lossesBefore = SnapshotTable.casLosses.get()
+
+    // The proof is built after the first winner was read: a second,
+    // foreign-keyed winner lands in between, so the rebased CAS loses too.
+    var proofRuns = 0
+    val proof = () => {
+      proofRuns += 1
+      SnapshotTable.append(spark, root, Seq((2000L + proofRuns, "late")).toDF("k", "s"))
+      resolved
+    }
+    intercept[SnapshotTable.ConcurrentWriteException] {
+      SnapshotTable.commitAt(spark, root, Some(resolvedAt(root, 0L)), rewritten,
+        carry = keptE, tableSchema = Some(schema), rebase = Some(proof))
+    }
+    assert(proofRuns == 1, s"the proof must run once per attempt, ran $proofRuns")
+    assert(SnapshotTable.casLosses.get() == lossesBefore + 2)
+    assert(SnapshotTable.rebases.get() == rebasesBefore)
+    assert(snapDirs() == winnersDirs, "the attempt's own snap-00000001 dir must be removed")
+  }
+
   test("racing MERGE rebases when the winner's keys are provably foreign") {
     var attempt = 0
     var collided = false

@@ -142,8 +142,13 @@ class DataSkippingSpec extends SparkSpec {
 
   test("pre-stats and schema-less manifests are refused by name") {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // Two older format generations, each planted as a table's only
-    // manifest: files without stats, and a full manifest without schema.
+    // Four older format generations, each planted as a table's only
+    // manifest: files without stats, and a full manifest without schema,
+    // without a commit timestamp or without a protocol.
+    def without(field: String): com.fasterxml.jackson.databind.JsonNode => String = { node =>
+      node.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove(field)
+      node.toString
+    }
     val generations = Seq[(String, com.fasterxml.jackson.databind.JsonNode => String)](
       "`stats` for every listed file" -> { node =>
         val legacy = mapper.createObjectNode()
@@ -151,11 +156,9 @@ class DataSkippingSpec extends SparkSpec {
         legacy.set[com.fasterxml.jackson.databind.JsonNode]("files", node.get("files"))
         legacy.toString
       },
-      "declared `schema`" -> { node =>
-        node.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          .remove("schema")
-        node.toString
-      })
+      "declared `schema`" -> without("schema"),
+      "commit `ts`" -> without("ts"),
+      "declared `protocol`" -> without("protocol"))
     generations.foreach { case (missing, doctor) =>
       val root = tmpDir() + "/tbl"
       SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("k", "v"))

@@ -225,11 +225,7 @@ class ManifestLogSpec extends SparkSpec {
       // 0..2 exactly as an old vacuum left things.
       val fs = fsOf(root)
       val r3 = SnapshotTable.resolvedAt(fs, root, 3L)
-      val full = SnapshotStats.manifestJson(r3.version, r3.stats, r3.txn,
-        r3.cdc, Some(r3.schemaJson), r3.dropped, r3.bloomOn, r3.constraints,
-        r3.mapping, r3.usedPhys, r3.ingested, tsOverride = Some(r3.ts),
-        clusterBy = r3.clusterBy, identityHwm = r3.identityHwm,
-        protocolOverride = Some(r3.protocol))
+      val full = SnapshotStats.manifestJson(r3)
       val cp = new org.apache.hadoop.fs.Path(
         root, "_manifests/checkpoint-00000003.json")
       val out = fs.create(cp, true)
@@ -402,6 +398,54 @@ class ManifestLogSpec extends SparkSpec {
     }
   }
 
+  test("the one manifest writer round-trips a Resolved, full and as a delta") {
+    import org.apache.spark.sql.types._
+    def entry(i: Int, dv: Seq[String] = Nil) = SnapshotStats.FileStats(
+      s"/t/snap-00000001-ab/part-$i.parquet", 1000L + i, 10L + i,
+      Map("k" -> SnapshotStats.ColStats("long", Some(i.toLong), Some(i + 9L), 0L),
+        "col-7" -> SnapshotStats.ColStats("string", Some("a"), Some("z"), 2L),
+        "d" -> SnapshotStats.ColStats("double", Some(0.5), Some(1.5), 0L),
+        "p" -> SnapshotStats.ColStats("dec:2", Some(100L), Some(250L), 1L),
+        "n" -> SnapshotStats.ColStats("long", None, None, -1L)),
+      bloom = Map("k" -> s"/t/snap-00000001-ab/_bloom-part-$i.parquet.k"),
+      dv = dv, dvRows = if (dv.isEmpty) 0L else 3L)
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("s", StringType), StructField("d", DoubleType),
+      StructField("p", DecimalType(10, 2)), StructField("n", LongType)))
+    val base = SnapshotStats.Resolved(version = 4L, ts = 1700000000000L,
+      stats = Seq(entry(0), entry(1), entry(2)), schemaJson = schema.json,
+      dropped = Seq("old"), bloomOn = Seq("k"),
+      constraints = Map("pos" -> "k >= 0"), mapping = Map("s" -> "col-7"),
+      usedPhys = Seq("k", "col-7", "d", "p", "n", "old"),
+      ingested = Seq("src/a.csv@10"), clusterBy = Seq("k"),
+      identityHwm = Map("k" -> 99L), txn = Some(("app", 3L)),
+      cdc = Some((Seq("/t/cdc-4/add.parquet"), Seq("/t/cdc-4/rm.parquet"))),
+      protocol = (1, 1))
+    // The next version removes one file, adds a DV to a carried one, adds
+    // a file and a ledger identity, and carries its own txn and cdc.
+    val next = base.copy(version = 5L, ts = base.ts + 1,
+      stats = Seq(entry(0), entry(2, dv = Seq("/t/dv-00000005-cd")), entry(3)),
+      ingested = Seq("src/a.csv@10", "src/b.csv@20"),
+      identityHwm = Map("k" -> 120L), txn = Some(("app", 4L)),
+      cdc = Some((Seq("/t/cdc-5/add.parquet"), Seq("/t/cdc-5/rm.parquet"))))
+    assert(next.productIterator.forall {
+      case xs: Iterable[_] => xs.nonEmpty
+      case o: Option[_] => o.nonEmpty
+      case _ => true
+    }, "every state field must be non-empty")
+    def fields(r: SnapshotStats.Resolved) =
+      r.productElementNames.zip(r.productIterator).toList
+    Seq(base, next).foreach { r =>
+      val full = SnapshotStats.parseManifest(SnapshotStats.manifestJson(r), "full")
+      assert(SnapshotStats.baseFromManifest(full).isEmpty)
+      assert(fields(SnapshotStats.parseResolved(full, "full")) == fields(r))
+    }
+    val delta = SnapshotStats.parseManifest(
+      SnapshotStats.manifestJson(next, Some(base)), "delta")
+    assert(SnapshotStats.baseFromManifest(delta) == Some(4L))
+    assert(fields(SnapshotStats.applyDelta(base, delta, "delta")) == fields(next))
+  }
+
   test("stateOnlyAt matches resolvedAt's state without the file list (r14)") {
     withInterval(4) {
       val root = tmpDir() + "/tbl"
@@ -433,7 +477,7 @@ class ManifestLogSpec extends SparkSpec {
     SnapshotTable.append(spark, root, Seq((1L, "a")).toDF("k", "v"))
     SnapshotTable.append(spark, root, Seq((2L, "b")).toDF("k", "v"))
     // New manifests declare the protocol they were written under.
-    assert(SnapshotStats.protocolFromManifest(parse(rawBody(root, 1L))) == (1, 1))
+    assert(SnapshotStats.protocolFromManifest(parse(rawBody(root, 1L))) == Some((1, 1)))
     // Doctor the head to demand a future READER: every read path must
     // refuse with the upgrade message, never mis-parse.
     val p = java.nio.file.Paths.get(root, "_manifests", "manifest-00000001.json")
@@ -457,8 +501,5 @@ class ManifestLogSpec extends SparkSpec {
       SnapshotTable.append(spark, root, Seq((3L, "c")).toDF("k", "v"))
     }
     assert(e2.getMessage.contains("version 99"), e2.getMessage)
-    // A manifest WITHOUT the field (pre-r14) still reads as protocol 1.
-    assert(SnapshotStats.protocolFromManifest(
-      parse("""{"version":0,"files":[]}""")) == (1, 1))
   }
 }

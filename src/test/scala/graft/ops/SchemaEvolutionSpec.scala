@@ -229,22 +229,23 @@ class SchemaEvolutionSpec extends SparkSpec {
     Seq((3L, "c", 3.0)).toDF("k", "grp", "score")
       .coalesce(1).write.parquet(src2)
 
+    def capture(schema: StructType, src: String, appId: String): Unit =
+      spark.readStream.schema(schema).parquet(src).writeStream
+        .format("graft").option("root", root).option("txnAppId", appId)
+        .option("checkpointLocation", tmpDir() + "/ckpt").outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+
     // Run 1: the original producer ships (k, grp).
     val schema1 = StructType(Seq(
       StructField("k", LongType), StructField("grp", StringType)))
-    graft.streaming.Streams.appendOnceSink(
-        spark.readStream.schema(schema1).parquet(src1),
-        root, "evo-stream-v1", tmpDir() + "/ckpt1")
-      .start().awaitTermination()
+    capture(schema1, src1, "evo-stream-v1")
 
     // Run 2: the upgraded producer ships a grown schema from a fresh
     // checkpoint — the sink's appendOnce evolves the table in place,
     // no migration job between deploys.
     val schema2 = schema1.add(StructField("score", DoubleType))
-    graft.streaming.Streams.appendOnceSink(
-        spark.readStream.schema(schema2).parquet(src2),
-        root, "evo-stream-v2", tmpDir() + "/ckpt2")
-      .start().awaitTermination()
+    capture(schema2, src2, "evo-stream-v2")
 
     val rows = SnapshotTable.read(spark, root).collect()
       .map(r => (r.getLong(0), r.getString(1),
@@ -253,10 +254,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
     // A downgraded replay (old producer re-ships its batch 0 under ITS
     // appId) is swallowed by the stamp, not re-appended with NULL score.
-    graft.streaming.Streams.appendOnceSink(
-        spark.readStream.schema(schema1).parquet(src1),
-        root, "evo-stream-v1", tmpDir() + "/ckpt3")
-      .start().awaitTermination()
+    capture(schema1, src1, "evo-stream-v1")
     assert(SnapshotTable.read(spark, root).count() == 3)
   }
 

@@ -142,16 +142,18 @@ class StreamsSpec extends SparkSpec {
   test("appendOnce sink is exactly-once across a checkpoint-lost rerun") {
     val dir = tmpDir()
     val root = s"$dir/captured"
-    val q = Streams.appendOnceSink(Streams.eventsStream(spark, sf),
-      root, "capture-app", s"$dir/ckpt").start()
+    def capture(ckpt: String) = Streams.eventsStream(spark, sf).writeStream
+      .format("graft").option("root", root).option("txnAppId", "capture-app")
+      .option("checkpointLocation", ckpt).outputMode("append")
+      .trigger(Trigger.AvailableNow()).start()
+    val q = capture(s"$dir/ckpt")
     q.awaitTermination()
     val n = graft.ops.SnapshotTable.read(spark, root).count()
     val expected = graft.Tables(spark, sf, "events").count()
     assert(n == expected, s"captured $n of $expected events")
     // Lose the checkpoint (operator error / relocation): the rerun replays
     // every batch from 0 — the txn stamps must swallow ALL of them.
-    val q2 = Streams.appendOnceSink(Streams.eventsStream(spark, sf),
-      root, "capture-app", s"$dir/ckpt-fresh").start()
+    val q2 = capture(s"$dir/ckpt-fresh")
     q2.awaitTermination()
     assert(graft.ops.SnapshotTable.read(spark, root).count() == n)
   }
